@@ -179,13 +179,10 @@ object Cli {
                 graft.ingest.MySqlLive.dumpToStream(mysqlConn(conn), o,
                   cmd = toolCmd(spark, "mysqldump")))
             try {
-              import spark.implicits._
-              import graft.model.StatementKind
               val stmts = graft.ingest.DumpReader.statements(spark, spool)
                 .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
               try {
-                val ddlByTable = stmts.filter(_.kind == StatementKind.CreateTable)
-                  .map(s => (s.table, s.sql)).collect().toMap
+                val ddlByTable = graft.ingest.DumpReader.listing(stmts).ddl
                 ddlByTable.keys.toSeq.sorted.foreach { t =>
                   out(s"table: ${c.sourceConf.db}.$t")
                   out(graft.ingest.DumpReader.tableFromDump(stmts, c.sourceConf.db, t,
@@ -674,51 +671,43 @@ object Cli {
                                  spark: SparkSession, out: String => Unit): Int = {
     val store = new Datastore(datastoreUri(c), spark)
     val db = c.sourceConf.db
-    // the statement stream is consumed by several driver listings
-    // plus one load per table — parse the file ONCE
+    // the statement stream is consumed by the listing plus one load
+    // per table — parse the file ONCE
     val stmts = graft.ingest.DumpReader.statements(spark, dumpPath)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      import spark.implicits._
-      import graft.model.StatementKind
-      // driver-side: (database, table) pairs (small) + DDL (DDL only)
-      val insertRefs = stmts.filter(_.kind == StatementKind.InsertInto)
-        .map(s => (s.database, s.table)).distinct().collect().toSet
-      val copyRefs = stmts.filter(_.kind == StatementKind.CopyBlock)
-        .map(s => (s.database, s.table)).distinct().collect().toSet
+      val listing = graft.ingest.DumpReader.listing(stmts)
       // the loaders filter on the config database — a dump whose
       // statements live in another schema would otherwise produce
       // empty tables that LOOK like a successful dump
-      val foreignDbs = (insertRefs ++ copyRefs).map(_._1).filter(_ != db)
+      val foreignDbs = (listing.insertRefs ++ listing.copyRefs).map(_._1).filter(_ != db)
       if (foreignDbs.nonEmpty) {
         out(s"dump file uses database(s) ${foreignDbs.mkString(", ")} but config " +
           s"source.database is '$db' — set source.database to match")
         return 1
       }
-      val insertTables = insertRefs.map(_._2)
-      val copyTables = copyRefs.map(_._2)
+      val insertTables = listing.insertRefs.map(_._2)
+      val copyTables = listing.copyRefs.map(_._2)
       val dumpTables = (insertTables ++ copyTables).toSeq.sorted
       if (dumpTables.isEmpty) {
         out(s"no INSERT or COPY data found in $dumpPath — nothing to dump")
         return 1
       }
-      val ddlByTable = stmts.filter(_.kind == StatementKind.CreateTable)
-        .map(s => (s.table, s.sql)).collect().toMap
       val job = Pipeline.DumpJobConfig(
         tables = dumpTables,
         database = db,
         filters = c.filters,
         bindings = c.bindings,
         subset = c.subsetConfig,
-        fkEdges = graft.ingest.DumpReader.foreignKeys(stmts),
+        fkEdges = listing.fkEdges,
         compressed = c.datastore.flatMap(_.compression).getOrElse(true),
         encryptionKey = c.encryptionKey,
         // the dump's own CREATE TABLE statements travel with the data
         // so a live restore recreates the source's true column types
-        ddl = ddlByTable)
+        ddl = listing.ddl)
       // a table's rows may arrive as INSERTs, COPY blocks, or both
       val load = (t: String) => {
-        val ddl = ddlByTable.get(t)
+        val ddl = listing.ddl.get(t)
         val parts = Seq(
           if (insertTables.contains(t))
             Some(graft.ingest.DumpReader.tableFromDump(stmts, db, t, ddl)) else None,

@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `array_sort(array_distinct(...))` compositions) and of
   * `verifyJaccard`'s `array_intersect` core.
   *
-  * Why (guide §4, measured by ProbeR21Breakdown): the HOF formulation
+  * Why (guide §4, measured by per-call-site task time): the HOF formulation
   * re-splits the text (compiling `\s+` per row), builds each gram
   * through an interpreted `transform`+`slice`+`concat_ws` lambda chain,
   * and then pays interpreted `array_distinct`/`array_sort` passes; the
@@ -100,8 +100,9 @@ private[graft] object GramNative {
   /** Exact Jaccard of two SORTED-DISTINCT string arrays: two-pointer
     * intersection count, then the `verifyJaccard` formula
     * `inter / (size(a) + size(b) − inter)` with the original
-    * int-add/long-sub/double-div order (0/0 → NaN, filtered out
-    * downstream exactly like before).
+    * int-add/long-sub/double-div order. Two empty arrays give 0.0, not
+    * the NaN of 0/0: Spark orders NaN above every double, so a NaN
+    * would pass `verifyJaccard`'s `>= threshold`.
     */
   def jaccardSorted(a: ArrayData, b: ArrayData): Double = {
     val na = a.numElements()
@@ -116,7 +117,8 @@ private[graft] object GramNative {
       else if (c < 0) i += 1
       else j += 1
     }
-    inter.toDouble / ((na + nb) - inter).toDouble
+    val union = (na + nb) - inter
+    if (union == 0L) 0.0 else inter.toDouble / union.toDouble
   }
 }
 

@@ -193,6 +193,45 @@ object DumpReader {
     (header, footer)
   }
 
+  /** What the dump commands need to know about a parsed dump before
+    * loading any table: the (database, table) refs of its INSERT and
+    * COPY data, its CREATE TABLE text by table, and its FK edges.
+    */
+  final case class Listing(
+      insertRefs: Set[(String, String)],
+      copyRefs: Set[(String, String)],
+      ddl: Map[String, String],
+      fkEdges: Seq[FkEdge])
+
+  /** [[Listing]] of a parsed dump in ONE distributed pass, like the
+    * reference's single streaming pass in
+    * `table_stats_by_database_and_table_name`. Data statements reach
+    * the driver only as distinct (kind, database, table) refs
+    * (map-side combined, O(#tables)); CREATE/ALTER TABLE statements
+    * come back whole and are replayed in dump order, so a later CREATE
+    * TABLE of a name wins.
+    */
+  def listing(stmts: Dataset[Statement]): Listing = {
+    import stmts.sparkSession.implicits._
+    val rows = stmts.flatMap { s =>
+      s.kind match {
+        case StatementKind.InsertInto | StatementKind.CopyBlock =>
+          Some((s.kind, s.database, s.table, -1L, ""))
+        case StatementKind.CreateTable | StatementKind.AlterTable =>
+          Some((s.kind, s.database, s.table, s.idx, s.sql))
+        case _ => None
+      }
+    }.distinct().collect().sortBy(_._4)
+    def refs(kind: String): Set[(String, String)] =
+      rows.collect { case (k, db, t, _, _) if k == kind => (db, t) }.toSet
+    Listing(
+      insertRefs = refs(StatementKind.InsertInto),
+      copyRefs = refs(StatementKind.CopyBlock),
+      ddl = rows.collect { case (StatementKind.CreateTable, _, t, _, sql) => t -> sql }.toMap,
+      fkEdges = rows.toSeq.collect { case (StatementKind.AlterTable, _, _, _, sql) => sql }
+        .flatMap(Ddl.foreignKey))
+  }
+
   /** S10 over a dump: the FK edge list (drives the subset engine). The
     * ALTER TABLE footer is tiny — collect is over DDL, never data.
     */
@@ -333,35 +372,53 @@ object DumpReader {
         }
         typedProjection(aligned.toDF("vals"), names, colTypes.map(_._2), sqlQuoted)
       case None =>
-        // r20: the inference path drives FOUR consumers over the parsed
-        // rows (the no-column-list check, the first-row probe, the
-        // type-bounds aggregation, and the final typed projection) —
-        // unpinned, each re-ran the INSERT/COPY parse over the whole
-        // dump. One eager pin parses once; the DDL branch has a single
-        // consumer and stays lazy.
+        // r20: the inference path drives several consumers over the
+        // parsed rows (the column-list scan, the type-bounds
+        // aggregation, and the final typed projection) — unpinned, each
+        // re-ran the INSERT/COPY parse over the whole dump. One eager pin
+        // parses once; the DDL branch has a single consumer and stays
+        // lazy.
         // r21 (ADVICE r20): probe emptiness on the UNPINNED rows first —
         // limit(1) early-outs after the first parsed row, so an empty
         // dump returns without paying the full parse+materialization the
         // pin below commits to.
-        val first = rows.limit(1).collect()
-        if (first.isEmpty) return spark.emptyDataFrame
-        val columns = first(0)._1
+        if (rows.limit(1).collect().isEmpty) return spark.emptyDataFrame
         val pinned = rows.localCheckpoint(true)
+        // Every distinct column list, with its first position in dump
+        // order, from the pinned rows in one aggregation (O(#variants)
+        // keys). The first row's list names the columns; rows listing
+        // the same columns in another order are aligned by name below,
+        // as the DDL branch does. The scan is EXACT, not sample-bounded:
+        // a row hiding past a sample would land values in the wrong
+        // columns.
+        val variants = pinned.rdd.mapPartitionsWithIndex { (pid, it) =>
+          it.zipWithIndex.map { case ((cols, _, _), i) => (cols, (pid.toLong << ChunkShift) | i) }
+        }.reduceByKey(math.min(_, _)).collect().sortBy(_._2).map(_._1)
         // without DDL, rows lacking a column list are unusable (names
-        // unknown) — fail loudly instead of returning a partial frame.
-        // This check is EXACT (a cheap distributed filter with an
-        // early-out limit), not sample-bounded: a positional row hiding
-        // past a sample would land values in the wrong columns.
-        if (!pinned.filter(_._1.isEmpty).isEmpty) throw new IllegalArgumentException(
+        // unknown) — fail loudly instead of returning a partial frame
+        if (variants.exists(_.isEmpty)) throw new IllegalArgumentException(
           s"$database.$table has $noColsHint")
+        val columns = variants.head
+        variants.find(_.sorted != columns.sorted).foreach { other =>
+          throw new IllegalArgumentException(
+            s"$database.$table rows list different columns (${columns.mkString(", ")}) and " +
+              s"(${other.mkString(", ")}); pass the CREATE TABLE ddl to align them")
+        }
+        val aligned = pinned.map { case (cols, vals, tags) =>
+          if (cols == columns) (vals, tags)
+          else {
+            val pos = columns.map(cols.indexOf(_))
+            (pos.map(vals), pos.map(tags))
+          }
+        }
         // Sample-free inference: min/max non-null tag per column over
         // ALL rows, one distributed aggregation (the shuffle carries at
         // most #columns rows after map-side combine). The tag order
         // makes the type decidable from the (lo, hi) bounds alone:
         // all-numeric iff the bounds sit inside [Long, Double], and hi
         // is then the widest numeric seen.
-        val bounds: Map[Int, (Int, Int)] = pinned
-          .flatMap(_._3.iterator.zipWithIndex
+        val bounds: Map[Int, (Int, Int)] = aligned
+          .flatMap(_._2.iterator.zipWithIndex
             .collect { case (t, i) if t != TagNull => (i, t) })
           .toDF("i", "tag")
           .groupBy(col("i"))
@@ -380,7 +437,7 @@ object DumpReader {
             case _ => StringType
           }
         }.toVector
-        typedProjection(pinned.map(_._2).toDF("vals"), columns, types, sqlQuoted)
+        typedProjection(aligned.map(_._1).toDF("vals"), columns, types, sqlQuoted)
     }
   }
 

@@ -106,8 +106,8 @@ object Dedup {
     * broadcasts, and the per-doc window sorts within the existing
     * doc-partitioning with ZERO extra exchange — the full-df variant's
     * corpus-wide string enrich join measured super-linear at 30×
-    * (ProbeR15b, PLANS.md r15). Unlike `maxDocFreq` (which DROPS hot
-    * grams and can lose pairs), demotion is exact: (isHot(g), g) is a
+    * (PLANS.md r15). Unlike `maxDocFreq` (which DROPS hot grams and
+    * can lose pairs), demotion is exact: (isHot(g), g) is a
     * deterministic total order on true grams, and a hash collision can
     * only demote a rare gram (a perf nit, never a lost pair). When
     * `maxDocFreq > 0` additionally DROPS hot grams, the drop set is
@@ -841,10 +841,10 @@ object Dedup {
     * otherwise contribute a quadratic pair fan-out (same skew guard and
     * same semantics caveat as [[ngramJaccardPairs]]'s).
     *
-    * The default cap is MEASURED, not guessed (ProbeWinnow at 30×
-    * duplication, PLANS.md): print df tracks duplication factor ×
-    * base-df, with p999 = 120 and max = 180 on a corpus where EVERY doc
-    * has 30 near-identical twins; 128 sits above that p999 (99.95% of
+    * The default cap is MEASURED, not guessed (at 30× duplication,
+    * PLANS.md): print df tracks duplication factor × base-df, with
+    * p999 = 120 and max = 180 on a corpus where EVERY doc has 30
+    * near-identical twins; 128 sits above that p999 (99.95% of
     * true pairs kept under extreme duplication) while capping a df-D
     * boilerplate print's fan-out at 128²/2 ≈ 8k pair rows instead of
     * D²/2 — the 10⁵-doc license-header print that would otherwise emit
@@ -856,9 +856,9 @@ object Dedup {
   /** Document-frequency threshold above which [[ppjoinCandidates]]'
     * `dfOrder` mode DEMOTES a gram to prefix suffixes (never drops it
     * — exact, unlike the winnow cap above). Same Zipf reasoning, same
-    * probe-measured knee (ProbeWinnow / PLANS.md): a gram in ≤128 docs
-    * can fan out at most 128²/2 candidate rows; the demotion exists
-    * for the unbounded boilerplate head beyond that.
+    * measured knee (PLANS.md): a gram in ≤128 docs can fan out at
+    * most 128²/2 candidate rows; the demotion exists for the unbounded
+    * boilerplate head beyond that.
     */
   val DemoteDocFreq: Long = 128L
 

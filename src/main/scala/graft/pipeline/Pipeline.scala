@@ -168,18 +168,15 @@ object Pipeline {
       store: Datastore,
       dumpName: String,
       encryptionKey: Option[String] = None): (Map[String, DataFrame], Map[String, String]) = {
-    import spark.implicits._
     // engine-written dumps are pg-semantics by construction (and say so
     // via the stored marker); force the dialect so chunk partitions
     // that don't hold the header parse identically
     val stmts = DumpReader.statementsFromStrings(
       spark, store.read(dumpName, encryptionKey), pgStrings = Some(true))
-    val tables = stmts.filter(s => s.kind == graft.model.StatementKind.InsertInto)
-      .map(s => (s.database, s.table)).distinct().collect()
-    val ddl = stmts.filter(_.kind == graft.model.StatementKind.CreateTable)
-      .map(s => (s.table, s.sql)).collect().toMap
-    (tables.map { case (db, t) =>
-      t -> DumpReader.tableFromDump(stmts, db, t, ddl.get(t))
-    }.toMap, ddl)
+    // one pass over the stored chunks lists both the tables and the DDL
+    val listing = DumpReader.listing(stmts)
+    (listing.insertRefs.map { case (db, t) =>
+      t -> DumpReader.tableFromDump(stmts, db, t, listing.ddl.get(t))
+    }.toMap, listing.ddl)
   }
 }

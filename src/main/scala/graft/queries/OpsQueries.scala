@@ -20,9 +20,9 @@ import graft.ops.{Dedup, Multimodal, Sampling, Selection, Similarity, Splits, Te
 object OpsQueries {
 
   /** k' of the ANN containment oracles: every approximate neighbor must
-    * rank in the exact global top-k'. Shared with ProbePrecision, whose
-    * measured margin (worst exact rank 69 at sf0.1) this bound must
-    * dominate.
+    * rank in the exact global top-k'. The measured margin (worst exact
+    * rank 69 at sf0.1) sits well under it; OpsSpec's IVF-PQ refined
+    * test asserts the bound for the LSH and IVF searches at sf0.01.
     */
   val AnnOracleKPrime = 200
 
@@ -31,7 +31,8 @@ object OpsQueries {
     * itself, not just candidate selection, and on near-random
     * embeddings the distortion is heavy-tailed: measured worst exact
     * rank of a returned neighbor is 193 at sf0.01 and 998 at sf0.1
-    * (m=16, k=16 — ProbePrecision). 2000 holds sf0.1 with 2× margin;
+    * (m=16, k=16; asserted at sf0.01 in OpsSpec). 2000 holds sf0.1
+    * with 2× margin;
     * this is the honest cost of skipping the refine stage — the
     * refined variant below is the production configuration.
     */
@@ -41,9 +42,9 @@ object OpsQueries {
     * the refine stage re-ranks the ADC shortlist by TRUE cosine, so a
     * returned neighbor's exact rank is bounded by candidate selection
     * (cells + shortlist membership), not by PQ's distance distortion —
-    * measured worst exact rank 20 at sf0.01 / 17 at sf0.1
-    * (ProbePrecision), the plain-IVF regime, so the IVF family's 200
-    * holds with 10× margin.
+    * measured worst exact rank 20 at sf0.01 / 17 at sf0.1, the
+    * plain-IVF regime, so the IVF family's 200 holds with 10× margin
+    * (asserted at sf0.01 in OpsSpec).
     */
   val RefinedOracleKPrime = 200
 
@@ -380,8 +381,8 @@ object OpsQueries {
 
     // substring-overlap pairs: docs sharing >= 2 winnow prints — the
     // copied-passage dup class whole-doc Jaccard misses. Runs the
-    // probe-measured skew default (maxDocFreq=128, see ProbeWinnow /
-    // PLANS.md), mirrored in the oracle's hot-print exclusion.
+    // measured skew default (maxDocFreq=128, see PLANS.md), mirrored
+    // in the oracle's hot-print exclusion.
     "x_winnow_dup_pairs" -> ((s, dir) =>
       Dedup.winnowDupPairs(Tables.documents(s, dir), "doc_id", col("text"),
         k = 4, w = 4, minShared = 2, maxDocFreq = Dedup.WinnowDefaultMaxDocFreq)),
@@ -1415,8 +1416,8 @@ object OpsQueries {
     * but SEVERS recovery — a lost executor kills the job at cluster
     * scale; `"persist"` materializes to MEMORY_AND_DISK with lineage
     * intact (lost blocks recompute), the fault-tolerant form of the
-    * same trade. Measured at sf0.1 (ProbeCheckpoint, PLANS.md
-    * "capstone v2 lineage cut — r10").
+    * same trade. Measured at sf0.1 (PLANS.md "capstone v2 lineage
+    * cut — r10").
     */
   private[graft] def pipelineCorpusV2(
       s: SparkSession, dir: String, gatedReuse: String): DataFrame =
@@ -1815,8 +1816,8 @@ object OpsQueries {
     */
   val SemanticDedupThreshold = 0.4
 
-  /** Measured choice for capstone v2's `gated` reuse (ProbeCheckpoint
-    * at sf0.1, r10): lazy 11.7 s / localCheckpoint 8.0 s / persist
+  /** Measured choice for capstone v2's `gated` reuse (sf0.1, r10):
+    * lazy 11.7 s / localCheckpoint 8.0 s / persist
     * (MEMORY_AND_DISK) — see PLANS.md "capstone v2 lineage cut — r10".
     * `persist` is shipped: same one-materialization win as the lineage
     * cut, but recoverable on executor loss (a severed lineage is a job

@@ -167,6 +167,35 @@ class CliSpec extends SparkSpec {
     assert(back.filter($"c_name".endsWith("@example.com")).count() == 2)
   }
 
+  test("cli: dump create --file refuses a dump in another schema and a dump with no data") {
+    val store = Files.createTempDirectory("graft-cli-store-").toString
+    val restore = Files.createTempDirectory("graft-cli-restore-").toString
+    val conf = writeConf(store, restore)
+    def create(sql: String): (Int, Seq[String]) = {
+      val dumpFile = Files.createTempFile("graft-refuse-", ".sql")
+      Files.writeString(dumpFile, sql)
+      val printed = collection.mutable.Buffer[String]()
+      val rc = Cli.run(Seq("-c", conf, "dump", "create", "refused", "--file", dumpFile.toString),
+        spark, printed += _)
+      (rc, printed.toSeq)
+    }
+    // the config leaves source.database at its default, `public`
+    val (rcForeign, foreign) = create(
+      """CREATE TABLE sales.customer (c_custkey bigint, c_name text);
+        |INSERT INTO sales.customer (c_custkey, c_name) VALUES (1, 'Alice');
+        |""".stripMargin)
+    assert(rcForeign == 1)
+    assert(foreign.exists(_.contains("set source.database to match")), s"got: $foreign")
+    val (rcEmpty, empty) = create(
+      "CREATE TABLE public.customer (c_custkey bigint, c_name text);\n")
+    assert(rcEmpty == 1)
+    assert(empty.exists(_.contains("nothing to dump")), s"got: $empty")
+    // neither refusal stored a dump
+    val listed = collection.mutable.Buffer[String]()
+    assert(Cli.run(Seq("-c", conf, "dump", "list"), spark, listed += _) == 0)
+    assert(!listed.exists(_.contains("refused")), s"got: $listed")
+  }
+
   test("cli: dump create -i ingests a dump piped on stdin (pg_dump | graft)") {
     val store = Files.createTempDirectory("graft-cli-store-").toString
     val restore = Files.createTempDirectory("graft-cli-restore-").toString

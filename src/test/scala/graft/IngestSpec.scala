@@ -432,6 +432,29 @@ class IngestSpec extends SparkSpec {
     assert(err.getMessage.contains("without column lists"))
   }
 
+  test("inference path binds INSERT values by column name, not by position") {
+    import graft.ingest.DumpReader
+    import spark.implicits._
+    // no CREATE TABLE: the second INSERT lists its columns in the other
+    // order, and must still land 2 in `a` and 'y' in `b`
+    val stmts = DumpReader.statementsFromStrings(spark, Seq(
+      "INSERT INTO public.t (a, b) VALUES (1, 'x');",
+      "INSERT INTO public.t (b, a) VALUES ('y', 2);").toDS())
+    val df = DumpReader.tableFromDump(stmts, "public", "t")
+    assert(df.columns.toSeq == Seq("a", "b"))
+    assert(df.schema("a").dataType.typeName == "long")
+    assert(df.schema("b").dataType.typeName == "string")
+    assert(df.orderBy($"a").as[(Long, String)].collect().toSeq == Seq((1L, "x"), (2L, "y")))
+    // a row naming a different column set cannot be aligned without DDL
+    val other = DumpReader.statementsFromStrings(spark, Seq(
+      "INSERT INTO public.t (a, b) VALUES (1, 'x');",
+      "INSERT INTO public.t (a, c) VALUES (2, 'y');").toDS())
+    val err = intercept[IllegalArgumentException] {
+      DumpReader.tableFromDump(other, "public", "t")
+    }
+    assert(err.getMessage.contains("rows list different columns"))
+  }
+
   test("JSONL exchange: lossless roundtrip (plain and gzip), corrupt lines quarantined not nulled") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col

@@ -7,8 +7,8 @@ import org.apache.spark.sql.execution.FormattedMode
   * filters/projections reach the parquet scan, joins pick the intended
   * physical strategy, aggregations are map-side partial, and the hot
   * paths stay inside whole-stage codegen. These are the properties that
-  * decide whether a plan survives a 100×  scale-up, so they are tests,
-  * not a manual `.explain` ritual (that's `graft.PlanCheck`).
+  * decide whether a plan survives a 100× scale-up, so they are checked
+  * here on every test run rather than by reading `.explain` output.
   */
 class PlanSpec extends SparkSpec {
 

@@ -123,7 +123,7 @@ class TextExprsSpec extends SparkSpec {
     // the 0/0 case is unreachable in production (empty gram sets never
     // become candidates: they have no prefix rows and no bands) and ANSI
     // mode makes the REFERENCE division throw there, so parity runs on
-    // the reachable domain; the native NaN edge is asserted below
+    // the reachable domain; the native 0/0 edge is asserted below
     val rows = corpus
       .filter(size(ga) + size(gb) > 0)
       .select(native.as("nat"), ref.as("ref"))
@@ -131,11 +131,13 @@ class TextExprsSpec extends SparkSpec {
       .limit(5).collect()
     assert(rows.isEmpty, s"jaccardSorted diverged: ${rows.mkString("; ")}")
     import spark.implicits._
-    val nan = Seq(("a", "b")).toDF("x", "y")
+    val empty = Seq(("a", "b")).toDF("x", "y")
       .select(call_function("graft_jaccard_sorted",
         TA.wordNgramsSorted(col("x"), 3), TA.wordNgramsSorted(col("y"), 3)))
       .head().getDouble(0)
-    assert(nan.isNaN, s"0/0 must stay NaN (filtered out downstream), got $nan")
+    // NaN sorts above every double in Spark, so it would pass a
+    // `>= threshold` filter; two empty gram sets share nothing
+    assert(empty == 0.0, s"0/0 must be 0.0, got $empty")
   }
 
   test("md5 prefix: digest-byte assembly == conv(substring(md5(...))) for 1/8/15 hex chars") {
