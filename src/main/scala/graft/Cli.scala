@@ -812,14 +812,6 @@ object Cli {
     liveSpool(spark, storeRoot, "mongodump", ".archive")(o =>
       graft.ingest.MongoLive.dumpToStream(uri, db, o, toolCmd(spark, "mongodump")))
 
-  /** Spool a live-tool dump stream to a file executors can read, with
-    * owner-only permissions on both paths (the spool is UNMASKED
-    * pre-transform data): a 0600 nio temp file on a local master
-    * (truncate-in-place write preserves the perms), the datastore's
-    * `.spool` dir (mode 600 via Hadoop-FS create) on a real cluster —
-    * where a driver-local temp path would be a silent per-task
-    * FileNotFoundException — or fail fast with no datastore to reach.
-    */
   /** Spool a live SQL-tool dump (pg_dump / mysqldump stdout) as a
     * DIRECTORY of statement-boundary chunk parts
     * ([[graft.ingest.ChunkedSpool]]) instead of one file: a single-file
@@ -868,6 +860,14 @@ object Cli {
     }
   }
 
+  /** Spool a live-tool dump stream to a file executors can read, with
+    * owner-only permissions on both paths (the spool is UNMASKED
+    * pre-transform data): a 0600 nio temp file on a local master
+    * (truncate-in-place write preserves the perms), the datastore's
+    * `.spool` dir (mode 600 via Hadoop-FS create) on a real cluster —
+    * where a driver-local temp path would be a silent per-task
+    * FileNotFoundException — or fail fast with no datastore to reach.
+    */
   private def liveSpool(spark: SparkSession, storeRoot: Option[String],
                         tag: String, suffix: String)(
                         writeTo: java.io.OutputStream => Unit): String =

@@ -28,14 +28,6 @@ object DumpReader {
     */
   private[ingest] val ChunkShift = 40
 
-  /** Read dump file(s) into a Dataset of classified statements.
-    * `idx` is globally monotonic in dump order: high bits are the rank
-    * of the file in name order — matching the reference's
-    * part-enumeration order on restore
-    * (`datastore/local_disk.rs:183-207`) — low bits the statement
-    * position within the file. Ranking is a driver-side listing of file
-    * *names* only; no data is read for it.
-    */
   /** Driver-side NAME-only listing of dump part files, sorted by the
     * *decoded path component* (`java.net.URI.getPath`): both
     * `input_file_name()` (url-encoded, scheme spelling varies) and
@@ -60,6 +52,14 @@ object DumpReader {
       .toSeq
   }
 
+  /** Read dump file(s) into a Dataset of classified statements.
+    * `idx` is globally monotonic in dump order: high bits are the rank
+    * of the file in name order — matching the reference's
+    * part-enumeration order on restore
+    * (`datastore/local_disk.rs:183-207`) — low bits the statement
+    * position within the file. Ranking is a driver-side listing of file
+    * *names* only; no data is read for it.
+    */
   def statements(spark: SparkSession, path: String): Dataset[Statement] = {
     import spark.implicits._
     val ranked = rankedFiles(spark, path)
@@ -242,12 +242,6 @@ object DumpReader {
       .flatMap(Ddl.foreignKey)
   }
 
-  /** Materialize one table of a dump as a typed DataFrame. Schema: the
-    * column list comes from the INSERT statements themselves; types are
-    * inferred from literal shape on a sample (reference infers per row,
-    * `source/postgres.rs:378-411`; doing it once over a sample gives
-    * every row the same schema, which is what a columnar engine needs).
-    */
   /** Typed per-table frame from a parsed dump. When the table's CREATE
     * TABLE statement is supplied, its declared types decide the schema
     * with NO driver-side sampling and rows align to the DDL column

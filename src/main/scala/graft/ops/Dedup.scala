@@ -126,7 +126,6 @@ object Dedup {
     */
   private[graft] def ppjoinCandidates(gramArrays: DataFrame, threshold: Double,
                                       maxDocFreq: Long,
-                                      hashGramKeys: Boolean = true,
                                       dfOrder: Boolean = false,
                                       eager: Boolean = false): DataFrame = {
     // Guard every ceil(t·x) against binary-float overshoot (0.8×5 =
@@ -197,9 +196,8 @@ object Dedup {
     // shuffle rows carry 8 bytes instead of a shingle. A collision can
     // only ADD a candidate pair (equal grams always hash equal), and
     // every candidate is verified against the real gram arrays, so the
-    // result stays exact. (`hashGramKeys=false` keeps the raw string key
-    // — retained for A/B measurement, see PLANS.md.)
-    val gk = if (hashGramKeys) xxhash64(col("gram")) else col("gram")
+    // result stays exact.
+    val gk = xxhash64(col("gram"))
     val l = prefixes0.select(gk.as("gk"), col("doc").as("id_a"),
       col("n").as("na"), col("pos").as("pa"))
     val r = prefixes0.select(gk.as("gk"), col("doc").as("id_b"),

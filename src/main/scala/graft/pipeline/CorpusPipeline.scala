@@ -139,6 +139,25 @@ object CorpusPipeline {
   val TerminalKinds: Set[String] =
     Set("chunk", "pack", "epoch_mix", "unimax_mix", "tokenize_unigram")
 
+  /** Stage kinds that are pure per-row transforms — the only ones a
+    * streaming chain admits (everything else needs corpus-wide state
+    * the batch path owns).
+    */
+  val StreamableKinds: Set[String] =
+    Set("html_strip", "pii_scrub", "gopher_filter", "compression_filter", "c4_clean",
+      "url_filter", "keyword_filter")
+
+  /** The dedup verdicts that have an O(batch) admission form against a
+    * persisted corpus index. Declared before [[IncrementalKinds]], which
+    * reads it while the object initialises.
+    */
+  private val DedupKinds: Set[String] = Set("dedup_exact", "dedup_near", "dedup_semantic")
+
+  /** Kinds an incremental run admits: per-row shaping plus the dedup
+    * verdicts.
+    */
+  val IncrementalKinds: Set[String] = StreamableKinds ++ DedupKinds
+
   private val mapper = new ObjectMapper(new YAMLFactory())
   mapper.registerModule(DefaultScalaModule)
   mapper.configure(DeserializationFeature.FAIL_ON_UNKNOWN_PROPERTIES, false)
@@ -162,14 +181,6 @@ object CorpusPipeline {
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)), "UTF-8"),
       classOf[CorpusPipelineConf])
 
-  /** Run the configured stage chain over the input documents table and
-    * write the result to `output_dir` as parquet. Shaping stages
-    * transform the (id, text, …) frame and may append columns (e.g.
-    * `rank`); a terminal stage (chunk/pack) must be last. Per-stage
-    * row counts stream through `out` — the operator's progress report,
-    * derived from one count per stage boundary (tiny driver scalars,
-    * never row data).
-    */
   private def validateStages(conf: CorpusPipelineConf): Unit = {
     require(conf.stages.nonEmpty, "corpus pipeline needs at least one stage")
     val unknown = conf.stages.map(_.kind).filterNot(k =>
@@ -182,6 +193,15 @@ object CorpusPipeline {
       case bad => throw new IllegalArgumentException(
         s"terminal stage(s) ${bad.map(_.kind).mkString(", ")} must be last")
     }
+  }
+
+  /** The frame every chain starts from: (id, text), plus `source` when
+    * present — decontaminate_spans slices the benchmark by it (its own
+    * output drops it again) — and `url`, which the URL stages read.
+    */
+  private def baseFrame(docs0: DataFrame, conf: CorpusPipelineConf): DataFrame = {
+    val carried = Seq("source", "url").filter(c => c != conf.textCol && docs0.columns.contains(c))
+    docs0.select(col(conf.idCol) +: col(conf.textCol).as("text") +: carried.map(col): _*)
   }
 
   /** Dry-run plan transparency — `corpus explain <conf>`: validate the
@@ -205,16 +225,10 @@ object CorpusPipeline {
     val aqePrev = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val id = conf.idCol
       val docs0 = loadInput(spark, conf)
       out(s"input: ${conf.inputDir}")
-      val baseCols = Seq(col(id), col(conf.textCol).as("text")) ++
-        (if (docs0.columns.contains("source") && conf.textCol != "source")
-          Seq(col("source")) else Nil) ++
-        (if (docs0.columns.contains("url") && conf.textCol != "url")
-          Seq(col("url")) else Nil)
-      val finalDf = conf.stages.foldLeft(docs0.select(baseCols: _*)) { (df, st) =>
-        val next = applyStage(df, st, id, docs0, conf.textCol)
+      val finalDf = conf.stages.foldLeft(baseFrame(docs0, conf)) { (df, st) =>
+        val next = applyStage(df, st, conf.idCol, docs0, conf.textCol)
         val plan = next.queryExecution.executedPlan
         val scans = plan.collect {
           case s: org.apache.spark.sql.execution.FileSourceScanExec => s }.length
@@ -249,7 +263,7 @@ object CorpusPipeline {
         TA.langId(col("text")).as("lang"),
         TA.tokenCount(col("text")).cast("long").as("n_tokens"),
         TA.qualityScore(col("text")).as("q"),
-        TA.fingerprint(col("text")).as("fp"))
+        fingerprint)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val byLang = metered.groupBy(col("lang"))
@@ -268,19 +282,20 @@ object CorpusPipeline {
     } finally { metered.unpersist(); () }
   }
 
+  /** Run the configured stage chain over the input documents table and
+    * write the result to `output_dir` as parquet. Shaping stages
+    * transform the (id, text, …) frame and may append columns (e.g.
+    * `rank`); a terminal stage (chunk/pack) must be last. Per-stage
+    * row counts stream through `out` — the operator's progress report,
+    * derived from one count per stage boundary (tiny driver scalars,
+    * never row data). Returns the terminal stage's count, which is the
+    * output's row count.
+    */
   def run(spark: SparkSession, conf: CorpusPipelineConf,
           out: String => Unit): Long = {
     validateStages(conf)
-    val id = conf.idCol
     val docs0 = loadInput(spark, conf)
     out(s"input: ${conf.inputDir}")
-    // carry `source` when present — decontaminate_spans slices the
-    // benchmark by it (its own output drops it again)
-    val baseCols = Seq(col(id), col(conf.textCol).as("text")) ++
-      (if (docs0.columns.contains("source") && conf.textCol != "source")
-        Seq(col("source")) else Nil) ++
-      (if (docs0.columns.contains("url") && conf.textCol != "url")
-        Seq(col("url")) else Nil)
     // each stage boundary persists before its count, so the count AND
     // the next stage read materialized blocks — without this, counting
     // stage k recomputes stages 1..k and the chain is O(stages²) passes
@@ -288,42 +303,36 @@ object CorpusPipeline {
     // the capstone queries); MEMORY_AND_DISK keeps lineage for executor
     // loss.
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // Eager admission artifacts: when the chain is exactly what an
-    // incremental run admits (per-row stages + dedup verdicts), this
-    // run already HAS everything the `<output>.artifacts/` indexes
-    // need — the frames ENTERING each dedup stage, drops included.
-    // Writing them now (a) spares the first `--into` increment its only
-    // O(corpus) text re-read (the lazy bootstrap) and (b) closes the
-    // bootstrap scoping gap: rows THIS run dropped stay indexed, so an
-    // increment rejects their future duplicates exactly as the union
-    // run would — the equality contract holds with no exception. The
-    // entering frames stay persisted (disk-backed) until the artifact
-    // writes; the alternative — recomputing each from lineage — costs
-    // O(dedup stages) extra corpus passes on the ingest job.
-    val dedupKinds = Set("dedup_exact", "dedup_near", "dedup_semantic")
-    // eligibility must match requireIncrementalChain EXACTLY — kinds
-    // AND ordering. A chain like [dedup_exact, pii_scrub] has only
-    // incremental kinds but rewrites text AFTER the dedup keys were
-    // hashed: eager artifacts from it would hold pre-rewrite
-    // fingerprints no increment's (correctly ordered) chain could ever
-    // match, silently re-admitting duplicates. Such a chain keeps the
-    // lazy bootstrap (which fingerprints the final output).
-    val kinds = conf.stages.map(_.kind)
-    val firstDedup = kinds.indexWhere(dedupKinds.contains)
-    val eager = kinds.forall(IncrementalKinds.contains) &&
-      (firstDedup < 0 || kinds.drop(firstDedup).forall(!StreamableKinds.contains(_)))
+    // Eager admission artifacts: when the chain is one an incremental
+    // run admits ([[incrementalChainProblem]]), this run already HAS
+    // everything the `<output>.artifacts/` indexes need — the frames
+    // ENTERING each dedup stage, drops included. Writing them now (a)
+    // spares the first `--into` increment its only O(corpus) text
+    // re-read (the lazy bootstrap) and (b) closes the bootstrap scoping
+    // gap: rows THIS run dropped stay indexed, so an increment rejects
+    // their future duplicates exactly as the union run would. A chain
+    // like [dedup_exact, pii_scrub] fails the rule: it rewrites text
+    // AFTER the dedup keys were hashed, so eager artifacts from it would
+    // hold fingerprints no increment could match; it keeps the lazy
+    // bootstrap, which fingerprints the final output. The entering
+    // frames stay persisted (disk-backed) until the artifact write;
+    // recomputing each from lineage would cost O(dedup stages) extra
+    // corpus passes on the ingest job.
+    val eager = incrementalChainProblem(conf).isEmpty
     val entering = collection.mutable.Map[String, DataFrame]()
     // at most TWO stages stay cached (once next's count() has
     // materialized it, the predecessor's blocks are never read again) —
     // plus the retained dedup-entering frames when writing eagerly
     var prev: Option[DataFrame] = None
     val kept = collection.mutable.ListBuffer[DataFrame]()
+    var rows = 0L
     try {
-      val result = conf.stages.foldLeft(docs0.select(baseCols: _*)) { (df, st) =>
-        if (eager && dedupKinds.contains(st.kind) && !entering.contains(st.kind))
+      val result = conf.stages.foldLeft(baseFrame(docs0, conf)) { (df, st) =>
+        if (eager && DedupKinds.contains(st.kind) && !entering.contains(st.kind))
           entering(st.kind) = df
-        val next = applyStage(df, st, id, docs0, conf.textCol).persist(lvl)
-        out(f"stage ${st.kind}%-20s rows=${next.count()}")
+        val next = applyStage(df, st, conf.idCol, docs0, conf.textCol).persist(lvl)
+        rows = next.count()
+        out(f"stage ${st.kind}%-20s rows=$rows")
         prev.foreach { p =>
           if (entering.values.exists(_ eq p)) kept += p else p.unpersist()
         }
@@ -337,71 +346,113 @@ object CorpusPipeline {
       // this run just replaced
       val artRoot = new org.apache.hadoop.fs.Path(conf.outputDir + ".artifacts")
       artRoot.getFileSystem(spark.sessionState.newHadoopConf()).delete(artRoot, true)
-      if (eager && entering.nonEmpty) writeEagerArtifacts(spark, conf, entering.toMap, out)
+      if (eager && entering.nonEmpty) {
+        writeArtifacts(conf, artRoot.toString, entering.toMap, result, "overwrite")
+        out(s"admission artifacts written beside the output at $artRoot")
+      }
     } finally {
       prev.foreach(_.unpersist())
       kept.foreach(_.unpersist())
     }
-    val n = spark.read.parquet(conf.outputDir).count()
-    out(s"output: ${conf.outputDir} rows=$n")
-    n
+    out(s"output: ${conf.outputDir} rows=$rows")
+    rows
   }
 
-  /** Write the admission artifacts a from-scratch incremental-
-    * compatible run can produce as a by-product — same layout and
-    * coverage as [[admitBatch]]'s extensions: `fp/` from every row
-    * entering `dedup_exact`, `lsh/` + `near_dropped/` text from rows
-    * entering `dedup_near` (drops = entering ∖ output), `coslsh/` +
-    * `sem_dropped/` ids from rows entering `dedup_semantic`.
+  /** The exact-dedup key: the fingerprint of a row's text. */
+  private def fingerprint: Column = TA.fingerprint(col("text")).as("fp")
+
+  /** The `fp/` artifact rows for `rows`: their distinct fingerprints. */
+  private def fpIndex(rows: DataFrame): DataFrame = rows.select(fingerprint).distinct()
+
+  /** The `lsh/` artifact rows for `rows`: their MinHash-LSH bands. */
+  private def lshIndex(rows: DataFrame, id: String, near: CorpusStageConf): DataFrame =
+    Dedup.buildLshIndex(rows, id, col("text"), near.nVal(3))
+
+  /** The `coslsh/` artifact rows for `rows`: the cosine-LSH buckets of
+    * their sidecar vectors (`vecs`, from [[sidecarVectors]]).
     */
-  private def writeEagerArtifacts(spark: SparkSession, conf: CorpusPipelineConf,
-                                  entering: Map[String, DataFrame],
-                                  out: String => Unit): Unit = {
+  private def cosIndex(vecs: DataFrame, rows: DataFrame, id: String): DataFrame =
+    graft.ops.Similarity.buildCosineLshIndex(
+      vecs.join(rows.select(col(id)), Seq(id), "left_semi"), id, "__graft_vec")
+
+  /** A stage's sidecar embedding table as (`id`, `__graft_vec`). */
+  private def sidecarVectors(spark: SparkSession, st: CorpusStageConf,
+                             id: String): DataFrame =
+    spark.read.parquet(graft.config.GraftConfig.substituteEnvVar(
+        st.embeddings_dir.getOrElse(throw new IllegalArgumentException(
+          s"${st.kind} needs embeddings_dir"))))
+      .select(col(st.vec_id_column.getOrElse("vec_id")).as(id),
+        col(st.vector_column.getOrElse("embedding")).as("__graft_vec"))
+
+  /** Write (`mode` "overwrite": a from-scratch run's eager write) or
+    * extend (`mode` "append": an increment) the admission artifacts
+    * under `artRoot` for the configured dedup stages. `entering` holds
+    * the frame entering each dedup stage, by kind; `kept` is what the
+    * chain kept. Coverage is deliberately WIDER than `kept` — it is
+    * what makes admission transitive across increments, matching the
+    * from-scratch union run:
+    *   fp           ← every row entering dedup_exact (a future exact
+    *                  dup of a row dropped anywhere must still be
+    *                  rejected, as exact dedup over the union would);
+    *   lsh          ← every row entering dedup_near, and near_dropped/
+    *                  the (id, text) of those not kept, so future
+    *                  collisions against them verify;
+    *   coslsh       ← every row entering dedup_semantic, and
+    *                  sem_dropped/ the ids of those not kept.
+    * ORDER matters for crash-replay: fp commits LAST. If it committed
+    * first and the crash hit before the lsh/near_dropped appends, a
+    * replay would exact-drop the dropped rows against their OWN
+    * fingerprints — they would never reach the near stage again and
+    * their lsh/near_dropped coverage would be lost for good. With fp
+    * last, an un-fp'd replay re-runs those rows through the
+    * near/semantic stages, which re-drops them and re-appends their
+    * (idempotent, dedup-consumed) index rows.
+    */
+  private def writeArtifacts(conf: CorpusPipelineConf, artRoot: String,
+                             entering: Map[String, DataFrame], kept: DataFrame,
+                             mode: String): Unit = {
     val id = conf.idCol
-    val artRoot = conf.outputDir + ".artifacts"
-    val output = spark.read.parquet(conf.outputDir)
-    entering.get("dedup_exact").foreach { df =>
-      df.select(TA.fingerprint(col("text")).as("fp")).distinct()
-        .write.mode("overwrite").parquet(s"$artRoot/fp")
+    def write(rows: DataFrame, name: String): Unit =
+      rows.write.mode(mode).parquet(s"$artRoot/$name")
+    def dropped(kind: String): DataFrame =
+      entering(kind).join(kept.select(col(id)), Seq(id), "left_anti")
+    def stage(kind: String): Option[CorpusStageConf] = conf.stages.find(_.kind == kind)
+    stage("dedup_near").foreach { st =>
+      write(lshIndex(entering("dedup_near"), id, st), "lsh")
+      write(dropped("dedup_near").select(col(id), col("text")), "near_dropped")
     }
-    conf.stages.find(_.kind == "dedup_near").foreach { st =>
-      val df = entering("dedup_near")
-      Dedup.buildLshIndex(df, id, col("text"), st.nVal(3))
-        .write.mode("overwrite").parquet(s"$artRoot/lsh")
-      df.join(output.select(col(id)), Seq(id), "left_anti")
-        .select(col(id), col("text"))
-        .write.mode("overwrite").parquet(s"$artRoot/near_dropped")
+    stage("dedup_semantic").foreach { st =>
+      write(cosIndex(sidecarVectors(kept.sparkSession, st, id), entering("dedup_semantic"), id),
+        "coslsh")
+      write(dropped("dedup_semantic").select(col(id)), "sem_dropped")
     }
-    conf.stages.find(_.kind == "dedup_semantic").foreach { st =>
-      val df = entering("dedup_semantic")
-      val emb = spark.read.parquet(graft.config.GraftConfig.substituteEnvVar(
-          st.embeddings_dir.getOrElse(throw new IllegalArgumentException(
-            "dedup_semantic needs embeddings_dir"))))
-        .select(col(st.vec_id_column.getOrElse("vec_id")).as(id),
-          col(st.vector_column.getOrElse("embedding")).as("__graft_vec"))
-      graft.ops.Similarity.buildCosineLshIndex(
-          emb.join(df.select(col(id)), Seq(id), "left_semi"), id, "__graft_vec")
-        .write.mode("overwrite").parquet(s"$artRoot/coslsh")
-      df.join(output.select(col(id)), Seq(id), "left_anti").select(col(id))
-        .write.mode("overwrite").parquet(s"$artRoot/sem_dropped")
-    }
-    out(s"admission artifacts written beside the output at $artRoot")
+    stage("dedup_exact").foreach(_ => write(fpIndex(entering("dedup_exact")), "fp"))
   }
 
-  /** Stage kinds that are pure per-row transforms — the only ones a
-    * streaming chain admits (everything else needs corpus-wide state
-    * the batch path owns).
+  /** The incremental-chain rule, or what breaks it: only
+    * [[IncrementalKinds]], with every per-row stage before the first
+    * dedup stage, because per-row stages rewrite the text the dedup
+    * keys hash. The incremental paths refuse a chain that breaks it;
+    * `run` writes admission artifacts eagerly only for one that keeps
+    * it.
     */
-  val StreamableKinds: Set[String] =
-    Set("html_strip", "pii_scrub", "gopher_filter", "compression_filter", "c4_clean",
-      "url_filter", "keyword_filter")
+  private def incrementalChainProblem(conf: CorpusPipelineConf): Option[String] = {
+    val kinds = conf.stages.map(_.kind)
+    val badKinds = kinds.filterNot(IncrementalKinds.contains)
+    val firstDedup = kinds.indexWhere(DedupKinds.contains)
+    if (badKinds.nonEmpty)
+      Some(s"incremental corpus run admits only ${IncrementalKinds.toSeq.sorted.mkString(", ")} — " +
+        s"got: ${badKinds.mkString(", ")} (corpus-wide stages need a from-scratch `corpus run`)")
+    else if (firstDedup >= 0 && kinds.drop(firstDedup).exists(StreamableKinds.contains))
+      Some("per-row stages must precede the dedup stages in an incremental chain " +
+        "(they rewrite the text the dedup keys are hashed from)")
+    else None
+  }
 
-  /** Kinds an incremental run admits: per-row shaping plus the two
-    * dedup verdicts that have an O(batch) admission form against a
-    * persisted corpus index.
-    */
-  val IncrementalKinds: Set[String] =
-    StreamableKinds ++ Set("dedup_exact", "dedup_near", "dedup_semantic")
+  private def requireIncrementalChain(conf: CorpusPipelineConf): Unit = {
+    val problem = incrementalChainProblem(conf)
+    require(problem.isEmpty, problem.orNull)
+  }
 
   /** Incremental admission: run the configured chain over a NEW shard
     * (`input_dir`) against a PRIOR run's output at `priorDir`, appending
@@ -435,7 +486,7 @@ object CorpusPipeline {
     * still rejected, exactly as the union run rejects it via the
     * transitive cluster. A from-scratch `corpus run` whose chain is
     * itself incremental-compatible writes these artifacts EAGERLY
-    * (drops included, see [[writeEagerArtifacts]]), so the contract
+    * (drops included, see [[writeArtifacts]]), so the contract
     * holds over the full union of all inputs. Only for an output
     * produced some other way (an external parquet dir, a chain with
     * corpus-wide stages) does the first increment fall back to the
@@ -444,20 +495,6 @@ object CorpusPipeline {
     * the shards. Per-row stages must precede the dedup stages in the
     * chain, because they rewrite the text the dedup keys hash.
     */
-  /** Shared validation for the incremental paths. */
-  private def requireIncrementalChain(conf: CorpusPipelineConf): Unit = {
-    val badKinds = conf.stages.map(_.kind).filterNot(IncrementalKinds.contains)
-    require(badKinds.isEmpty,
-      s"incremental corpus run admits only ${IncrementalKinds.toSeq.sorted.mkString(", ")} — " +
-        s"got: ${badKinds.mkString(", ")} (corpus-wide stages need a from-scratch `corpus run`)")
-    val kinds = conf.stages.map(_.kind)
-    val firstDedup = kinds.indexWhere(k =>
-      k == "dedup_exact" || k == "dedup_near" || k == "dedup_semantic")
-    require(firstDedup < 0 || kinds.drop(firstDedup).forall(!StreamableKinds.contains(_)),
-      "per-row stages must precede the dedup stages in an incremental chain " +
-        "(they rewrite the text the dedup keys are hashed from)")
-  }
-
   def runIncremental(spark: SparkSession, conf: CorpusPipelineConf,
                      priorDir: String, out: String => Unit): Long = {
     requireIncrementalChain(conf)
@@ -483,6 +520,10 @@ object CorpusPipeline {
     val prior = spark.read.parquet(priorDir)
     val artRoot = new Path(priorDir + ".artifacts")
     def ready(p: Path): Boolean = fs.exists(new Path(p, "_SUCCESS"))
+    def artifact(name: String): DataFrame = spark.read.parquet(new Path(artRoot, name).toString)
+    // `rows` plus a drop-coverage artifact's rows, once one exists
+    def withDropped(rows: DataFrame, name: String): DataFrame =
+      if (fs.exists(new Path(artRoot, name))) rows.unionByName(artifact(name)) else rows
 
     // streaming replay, fast path: a batch whose completion marker
     // committed was FULLY admitted (output appended, every artifact
@@ -502,14 +543,8 @@ object CorpusPipeline {
       return 0L
     }
 
-    val baseCols = Seq(col(id), col(conf.textCol).as("text")) ++
-      (if (docs0.columns.contains("source") && conf.textCol != "source")
-        Seq(col("source")) else Nil) ++
-      (if (docs0.columns.contains("url") && conf.textCol != "url")
-        Seq(col("url")) else Nil)
     val shaped0 = conf.stages.filter(s => StreamableKinds.contains(s.kind))
-      .foldLeft(docs0.select(baseCols: _*)) { (df, st) =>
-        applyStage(df, st, id, docs0, conf.textCol) }
+      .foldLeft(baseFrame(docs0, conf))(applyStage(_, _, id, docs0, conf.textCol))
     // the appended files must carry the prior output's exact schema —
     // parquet reads take one footer's schema, so a column present in
     // only some files would silently vanish from later reads
@@ -524,65 +559,27 @@ object CorpusPipeline {
     val exactStage = conf.stages.find(_.kind == "dedup_exact")
     val nearStage = conf.stages.find(_.kind == "dedup_near")
     val semStage = conf.stages.find(_.kind == "dedup_semantic")
-    val embFrame: Option[DataFrame] = semStage.map { st =>
-      val embDir = graft.config.GraftConfig.substituteEnvVar(
-        st.embeddings_dir.getOrElse(throw new IllegalArgumentException(
-          "dedup_semantic needs embeddings_dir")))
-      // the sidecar must cover BOTH the ingested corpus and the shard —
-      // an upstream embedder maintains it alongside the crawl
-      spark.read.parquet(embDir)
-        .select(col(st.vec_id_column.getOrElse("vec_id")).as(id),
-          col(st.vector_column.getOrElse("embedding")).as("__graft_vec"))
-    }
-    def extendIndexes(rows: DataFrame): Unit = {
-      exactStage.foreach { _ =>
-        rows.select(TA.fingerprint(col("text")).as("fp")).distinct()
-          .write.mode("append").parquet(new Path(artRoot, "fp").toString)
-      }
-      nearStage.foreach { st =>
-        Dedup.buildLshIndex(rows, id, col("text"), st.nVal(3))
-          .write.mode("append").parquet(new Path(artRoot, "lsh").toString)
-      }
-      semStage.foreach { _ =>
-        graft.ops.Similarity.buildCosineLshIndex(
-            embFrame.get.join(rows.select(col(id)), Seq(id), "left_semi"),
-            id, "__graft_vec")
-          .write.mode("append").parquet(new Path(artRoot, "coslsh").toString)
-      }
-    }
+    // the sidecar must cover BOTH the ingested corpus and the shard —
+    // an upstream embedder maintains it alongside the crawl
+    val embFrame = semStage.map(sidecarVectors(spark, _, id))
     // Bootstrap (once, from the prior output — the only time corpus
     // text is re-read): each index an active stage needs, if absent.
     // Centralized so the replay-recovery path can force it BEFORE it
     // appends to an index — an append to a never-bootstrapped path
     // would create a partial artifact whose `_SUCCESS` marker then
     // masks the missing corpus coverage.
+    def ensure(name: String, what: String)(index: => DataFrame): Unit = {
+      val path = new Path(artRoot, name)
+      if (!ready(path)) {
+        out(s"building $what $path from prior output")
+        index.write.mode("overwrite").parquet(path.toString)
+      }
+    }
     def ensureArtifacts(): Unit = {
-      exactStage.foreach { _ =>
-        val fpPath = new Path(artRoot, "fp")
-        if (!ready(fpPath)) {
-          out(s"building fingerprint artifact $fpPath from prior output")
-          prior.select(TA.fingerprint(col("text")).as("fp")).distinct()
-            .write.mode("overwrite").parquet(fpPath.toString)
-        }
-      }
-      nearStage.foreach { st =>
-        val lshPath = new Path(artRoot, "lsh")
-        if (!ready(lshPath)) {
-          out(s"building LSH index artifact $lshPath from prior output")
-          Dedup.buildLshIndex(prior, id, col("text"), st.nVal(3))
-            .write.mode("overwrite").parquet(lshPath.toString)
-        }
-      }
-      semStage.foreach { _ =>
-        val cosPath = new Path(artRoot, "coslsh")
-        if (!ready(cosPath)) {
-          out(s"building cosine-LSH index artifact $cosPath from prior output")
-          graft.ops.Similarity.buildCosineLshIndex(
-              embFrame.get.join(prior.select(col(id)), Seq(id), "left_semi"),
-              id, "__graft_vec")
-            .write.mode("overwrite").parquet(cosPath.toString)
-        }
-      }
+      exactStage.foreach(_ => ensure("fp", "fingerprint artifact")(fpIndex(prior)))
+      nearStage.foreach(st => ensure("lsh", "LSH index artifact")(lshIndex(prior, id, st)))
+      semStage.foreach(_ =>
+        ensure("coslsh", "cosine-LSH index artifact")(cosIndex(embFrame.get, prior, id)))
     }
 
     // The equality contract (see the scaladoc above runIncremental)
@@ -642,70 +639,55 @@ object CorpusPipeline {
           // bootstrap first: appending recovery rows to an absent index
           // must not leave a partial artifact masquerading as complete
           ensureArtifacts()
-          extendIndexes(overlap)
+          // every overlap row was kept, so only the indexes grow
+          writeArtifacts(conf, artRoot.toString, DedupKinds.map(_ -> overlap).toMap,
+            overlap, "append")
           shaped.join(prior.select(col(id)), Seq(id), "left_anti")
         }
     }
 
     ensureArtifacts()
     val afterExact = exactStage.fold(batchIn) { _ =>
-      val fpPath = new Path(artRoot, "fp")
       val survivors = Dedup.incrementalExactDedup(prior, batchIn, id, col("text"),
-        corpusFps = Some(spark.read.parquet(fpPath.toString)))
+        corpusFps = Some(artifact("fp")))
       val next = batchIn.join(survivors.select(col(id)), Seq(id), "left_semi")
         .localCheckpoint(true)
       out(f"stage dedup_exact rows=${next.count()}")
       next
     }
     val admitted = nearStage.fold(afterExact) { st =>
-      val lshPath = new Path(artRoot, "lsh")
-      val (n, thr) = (st.nVal(3), st.thresholdVal(0.8))
       // the verification text side covers everything the index covers:
       // the prior OUTPUT plus rows past increments near/semantic-
       // DROPPED (`near_dropped/`) — so a batch row transitively
       // duplicating a dropped row (B∼dropped D∼keeper K, without B∼K)
       // is verified against D's text and rejected, exactly as the
       // from-scratch union run rejects it via the transitive cluster
-      val nearDroppedPath = new Path(artRoot, "near_dropped")
-      val corpusTexts0 = prior.select(col(id), col("text"))
-      val corpusTexts =
-        if (fs.exists(nearDroppedPath))
-          corpusTexts0.unionByName(spark.read.parquet(nearDroppedPath.toString))
-        else corpusTexts0
       val pairs = Dedup.incrementalNearDupPairs(
-        corpusTexts, afterExact.select(col(id), col("text")), id, col("text"),
-        n = n, threshold = thr,
-        corpusIndex = Some(spark.read.parquet(lshPath.toString)))
+        withDropped(prior.select(col(id), col("text")), "near_dropped"),
+        afterExact.select(col(id), col("text")), id, col("text"),
+        n = st.nVal(3), threshold = st.thresholdVal(0.8),
+        corpusIndex = Some(artifact("lsh")))
       // drop only BATCH members of each cluster: ingested rows are
       // immutable, and the cluster label is the component's min id, so
       // the restriction reproduces the from-scratch keeper when batch
       // ids sort after corpus ids
-      val drops = Dedup.clusterDropList(Dedup.nearDupClusters(pairs))
-        .withColumnRenamed("doc_id", id)
-      val next = afterExact.join(drops, Seq(id), "left_anti").localCheckpoint(true)
+      val next = withoutClusterDups(afterExact, pairs, id).localCheckpoint(true)
       out(f"stage dedup_near rows=${next.count()}")
       next
     }
 
     val admittedSem = semStage.fold(admitted) { st =>
       val emb = embFrame.get
-      val cosPath = new Path(artRoot, "coslsh")
       val batchVecs = emb.join(admitted.select(col(id)), Seq(id), "left_semi")
       // vector lookup must cover every id the coslsh index holds — the
       // prior output plus past increments' semantically-dropped ids
       // (`sem_dropped/`; their vectors still live in the sidecar)
-      val semDroppedPath = new Path(artRoot, "sem_dropped")
-      val indexedIds =
-        if (fs.exists(semDroppedPath))
-          prior.select(col(id)).unionByName(spark.read.parquet(semDroppedPath.toString))
-        else prior.select(col(id))
-      val corpusVecs = emb.join(indexedIds, Seq(id), "left_semi")
+      val corpusVecs = emb.join(withDropped(prior.select(col(id)), "sem_dropped"),
+        Seq(id), "left_semi")
       val pairs = graft.ops.Similarity.incrementalCosinePairs(
         corpusVecs, batchVecs, id, "__graft_vec", st.thresholdVal(0.4),
-        corpusIndex = Some(spark.read.parquet(cosPath.toString)))
-      val drops = Dedup.clusterDropList(Dedup.nearDupClusters(pairs))
-        .withColumnRenamed("doc_id", id)
-      val next = admitted.join(drops, Seq(id), "left_anti")
+        corpusIndex = Some(artifact("coslsh")))
+      val next = withoutClusterDups(admitted, pairs, id)
       out(f"stage dedup_semantic rows=${next.count()}")
       next
     }
@@ -715,47 +697,11 @@ object CorpusPipeline {
     // reads is only safe once the plan no longer reads it
     val batchOut = admittedSem.localCheckpoint(true)
     batchOut.write.mode("append").parquet(priorDir)
-    // Extend the artifacts so the NEXT increment admits against the
-    // updated corpus without reading its text. Coverage is deliberately
-    // WIDER than the survivors — it is what makes admission transitive
-    // across increments, matching the from-scratch union run:
-    //   fp     ← every shaped batch row (a future exact-dup of a row
-    //            this increment dropped anywhere must still be
-    //            rejected, as exact dedup over the union would);
-    //   lsh    ← every exact-survivor (near/semantic-dropped rows stay
-    //            indexed; their text goes to near_dropped/ below so
-    //            future collisions against them verify);
-    //   coslsh ← every row that reached the semantic stage.
-    // ORDER matters for crash-replay: the fp append commits LAST of the
-    // extensions. If it committed first and the crash hit before the
-    // lsh/near_dropped appends, a replay would exact-drop the dropped
-    // rows against their OWN fingerprints — they would never reach the
-    // near stage again and their lsh/near_dropped coverage would be
-    // lost for good. With fp last, an un-fp'd replay re-runs those rows
-    // through the near/semantic stages, which re-drops them and
-    // re-appends their (idempotent, dedup-consumed) index rows.
-    nearStage.foreach { st =>
-      Dedup.buildLshIndex(afterExact, id, col("text"), st.nVal(3))
-        .write.mode("append").parquet(new Path(artRoot, "lsh").toString)
-      // rows in the lsh index but NOT in the output — their text backs
-      // exact-Jaccard verification of future collisions against them
-      afterExact.join(batchOut.select(col(id)), Seq(id), "left_anti")
-        .select(col(id), col("text"))
-        .write.mode("append").parquet(new Path(artRoot, "near_dropped").toString)
-    }
-    semStage.foreach { _ =>
-      graft.ops.Similarity.buildCosineLshIndex(
-          embFrame.get.join(admitted.select(col(id)), Seq(id), "left_semi"),
-          id, "__graft_vec")
-        .write.mode("append").parquet(new Path(artRoot, "coslsh").toString)
-      admitted.join(batchOut.select(col(id)), Seq(id), "left_anti")
-        .select(col(id))
-        .write.mode("append").parquet(new Path(artRoot, "sem_dropped").toString)
-    }
-    exactStage.foreach { _ =>
-      batchIn.select(TA.fingerprint(col("text")).as("fp")).distinct()
-        .write.mode("append").parquet(new Path(artRoot, "fp").toString)
-    }
+    // extend the artifacts so the NEXT increment admits against the
+    // updated corpus without reading its text (coverage and commit
+    // order: see writeArtifacts)
+    writeArtifacts(conf, artRoot.toString, Map("dedup_exact" -> batchIn,
+      "dedup_near" -> afterExact, "dedup_semantic" -> admitted), batchOut, "append")
     // the completion marker commits LAST: its existence proves the
     // output append AND every artifact extension landed, so a replay
     // of this batch is a pure no-op (see the top of this method)
@@ -936,19 +882,7 @@ object CorpusPipeline {
       s"streaming chain admits only ${StreamableKinds.toSeq.sorted.mkString(", ")} — " +
         s"got: ${badKinds.mkString(", ")} (run stateful stages in batch `corpus run`)")
     val in = graft.ingest.Jsonl.readStream(spark, conf.inputDir, StreamSchema)
-    val shaped = conf.stages.foldLeft(in) { (df, st) =>
-      st.kind match {
-        case "html_strip" =>
-          // markup→prose extraction ahead of the text stages
-          df.withColumn("text", TA.stripHtml(col("text")))
-        case "pii_scrub" => df.withColumn("text", TA.scrubPii(col("text")))
-        case "gopher_filter" => df.filter(TA.gopherPass(col("text")))
-        case "compression_filter" =>
-          df.filter(call_function("graft_deflate_ratio", col("text")) >=
-            st.thresholdVal(0.25))
-        case "c4_clean" => c4CleanStage(df, col("text"))
-      }
-    }
+    val shaped = conf.stages.foldLeft(in)(applyStage(_, _, "doc_id", in, "text"))
     val admitted = corpusDir match {
       case Some(cd) =>
         graft.streaming.StreamingPipeline.admitStream(
@@ -1058,26 +992,18 @@ object CorpusPipeline {
           .select(col(id))
         df.join(keepIds, Seq(id), "left_semi")
       case "dedup_near" =>
-        val drops = Dedup.clusterDropList(Dedup.nearDupClusters(
-          Dedup.ngramJaccardPairs(df, id, text,
-            st.nVal(3), st.thresholdVal(0.8), dfOrder = true)))
-        df.join(drops.withColumnRenamed("doc_id", id), Seq(id), "left_anti")
+        withoutClusterDups(df, Dedup.ngramJaccardPairs(df, id, text,
+          st.nVal(3), st.thresholdVal(0.8), dfOrder = true), id)
       case "dedup_semantic" =>
         // SemDeDup over a sidecar embedding table: vectors join onto
         // the surviving docs by id, near-identical embedding pairs
         // cluster, and each cluster keeps one member (min id)
-        val embDir = st.embeddings_dir.getOrElse(throw new IllegalArgumentException(
-          "dedup_semantic needs embeddings_dir"))
-        val vecs = df.sparkSession.read
-          .parquet(graft.config.GraftConfig.substituteEnvVar(embDir))
-          .select(col(st.vec_id_column.getOrElse("vec_id")).as("doc_id"),
-            col(st.vector_column.getOrElse("embedding")).as("__graft_vec"))
+        val vecs = sidecarVectors(df.sparkSession, st, "doc_id")
           .join(df.select(col(id).as("doc_id")), Seq("doc_id"))
         val pairs = graft.ops.Similarity.semanticDedupPairs(
           vecs, "doc_id", "__graft_vec",
           st.thresholdVal(0.4), sampleMod = st.sampleModVal(1))
-        val semDrops = Dedup.clusterDropList(Dedup.nearDupClusters(pairs))
-        df.join(semDrops.withColumnRenamed("doc_id", id), Seq(id), "left_anti")
+        withoutClusterDups(df, pairs, id)
       case "dedup_phash" | "dedup_audio_fp" =>
         // media near-dup dedup over a (media_id, media, media_type)
         // sidecar — the pixel/sample-space analog of dedup_near:
@@ -1098,20 +1024,14 @@ object CorpusPipeline {
           else graft.ops.Multimodal.perceptualHash(media, codec = mk)
         val phPairs = graft.ops.Multimodal.phashPairs(hashes,
           maxDistance = st.maxDistanceVal(3))
-        val phDrops = Dedup.clusterDropList(Dedup.nearDupClusters(phPairs))
-        df.join(phDrops.withColumnRenamed("doc_id", id), Seq(id), "left_anti")
+        withoutClusterDups(df, phPairs, id)
       case "diversify" =>
         // D4 cluster-prototype pruning (Tirumala et al. 2023) over the
         // same sidecar embedding convention as dedup_semantic: cluster
         // the surviving docs' vectors, drop each cluster's most
         // prototypical drop_frac. Docs with no embedding pass through
         // (left_anti on the drop list), matching dedup_semantic.
-        val embDir = st.embeddings_dir.getOrElse(throw new IllegalArgumentException(
-          "diversify needs embeddings_dir"))
-        val vecs = df.sparkSession.read
-          .parquet(graft.config.GraftConfig.substituteEnvVar(embDir))
-          .select(col(st.vec_id_column.getOrElse("vec_id")).as("doc_id"),
-            col(st.vector_column.getOrElse("embedding")).as("__graft_vec"))
+        val vecs = sidecarVectors(df.sparkSession, st, "doc_id")
           .join(df.select(col(id).as("doc_id")), Seq("doc_id"))
         val verdicts = graft.ops.Similarity.diversify(
           vecs, "doc_id", "__graft_vec", st.dropFracVal(0.25),
@@ -1123,12 +1043,7 @@ object CorpusPipeline {
         // topic-balanced sampling over the same sidecar-embedding
         // convention: each embedding cell downsampled to the smallest
         // cell's mass; docs without an embedding pass through
-        val embDir = st.embeddings_dir.getOrElse(throw new IllegalArgumentException(
-          "cluster_balance needs embeddings_dir"))
-        val vecs = df.sparkSession.read
-          .parquet(graft.config.GraftConfig.substituteEnvVar(embDir))
-          .select(col(st.vec_id_column.getOrElse("vec_id")).as("doc_id"),
-            col(st.vector_column.getOrElse("embedding")).as("__graft_vec"))
+        val vecs = sidecarVectors(df.sparkSession, st, "doc_id")
           .join(df.select(col(id).as("doc_id")), Seq("doc_id"))
         val keptIds = graft.ops.Similarity.clusterBalancedSample(
           vecs, "doc_id", "__graft_vec",
@@ -1351,6 +1266,13 @@ object CorpusPipeline {
           graft.ops.UnigramLm.Config(maxWordLen = st.nVal(10)))
     }
   }
+
+  /** `df` without the non-keeper members (all but the min id) of each
+    * connected cluster of the duplicate `pairs`.
+    */
+  private def withoutClusterDups(df: DataFrame, pairs: DataFrame, id: String): DataFrame =
+    df.join(Dedup.clusterDropList(Dedup.nearDupClusters(pairs)).withColumnRenamed("doc_id", id),
+      Seq(id), "left_anti")
 
   /** The C4 page clean as a frame stage: filter pages by the gate over
     * the raw lines, then rewrite `text` to the surviving lines — pure

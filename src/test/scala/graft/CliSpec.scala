@@ -309,6 +309,8 @@ class CliSpec extends SparkSpec {
          |watermark: 6 hours
          |stages:
          |  - kind: pii_scrub
+         |  - kind: keyword_filter
+         |    block_tokens: [casino]
          |  - kind: compression_filter
          |    threshold: 0.0
          |""".stripMargin)
@@ -316,14 +318,17 @@ class CliSpec extends SparkSpec {
       s"""{"doc_id": $id, "text": "$text", "ts": "2026-01-01T00:00:00.000Z"}"""
     Files.writeString(java.nio.file.Paths.get(inDir, "b1.json"),
       Seq(jline(10L, "already ingested text"),
-        jline(11L, "mail bob@example.com about it")).mkString("", "\n", "\n"))
+        jline(11L, "mail bob@example.com about it"),
+        jline(15L, "win big at the casino tonight")).mkString("", "\n", "\n"))
     val printed = collection.mutable.Buffer[String]()
     assert(Cli.run(Seq("corpus", "stream", conf), spark, printed += _) == 0)
     val got = spark.read.parquet(outDir)
     assert(got.select($"doc_id").as[Long].collect().toSet == Set(11L),
-      "corpus dup should be dropped, fresh doc admitted")
+      "corpus dup and blocklisted doc should be dropped, fresh doc admitted")
     assert(got.filter($"text".contains("<EMAIL>")).count() == 1,
       "pii_scrub stage did not run on the stream")
+    assert(got.filter($"text".contains("casino")).count() == 0,
+      "keyword_filter stage did not run on the stream")
     // second invocation, same checkpoint: b1.json is NOT reprocessed
     assert(Cli.run(Seq("corpus", "stream", conf), spark, printed += _) == 0)
     assert(spark.read.parquet(outDir).count() == 1, "replay duplicated rows")
@@ -1192,6 +1197,26 @@ class CliSpec extends SparkSpec {
     assert(Cli.run(Seq("corpus", "run", conf(s"$root/seed2", outDir)), spark, _ => ()) == 0)
     assert(spark.read.parquet(s"$outDir.artifacts/near_dropped").count() == 0L,
       "overwriting the output left stale drop coverage beside it")
+    // a per-row stage AFTER a dedup stage breaks the incremental-chain
+    // rule (it rewrites the text the dedup keys hashed): `corpus run`
+    // writes no artifacts for such a chain, and `--into` refuses it
+    val unordered = s"$root/unordered"
+    val unorderedConf = s"$root/conf-unordered.yaml"
+    Files.write(java.nio.file.Paths.get(unorderedConf),
+      s"""input_dir: $root/seed
+         |output_dir: $unordered
+         |stages:
+         |  - kind: dedup_exact
+         |  - kind: pii_scrub
+         |""".stripMargin.getBytes("UTF-8"))
+    assert(Cli.run(Seq("corpus", "run", unorderedConf), spark, _ => ()) == 0)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$unordered.artifacts")),
+      "an out-of-order chain wrote admission artifacts eagerly")
+    val refused = intercept[IllegalArgumentException] {
+      Cli.run(Seq("corpus", "run", unorderedConf, "--into", unordered), spark, _ => ())
+    }
+    assert(refused.getMessage.contains("per-row stages must precede the dedup stages"),
+      refused.getMessage)
   }
 
   test("cli: corpus compact collapses file groups, admission results unchanged") {

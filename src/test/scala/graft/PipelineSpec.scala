@@ -106,19 +106,6 @@ class PipelineSpec extends SparkSpec {
     assert(streamed.join(batch, Seq("c_custkey"), "left_anti").count() == 0)
   }
 
-  test("progress listener reports cumulative rows and bytes for a write job") {
-    import graft.pipeline.ProgressListener
-    val out = Files.createTempDirectory("graft-progress-").toString + "/out"
-    val reports = new java.util.concurrent.atomic.AtomicLong
-    val (_, snap) = ProgressListener.track(spark, _ => reports.incrementAndGet()) {
-      load("customer").write.mode("overwrite").parquet(out)
-    }
-    assert(snap.rowsRead > 0, "no input rows observed")
-    assert(snap.rowsWritten == load("customer").count(), "output row total wrong")
-    assert(snap.bytesWritten > 0 && snap.tasksDone > 0)
-    assert(reports.get >= snap.tasksDone, "per-task callbacks missing")
-  }
-
   test("streaming: watermarked dedup drops in-horizon duplicates, matches batch J3 counts") {
     import graft.streaming.StreamingPipeline
     val inDir = Files.createTempDirectory("graft-dedup-in").toString
