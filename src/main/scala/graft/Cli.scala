@@ -178,17 +178,12 @@ object Cli {
               else
                 graft.ingest.MySqlLive.dumpToStream(mysqlConn(conn), o,
                   cmd = toolCmd(spark, "mysqldump")))
-            try {
-              val stmts = graft.ingest.DumpReader.statements(spark, spool)
-                .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-              try {
-                val ddlByTable = graft.ingest.DumpReader.listing(stmts).ddl
-                ddlByTable.keys.toSeq.sorted.foreach { t =>
-                  out(s"table: ${c.sourceConf.db}.$t")
-                  out(graft.ingest.DumpReader.tableFromDump(stmts, c.sourceConf.db, t,
-                    ddlByTable.get(t)).schema.treeString)
-                }
-              } finally stmts.unpersist()
+            try graft.ingest.DumpReader.withParsed(
+              graft.ingest.DumpReader.statements(spark, spool)) { dump =>
+              dump.listing.ddl.keys.toSeq.sorted.foreach { t =>
+                out(s"table: ${c.sourceConf.db}.$t")
+                out(dump.table(c.sourceConf.db, t).schema.treeString)
+              }
             } finally deleteSpool(spool, spark)
           case Some(conn) =>
             val schema = c.sourceConf.jdbcSchema
@@ -395,17 +390,17 @@ object Cli {
           else nameArg
         val dbDir = java.nio.file.Files.createTempDirectory("graft-ephemeral-").resolve("db")
         val url = s"jdbc:derby:$dbDir;create=true"
-        val (tables, _, ephSpool) = restoreFrames(c, store, name, spark)
-        try tables.foreach { case (t, df) =>
-          // persist: the restore pipeline (datastore read + parse +
-          // typing) would otherwise run twice — once for the JDBC
-          // write, once for the count
-          df.persist()
-          try {
-            graft.ingest.Jdbc.writeTable(df, url, t)
-            out(s"restored: $t (${df.count()} rows)")
-          } finally df.unpersist()
-        } finally ephSpool.foreach(deleteSpool(_, spark))
+        withRestoreFrames(c, store, name, spark) { (tables, _) =>
+          tables.foreach { case (t, df) =>
+            // persist: the table's typing would otherwise run twice —
+            // once for the JDBC write, once for the count
+            df.persist()
+            try {
+              graft.ingest.Jdbc.writeTable(df, url, t)
+              out(s"restored: $t (${df.count()} rows)")
+            } finally df.unpersist()
+          }
+        }
         out(s"ephemeral database ready: $url")
         out(s"teardown: delete $dbDir")
         0
@@ -440,10 +435,10 @@ object Cli {
         // archive-format dump → any other destination: spool the
         // decoded archive once (same owner-only convention as the live
         // sources) and decode it into typed frames on the executors;
-        // statement dumps parse as before. The spool is read LAZILY by
-        // the frames, so its delete sits after the destination writes.
-        val (tables, storedDdl, restoreSpool) = restoreFrames(c, store, name, spark)
-        try {
+        // statement dumps parse once into a pin. The frames read the
+        // spool or the pin, so both live until the destination writes
+        // end.
+        withRestoreFrames(c, store, name, spark) { (tables, storedDdl) =>
         c.destinationMongo match {
           // live MongoDB restore (D3 live leg) of a STATEMENT dump:
           // frames re-encode to archive bytes piped into mongorestore's
@@ -649,7 +644,7 @@ object Cli {
               out(s"restored: $t")
             }
         }
-        } finally restoreSpool.foreach(deleteSpool(_, spark))
+        }
         0
 
       case other =>
@@ -671,54 +666,38 @@ object Cli {
                                  spark: SparkSession, out: String => Unit): Int = {
     val store = new Datastore(datastoreUri(c), spark)
     val db = c.sourceConf.db
-    // the statement stream is consumed by the listing plus one load
-    // per table — parse the file ONCE
-    val stmts = graft.ingest.DumpReader.statements(spark, dumpPath)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val listing = graft.ingest.DumpReader.listing(stmts)
+    graft.ingest.DumpReader.withParsed(graft.ingest.DumpReader.statements(spark, dumpPath)) { dump =>
+      val listing = dump.listing
       // the loaders filter on the config database — a dump whose
       // statements live in another schema would otherwise produce
       // empty tables that LOOK like a successful dump
       val foreignDbs = (listing.insertRefs ++ listing.copyRefs).map(_._1).filter(_ != db)
+      val dumpTables = (listing.insertRefs ++ listing.copyRefs).map(_._2).toSeq.sorted
       if (foreignDbs.nonEmpty) {
         out(s"dump file uses database(s) ${foreignDbs.mkString(", ")} but config " +
           s"source.database is '$db' — set source.database to match")
-        return 1
-      }
-      val insertTables = listing.insertRefs.map(_._2)
-      val copyTables = listing.copyRefs.map(_._2)
-      val dumpTables = (insertTables ++ copyTables).toSeq.sorted
-      if (dumpTables.isEmpty) {
+        1
+      } else if (dumpTables.isEmpty) {
         out(s"no INSERT or COPY data found in $dumpPath — nothing to dump")
-        return 1
+        1
+      } else {
+        val job = Pipeline.DumpJobConfig(
+          tables = dumpTables,
+          database = db,
+          filters = c.filters,
+          bindings = c.bindings,
+          subset = c.subsetConfig,
+          fkEdges = listing.fkEdges,
+          compressed = c.datastore.flatMap(_.compression).getOrElse(true),
+          encryptionKey = c.encryptionKey,
+          // the dump's own CREATE TABLE statements travel with the data
+          // so a live restore recreates the source's true column types
+          ddl = listing.ddl)
+        Pipeline.dump(spark, dump.table(db, _), store, name, job)
+        out(s"dump created from file: $name (${dumpTables.size} tables)")
+        0
       }
-      val job = Pipeline.DumpJobConfig(
-        tables = dumpTables,
-        database = db,
-        filters = c.filters,
-        bindings = c.bindings,
-        subset = c.subsetConfig,
-        fkEdges = listing.fkEdges,
-        compressed = c.datastore.flatMap(_.compression).getOrElse(true),
-        encryptionKey = c.encryptionKey,
-        // the dump's own CREATE TABLE statements travel with the data
-        // so a live restore recreates the source's true column types
-        ddl = listing.ddl)
-      // a table's rows may arrive as INSERTs, COPY blocks, or both
-      val load = (t: String) => {
-        val ddl = listing.ddl.get(t)
-        val parts = Seq(
-          if (insertTables.contains(t))
-            Some(graft.ingest.DumpReader.tableFromDump(stmts, db, t, ddl)) else None,
-          if (copyTables.contains(t))
-            Some(graft.ingest.DumpReader.tableFromCopy(stmts, db, t, ddl)) else None).flatten
-        parts.reduce(_.unionByName(_))
-      }
-      Pipeline.dump(spark, load, store, name, job)
-      out(s"dump created from file: $name (${dumpTables.size} tables)")
-      0
-    } finally stmts.unpersist()
+    }
   }
 
   /** Spool a dump piped on stdin into the datastore's filesystem
@@ -760,28 +739,25 @@ object Cli {
     dir
   }
 
-  /** Dump frames for a restore, by stored format: statement dumps
-    * parse via [[Pipeline.restoreWithDdl]]; `mongo-archive` dumps
-    * spool the decoded archive once (owner-only, same convention as
-    * the live sources) and decode into TYPED frames on the executors.
-    * Returns (tables, storedDdl, spoolToDeleteAfterUse) — the frames
-    * read the spool LAZILY, so callers delete it only after the last
-    * action that consumes them.
+  /** Run `body` over a restore's frames and stored DDL, by stored
+    * format: statement dumps parse once into a pin
+    * ([[Pipeline.restore]]); `mongo-archive` dumps spool the decoded
+    * archive once (owner-only, same convention as the live sources)
+    * and decode into TYPED frames on the executors. The frames read
+    * the pin or the spool lazily, so both are released only when
+    * `body` ends.
     */
-  private def restoreFrames(c: GraftConfig, store: Datastore, name: String,
-                            spark: SparkSession)
-      : (Map[String, org.apache.spark.sql.DataFrame], Map[String, String], Option[String]) =
+  private def withRestoreFrames[A](c: GraftConfig, store: Datastore, name: String,
+                                   spark: SparkSession)(
+      body: (Map[String, org.apache.spark.sql.DataFrame], Map[String, String]) => A): A =
     if (store.catalogOps.byName(name).exists(_.format.contains("mongo-archive"))) {
       val spool = liveSpool(spark, c.datastore.map(_.rootUri),
         "archive-restore", ".archive")(o =>
         store.readBlobTo(name, o, c.encryptionKey))
-      (graft.ingest.MongoArchive.readDistributed(spark, spool)
-        .map { case (prefix, df) => prefix.split("\\.", 2).last -> df },
-        Map.empty[String, String], Some(spool))
-    } else {
-      val (t, d) = Pipeline.restoreWithDdl(spark, store, name, c.encryptionKey)
-      (t, d, None)
-    }
+      try body(graft.ingest.MongoArchive.readDistributed(spark, spool)
+        .map { case (prefix, df) => prefix.split("\\.", 2).last -> df }, Map.empty)
+      finally deleteSpool(spool, spark)
+    } else Pipeline.restore(store, name, c.encryptionKey)(body)
 
   /** Tool invocation for the live Mongo legs: `spark.graft.<tool>Cmd`
     * overrides the binary (space-split — tests point it at stub

@@ -1,8 +1,13 @@
 package graft.ingest
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.FileStatus
+import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.model.{FkEdge, Statement, StatementKind}
 
@@ -16,8 +21,8 @@ import graft.model.{FkEdge, Statement, StatementKind}
   * which is correct because chunk boundaries in the reference's own
   * format always fall between statements. Statement parsing, typing,
   * and transformation then run distributed; nothing touches the driver
-  * except the (tiny) DDL header/footer and schema inference over a
-  * bounded sample.
+  * except the (tiny) DDL header/footer and the sample-free type
+  * bounds of a table without DDL (one O(#columns) aggregation).
   */
 object DumpReader {
 
@@ -29,14 +34,12 @@ object DumpReader {
   private[ingest] val ChunkShift = 40
 
   /** Driver-side NAME-only listing of dump part files, sorted by the
-    * *decoded path component* (`java.net.URI.getPath`): both
-    * `input_file_name()` (url-encoded, scheme spelling varies) and
-    * Hadoop `Path`s decode to the same string, so names with
-    * spaces/%-chars rank identically everywhere. Shared with the DSv2
-    * source (`SqlDumpSource`), whose idx layout must match this one.
-    * Returns (decodedPath, fullPathString) pairs in rank order.
+    * *decoded path component* (`java.net.URI.getPath`), so names with
+    * spaces/%-chars rank the same on every filesystem. A directory's
+    * hidden members (`.`/`_` prefixes: checksums, `_SUCCESS` markers)
+    * are skipped, as Spark's file sources skip them.
     */
-  private[ingest] def rankedFiles(spark: SparkSession, path: String): Seq[(String, String)] = {
+  private[ingest] def rankedFiles(spark: SparkSession, path: String): Seq[FileStatus] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     // globStatus handles plain files, directories, AND glob patterns
@@ -45,11 +48,100 @@ object DumpReader {
       throw new java.io.FileNotFoundException(s"no files match: $path"))
     matched
       .flatMap(st =>
-        if (st.isDirectory) fs.listStatus(st.getPath).filter(_.isFile)
+        if (st.isDirectory) fs.listStatus(st.getPath)
+          .filter(f => f.isFile && !f.getPath.getName.startsWith(".") &&
+            !f.getPath.getName.startsWith("_"))
         else Array(st))
-      .map(st => (st.getPath.toUri.getPath, st.getPath.toString))
-      .sortBy(_._1)
+      .sortBy(_.getPath.toUri.getPath)
       .toSeq
+  }
+
+  /** String-literal dialect of one dump file. `forced` when the caller
+    * knows the provenance (engine-written datastore dumps are always
+    * pg: DumpSink synthesis uses '' doubling with raw backslashes).
+    * Otherwise the file's own header decides: pg_dump declares
+    * standard_conforming_strings in every dump file's header, and its
+    * absence means MySQL escape rules (mysqldump emits no such marker).
+    * `firstPg` is the floor a chunked dump's FIRST part sets for its
+    * headerless siblings (a pg dump split at 100 MB boundaries carries
+    * the header only in part 0, ADVICE r17); it never covers a file
+    * that carries mysqldump's own banner, which is a standalone MySQL
+    * dump in a mixed-source directory (ADVICE r18).
+    */
+  private[ingest] final case class Dialect(forced: Option[Boolean], firstPg: Boolean) {
+    def pg(blob: String): Boolean = forced.getOrElse(
+      StatementSplitter.pgStrings(blob) || (firstPg && !StatementSplitter.mysqlHeader(blob)))
+  }
+
+  /** The header rule over ranked files: the first file's header (its
+    * first 64 KB, read on the driver) sets the floor.
+    */
+  private[ingest] def headerDialect(spark: SparkSession, files: Seq[String]): Dialect =
+    Dialect(None, files.headOption.exists { f =>
+      val p = new org.apache.hadoop.fs.Path(f)
+      val in = p.getFileSystem(spark.sessionState.newHadoopConf()).open(p)
+      val head = try in.readNBytes(1 << 16) finally in.close()
+      StatementSplitter.pgStrings(new String(head, java.nio.charset.StandardCharsets.UTF_8))
+    })
+
+  /** Split one decoded dump blob into classified statements, with
+    * `idx = rank << ChunkShift | position`.
+    */
+  private[ingest] def splitBlob(blob: String, rank: Int, pg: Boolean): Iterator[Statement] = {
+    val base = rank.toLong << ChunkShift
+    StatementSplitter.split(blob, Some(pg)).iterator.zipWithIndex.map { case (raw, i) =>
+      val (db, table) = if (raw.kind == StatementKind.CommentLine) ("", "")
+      else StatementSplitter.tableRef(raw.text).getOrElse(("", ""))
+      Statement(base | i.toLong, raw.kind, db, table, raw.text, pg)
+    }
+  }
+
+  /** Read one dump file whole, decode its bytes and split it once. A
+    * compressed file (`.gz`, `.bz2`, … by extension, as Spark's text
+    * source reads it) is inflated first.
+    */
+  private[ingest] def readFile(conf: Configuration, file: String, rank: Int,
+                               decode: Array[Byte] => Array[Byte],
+                               dialect: Dialect): Iterator[Statement] = {
+    val p = new org.apache.hadoop.fs.Path(file)
+    val raw = p.getFileSystem(conf).open(p)
+    val in = Option(new CompressionCodecFactory(conf).getCodec(p))
+      .fold[java.io.InputStream](raw)(_.createInputStream(raw))
+    val bytes = try in.readAllBytes() finally in.close()
+    val blob = new String(decode(bytes), java.nio.charset.StandardCharsets.UTF_8)
+    splitBlob(blob, rank, dialect.pg(blob))
+  }
+
+  /** The one dump reader: `files` in rank order, each read whole,
+    * decoded and split once. Partitions take consecutive files by
+    * Spark's file-source packing rule (`spark.sql.files.maxPartitionBytes`,
+    * each file costing `openCostInBytes` on top of its length), so
+    * partition order is dump order, a large file gets a partition of its
+    * own and small chunks share one. `pgStrings` forces the dialect;
+    * None applies the header rule of [[Dialect]].
+    */
+  private[graft] def readFiles(spark: SparkSession, files: Seq[FileStatus],
+                               decode: Array[Byte] => Array[Byte],
+                               pgStrings: Option[Boolean]): Dataset[Statement] = {
+    import spark.implicits._
+    val dialect = pgStrings.fold(headerDialect(spark, files.map(_.getPath.toString)))(pg =>
+      Dialect(Some(pg), firstPg = false))
+    val sql = spark.sessionState.conf
+    val open = sql.filesOpenCostInBytes
+    val split = math.min(sql.filesMaxPartitionBytes, math.max(open,
+      files.map(_.getLen + open).sum / spark.sparkContext.defaultParallelism))
+    val packs = Vector.newBuilder[Vector[(String, Int)]]
+    var pack = Vector.empty[(String, Int)]
+    var packBytes = 0L
+    files.zipWithIndex.foreach { case (f, rank) =>
+      if (pack.nonEmpty && packBytes + f.getLen > split) { packs += pack; pack = Vector.empty; packBytes = 0L }
+      pack :+= ((f.getPath.toString, rank))
+      packBytes += f.getLen + open
+    }
+    val parts = (packs += pack).result()
+    val conf = new SerializableConfiguration(spark.sessionState.newHadoopConf())
+    spark.createDataset(spark.sparkContext.parallelize(parts, parts.size)
+      .flatMap(_.iterator.flatMap { case (f, rank) => readFile(conf.value, f, rank, decode, dialect) }))
   }
 
   /** Read dump file(s) into a Dataset of classified statements.
@@ -60,97 +152,30 @@ object DumpReader {
     * position within the file. Ranking is a driver-side listing of file
     * *names* only; no data is read for it.
     */
-  def statements(spark: SparkSession, path: String): Dataset[Statement] = {
-    import spark.implicits._
-    val ranked = rankedFiles(spark, path)
-    val files = ranked.map(_._1)
-    val rank = spark.sparkContext.broadcast(files.zipWithIndex.toMap)
-    // the dialect marker lives in the dump's HEADER, which a chunked
-    // multi-file dump carries only in its FIRST part (a pg dump split
-    // at 100 MB boundaries leaves every later chunk headerless) — so
-    // the first-ranked file's header decides the ingest-wide floor and
-    // per-file detection can only turn pg ON (a later file with its
-    // own header is pg regardless). Driver-side head read: the SET
-    // block sits in the first KBs. (ADVICE r17)
-    val firstPg = ranked.headOption.exists { case (_, full) =>
-      StatementSplitter.pgStrings(readHead(spark, full, 1 << 16))
-    }
-    spark.read.option("wholetext", "true").text(path)
-      .select(input_file_name().as("f"), col("value"))
-      .as[(String, String)]
-      .flatMap { case (file, blob) =>
-        val key = new java.net.URI(file).getPath
-        val r = rank.value.getOrElse(key,
-          throw new IllegalStateException(s"input file missing from rank listing: $file"))
-        val base = r.toLong << ChunkShift
-        // per-file dialect: pg_dump declares standard_conforming_strings
-        // in every dump file's header; its absence means MySQL escape
-        // rules (mysqldump emits no such marker) — unless the ingest's
-        // first file declared pg for the whole chunked set. The floor
-        // only covers HEADERLESS files (pg chunk siblings): a file that
-        // carries mysqldump's own banner is a standalone MySQL dump in
-        // a mixed-source directory, not a chunk of the pg dump, and
-        // keeps MySQL escape rules (ADVICE r18).
-        val pg = StatementSplitter.pgStrings(blob) ||
-          (firstPg && !StatementSplitter.mysqlHeader(blob))
-        StatementSplitter.split(blob, Some(pg)).iterator.zipWithIndex.map { case (raw, i) =>
-          val (db, table) = if (raw.kind == StatementKind.CommentLine) ("", "")
-          else StatementSplitter.tableRef(raw.text).getOrElse(("", ""))
-          Statement(base | i.toLong, raw.kind, db, table, raw.text, pg)
-        }
-      }
-  }
-
-  /** First `max` bytes of a file as UTF-8 text (driver-side, for header
-    * sniffing only). Shared with the DSv2 scan, whose dialect rule must
-    * match this one.
-    */
-  private[ingest] def readHead(spark: SparkSession, path: String, max: Int): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val in = fs.open(p)
-    try {
-      val buf = new Array[Byte](max)
-      var off = 0
-      var n = in.read(buf, 0, max)
-      while (n > 0 && off + n < max) { off += n; n = in.read(buf, off, max - off) }
-      if (n > 0) off += n
-      new String(buf, 0, off, java.nio.charset.StandardCharsets.UTF_8)
-    } finally in.close()
-  }
+  def statements(spark: SparkSession, path: String): Dataset[Statement] =
+    readFiles(spark, rankedFiles(spark, path), identity, pgStrings = None)
 
   /** Split already-isolated statement strings (one per row) — used when
     * statements were produced upstream (e.g. re-synthesis roundtrips).
+    * Each partition is joined back into one blob so the splitter (not
+    * the upstream row boundaries) decides statement boundaries, and its
+    * index is the blob's rank. `pgStrings` forces the dialect; None
+    * detects each partition's own marker, which only the partition
+    * holding the header sees.
     */
   def statementsFromStrings(spark: SparkSession, stmts: Dataset[String],
                             pgStrings: Option[Boolean] = None): Dataset[Statement] = {
     import spark.implicits._
-    // string-literal dialect: callers that KNOW the provenance pass it
-    // (engine-written datastore dumps are always pg-semantics — DumpSink
-    // synthesis uses '' doubling with raw backslashes); None falls back
-    // to per-partition-blob marker detection, which only sees the
-    // marker in the partition that holds the header
-    val forced = pgStrings
+    val dialect = Dialect(pgStrings, firstPg = false)
     // mapPartitionsWithIndex on the RDD, not TaskContext.getPartitionId
     // in a Dataset mapPartitions: a downstream coalesce() merges
     // partitions into one task, and the *task* id would rebase every
     // chunk to 0 — the RDD split index survives coalescing because the
     // merged task iterates parent partitions with their original ids.
-    val parsed = stmts.rdd.mapPartitionsWithIndex { (pid, it) =>
-      // join the partition back into one blob so the splitter (not the
-      // upstream row boundaries) decides statement boundaries; the
-      // partition id in the high idx bits keeps idx globally monotonic
-      // (union/file order = partition order)
-      val base = pid.toLong << ChunkShift
+    spark.createDataset(stmts.rdd.mapPartitionsWithIndex { (pid, it) =>
       val blob = it.mkString("\n")
-      val pg = forced.getOrElse(StatementSplitter.pgStrings(blob))
-      StatementSplitter.split(blob, Some(pg)).iterator.zipWithIndex.map { case (raw, i) =>
-        val (db, table) = if (raw.kind == StatementKind.CommentLine) ("", "")
-        else StatementSplitter.tableRef(raw.text).getOrElse(("", ""))
-        Statement(base | i.toLong, raw.kind, db, table, raw.text, pg)
-      }
-    }
-    spark.createDataset(parsed)
+      splitBlob(blob, pid, dialect.pg(blob))
+    })
   }
 
   /** G1 over a dump: per-table stats in one distributed pass — reference
@@ -230,6 +255,37 @@ object DumpReader {
       ddl = rows.collect { case (StatementKind.CreateTable, _, t, _, sql) => t -> sql }.toMap,
       fkEdges = rows.toSeq.collect { case (StatementKind.AlterTable, _, _, _, sql) => sql }
         .flatMap(Ddl.foreignKey))
+  }
+
+  /** A parsed dump, pinned for the length of one [[withParsed]] scope:
+    * its statements and their [[Listing]]. Every table frame reads the
+    * pin, so the dump is read and split once per command.
+    */
+  final class Parsed private[DumpReader] (stmts: Dataset[Statement], val listing: Listing) {
+
+    /** One table's rows, typed by its CREATE TABLE when the dump has
+      * one: its INSERT rows, its COPY rows, or both unioned. A table
+      * with no data gets the (empty, DDL-typed) INSERT frame.
+      */
+    def table(database: String, table: String): DataFrame = {
+      val ref = (database, table)
+      val ddl = listing.ddl.get(table)
+      val copies = listing.copyRefs(ref)
+      Seq(
+        if (listing.insertRefs(ref) || !copies) Some(tableFromDump(stmts, database, table, ddl)) else None,
+        if (copies) Some(tableFromCopy(stmts, database, table, ddl)) else None)
+        .flatten.reduce(_.unionByName(_))
+    }
+  }
+
+  /** Pin `stmts`, list them in one pass, run `body` over the result and
+    * release the pin, however `body` ends. Frames taken from the
+    * [[Parsed]] must not outlive `body`.
+    */
+  def withParsed[A](stmts: Dataset[Statement])(body: Parsed => A): A = {
+    val pinned = stmts.persist(StorageLevel.MEMORY_AND_DISK)
+    try body(new Parsed(pinned, listing(pinned)))
+    finally pinned.unpersist()
   }
 
   /** S10 over a dump: the FK edge list (drives the subset engine). The

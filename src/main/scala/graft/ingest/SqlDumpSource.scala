@@ -2,10 +2,7 @@ package graft.ingest
 
 import java.util
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -14,8 +11,9 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
-import graft.model.StatementKind
+import graft.model.Statement
 
 /** DataSource V2 `.sql`-dump source — the "statement-splitting reader"
   * SURVEY §4 lists as the one custom source worth Catalyst integration:
@@ -25,9 +23,10 @@ import graft.model.StatementKind
   *
   * One input partition per dump file (a statement may span lines but
   * never files, so whole-file units are the correct split boundary —
-  * reference splitter contract, `dump-parser/src/utils.rs:33-121`);
-  * `idx` is globally monotonic in dump order with the file's name-rank
-  * in the high bits, like `DumpReader.statements`. Column pruning is
+  * reference splitter contract, `dump-parser/src/utils.rs:33-121`).
+  * Each partition runs `DumpReader`'s per-file step over the same
+  * ranked listing, so its rows are `DumpReader.statements`' rows,
+  * idx included. Column pruning is
   * pushed into the reader (a `kind`-only scan never materializes
   * statement text into rows).
   *
@@ -56,11 +55,6 @@ object SqlDumpSource {
     StructField("table", StringType, nullable = false),
     StructField("sql", StringType, nullable = false),
     StructField("pgStrings", BooleanType, nullable = false)))
-
-  /** Matches DumpReader.statements' chunk layout exactly, so both
-    * ingestion paths yield identical global indices.
-    */
-  val ChunkShift: Int = DumpReader.ChunkShift
 }
 
 private class SqlDumpTable(path: String) extends Table with SupportsRead {
@@ -94,100 +88,65 @@ private class SqlDumpScan(path: String, required: StructType) extends Scan with 
   override def description(): String = s"sqldump $path, columns=${required.fieldNames.mkString(",")}"
 
   override def planInputPartitions(): Array[InputPartition] = {
-    // driver-side NAME listing only (no data reads): the SAME ranked
-    // listing DumpReader.statements uses, so both ingestion paths
-    // assign identical file ranks (and therefore identical idx values)
+    // driver-side NAME listing and header sniff only (no data reads):
+    // the same ranking and dialect rule as DumpReader.statements
     val spark = org.apache.spark.sql.SparkSession.active
-    val ranked = DumpReader.rankedFiles(spark, path)
-    // chunked-dump dialect floor, same rule as DumpReader.statements:
-    // only the first part carries the header, so its declared dialect
-    // propagates to every (headerless) later chunk
-    val firstPg = ranked.headOption.exists { case (_, full) =>
-      StatementSplitter.pgStrings(DumpReader.readHead(spark, full, 1 << 16))
-    }
-    ranked.zipWithIndex.map { case ((_, f), rank) =>
-      SqlDumpPartition(f, rank, firstPg): InputPartition
+    val files = DumpReader.rankedFiles(spark, path).map(_.getPath.toString)
+    val dialect = DumpReader.headerDialect(spark, files)
+    files.zipWithIndex.map { case (f, rank) =>
+      SqlDumpPartition(f, rank, dialect): InputPartition
     }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    // Hadoop Configuration is not Serializable; broadcast the entries
-    // ONCE instead of copying them into every partition descriptor —
-    // at dump scale (10⁴+ part files) per-partition conf copies are
-    // real scheduler payload.
+    // Hadoop Configuration is not Serializable; broadcast it ONCE
+    // instead of copying it into every partition descriptor — at dump
+    // scale (10⁴+ part files) per-partition conf copies are real
+    // scheduler payload.
     val spark = org.apache.spark.sql.SparkSession.active
-    val hconf = spark.sessionState.newHadoopConf()
-    val confMap = hconf.iterator().asScala.map(e => e.getKey -> e.getValue).toArray
-    new SqlDumpReaderFactory(required, spark.sparkContext.broadcast(confMap))
+    new SqlDumpReaderFactory(required, spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sessionState.newHadoopConf())))
   }
 }
 
 private case class SqlDumpPartition(file: String, rank: Int,
-                                    firstPg: Boolean) extends InputPartition
+                                    dialect: DumpReader.Dialect) extends InputPartition
 
 private class SqlDumpReaderFactory(
     required: StructType,
-    conf: org.apache.spark.broadcast.Broadcast[Array[(String, String)]])
+    conf: org.apache.spark.broadcast.Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[SqlDumpPartition]
-    new SqlDumpPartitionReader(p, required, conf.value)
+    new SqlDumpPartitionReader(p, required, conf.value.value)
   }
 }
 
 private class SqlDumpPartitionReader(
     part: SqlDumpPartition,
     required: StructType,
-    confEntries: Array[(String, String)])
+    conf: Configuration)
     extends PartitionReader[InternalRow] {
 
   // whole-file read + linear split, executed on the executor that owns
-  // this partition
-  private val statements: Iterator[(Long, String, String, String, String, Boolean)] = {
-    val conf = new Configuration(false)
-    confEntries.foreach { case (k, v) => conf.set(k, v) }
-    val path = new Path(part.file)
-    val fs = path.getFileSystem(conf)
-    val in = fs.open(path)
-    val bytes =
-      try {
-        val out = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](64 * 1024)
-        var n = in.read(buf)
-        while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-        out.toByteArray
-      } finally in.close()
-    val blob = new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-    val base = part.rank.toLong << SqlDumpSource.ChunkShift
-    // per-file string-literal dialect, same rule as DumpReader
-    // .statements: pg_dump declares standard_conforming_strings in
-    // every file's header; absence means MySQL escape rules — unless
-    // the ingest's FIRST part declared pg for the whole chunked set.
-    // Floor scoped to headerless files: a file carrying mysqldump's
-    // own banner keeps MySQL rules (ADVICE r18).
-    val pg = StatementSplitter.pgStrings(blob) ||
-      (part.firstPg && !StatementSplitter.mysqlHeader(blob))
-    StatementSplitter.split(blob, Some(pg)).iterator.zipWithIndex.map { case (raw, i) =>
-      val (db, table) = if (raw.kind == StatementKind.CommentLine) ("", "")
-      else StatementSplitter.tableRef(raw.text).getOrElse(("", ""))
-      (base | i.toLong, raw.kind, db, table, raw.text, pg)
-    }
-  }
+  // this partition: the same per-file step as DumpReader.statements
+  private val statements: Iterator[Statement] =
+    DumpReader.readFile(conf, part.file, part.rank, identity, part.dialect)
 
-  private var current: (Long, String, String, String, String, Boolean) = _
+  private var current: Statement = _
 
   override def next(): Boolean =
     if (statements.hasNext) { current = statements.next(); true } else false
 
   override def get(): InternalRow = {
     val values = required.fieldNames.map {
-      case "idx" => current._1: java.lang.Long
-      case "kind" => UTF8String.fromString(current._2)
-      case "database" => UTF8String.fromString(current._3)
-      case "table" => UTF8String.fromString(current._4)
-      case "sql" => UTF8String.fromString(current._5)
-      case "pgStrings" => current._6: java.lang.Boolean
+      case "idx" => current.idx: java.lang.Long
+      case "kind" => UTF8String.fromString(current.kind)
+      case "database" => UTF8String.fromString(current.database)
+      case "table" => UTF8String.fromString(current.table)
+      case "sql" => UTF8String.fromString(current.sql)
+      case "pgStrings" => current.pgStrings: java.lang.Boolean
       case other => throw new IllegalArgumentException(s"unknown column: $other")
     }
     new GenericInternalRow(values.asInstanceOf[Array[Any]])

@@ -75,7 +75,7 @@ object Warc {
     // directory listings include non-record files (`_SUCCESS` markers,
     // checksums) — only `.warc(.gz)` members get a task; if the filter
     // leaves nothing the caller named a specific file, take it as-is
-    val all = DumpReader.rankedFiles(spark, path).map(_._2)
+    val all = DumpReader.rankedFiles(spark, path).map(_.getPath.toString)
     val warcs = all.filter(f => f.endsWith(".warc") || f.endsWith(".warc.gz"))
     val files = if (warcs.nonEmpty) warcs else all
     val confSer = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)

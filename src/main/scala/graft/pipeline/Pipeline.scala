@@ -16,8 +16,10 @@ import graft.model.FkEdge
   * dump:    tables → skip/only filters (F1/F2) → optional FK subset →
   *          per-column transformers → statement re-synthesis → chunked
   *          compressed/encrypted datastore write + catalog entry.
-  * restore: datastore read → statement parse → per-table DataFrames →
-  *          caller-chosen writer (parquet/JDBC/console).
+  * restore: each stored chunk decoded and split once into a pinned
+  *          statement frame → one listing pass → per-table DataFrames
+  *          read from the pin → caller-chosen writer (parquet/JDBC/
+  *          console) → pin released.
   *
   * The reference's producer/consumer threads with a depth-1 channel
   * (`tasks/full_dump.rs:47-70`) exist to overlap parse and upload under
@@ -152,31 +154,19 @@ object Pipeline {
     store.write(dumpName, statements, config.compressed, config.encryptionKey)
   }
 
-  /** Restore: read a dump from the datastore into per-table DataFrames. */
-  def restore(
-      spark: SparkSession,
-      store: Datastore,
-      dumpName: String,
-      encryptionKey: Option[String] = None): Map[String, DataFrame] =
-    restoreWithDdl(spark, store, dumpName, encryptionKey)._1
-
-  /** [[restore]] plus the stored CREATE TABLE statements by table (empty
-    * when the dump predates DDL storage or the source had none).
+  /** Restore: parse a stored dump once and pin it for `body`, which
+    * gets the per-table frames and the stored CREATE TABLE statements
+    * by table (empty when the dump predates DDL storage or the source
+    * had none). The frames read the pin, so they must not outlive
+    * `body`.
     */
-  def restoreWithDdl(
-      spark: SparkSession,
+  def restore[A](
       store: Datastore,
       dumpName: String,
-      encryptionKey: Option[String] = None): (Map[String, DataFrame], Map[String, String]) = {
-    // engine-written dumps are pg-semantics by construction (and say so
-    // via the stored marker); force the dialect so chunk partitions
-    // that don't hold the header parse identically
-    val stmts = DumpReader.statementsFromStrings(
-      spark, store.read(dumpName, encryptionKey), pgStrings = Some(true))
-    // one pass over the stored chunks lists both the tables and the DDL
-    val listing = DumpReader.listing(stmts)
-    (listing.insertRefs.map { case (db, t) =>
-      t -> DumpReader.tableFromDump(stmts, db, t, listing.ddl.get(t))
-    }.toMap, listing.ddl)
-  }
+      encryptionKey: Option[String] = None)(
+      body: (Map[String, DataFrame], Map[String, String]) => A): A =
+    DumpReader.withParsed(store.statements(dumpName, encryptionKey)) { dump =>
+      val refs = dump.listing.insertRefs ++ dump.listing.copyRefs
+      body(refs.map { case (db, t) => t -> dump.table(db, t) }.toMap, dump.listing.ddl)
+    }
 }

@@ -7,7 +7,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.model.DumpMeta
+import graft.ingest.DumpReader
+import graft.model.{DumpMeta, Statement}
 
 /** D6/D7: the chunked dump datastore.
   *
@@ -74,41 +75,39 @@ class Datastore(rootUri: String, spark: SparkSession) {
     meta
   }
 
-  /** Read a dump back as statements, parts in name order (matching the
-    * reference's part-enumeration order, `local_disk.rs:183-207`).
+  /** Read a dump back as statement text, in dump order (parts in
+    * [[Datastore.partOrder]], matching the reference's
+    * part-enumeration order, `local_disk.rs:183-207`).
     */
   def read(
       dumpName: String,
       encryptionKey: Option[String] = None): Dataset[String] = {
     import spark.implicits._
-    val meta = catalog.byName(dumpName)
-      .getOrElse(throw new IllegalArgumentException(s"dump not found in catalog: $dumpName"))
-    val compressed = meta.compressed
-    spark.read.format("binaryFile")
-      .load(s"$rootUri/$dumpName/*.dump")
-      .select("path", "content")
-      // binaryFile sorts its splits by SIZE (bin-packing), not name —
-      // the range sort restores part order so downstream consumers that
-      // derive statement positions from partition order (DumpReader
-      // .statementsFromStrings) see chunks in dump order. Ordering is
-      // the NUMERIC (partition, chunk) pair parsed from the part name
-      // (same rule as readBlobTo): lexicographic path order breaks the
-      // moment a chunk index outgrows its zero-pad ('…-100000' sorts
-      // before '…-99999'); unparseable names sort last, by path.
-      // Built with the functions API, NOT expr() string literals: the
-      // regex pattern must never pass through the SQL parser, where
-      // spark.sql.parser.escapedStringLiterals would change what
-      // '\\.dump' means and silently break the match (ADVICE r19).
-      .orderBy(Datastore.partOrderCol("([0-9]+)-[0-9]+\\.dump$"),
-        Datastore.partOrderCol("-([0-9]+)\\.dump$"),
-        org.apache.spark.sql.functions.col("path"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (_, bytes) =>
-        val raw = Codecs.decode(bytes, compressed, encryptionKey)
-        // statement-aware split (a statement may contain newlines);
-        // chunk boundaries always fall between statements on write
-        graft.ingest.StatementSplitter.split(new String(raw, "UTF-8")).iterator.map(_.text)
-      }
+    statements(dumpName, encryptionKey).map(_.sql)
+  }
+
+  /** Parse a stored statement dump: each part is decoded
+    * (decrypted, decompressed) and split once, partitions in dump
+    * order. Every engine-written dump is pg-semantics, so the
+    * dialect is forced for the headerless parts too.
+    */
+  def statements(
+      dumpName: String,
+      encryptionKey: Option[String] = None): Dataset[Statement] = {
+    val compressed = dumpMeta(dumpName).compressed
+    DumpReader.readFiles(spark, parts(dumpName),
+      bytes => Codecs.decode(bytes, compressed, encryptionKey), pgStrings = Some(true))
+  }
+
+  private def dumpMeta(dumpName: String): DumpMeta = catalog.byName(dumpName)
+    .getOrElse(throw new IllegalArgumentException(s"dump not found in catalog: $dumpName"))
+
+  /** A dump's `.dump` part files in [[Datastore.partOrder]]. */
+  private def parts(dumpName: String): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val dir = new Path(rootUri, dumpName)
+    dir.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(dir).toSeq
+      .filter(_.getPath.getName.endsWith(".dump"))
+      .sortBy(st => Datastore.partOrder(st.getPath.getName))
   }
 
   /** Write a BINARY dump artifact, chunked at `chunkBytes` with each
@@ -187,25 +186,13 @@ class Datastore(rootUri: String, spark: SparkSession) {
       dumpName: String,
       out: java.io.OutputStream,
       encryptionKey: Option[String] = None): Unit = {
-    val meta = catalog.byName(dumpName)
-      .getOrElse(throw new IllegalArgumentException(s"dump not found in catalog: $dumpName"))
-    val dir = new Path(rootUri, dumpName)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(dir)
-      .filter(_.getPath.getName.endsWith(".dump"))
-      .sortBy(st => Datastore.partOrder(st.getPath.getName))
-      .foreach { st =>
-        val in = fs.open(st.getPath)
-        val bytes =
-          try {
-            val bos = new ByteArrayOutputStream(math.min(st.getLen, 1L << 20).toInt)
-            val b = new Array[Byte](1 << 16)
-            var n = in.read(b)
-            while (n >= 0) { bos.write(b, 0, n); n = in.read(b) }
-            bos.toByteArray
-          } finally in.close()
-        out.write(Codecs.decode(bytes, meta.compressed, encryptionKey))
-      }
+    val compressed = dumpMeta(dumpName).compressed
+    val fs = new Path(rootUri).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    parts(dumpName).foreach { st =>
+      val in = fs.open(st.getPath)
+      val bytes = try in.readAllBytes() finally in.close()
+      out.write(Codecs.decode(bytes, compressed, encryptionKey))
+    }
     out.flush()
   }
 
@@ -213,19 +200,6 @@ class Datastore(rootUri: String, spark: SparkSession) {
 }
 
 object Datastore {
-  /** Numeric sort key for one component of a part name: the captured
-    * group of `pattern` against the `path` column as a BIGINT, with
-    * non-matching paths sorting last. The pattern string goes straight
-    * into the expression tree (never through the SQL parser), so
-    * parser-level escaping modes can't reinterpret it.
-    */
-  private[store] def partOrderCol(pattern: String): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions._
-    coalesce(
-      nullif(regexp_extract(col("path"), pattern, 1), lit("")).cast("bigint"),
-      lit(Long.MaxValue))
-  }
-
   /** Reassembly order of a `<partition>-<chunk>.dump` part name: the
     * parsed numeric (partition, chunk) pair. Unparseable names sort
     * after all parseable ones, by name — never silently interleaved.

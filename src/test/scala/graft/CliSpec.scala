@@ -35,6 +35,17 @@ class CliSpec extends SparkSpec {
     conf.toString
   }
 
+  /** `Cli.run`, asserting the command released every pin it made:
+    * the session's persistent RDDs are back to the set it started with.
+    */
+  private def runReleasing(args: Seq[String], printed: String => Unit): Int = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val rc = Cli.run(args, spark, printed)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+      s"${args.mkString(" ")} left pins behind")
+    rc
+  }
+
   test("config: env substitution errors on missing var, passes values through") {
     assert(GraftConfig.substituteEnvVar("plain") == "plain")
     assert(GraftConfig.substituteEnvVar("$PATH") == sys.env("PATH"))
@@ -66,7 +77,7 @@ class CliSpec extends SparkSpec {
     val conf = writeConf(store, restore)
     val printed = collection.mutable.Buffer[String]()
 
-    assert(Cli.run(Seq("-c", conf, "dump", "create", "cli-test"), spark, printed += _) == 0)
+    assert(runReleasing(Seq("-c", conf, "dump", "create", "cli-test"), printed += _) == 0)
     assert(printed.exists(_.contains("dump created: cli-test")))
 
     printed.clear()
@@ -74,7 +85,7 @@ class CliSpec extends SparkSpec {
     assert(printed.exists(_.startsWith("cli-test")))
 
     printed.clear()
-    assert(Cli.run(Seq("-c", conf, "dump", "restore", "latest"), spark, printed += _) == 0)
+    assert(runReleasing(Seq("-c", conf, "dump", "restore", "latest"), printed += _) == 0)
     // nation was skipped: only customer restored
     assert(printed.count(_.startsWith("restored:")) == 1)
 
@@ -128,12 +139,12 @@ class CliSpec extends SparkSpec {
         |INSERT INTO public.nation (n_nationkey, n_name) VALUES (1, 'FRANCE');
         |""".stripMargin)
     val printed = collection.mutable.Buffer[String]()
-    assert(Cli.run(Seq("-c", conf, "dump", "create", "from-file", "--file", dumpFile.toString),
-      spark, printed += _) == 0)
+    assert(runReleasing(Seq("-c", conf, "dump", "create", "from-file", "--file", dumpFile.toString),
+      printed += _) == 0)
     assert(printed.exists(_.contains("dump created from file: from-file")))
 
     printed.clear()
-    assert(Cli.run(Seq("-c", conf, "dump", "restore", "latest"), spark, printed += _) == 0)
+    assert(runReleasing(Seq("-c", conf, "dump", "restore", "latest"), printed += _) == 0)
     // nation skipped by the config, customer transformed
     assert(printed.count(_.startsWith("restored:")) == 1)
     val back = spark.read.parquet(s"$restore/customer")

@@ -44,6 +44,18 @@ class IngestSpec extends SparkSpec {
     assert(graft.ingest.DumpReader.statements(spark, dir.toString + "/*.sql").count() == 2)
   }
 
+  test("file reading: a gzipped dump inflates, hidden directory members are skipped") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-files-gz-")
+    val gz = new java.util.zip.GZIPOutputStream(
+      java.nio.file.Files.newOutputStream(dir.resolve("a.sql.gz")))
+    try gz.write("INSERT INTO public.t (a) VALUES (1);\n".getBytes("UTF-8")) finally gz.close()
+    // a Hadoop checksum sibling and a job marker are not dump parts
+    java.nio.file.Files.writeString(dir.resolve(".a.sql.gz.crc"), "garbage;")
+    java.nio.file.Files.writeString(dir.resolve("_SUCCESS"), "garbage;")
+    val stmts = graft.ingest.DumpReader.statements(spark, dir.toString).collect()
+    assert(stmts.map(_.sql).toSeq == Seq("INSERT INTO public.t (a) VALUES (1);"))
+  }
+
   test("datastore read: part order is name order even when sizes differ") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-order-").toString

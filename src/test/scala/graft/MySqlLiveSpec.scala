@@ -81,6 +81,10 @@ class MySqlLiveSpec extends SparkSpec {
     spark.conf.set("spark.graft.mysqldumpCmd", dumpStub.toString)
     spark.conf.set("spark.graft.mysqlCmd", restStub.toString)
     val printed = collection.mutable.Buffer[String]()
+    // the spool holds UNMASKED source rows: every command must delete it
+    def spools(): Set[String] = new java.io.File(System.getProperty("java.io.tmpdir"))
+      .listFiles().map(_.getName).filter(_.startsWith("graft-sqldump-")).toSet
+    val spoolsBefore = spools()
     try {
       // dump create: mysqldump spools, the distributed dump-file
       // pipeline parses/masks/filters/stores
@@ -129,6 +133,7 @@ class MySqlLiveSpec extends SparkSpec {
       assert(!restored.contains("real.test"), restored.take(500))
       assert(!restored.contains("events"))
       assert(restored.contains("NULL"))
+      assert(spools() == spoolsBefore, "a sqldump spool was left behind")
     } finally {
       spark.conf.unset("spark.graft.mysqlMode")
       spark.conf.unset("spark.graft.mysqldumpCmd")
@@ -154,13 +159,13 @@ class MySqlLiveSpec extends SparkSpec {
     spark.conf.set("spark.graft.mysqlMode", "tools")
     spark.conf.set("spark.graft.mysqldumpCmd", badStub.toString)
     try {
-      val tmpBefore = java.io.File.createTempFile("probe", "").getParentFile
+      val tmpBefore = new java.io.File(System.getProperty("java.io.tmpdir"))
         .listFiles().count(_.getName.startsWith("graft-sqldump-"))
       val e = intercept[IllegalStateException] {
         Cli.run(Seq("-c", conf.toString, "dump", "create", "fail"), spark, _ => ())
       }
       assert(e.getMessage.contains("Access denied"), e.getMessage)
-      val tmpAfter = java.io.File.createTempFile("probe", "").getParentFile
+      val tmpAfter = new java.io.File(System.getProperty("java.io.tmpdir"))
         .listFiles().count(_.getName.startsWith("graft-sqldump-"))
       assert(tmpAfter == tmpBefore, "partial spool left behind")
     } finally {

@@ -688,10 +688,11 @@ class PgLiveSpec extends SparkSpec {
         f"par_parse=$parSec%.1fs serial_parse_est=$serialSec%.1fs " +
         f"cli_total=$createSec%.1fs rate=${n / createSec}%.0f rows/s")
       // and the store holds all 1M rows, masked
-      val back = graft.pipeline.Pipeline.restore(
-        spark, new graft.store.Datastore(store, spark), "bench-1m")("big")
-      assert(back.count() == n)
-      assert(back.filter(back("email").contains("real.test")).count() == 0)
+      graft.pipeline.Pipeline.restore(new graft.store.Datastore(store, spark), "bench-1m") { (t, _) =>
+        val back = t("big")
+        assert(back.count() == n)
+        assert(back.filter(back("email").contains("real.test")).count() == 0)
+      }
 
       // close the cycle at 1M: restore the stored dump into a live
       // database through the COPY leg and let the SERVER count it

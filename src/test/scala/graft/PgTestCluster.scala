@@ -16,6 +16,9 @@ private[graft] case class PgTestCluster(dir: String, sock: String) {
     Seq("/usr/bin/psql", "-h", sock, "-U", "graft", "-d", db, "-t", "-A",
       "-v", "ON_ERROR_STOP=1", "-c", sql).!!.trim
 
+  /** Stop the server and delete its directory (data, socket, log):
+    * each cluster holds about 1.2 GB. Safe to call twice.
+    */
   def stop(bin: String): Unit = {
     val stop = Seq(s"$bin/pg_ctl", "-D", s"$dir/data", "-m", "immediate", "stop")
     val full =
@@ -23,7 +26,7 @@ private[graft] case class PgTestCluster(dir: String, sock: String) {
         Seq("/usr/sbin/runuser", "-u", "nobody", "--") ++ stop
       else stop
     Process(full).!(ProcessLogger(_ => (), _ => ()))
-    ()
+    PgTestCluster.deleteTree(Paths.get(dir))
   }
 }
 
@@ -52,17 +55,30 @@ private[graft] object PgTestCluster {
       require(code == 0, s"${cmd.head} failed ($code)")
     }
     val sock = dir.resolve("sock")
-    Files.createDirectories(sock)
-    if (asRoot) {
-      Seq("chown", "-R", "nobody:nogroup", dir.toString).!!
-      ()
-    }
-    run(Seq(s"$bin/initdb", "-D", s"$dir/data", "-A", "trust", "-U", "graft"))
-    run(Seq(s"$bin/pg_ctl", "-D", s"$dir/data", "-w",
-      "-o", s"-c listen_addresses='' -c unix_socket_directories=$sock",
-      "-l", s"$dir/log", "start"))
     val cluster = PgTestCluster(dir.toString, sock.toString)
+    try {
+      Files.createDirectories(sock)
+      if (asRoot) {
+        Seq("chown", "-R", "nobody:nogroup", dir.toString).!!
+        ()
+      }
+      run(Seq(s"$bin/initdb", "-D", s"$dir/data", "-A", "trust", "-U", "graft"))
+      run(Seq(s"$bin/pg_ctl", "-D", s"$dir/data", "-w",
+        "-o", s"-c listen_addresses='' -c unix_socket_directories=$sock",
+        "-l", s"$dir/log", "start"))
+    } catch {
+      case e: Throwable => cluster.stop(bin); throw e
+    }
     sys.addShutdownHook { cluster.stop(bin) }
     cluster
   }
+
+  /** Delete `root` and everything under it; a missing `root` is a no-op. */
+  private def deleteTree(root: java.nio.file.Path): Unit =
+    if (Files.exists(root)) {
+      val paths = Files.walk(root)
+      try paths.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => Files.deleteIfExists(p))
+      finally paths.close()
+    }
 }

@@ -76,17 +76,43 @@ class PipelineSpec extends SparkSpec {
       encryptionKey = Some("test-key"))
     Pipeline.dump(spark, load, store, "dump-e2e", config)
 
-    val restored = Pipeline.restore(spark, store, "dump-e2e", Some("test-key"))
-    // skipped table is absent (reference source/postgres.rs:757-810)
-    assert(restored.keySet == Set("customer"))
-    val cust = restored("customer")
-    assert(cust.count() == load("customer").count())
-    // transformed column differs for every row, others intact
-    val joined = load("customer").alias("a")
-      .join(cust.alias("b"), $"a.c_custkey" === $"b.c_custkey")
-    assert(joined.filter($"a.c_name" === $"b.c_name").count() == 0)
-    assert(joined.filter($"b.c_name".endsWith("@example.com")).count() == cust.count())
-    assert(joined.filter($"a.c_mktsegment" =!= $"b.c_mktsegment").count() == 0)
+    Pipeline.restore(store, "dump-e2e", Some("test-key")) { (restored, _) =>
+      // skipped table is absent (reference source/postgres.rs:757-810)
+      assert(restored.keySet == Set("customer"))
+      val cust = restored("customer")
+      assert(cust.count() == load("customer").count())
+      // transformed column differs for every row, others intact
+      val joined = load("customer").alias("a")
+        .join(cust.alias("b"), $"a.c_custkey" === $"b.c_custkey")
+      assert(joined.filter($"a.c_name" === $"b.c_name").count() == 0)
+      assert(joined.filter($"b.c_name".endsWith("@example.com")).count() == cust.count())
+      assert(joined.filter($"a.c_mktsegment" =!= $"b.c_mktsegment").count() == 0)
+    }
+  }
+
+  test("restore parses a headerless chunk as pg: a trailing backslash keeps its row, a quoted ; stays in its value") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val dir = Files.createTempDirectory("graft-dialect-e2e").toString
+    val store = new Datastore(s"file://$dir", spark)
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("v", StringType, nullable = true)))
+    val values = Seq("x\\", "a; b", "plain")
+    // one partition: the table's INSERTs land in a chunk of their own,
+    // after the chunk that carries the dialect header
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      values.zipWithIndex.map { case (v, i) => Row(i.toLong, v) }, 1), schema)
+    Pipeline.dump(spark, (_: String) => df, store, "dialect-dump",
+      Pipeline.DumpJobConfig(tables = Seq("t")))
+    val chunks = new java.io.File(s"$dir/dialect-dump").listFiles().count(_.getName.endsWith(".dump"))
+    assert(chunks >= 2, s"expected a headerless data chunk, got $chunks chunk(s)")
+    val inserts = store.read("dialect-dump").collect().filter(_.startsWith("INSERT"))
+    assert(inserts.length == 3, inserts.toSeq)
+    val back = Pipeline.restore(store, "dialect-dump") { (t, _) =>
+      t("t").collect().map(r => r.getLong(r.fieldIndex("id")) -> r.getString(r.fieldIndex("v")))
+    }
+    assert(back.sortBy(_._1).toSeq == values.indices.map(_.toLong).zip(values))
   }
 
   test("streaming: availableNow transform matches the batch transformer") {
@@ -455,8 +481,8 @@ class PipelineSpec extends SparkSpec {
     assert(storedText.contains("'\\x4100ff'"), storedText.take(500))
     assert(!storedText.contains("[B@"), storedText.take(500))
     assert(storedText.contains("[\"a\",\"b\"]"), storedText.take(500))
-    val back = Pipeline.restore(spark, store, "bin-dump")("blobby")
-    val byId = back.collect().map(r => r.getLong(r.fieldIndex("id")) ->
+    val back = Pipeline.restore(store, "bin-dump")((t, _) => t("blobby").collect())
+    val byId = back.map(r => r.getLong(r.fieldIndex("id")) ->
       (r.get(r.fieldIndex("payload")), r.get(r.fieldIndex("tags")))).toMap
     assert(byId(1L) == (("\\x4100ff", "[\"a\",\"b\"]")), byId)
     assert(byId(2L) == ((null, null)), byId)
@@ -480,11 +506,13 @@ class PipelineSpec extends SparkSpec {
         Row(2L, new java.math.BigDecimal("99.99"), "90210")), 2), schema)
     Pipeline.dump(spark, (_: String) => df, store, "typed-dump",
       Pipeline.DumpJobConfig(tables = Seq("prices")))
-    val back = Pipeline.restore(spark, store, "typed-dump")("prices")
-    val types = back.schema.fields.map(f => f.name -> f.dataType).toMap
+    val (restoredSchema, collected) = Pipeline.restore(store, "typed-dump") { (t, _) =>
+      (t("prices").schema, t("prices").collect())
+    }
+    val types = restoredSchema.fields.map(f => f.name -> f.dataType).toMap
     assert(types("price") == DecimalType(10, 2), types)
     assert(types("zip") == StringType, types)
-    val rows = back.collect().map(r => r.getLong(r.fieldIndex("id")) ->
+    val rows = collected.map(r => r.getLong(r.fieldIndex("id")) ->
       (r.getDecimal(r.fieldIndex("price")).toPlainString,
         r.getString(r.fieldIndex("zip")))).toMap
     assert(rows(1L) == (("12.50", "02134")), rows)
