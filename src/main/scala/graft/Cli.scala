@@ -32,10 +32,12 @@ object Cli {
   }
 
   /** Testable entry: returns an exit code, prints through `out`.
-    * `stdin` backs `dump create -i` and is injectable for tests.
+    * `stdin` backs `dump create -i` and is injectable for tests. The
+    * command runs in one [[Pins]] scope: every pin it takes is released
+    * when it returns.
     */
   def run(args: Seq[String], spark: SparkSession, out: String => Unit,
-          stdin: java.io.InputStream = System.in): Int = {
+          stdin: java.io.InputStream = System.in): Int = Pins.scoped {
     val (confPath, rest) = args match {
       case Seq("-c", p, tail @ _*) => (Some(p), tail)
       case other => (None, other)
@@ -394,11 +396,10 @@ object Cli {
           tables.foreach { case (t, df) =>
             // persist: the table's typing would otherwise run twice —
             // once for the JDBC write, once for the count
-            df.persist()
-            try {
-              graft.ingest.Jdbc.writeTable(df, url, t)
-              out(s"restored: $t (${df.count()} rows)")
-            } finally df.unpersist()
+            val pinned = Pins.persist(df, s"restore.$t")
+            graft.ingest.Jdbc.writeTable(pinned, url, t)
+            out(s"restored: $t (${pinned.count()} rows)")
+            Pins.release(pinned)
           }
         }
         out(s"ephemeral database ready: $url")

@@ -6,9 +6,9 @@ import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.SerializableConfiguration
 
+import graft.Pins
 import graft.model.{FkEdge, Statement, StatementKind}
 
 /** S4/S5 Spark integration: `.sql` dump ingestion as a DataFrame
@@ -278,14 +278,14 @@ object DumpReader {
     }
   }
 
-  /** Pin `stmts`, list them in one pass, run `body` over the result and
-    * release the pin, however `body` ends. Frames taken from the
-    * [[Parsed]] must not outlive `body`.
+  /** Pin `stmts`, list them in one pass and run `body` over the
+    * result, in a [[graft.Pins]] scope of its own: the pin, and every
+    * pin `body` takes, is released however `body` ends. Frames taken
+    * from the [[Parsed]] must not outlive `body`.
     */
-  def withParsed[A](stmts: Dataset[Statement])(body: Parsed => A): A = {
-    val pinned = stmts.persist(StorageLevel.MEMORY_AND_DISK)
-    try body(new Parsed(pinned, listing(pinned)))
-    finally pinned.unpersist()
+  def withParsed[A](stmts: Dataset[Statement])(body: Parsed => A): A = Pins.scoped {
+    val pinned = Pins.persist(stmts, "dump.statements")
+    body(new Parsed(pinned, listing(pinned)))
   }
 
   /** S10 over a dump: the FK edge list (drives the subset engine). The
@@ -433,7 +433,7 @@ object DumpReader {
         // dump returns without paying the full parse+materialization the
         // pin below commits to.
         if (rows.limit(1).collect().isEmpty) return spark.emptyDataFrame
-        val pinned = rows.localCheckpoint(true)
+        val pinned = Pins.checkpoint(rows, s"dump.rows.$database.$table")
         // Every distinct column list, with its first position in dump
         // order, from the pinned rows in one aggregation (O(#variants)
         // keys). The first row's list names the columns; rows listing

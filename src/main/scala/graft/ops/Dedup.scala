@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Pins
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -73,7 +74,8 @@ object Dedup {
     // queries want that; `corpus explain` (dry-run plan printing) and
     // lazily-composed pipeline stages must not.
     val gramArrays0 = docGramArrays(df, id, text, n)
-    val gramArrays = if (eager) gramArrays0.localCheckpoint(true) else gramArrays0
+    val gramArrays =
+      if (eager) Pins.checkpoint(gramArrays0, "dedup.gramArrays") else gramArrays0
     // Verification: after pruning the candidate set is usually tiny, so
     // AQE turns these into broadcast joins that STREAM the gram arrays
     // (candidates sit behind the dedup exchange, so their true runtime
@@ -191,7 +193,7 @@ object Dedup {
       }
     // Both self-join sides read the SAME prefix frame — pin it when the
     // caller asked for deterministic materialization (see Scaladoc).
-    val prefixes0 = if (eager) filtered.localCheckpoint(true) else filtered
+    val prefixes0 = if (eager) Pins.checkpoint(filtered, "dedup.prefixes") else filtered
     // The self-join key is the gram's 64-bit hash, not the gram string:
     // shuffle rows carry 8 bytes instead of a shingle. A collision can
     // only ADD a candidate pair (equal grams always hash equal), and
@@ -302,7 +304,7 @@ object Dedup {
     // sides); pinned for the same determinism reason as
     // [[minhashLshPrecisionUnion]] — AQE exchange reuse across the
     // consumers is a runtime gamble, the checkpoint is not.
-    val sigs = minhashSigs(df, id, text, n, numHashes).localCheckpoint(true)
+    val sigs = Pins.checkpoint(minhashSigs(df, id, text, n, numHashes), "dedup.sigs")
     val candidates = bandCandidates(sigs, numHashes, bands)
     val est = size(filter(zip_with(col("sig_a"), col("sig_b"), (a, b) => a === b), x => x))
       .cast("double") / lit(numHashes.toDouble)
@@ -341,8 +343,8 @@ object Dedup {
     // independent pins materialized concurrently for the same
     // max-not-sum wall reason.
     val (gramArrays, sigs) = Par.both(
-      docGramArrays(df, id, text, n).localCheckpoint(true),
-      minhashSigs(df, id, text, n, numHashes).localCheckpoint(true))
+      Pins.checkpoint(docGramArrays(df, id, text, n), "dedup.gramArrays"),
+      Pins.checkpoint(minhashSigs(df, id, text, n, numHashes), "dedup.sigs"))
     verifyJaccard(bandCandidates(sigs, numHashes, bands), gramArrays, threshold)
   }
 
@@ -421,7 +423,7 @@ object Dedup {
       // anti-join — at that batch size the corpus-side shuffle is
       // proportionally acceptable, and failing the increment is not.
       case Some(art) =>
-        val batchKeep = batchKeep0.localCheckpoint(true)
+        val batchKeep = Pins.checkpoint(batchKeep0, "dedup.batchKeep")
         if (batchKeep.count() <= broadcastMaxRows) {
           val hits = art.select(col("fp"))
             .join(broadcast(batchKeep.select(col("fp"))), Seq("fp"))
@@ -464,7 +466,7 @@ object Dedup {
   private[graft] def probeIndex(index: DataFrame, batchRows: DataFrame,
                                 keyCols: Seq[String],
                                 maxKeys: Long = ProbeMaxKeys): DataFrame = {
-    val keys = batchRows.select(keyCols.map(col): _*).distinct().localCheckpoint(true)
+    val keys = Pins.checkpoint(batchRows.select(keyCols.map(col): _*).distinct(), "dedup.keys")
     if (keys.count() <= maxKeys) index.join(broadcast(keys), keyCols) else index
   }
 
@@ -533,8 +535,9 @@ object Dedup {
     }
     // checkpointed (skinny — three longs a row): read by the probe-key
     // distinct, the self-join, and the cross join below
-    val batchBuckets = bandBuckets(minhashSigs(batch, id, text, n, numHashes), numHashes, bands)
-      .localCheckpoint(true)
+    val batchBuckets = Pins.checkpoint(
+      bandBuckets(minhashSigs(batch, id, text, n, numHashes), numHashes, bands),
+      "dedup.batchBuckets")
     // prefer the persisted index (the 100 TB path — see buildLshIndex);
     // recompute from corpus text only when none is supplied. A supplied
     // index is PROBED map-side (see [[probeIndex]]) so the candidate
@@ -550,8 +553,8 @@ object Dedup {
     }
     // Materialized once (skinny — two longs per pair): read again by
     // the colliding-doc filter below and by the verify joins.
-    val candidates = incrementalCandidates(batchBuckets, corpusBuckets)
-      .localCheckpoint(true)
+    val candidates = Pins.checkpoint(
+      incrementalCandidates(batchBuckets, corpusBuckets), "dedup.candidates")
     // gram arrays (the expensive explode + shuffle) ONLY for docs that
     // actually collide — a semi-join keeps verification collision-
     // bounded instead of re-gramming the whole corpus every increment
@@ -640,8 +643,9 @@ object Dedup {
     // same executor pool and the wall cost is max(chain), not
     // sum(chain). Exactness and determinism are unaffected — the same
     // frames are pinned, only their materialization overlaps.
-    val sigsF = Par.future(minhashSigs(df, id, text, n, numHashes).localCheckpoint(true))
-    val gramArrays = docGramArrays(df, id, text, n).localCheckpoint(true)
+    val sigsF = Par.future(
+      Pins.checkpoint(minhashSigs(df, id, text, n, numHashes), "dedup.sigs"))
+    val gramArrays = Pins.checkpoint(docGramArrays(df, id, text, n), "dedup.gramArrays")
     // Both generators dedup internally, so the union carries at most 2
     // copies of any pair — verifying the ≤2× candidates and deduping the
     // (tiny) verified output costs one narrow dedup of the result set
@@ -690,10 +694,10 @@ object Dedup {
     // materialize the (possibly expensive) pair plan ONCE — a union of
     // two projections of the raw plan would execute it twice; both
     // symmetric directions then read the checkpointed blocks every round.
-    // Superseded per-round checkpoints (p and each round's labels) are
-    // reclaimed by the ContextCleaner once unreferenced — same lifecycle
-    // as the cyclic FK closure's per-level frontiers.
-    val p = pairs.select(col("id_a"), col("id_b")).localCheckpoint(true)
+    // Each round releases the labels it superseded, and the pairs are
+    // released once the labels converge — the same lifecycle as the
+    // cyclic FK closure's per-level frontiers.
+    val p = Pins.checkpoint(pairs.select(col("id_a"), col("id_b")), "dedup.clusters.pairs")
     val sym = p.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(p.select(col("id_b").as("src"), col("id_a").as("dst")))
     // Fused round 1 (r20 optimization): from the identity labeling, the
@@ -705,10 +709,10 @@ object Dedup {
     // r+1 before), so the fixpoint — and the output — is unchanged;
     // the round budget buys the same reachable diameter one doubling
     // earlier.
-    var labels = sym.groupBy(col("src").as("id"))
+    var pinned = Pins.checkpoint(sym.groupBy(col("src").as("id"))
       .agg(min(col("dst")).as("__nmin"))
-      .select(col("id"), least(col("id"), col("__nmin")).as("label"))
-      .localCheckpoint(true)
+      .select(col("id"), least(col("id"), col("__nmin")).as("label")), "dedup.clusters.labels")
+    var labels = pinned
     var round = 0
     var converged = false
     while (!converged) {
@@ -730,19 +734,21 @@ object Dedup {
       // instead of an extra equi-join (one shuffle per round saved —
       // across the ~log d rounds and the six capstones that use this
       // loop, real wall time)
-      val next = labels
+      val next = Pins.checkpoint(labels
         .join(neighborMin, Seq("id"), "left")
         .join(grandMin, Seq("id"), "left")
         .select(col("id"),
           least(col("label"),
             coalesce(col("nlabel"), col("label")),
             coalesce(col("glabel"), col("label"))).as("label"),
-          col("label").as("old"))
-        .localCheckpoint(true)
+          col("label").as("old")), "dedup.clusters.labels")
       converged = next.filter(col("label") =!= col("old")).isEmpty
+      Pins.release(pinned)
+      pinned = next
       labels = next.select(col("id"), col("label"))
       round += 1
     }
+    Pins.release(p)
     labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
   }
 
@@ -874,9 +880,8 @@ object Dedup {
     // FK-closure audit measured NOT firing (executed plan, zero reuse),
     // and each replay re-runs the rolling-hash fingerprint pass. The
     // pin is skinny: (doc, 64-bit print) rows.
-    val prints = df.select(col(id).as("doc"),
-        explode(TextAnalysis.winnowFingerprints(text, k, w)).as("print"))
-      .localCheckpoint(true)
+    val prints = Pins.checkpoint(df.select(col(id).as("doc"),
+        explode(TextAnalysis.winnowFingerprints(text, k, w)).as("print")), "dedup.prints")
     val filtered =
       if (maxDocFreq <= 0) prints
       else {
@@ -1128,10 +1133,9 @@ object Dedup {
     // r20: bg drives THREE actions (the sizing count, the Bloom build,
     // the exact confirm join) — unpinned, the benchmark gram explode +
     // distinct shuffle ran three times; the pin is benchmark-gram-sized
-    val bg = benchmark
+    val bg = Pins.checkpoint(benchmark
       .select(explode(TextAnalysis.wordNgramsDistinct(benchText, n)).as("gram"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct(), "dedup.benchmarkGrams")
     // the benchmark side is small by contract (it broadcast-joins in
     // the plain form); counting it exactly sizes the filter
     val expected = math.max(1024L, bg.count())
@@ -1187,8 +1191,8 @@ object Dedup {
     // once before the pin (ADVICE r20); the scan's own partitioning
     // balances the checkpoint blocks.
     val sigs = df.select(col(id).as("doc"), simhash64(text).as("sh"))
-    val buckets = sigs.withColumn("bucket", shiftrightunsigned(col("sh"), 48))
-      .localCheckpoint(true)
+    val buckets = Pins.checkpoint(
+      sigs.withColumn("bucket", shiftrightunsigned(col("sh"), 48)), "dedup.buckets")
     buckets.as("l").join(buckets.as("r"), Seq("bucket"))
       .filter(col("l.doc") < col("r.doc"))
       .withColumn("hamming", hamming64(col("l.sh"), col("r.sh")))

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Pins
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -59,8 +60,8 @@ object DomainReweight {
       .filter(col("token") =!= "")
     // r20: model feeds the totals aggregate AND the scoring join — pin
     // once (vocabulary-sized), same as Vocab.unigramLogProb
-    val model = toks.groupBy(col("token")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+    val model = Pins.checkpoint(
+      toks.groupBy(col("token")).agg(count(lit(1)).as("c")), "reweight.model")
     val totals = model.agg(sum(col("c")).as("n_total"), count(lit(1)).as("v"))
     toks.join(model, Seq("token"))
       .crossJoin(broadcast(totals))

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Pins
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -61,14 +62,14 @@ object LinkGraph {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     require(dampNum >= 0 && dampDen > 0 && dampNum <= dampDen,
       s"damping must be a rational in [0,1], got $dampNum/$dampDen")
-    val ids = nodes.select(col("id")).localCheckpoint(true)
+    val ids = Pins.checkpoint(nodes.select(col("id")), "pagerank.ids")
     val n = ids.count()
     require(n > 0, "pageRank needs a non-empty node set")
+    val uniform = ids.select(col("id"), lit(Scale / n).as("rank"))
+    if (iters == 0) return uniform
     // floor division on non-negative longs: Scala / == DuckDB //
     val base = Scale * (dampDen - dampNum) / (dampDen * n)
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val ed = edges.join(deg, Seq("src")).persist(lvl)
     // Scale-adaptive shuffle-partition advisory for the K rounds (r21,
     // guide §1.2 config tier / §2.2): every per-round exchange carries
     // skinny (id, long) rows, so the session default (sized for corpus
@@ -81,7 +82,7 @@ object LinkGraph {
     val prevParts = sess.conf.get("spark.sql.shuffle.partitions")
     val advisory = math.max(1L, math.min(prevParts.toLong, (n + 999999L) / 1000000L))
     sess.conf.set("spark.sql.shuffle.partitions", advisory.toString)
-    try {
+    val ranks = try Pins.scopedCheckpoint("pagerank.ranks") {
       // Lazy K-round composition with ONE terminal materialization (r20
       // optimization): iters is fixed — there is no convergence probe —
       // so the rounds compose into one declarative plan and Spark
@@ -89,11 +90,12 @@ object LinkGraph {
       // K serialized checkpoint barriers (measured 36 → ~1/3 the jobs on
       // the x_pagerank query). Each round's rank frame feeds exactly one
       // consumer (the next round), so nothing recomputes; `ed` is
-      // persisted and materialized once by the terminal checkpoint,
-      // which also keeps the post-return unpersist safe. Lineage depth
-      // grows linearly in K — the per-round checkpoint guarded against
-      // exponential growth that a linear chain never had.
-      var r = ids.select(col("id"), lit(Scale / n).as("rank"))
+      // persisted, materialized once by the terminal checkpoint and
+      // released right after it. Lineage depth grows linearly in K —
+      // the per-round checkpoint guarded against exponential growth
+      // that a linear chain never had.
+      val ed = Pins.persist(edges.join(deg, Seq("src")), "pagerank.edges")
+      var r = uniform
       for (t <- 1 to iters) {
         val inflow = ed.join(r, ed("src") === r("id"))
           .select(ed("dst").as("id"),
@@ -105,13 +107,12 @@ object LinkGraph {
         // bound plan/analysis depth for large K (ADVICE r20): one
         // mid-chain barrier every 8 rounds keeps the composed self-join
         // chain's optimizer cost linear; the bench K=5 stays barrier-free
-        if (t % 8 == 0 && t < iters) r = r.localCheckpoint(true)
+        if (t % 8 == 0 && t < iters) r = Pins.checkpoint(r, "pagerank.round")
       }
-      if (iters > 0) r.localCheckpoint(true) else r
-    } finally {
-      sess.conf.set("spark.sql.shuffle.partitions", prevParts)
-      ed.unpersist(); ()
-    }
+      r
+    } finally sess.conf.set("spark.sql.shuffle.partitions", prevParts)
+    Pins.release(ids)
+    ranks
   }
 
   /** The oracle mirror: K rounds unrolled as CTEs over any `nodesRel`

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Pins
 import java.security.MessageDigest
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
@@ -349,8 +350,8 @@ object Multimodal {
     // r20: pin the batch hash frame itself — it feeds the band build
     // AND the within-batch pair join, and unpinned each consumer re-ran
     // the media decode + hash mapPartitions pass over the batch
-    val bh = batchHashes.localCheckpoint(true)
-    val batchBands = buildPhashIndex(bh, id).localCheckpoint(true)
+    val bh = Pins.checkpoint(batchHashes, "multimodal.batchHashes")
+    val batchBands = Pins.checkpoint(buildPhashIndex(bh, id), "multimodal.batchBands")
     val probed = Dedup.probeIndex(
       corpusIndex.select(col("doc"), col("band"), col("key"),
         col("ph_hi"), col("ph_lo")),
@@ -394,9 +395,8 @@ object Multimodal {
     // r21: the media_id-keyed repartition is gone — the join keys on
     // (band, key), so it was a dead full exchange ahead of the pin
     // (ADVICE r20).
-    val banded = buildPhashIndex(
-      hashes.select(col(id).as("media_id"), col("ph_hi"), col("ph_lo")))
-      .localCheckpoint(true)
+    val banded = Pins.checkpoint(buildPhashIndex(
+      hashes.select(col(id).as("media_id"), col("ph_hi"), col("ph_lo"))), "multimodal.banded")
     banded.as("l").join(banded.as("r"), Seq("band", "key"))
       .filter(col("l.doc") < col("r.doc"))
       .withColumn("hamming",

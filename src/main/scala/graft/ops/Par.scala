@@ -34,7 +34,7 @@ private[graft] object Par {
     * (ADVICE r16). Both-fail keeps `a`'s exception as primary.
     */
   def both[A, B](a: => A, b: => B): (A, B) = {
-    val fb = Future(b)(ec)
+    val fb = future(b)
     val ra =
       try a
       catch {
@@ -50,8 +50,13 @@ private[graft] object Par {
     * non-blocking) plan construction on the calling thread. Callers
     * that may throw before awaiting should await in a finally — an
     * un-awaited future is the orphaned-job leak [[both]] closes.
+    * `b` runs under the caller's [[graft.Pins]] scope, so its pins are
+    * released with the caller's.
     */
-  def future[B](b: => B): Future[B] = Future(b)(ec)
+  def future[B](b: => B): Future[B] = {
+    val run = graft.Pins.inCurrentScope(b)
+    Future(run())(ec)
+  }
 
   def await[B](f: Future[B]): B = Await.result(f, Duration.Inf)
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Pins
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -84,11 +85,10 @@ object QualityModel {
   def fit(df: DataFrame, id: Column, text: Column,
           sampleMod: Int = DefaultSampleMod, steps: Int = DefaultSteps,
           lr: Double = DefaultLr): Array[Long] = {
-    val feats = df.where(pmod(id, lit(sampleMod)) === 0)
-      .select(featureCols(text).zipWithIndex.map { case (c, j) => c.as(s"f$j") } :+
-        labelCol(text).as("y"): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Pins.scoped {
+      val feats = Pins.persist(df.where(pmod(id, lit(sampleMod)) === 0)
+        .select(featureCols(text).zipWithIndex.map { case (c, j) => c.as(s"f$j") } :+
+          labelCol(text).as("y"): _*), "quality.features")
       var wq = Array.fill(Dim)(0L)
       for (_ <- 1 to steps) {
         val r = sigmoidQ(zExpr(wq)) - col("y")
@@ -109,7 +109,7 @@ object QualityModel {
         }
       }
       wq
-    } finally { feats.unpersist(); () }
+    }
   }
 
   /** Score with trained weights baked in as literals: quantized σ(w·x)

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Pins
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -153,10 +154,9 @@ object Sampling {
     val tagged = df.filter(id.isNotNull).withColumn("__graft_stratum", stratum)
     // tiny (one row per stratum) but derived from a full corpus scan —
     // materialize once, reused by the missing-stratum check and the rates
-    val counts = tagged.groupBy(col("__graft_stratum").as("stratum"))
+    val counts = Pins.checkpoint(tagged.groupBy(col("__graft_stratum").as("stratum"))
       .agg(count(lit(1)).cast("double").as("c"))
-      .join(sharesDf, Seq("stratum"))
-      .localCheckpoint(true)
+      .join(sharesDf, Seq("stratum")), "sampling.counts")
     val present = counts.select(col("stratum")).as[String].collect().toSet
     val missing = shares.keySet.diff(present)
     require(missing.isEmpty,
@@ -211,10 +211,9 @@ object Sampling {
     // to hit the target in TOKEN mass — what a training mix actually
     // specifies. Integer weights sum exactly (long adds), so the cast
     // is the only float step and c stays cross-engine bit-stable.
-    val counts = tagged.groupBy(col("__graft_stratum").as("stratum"))
+    val counts = Pins.checkpoint(tagged.groupBy(col("__graft_stratum").as("stratum"))
       .agg(sum(col("__graft_w")).cast("double").as("c"))
-      .join(sharesDf, Seq("stratum"))
-      .localCheckpoint(true)
+      .join(sharesDf, Seq("stratum")), "sampling.counts")
     val present = counts.select(col("stratum")).as[String].collect().toSet
     val missing = shares.keySet.diff(present)
     require(missing.isEmpty,
@@ -259,9 +258,8 @@ object Sampling {
     val tagged = df.filter(id.isNotNull).withColumn("__graft_stratum", stratum)
     // tiny (one row per stratum) but derived from a full corpus scan —
     // materialize once, reused by the min and the rates
-    val counts = tagged.groupBy(col("__graft_stratum"))
-      .agg(count(lit(1)).cast("double").as("__graft_c"))
-      .localCheckpoint(true)
+    val counts = Pins.checkpoint(tagged.groupBy(col("__graft_stratum"))
+      .agg(count(lit(1)).cast("double").as("__graft_c")), "sampling.counts")
     val cmin = counts.agg(min(col("__graft_c")).as("__graft_cmin"))
     val rates = counts.crossJoin(cmin)
       .select(col("__graft_stratum"),
@@ -508,10 +506,9 @@ object Sampling {
     * driver-side table broadcast back. Ranks depend only on the total
     * order, never on where the sampled range boundaries land, so the
     * output is deterministic even though the partitioning is not; the
-    * boundary/id assignment is pinned with one `localCheckpoint` so the
+    * boundary/id assignment is pinned with one checkpoint so the
     * offset table and the rank join read the SAME materialized
-    * assignment (superseded blocks reclaimed by the ContextCleaner,
-    * same lifecycle as the cluster rounds).
+    * assignment (owned by the caller's [[graft.Pins]] scope).
     *
     * `ord` must be a total order (break ties with the row id) or ranks
     * within a tie group are partition-placement-dependent.
@@ -531,10 +528,9 @@ object Sampling {
     val parts = if (numPartitions > 0) numPartitions
       else spark.sessionState.conf.numShufflePartitions
     val mid = "__graft_mid"
-    val pinned = df.repartitionByRange(parts, ord: _*)
+    val pinned = Pins.checkpoint(df.repartitionByRange(parts, ord: _*)
       .sortWithinPartitions(ord: _*)
-      .withColumn(mid, monotonically_increasing_id())
-      .localCheckpoint(true)
+      .withColumn(mid, monotonically_increasing_id()), "sampling.rank.assignment")
     // one row per non-empty range partition: (min id, row count), in
     // range order (monotonically_increasing_id places the partition
     // index in the high bits, so min-id order IS partition order)

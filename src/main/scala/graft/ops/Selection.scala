@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Pins
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -156,9 +157,8 @@ object Selection {
   def dsirWeightsSubset(df: DataFrame, idName: String, text: Column,
                         isTarget: Column, buckets: Int = DefaultBuckets): DataFrame = {
     require(buckets > 0 && buckets <= (1 << 20), "buckets must be in (0, 2^20]")
-    val bucketed = df.select(col(idName), isTarget.as("__tgt"),
-        featureBuckets(text, buckets).as("__bs"))
-      .localCheckpoint(true)
+    val bucketed = Pins.checkpoint(df.select(col(idName), isTarget.as("__tgt"),
+        featureBuckets(text, buckets).as("__bs")), "selection.bucketed")
     val agg = bucketed
       .select(col("__tgt"), explode(col("__bs")).as("bucket"))
       .groupBy(col("bucket"))

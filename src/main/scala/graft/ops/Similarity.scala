@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Pins
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -140,8 +141,8 @@ object Similarity {
     // not firing; unpinned, each side re-ran the vector scan + LSH
     // bucket hashing. The pin holds the exploded rows once; the join's
     // key exchange still moves them.
-    val b = seedBucketRows(df, id, vec, numPlanes, dim, seeds, keepVec = true)
-      .localCheckpoint(true)
+    val b = Pins.checkpoint(
+      seedBucketRows(df, id, vec, numPlanes, dim, seeds, keepVec = true), "similarity.seedBuckets")
       .repartition(col("seed"), col("bucket"))
     // Order of operations matters at scale: the exact cosine runs
     // map-side straight off the join (no shuffle touches the vectors),
@@ -240,8 +241,9 @@ object Similarity {
     }
     // checkpointed (skinny): read by the probe-key distinct and both
     // candidate joins
-    val batchBuckets = seedBucketRows(batch, id, vec, numPlanes, dim, seeds, keepVec = false)
-      .localCheckpoint(true)
+    val batchBuckets = Pins.checkpoint(
+      seedBucketRows(batch, id, vec, numPlanes, dim, seeds, keepVec = false),
+      "similarity.batchBuckets")
     // a supplied index is probed map-side against a broadcast of the
     // batch's own (seed, bucket) keys, so the candidate join never
     // re-shuffles the corpus-sized side even when the index is plain
@@ -265,7 +267,8 @@ object Similarity {
         greatest(col("l.doc"), col("r.doc")).as("id_b"))
     // skinny two-long rows, materialized once: read by the colliding-id
     // semi-join and by both verify joins
-    val candidates = self.union(cross).dropDuplicates("id_a", "id_b").localCheckpoint(true)
+    val candidates = Pins.checkpoint(
+      self.union(cross).dropDuplicates("id_a", "id_b"), "similarity.candidates")
     val collidingIds = candidates.select(col("id_a").as(id))
       .union(candidates.select(col("id_b").as(id))).distinct()
     val vecs = batch.select(col(id), col(vec)).unionByName(corpus.select(col(id), col(vec)))
@@ -468,7 +471,7 @@ object Similarity {
     // reuse never collapses the duplicated subtrees, and in the v3
     // capstones the chain's input is itself a join). One vector-frame
     // copy (doc, v, cell) buys three replays back.
-    val assigned = assignCells(df, id, vec, centroids).localCheckpoint(true)
+    val assigned = Pins.checkpoint(assignCells(df, id, vec, centroids), "similarity.assigned")
     // per-cell shard count from a skinny count agg; broadcast k rows back
     val cellShards = assigned.groupBy(col("cell"))
       .agg(ceil(count(lit(1)) / lit(maxCellSize.toDouble)).cast("int").as("m"))
@@ -1085,7 +1088,7 @@ object Similarity {
     // r20: the assignment feeds the cell-count aggregation AND the
     // verdict join — pin the skinny (doc, cell) projection so the
     // nearest-centroid argmax over the vectors runs once, not twice
-    val a = assigned.select(col("doc"), col("cell")).localCheckpoint(true)
+    val a = Pins.checkpoint(assigned.select(col("doc"), col("cell")), "similarity.cells")
     val counts = a.groupBy(col("cell")).agg(count(lit(1)).as("c"))
     val cmin = counts.agg(min(col("c")).as("cmin"))
     val rates = counts.crossJoin(broadcast(cmin))

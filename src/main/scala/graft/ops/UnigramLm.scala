@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Pins
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -89,11 +90,10 @@ object UnigramLm {
   private def viterbiEmissions(words: DataFrame, vocab: DataFrame,
                                cfg: Config): DataFrame = {
     val tot = vocab.agg(sum(col("n")).as("tot"))
-    val lp = vocab.crossJoin(broadcast(tot))
+    val lp = Pins.checkpoint(vocab.crossJoin(broadcast(tot))
       .select(col("piece"),
         floor(lit(1e6) * log(col("n").cast("double") / col("tot").cast("double")))
-          .cast("long").as("lpq"))
-      .localCheckpoint(true)
+          .cast("long").as("lpq")), "unigram.logProbs")
     // forward DP: b(pos) = best (score, backpointer d) covering word[1..pos]
     val b = new Array[DataFrame](cfg.maxWordLen + 1)
     b(0) = words.select(col("word"), col("freq"), lit(0L).as("score"))
@@ -120,11 +120,13 @@ object UnigramLm {
       // an unmaterialized level re-derives from checkpointed
       // predecessors in one narrow pass, halving the job chain while
       // keeping the lazy plan tree bounded (≤ maxPieceLen² branch paths)
-      b(pos) = if (pos % 2 == 0 || pos == cfg.maxWordLen) best.localCheckpoint(true) else best
+      b(pos) =
+        if (pos % 2 == 0 || pos == cfg.maxWordLen) Pins.checkpoint(best, "unigram.viterbi.level")
+        else best
     }
-    val bp = (1 to cfg.maxWordLen).map(p =>
+    val bp = Pins.checkpoint((1 to cfg.maxWordLen).map(p =>
         b(p).select(col("word"), lit(p).as("pos"), col("d")))
-      .reduce(_.unionByName(_)).localCheckpoint(true)
+      .reduce(_.unionByName(_)), "unigram.viterbi.backpointers")
     // backtrack: walk (word, pos) states down the backpointers, emitting
     // the consumed piece at each step; all states reach pos=0 within
     // maxWordLen steps
@@ -179,18 +181,24 @@ object UnigramLm {
   private[graft] def trainParts(df: DataFrame, text: Column,
                                 cfg: Config): (DataFrame, DataFrame, DataFrame) =
     withoutConstraintPropagation(df.sparkSession) {
-      val words = wordTable(df, text, cfg).localCheckpoint(true)
-      var vocab = seedVocab(words, cfg).localCheckpoint(true)
+      val words = Pins.checkpoint(wordTable(df, text, cfg), "unigram.words")
+      var vocab = Pins.checkpoint(seedVocab(words, cfg), "unigram.vocab")
       var lastEm: DataFrame = null
       for (s <- cfg.pruneMulti) {
-        val em = viterbiEmissions(words, vocab, cfg).localCheckpoint(true)
+        // the round's Viterbi levels are released once its emissions
+        // are materialized; a round's vocabulary and emissions once the
+        // next round has superseded them
+        val em = Pins.scopedCheckpoint("unigram.em")(viterbiEmissions(words, vocab, cfg))
         val counts = em.groupBy(col("piece")).agg(sum(col("freq")).as("n"))
         val singles = vocab.filter(length(col("piece")) === 1).select(col("piece"))
           .join(counts, Seq("piece"), "left")
           .select(col("piece"), (coalesce(col("n"), lit(0L)) + 1).as("n"))
         val multi = counts.filter(length(col("piece")) > 1)
           .orderBy(col("n").desc, col("piece").asc).limit(s)
-        vocab = singles.unionByName(multi).localCheckpoint(true)
+        val prev = vocab
+        vocab = Pins.checkpoint(singles.unionByName(multi), "unigram.vocab")
+        Pins.release(prev)
+        if (lastEm != null) Pins.release(lastEm)
         lastEm = em
       }
       (vocab, lastEm, words)

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Pins
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -69,11 +70,10 @@ object Vocab {
     // invariant is restored by each rewrite (1 leftover + 1 replacement
     // space per side); token boundaries stay unmergeable ("b a" inside
     // "ab  a" never matches "␣b␣␣a␣").
-    var corpus = df.select(
+    var corpus = Pins.checkpoint(df.select(
         concat(lit("  "),
           concat_ws("  ", regexp_extract_all(lower(text), lit(TextAnalysis.BpeClass), lit(0))),
-          lit("  ")).as("s"))
-      .localCheckpoint(true)
+          lit("  ")).as("s")), "vocab.bpe.corpus")
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long)]
     var round = 1
     var exhausted = false
@@ -98,10 +98,9 @@ object Vocab {
         // per training run (r20 optimization; measured as one eager
         // checkpoint job removed from x_bpe_merges_k AND x_bpe_encode)
         if (round < k) {
-          corpus = corpus.select(
+          corpus = Pins.checkpoint(corpus.select(
               replace(col("s"), lit(" " + pair.replace(" ", "  ") + " "),
-                lit(" " + pair.replace(" ", MergeJoiner) + " ")).as("s"))
-            .localCheckpoint(true)
+                lit(" " + pair.replace(" ", MergeJoiner) + " ")).as("s")), "vocab.bpe.corpus")
         }
         round += 1
       }
@@ -132,8 +131,8 @@ object Vocab {
     // scoring join — unpinned, each consumer re-ran the corpus explode
     // + wordcount shuffle (AQE exchange reuse is a runtime gamble, the
     // r14/r15 lesson); the pin is vocabulary-sized, not corpus-sized
-    val model = toks.groupBy(col("token")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+    val model = Pins.checkpoint(
+      toks.groupBy(col("token")).agg(count(lit(1)).as("c")), "vocab.model")
     val totals = model.agg(sum(col("c")).as("n_total"), count(lit(1)).as("v"))
     val scored = toks.join(model, Seq("token"))
       .crossJoin(broadcast(totals))
@@ -214,8 +213,8 @@ object Vocab {
     val docBi = df.select(col(id), explode(bigr).as("bigram"))
     // r20: model feeds the context-count derivation AND the scoring
     // join — pin once (vocabulary-sized), see unigramLogProb
-    val model = docBi.groupBy(col("bigram")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+    val model = Pins.checkpoint(
+      docBi.groupBy(col("bigram")).agg(count(lit(1)).as("c")), "vocab.model")
     val ctx = model
       .select(substring_index(col("bigram"), " ", 1).as("w1"), col("c"))
       .groupBy(col("w1")).agg(sum(col("c")).as("cc"))
@@ -278,8 +277,8 @@ object Vocab {
     // r20: model feeds FOUR consumers (ctx, cont, tot, scoring join) —
     // unpinned, each re-ran the corpus bigram explode + count shuffle;
     // one vocabulary-sized pin replaces three redundant corpus passes
-    val model = docBi.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+    val model = Pins.checkpoint(
+      docBi.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c")), "vocab.model")
     val ctx = model.groupBy(col("w1"))
       .agg(sum(col("c")).as("cc"), count(lit(1)).as("n1f"))
     val cont = model.groupBy(col("w2")).agg(count(lit(1)).as("n1b"))
@@ -369,8 +368,8 @@ object Vocab {
       .filter(col("token") =!= "")
     // r20: tf feeds the document-frequency derivation AND the scoring
     // join — pin once ((doc, term)-sized, the explode already collapsed)
-    val tf = toks.groupBy(col(id), col("token")).agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+    val tf = Pins.checkpoint(
+      toks.groupBy(col(id), col("token")).agg(count(lit(1)).as("tf")), "vocab.tf")
     val dfreq = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
     val nDocs = df.select(col(id)).distinct().agg(count(lit(1)).as("n_docs"))
     // scale-3 rounding, same rationale as unigramLogProb: the rank is
@@ -424,11 +423,10 @@ object Vocab {
     // the shared tail: the indexed path's inputs are pruned parquet
     // artifact scans whose IN-pushdown a pin would hide (PlanSpec) —
     // re-reading a pruned postings scan twice is the cheaper shape.
-    val dl = df.select(col(id), dlExpr.as("dl")).localCheckpoint(true)
-    val tf = df.select(col(id), explode(TextAnalysis.tokens(text)).as("token"))
+    val dl = Pins.checkpoint(df.select(col(id), dlExpr.as("dl")), "vocab.dl")
+    val tf = Pins.checkpoint(df.select(col(id), explode(TextAnalysis.tokens(text)).as("token"))
       .filter(col("token").isin(terms: _*))
-      .groupBy(col(id), col("token")).agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .groupBy(col(id), col("token")).agg(count(lit(1)).as("tf")), "vocab.tf")
     bm25ScoreTopK(tf, dl, id, k, k1, b)
   }
 

@@ -7,6 +7,7 @@ import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Pins
 import graft.ops.{Dedup, Sampling, TextAnalysis => TA}
 
 /** One stage of a config-driven corpus pipeline. `kind` selects the
@@ -221,28 +222,30 @@ object CorpusPipeline {
     validateStages(conf)
     // plan with AQE off so EnsureRequirements' Exchanges are visible
     // as concrete nodes (under AQE the executed plan hides its inner
-    // tree until runtime); restored afterwards — nothing here executes
-    val aqePrev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val docs0 = loadInput(spark, conf)
-      out(s"input: ${conf.inputDir}")
-      val finalDf = conf.stages.foldLeft(baseFrame(docs0, conf)) { (df, st) =>
-        val next = applyStage(df, st, conf.idCol, docs0, conf.textCol)
-        val plan = next.queryExecution.executedPlan
-        val scans = plan.collect {
-          case s: org.apache.spark.sql.execution.FileSourceScanExec => s }.length
-        val exchanges = plan.collect {
-          case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e }.length
-        val broadcasts = plan.collect {
-          case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec => b }.length
-        out(f"stage ${st.kind}%-20s scans=$scans exchanges=$exchanges " +
-          s"broadcasts=$broadcasts columns=${next.columns.mkString(",")}")
-        next
-      }
-      out(finalDf.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqePrev)
+    // tree until runtime) — in a session of its own: it shares the
+    // SparkContext and the engine's functions, plans under the caller's
+    // settings, and jobs running in the caller's session keep their AQE
+    val planning = spark.newSession()
+    spark.conf.getAll.foreach { case (k, v) =>
+      if (planning.conf.isModifiable(k)) planning.conf.set(k, v) }
+    planning.conf.set("spark.sql.adaptive.enabled", "false")
+    val docs0 = loadInput(planning, conf)
+    out(s"input: ${conf.inputDir}")
+    val finalDf = conf.stages.foldLeft(baseFrame(docs0, conf)) { (df, st) =>
+      val next = applyStage(df, st, conf.idCol, docs0, conf.textCol)
+      val plan = next.queryExecution.executedPlan
+      val scans = plan.collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s }.length
+      val exchanges = plan.collect {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e }.length
+      val broadcasts = plan.collect {
+        case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec => b }.length
+      out(f"stage ${st.kind}%-20s scans=$scans exchanges=$exchanges " +
+        s"broadcasts=$broadcasts columns=${next.columns.mkString(",")}")
+      next
+    }
+    out(finalDf.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
   }
 
   /** First-look corpus profile BEFORE any curation: per-language doc
@@ -259,13 +262,12 @@ object CorpusPipeline {
             out: String => Unit): Unit = {
     val id = conf.idCol
     val docs = loadInput(spark, conf).select(col(id), col(conf.textCol).as("text"))
-    val metered = docs.select(col(id),
-        TA.langId(col("text")).as("lang"),
-        TA.tokenCount(col("text")).cast("long").as("n_tokens"),
-        TA.qualityScore(col("text")).as("q"),
-        fingerprint)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Pins.scoped {
+      val metered = Pins.persist(docs.select(col(id),
+          TA.langId(col("text")).as("lang"),
+          TA.tokenCount(col("text")).cast("long").as("n_tokens"),
+          TA.qualityScore(col("text")).as("q"),
+          fingerprint), "corpus.stats.metered")
       val byLang = metered.groupBy(col("lang"))
         .agg(count(lit(1)).as("docs"), sum(col("n_tokens")).as("tokens"),
           avg(col("q")).as("avg_q"))
@@ -279,7 +281,7 @@ object CorpusPipeline {
         out(f"lang=${r.getAs[String]("lang")}%-4s docs=${r.getAs[Long]("docs")}%7d " +
           f"tokens=${r.getAs[Long]("tokens")}%9d avg_quality=${r.getAs[Double]("avg_q")}%.3f")
       }
-    } finally { metered.unpersist(); () }
+    }
   }
 
   /** Run the configured stage chain over the input documents table and
@@ -289,20 +291,20 @@ object CorpusPipeline {
     * row counts stream through `out` — the operator's progress report,
     * derived from one count per stage boundary (tiny driver scalars,
     * never row data). Returns the terminal stage's count, which is the
-    * output's row count.
+    * output's row count. The run is one [[Pins]] scope: a stage's pin
+    * is released once the next stage has materialized (unless it feeds
+    * an admission artifact), and every pin the stages took is released
+    * when the run returns.
     */
   def run(spark: SparkSession, conf: CorpusPipelineConf,
-          out: String => Unit): Long = {
+          out: String => Unit): Long = Pins.scoped {
     validateStages(conf)
     val docs0 = loadInput(spark, conf)
     out(s"input: ${conf.inputDir}")
     // each stage boundary persists before its count, so the count AND
     // the next stage read materialized blocks — without this, counting
     // stage k recomputes stages 1..k and the chain is O(stages²) passes
-    // over the corpus. Handles release in finally (same lifecycle as
-    // the capstone queries); MEMORY_AND_DISK keeps lineage for executor
-    // loss.
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    // over the corpus. MEMORY_AND_DISK keeps lineage for executor loss.
     // Eager admission artifacts: when the chain is one an incremental
     // run admits ([[incrementalChainProblem]]), this run already HAS
     // everything the `<output>.artifacts/` indexes need — the frames
@@ -320,39 +322,32 @@ object CorpusPipeline {
     // corpus passes on the ingest job.
     val eager = incrementalChainProblem(conf).isEmpty
     val entering = collection.mutable.Map[String, DataFrame]()
-    // at most TWO stages stay cached (once next's count() has
+    // at most TWO stages stay pinned (once next's count() has
     // materialized it, the predecessor's blocks are never read again) —
     // plus the retained dedup-entering frames when writing eagerly
     var prev: Option[DataFrame] = None
-    val kept = collection.mutable.ListBuffer[DataFrame]()
     var rows = 0L
-    try {
-      val result = conf.stages.foldLeft(baseFrame(docs0, conf)) { (df, st) =>
-        if (eager && DedupKinds.contains(st.kind) && !entering.contains(st.kind))
-          entering(st.kind) = df
-        val next = applyStage(df, st, conf.idCol, docs0, conf.textCol).persist(lvl)
-        rows = next.count()
-        out(f"stage ${st.kind}%-20s rows=$rows")
-        prev.foreach { p =>
-          if (entering.values.exists(_ eq p)) kept += p else p.unpersist()
-        }
-        prev = Some(next)
-        next
-      }
-      result.write.mode("overwrite").parquet(conf.outputDir)
-      // stale-artifact hygiene: overwriting the output invalidates any
-      // admission artifacts a previous incremental sequence left beside
-      // it — a later `--into` must never admit against an index of data
-      // this run just replaced
-      val artRoot = new org.apache.hadoop.fs.Path(conf.outputDir + ".artifacts")
-      artRoot.getFileSystem(spark.sessionState.newHadoopConf()).delete(artRoot, true)
-      if (eager && entering.nonEmpty) {
-        writeArtifacts(conf, artRoot.toString, entering.toMap, result, "overwrite")
-        out(s"admission artifacts written beside the output at $artRoot")
-      }
-    } finally {
-      prev.foreach(_.unpersist())
-      kept.foreach(_.unpersist())
+    val result = conf.stages.foldLeft(baseFrame(docs0, conf)) { (df, st) =>
+      if (eager && DedupKinds.contains(st.kind) && !entering.contains(st.kind))
+        entering(st.kind) = df
+      val next = Pins.persist(applyStage(df, st, conf.idCol, docs0, conf.textCol),
+        s"corpus.stage.${st.kind}")
+      rows = next.count()
+      out(f"stage ${st.kind}%-20s rows=$rows")
+      prev.filterNot(p => entering.values.exists(_ eq p)).foreach(Pins.release)
+      prev = Some(next)
+      next
+    }
+    result.write.mode("overwrite").parquet(conf.outputDir)
+    // stale-artifact hygiene: overwriting the output invalidates any
+    // admission artifacts a previous incremental sequence left beside
+    // it — a later `--into` must never admit against an index of data
+    // this run just replaced
+    val artRoot = new org.apache.hadoop.fs.Path(conf.outputDir + ".artifacts")
+    artRoot.getFileSystem(spark.sessionState.newHadoopConf()).delete(artRoot, true)
+    if (eager && entering.nonEmpty) {
+      writeArtifacts(conf, artRoot.toString, entering.toMap, result, "overwrite")
+      out(s"admission artifacts written beside the output at $artRoot")
     }
     out(s"output: ${conf.outputDir} rows=$rows")
     rows
@@ -511,7 +506,7 @@ object CorpusPipeline {
   private def admitBatch(spark: SparkSession, conf: CorpusPipelineConf,
                          docs0: DataFrame, priorDir: String,
                          out: String => Unit,
-                         streamBatchId: Option[(String, Long)] = None): Long = {
+                         streamBatchId: Option[(String, Long)] = None): Long = Pins.scoped {
     import org.apache.hadoop.fs.Path
     val id = conf.idCol
     val fs = new Path(priorDir).getFileSystem(spark.sessionState.newHadoopConf())
@@ -554,7 +549,8 @@ object CorpusPipeline {
     // checkpointed: read by the id guard, the overlap joins (streaming),
     // the exact stage twice, and the fp extension — without it every
     // consumer re-reads the shard and re-runs the per-row chain
-    val shaped = shaped0.select(prior.columns.map(col): _*).localCheckpoint(true)
+    val shaped =
+      Pins.checkpoint(shaped0.select(prior.columns.map(col): _*), "corpus.admit.shaped")
 
     val exactStage = conf.stages.find(_.kind == "dedup_exact")
     val nearStage = conf.stages.find(_.kind == "dedup_near")
@@ -613,8 +609,8 @@ object CorpusPipeline {
         }
         shaped
       case Some(_) =>
-        val overlap = shaped.join(prior.select(col(id)), Seq(id), "left_semi")
-          .localCheckpoint(true)
+        val overlap = Pins.checkpoint(
+          shaped.join(prior.select(col(id)), Seq(id), "left_semi"), "corpus.admit.overlap")
         if (overlap.count() == 0) shaped
         else {
           // a true replay carries the SAME rows the crashed attempt
@@ -650,8 +646,8 @@ object CorpusPipeline {
     val afterExact = exactStage.fold(batchIn) { _ =>
       val survivors = Dedup.incrementalExactDedup(prior, batchIn, id, col("text"),
         corpusFps = Some(artifact("fp")))
-      val next = batchIn.join(survivors.select(col(id)), Seq(id), "left_semi")
-        .localCheckpoint(true)
+      val next = Pins.checkpoint(
+        batchIn.join(survivors.select(col(id)), Seq(id), "left_semi"), "corpus.admit.exact")
       out(f"stage dedup_exact rows=${next.count()}")
       next
     }
@@ -671,7 +667,7 @@ object CorpusPipeline {
       // immutable, and the cluster label is the component's min id, so
       // the restriction reproduces the from-scratch keeper when batch
       // ids sort after corpus ids
-      val next = withoutClusterDups(afterExact, pairs, id).localCheckpoint(true)
+      val next = Pins.checkpoint(withoutClusterDups(afterExact, pairs, id), "corpus.admit.near")
       out(f"stage dedup_near rows=${next.count()}")
       next
     }
@@ -695,7 +691,7 @@ object CorpusPipeline {
     // truncate lineage before touching the target: the admitted frame
     // is O(batch) by design, and appending to a path the plan also
     // reads is only safe once the plan no longer reads it
-    val batchOut = admittedSem.localCheckpoint(true)
+    val batchOut = Pins.checkpoint(admittedSem, "corpus.admit.batchOut")
     batchOut.write.mode("append").parquet(priorDir)
     // extend the artifacts so the NEXT increment admits against the
     // updated corpus without reading its text (coverage and commit

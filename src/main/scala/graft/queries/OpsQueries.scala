@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Pins, Tables}
 import graft.ops.{Dedup, Multimodal, Sampling, Selection, Similarity, Splits, TextAnalysis => TA}
 
 /** LLM-data-pipeline operator queries over `documents`/`embeddings`.
@@ -485,8 +485,15 @@ object OpsQueries {
     // distinct 3-grams in the benchmark; a FRACTION, so the rule
     // survives benchmark growth where any absolute count would not) →
     // near-dup cluster dedup (keep canonical representatives) — every
-    // stage an operator this engine ships, the whole flow one plan
-    "x_pipeline_corpus" -> ((s, dir) => runReleased(pipelineV1Parts(s, dir, persistGated = true))),
+    // stage an operator this engine ships, the whole flow one plan.
+    // Each capstone entry (r10 verdict "What's wrong #2": a persisted
+    // intermediate returned lazily strands a corpus-sized cache per
+    // execution) builds and runs its capstone in a Pins scope of its
+    // own: the (small, terminal) result is checkpointed eagerly — the
+    // query-contract analog of the production sink write — and handed
+    // to the caller, and every intermediate pin is released.
+    "x_pipeline_corpus" -> ((s, dir) =>
+      Pins.scopedCheckpoint("x_pipeline_corpus")(pipelineCorpusV1(s, dir))),
 
     // capstone v2 — the FULL preprocessing pipeline as one flow, every
     // r7/r8 stage composed in execution order: PII scrub → Gopher gate
@@ -498,7 +505,7 @@ object OpsQueries {
     // the only iteration) and is hash-matched against the identical
     // DuckDB CTE chain.
     "x_pipeline_corpus_v2" -> ((s, dir) =>
-      runReleased(pipelineV2Parts(s, dir, gatedReuse = PipelineV2GatedReuse))),
+      Pins.scopedCheckpoint("x_pipeline_corpus_v2")(pipelineCorpusV2(s, dir))),
 
     // capstone v3 — v2 plus the embedding-space stage the r9/r10 rounds
     // scale-proofed: after textual cluster dedup, SemDeDup semantic
@@ -510,7 +517,8 @@ object OpsQueries {
     // oracle by nature (k-means cells are driver state DuckDB can't
     // re-derive) — the precision twin below is the hash-checked form.
     "x_pipeline_corpus_v3" -> ((s, dir) =>
-      runReleased(pipelineV3Parts(s, dir, semanticExactUnion = false))),
+      Pins.scopedCheckpoint("x_pipeline_corpus_v3")(
+        pipelineCorpusV3(s, dir, semanticExactUnion = false))),
 
     // precision twin: the semantic stage's pair set is (SemDeDup ∪
     // exact); SemDeDup's exact within-cell cosine filter makes it a
@@ -520,14 +528,16 @@ object OpsQueries {
     // exact` contract as x_semantic_dedup_precision, composed through
     // the full pipeline.
     "x_pipeline_corpus_v3_precision" -> ((s, dir) =>
-      runReleased(pipelineV3Parts(s, dir, semanticExactUnion = true))),
+      Pins.scopedCheckpoint("x_pipeline_corpus_v3_precision")(
+        pipelineCorpusV3(s, dir, semanticExactUnion = true))),
 
     // capstone v4 — the r11 stages composed: PII scrub → Gopher →
     // span-level decontamination (docs kept, spans cut) → textual
     // cluster dedup → temperature mixing → token-budget curation →
     // context-window chunking; fully hash-matched (no precision twin
     // needed — every stage is exactly SQL-expressible)
-    "x_pipeline_corpus_v4" -> ((s, dir) => runReleased(pipelineV4Parts(s, dir))),
+    "x_pipeline_corpus_v4" -> ((s, dir) =>
+      Pins.scopedCheckpoint("x_pipeline_corpus_v4")(pipelineCorpusV4(s, dir))),
 
     // capstone v5 — the curriculum pipeline, composing the r11-late
     // ops: PII scrub → Gopher → span decontamination → near-dup
@@ -535,7 +545,8 @@ object OpsQueries {
     // min-id) → global curriculum rank over the survivors → top-N cut
     // → context-window chunking with the rank carried per chunk.
     // Every stage exactly SQL-expressible ⇒ hash-matched end to end.
-    "x_pipeline_corpus_v5" -> ((s, dir) => runReleased(pipelineV5Parts(s, dir))),
+    "x_pipeline_corpus_v5" -> ((s, dir) =>
+      Pins.scopedCheckpoint("x_pipeline_corpus_v5")(pipelineCorpusV5(s, dir))),
 
     // capstone v6 — the CRAWL pipeline: real .warc.gz response records
     // → HTML→text extraction → TRAINED quality gate (fit on the crawl
@@ -543,7 +554,8 @@ object OpsQueries {
     // score carried. The round's WARC ingest and trained classifier
     // composed end to end; fully hash-matched (the oracle replays the
     // K training steps as CTEs over the same extracted text)
-    "x_pipeline_corpus_v6" -> ((s, dir) => runReleased(pipelineV6Parts(s, dir))),
+    "x_pipeline_corpus_v6" -> ((s, dir) =>
+      Pins.scopedCheckpoint("x_pipeline_corpus_v6")(pipelineCorpusV6(s, dir))),
 
     // tokenizer-training stats: the unigram vocabulary and the adjacent
     // BPE pre-token pair counts (the merge-candidate table) — wordcount
@@ -938,9 +950,8 @@ object OpsQueries {
       // counts, then the per-row verdict); pin the SKINNY
       // (doc_id, lang_guess) projection once so the langId regex pass
       // over the text runs once, not twice — the §8 proxy move
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), TA.langId(col("text")).as("lang_guess"))
-        .localCheckpoint(true)
+      val docs = Pins.checkpoint(Tables.documents(s, dir)
+        .select(col("doc_id"), TA.langId(col("text")).as("lang_guess")), "x_corpus_mixture.docs")
       Sampling.mixtureSample(docs, col("doc_id"), col("lang_guess"),
           Map("en" -> 0.7, "und" -> 0.3))
         .select(col("doc_id"), col("lang_guess"))
@@ -953,9 +964,8 @@ object OpsQueries {
     // training loader consumes
     "x_epoch_mixture" -> ((s, dir) => {
       // r20: skinny pin — see x_corpus_mixture
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), TA.langId(col("text")).as("lang_guess"))
-        .localCheckpoint(true)
+      val docs = Pins.checkpoint(Tables.documents(s, dir)
+        .select(col("doc_id"), TA.langId(col("text")).as("lang_guess")), "x_epoch_mixture.docs")
       Sampling.epochMixture(docs, col("doc_id"), col("lang_guess"),
           Map("en" -> 0.5, "und" -> 0.5))
         .select(col("doc_id"), col("stratum"), col("copy_idx"))
@@ -967,10 +977,9 @@ object OpsQueries {
     "x_epoch_mixture_tokens" -> ((s, dir) => {
       // r20: skinny pin (langId + tokenCount evaluated once) — see
       // x_corpus_mixture
-      val docs = Tables.documents(s, dir)
+      val docs = Pins.checkpoint(Tables.documents(s, dir)
         .select(col("doc_id"), TA.langId(col("text")).as("lang_guess"),
-          TA.tokenCount(col("text")).as("__w"))
-        .localCheckpoint(true)
+          TA.tokenCount(col("text")).as("__w")), "x_epoch_mixture_tokens.docs")
       Sampling.epochMixture(docs, col("doc_id"), col("lang_guess"),
           Map("en" -> 0.5, "und" -> 0.5), weight = col("__w"))
         .select(col("doc_id"), col("stratum"), col("copy_idx"))
@@ -982,9 +991,9 @@ object OpsQueries {
     // downsampled by (c_min/c)^(1-α)
     "x_temperature_mixture" -> ((s, dir) => {
       // r20: skinny pin — see x_corpus_mixture
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), TA.langId(col("text")).as("lang_guess"))
-        .localCheckpoint(true)
+      val docs = Pins.checkpoint(Tables.documents(s, dir)
+        .select(col("doc_id"), TA.langId(col("text")).as("lang_guess")),
+        "x_temperature_mixture.docs")
       Sampling.temperatureMixture(docs, col("doc_id"), col("lang_guess"), alpha = 0.5)
         .select(col("doc_id"), col("lang_guess"))
     }),
@@ -997,10 +1006,9 @@ object OpsQueries {
       // r20: budgetSelect scans its input twice (bucket stats + verdict
       // join); pin the skinny (id, score, tokens) projection so the
       // quality/token expressions over text evaluate once
-      val base = Tables.documents(s, dir)
+      val base = Pins.checkpoint(Tables.documents(s, dir)
         .select(col("doc_id"), TA.qualityScore(col("text")).as("__q"),
-          TA.tokenCount(col("text")).as("__n"))
-        .localCheckpoint(true)
+          TA.tokenCount(col("text")).as("__n")), "x_budget_select.base")
       Sampling.budgetSelect(base, col("doc_id"), col("__q"), col("__n"),
         BudgetSelectTokens)
     }),
@@ -1080,9 +1088,9 @@ object OpsQueries {
       // range sampler executes its input once for bounds and the
       // shuffle executes it again; unpinned, the quality regex ran 2×
       Sampling.globalRank(
-        Tables.documents(s, dir)
-          .select(col("doc_id"), TA.qualityScore(col("text")).as("quality"))
-          .localCheckpoint(true),
+        Pins.checkpoint(Tables.documents(s, dir)
+          .select(col("doc_id"), TA.qualityScore(col("text")).as("quality")),
+          "x_curriculum_rank.docs"),
         Seq(col("quality").desc, col("doc_id").asc))
         .select(col("doc_id"), col("rank"))),
 
@@ -1406,53 +1414,42 @@ object OpsQueries {
   /** Merge-round count of the `x_bpe_merges_k` trainer query — shared
     * by the Spark loop and the unrolled SQL mirror.
     */
-  /** Capstone v2, parametrized for the r10 reuse experiment: the
-    * `gated` frame (PII regex chain + Gopher gate — the most expensive
-    * narrow ops in the engine) feeds THREE subtrees (gram counts, the
-    * contamination join, the anti-join chain) and is recomputed in each
-    * under plain lazy evaluation (`gatedReuse = "lazy"`). Alternatives:
-    * `"localCheckpoint"` cuts the lineage (executor-local
-    * materialization, no shuffle barrier) so the regex chain runs once
-    * but SEVERS recovery — a lost executor kills the job at cluster
-    * scale; `"persist"` materializes to MEMORY_AND_DISK with lineage
-    * intact (lost blocks recompute), the fault-tolerant form of the
-    * same trade. Measured at sf0.1 (PLANS.md "capstone v2 lineage
-    * cut — r10").
+  /** Capstone v2: the deduped prefix (see [[pipelineDeduped]]) then the
+    * mixing and packing tail.
     */
-  private[graft] def pipelineCorpusV2(
-      s: SparkSession, dir: String, gatedReuse: String): DataFrame =
-    pipelineV2Parts(s, dir, gatedReuse)._1
+  private[graft] def pipelineCorpusV2(s: SparkSession, dir: String): DataFrame =
+    mixAndPack(pipelineDeduped(s, dir))
 
-  /** Cache lifecycle for the capstones (r10 verdict "What's wrong #2"):
-    * a `Dataset.persist` is pinned by the session's CacheManager until
-    * an explicit `unpersist`, so a query that persists an intermediate
-    * and returns lazily strands a corpus-sized cache per execution.
-    * The query entries therefore run EAGERLY: materialize the (small,
-    * terminal) result via `localCheckpoint(true)` — the query-contract
-    * analog of the production sink write — then release the cached
-    * intermediate in a `finally`. Checkpointed result blocks are
-    * reclaimed by the ContextCleaner when the caller drops the frame;
-    * nothing stays registered in the CacheManager.
+  /** Capstone v1: Gopher gate → fractional decontamination → textual
+    * near-dup cluster dedup, then each survivor's token count.
     */
-  private def runReleased(parts: (DataFrame, Seq[DataFrame])): DataFrame = {
-    val (result, cached) = parts
-    try result.localCheckpoint(true)
-    finally cached.foreach(_.unpersist())
+  private def pipelineCorpusV1(s: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(s, dir)
+    decontaminatedDedup(
+        docs.filter(col("source") =!= "src0").filter(TA.gopherPass(col("text"))), docs)
+      .select(col("doc_id"), TA.tokenCount(col("text")).as("n_tokens"))
   }
 
-  /** Capstone v1 plan plus the persisted gated handle (if any) the
-    * caller must release after the terminal action.
+  /** Shared v2/v3 prefix: PII scrub → Gopher gate → fractional
+    * decontamination → textual near-dup cluster dedup. Returns the
+    * textually deduped (doc_id, text) frame; its pins belong to the
+    * caller's scope.
     */
-  private def pipelineV1Parts(
-      s: SparkSession, dir: String, persistGated: Boolean): (DataFrame, Seq[DataFrame]) = {
+  private def pipelineDeduped(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val gated0 = docs.filter(col("source") =!= "src0")
-      .filter(TA.gopherPass(col("text")))
-    // same measured reuse win as v2: the Gopher-gated frame feeds three
-    // subtrees (gram counts, contamination join, anti-join chain) and
-    // recomputes in each without a materialization point
-    val gated = if (persistGated)
-      gated0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else gated0
+    decontaminatedDedup(docs.filter(col("source") =!= "src0")
+      .select(col("doc_id"), TA.scrubPii(col("text")).as("text"))
+      .filter(TA.gopherPass(col("text"))), docs)
+  }
+
+  /** The capstones' common core over the `gated` docs: drop every doc
+    * whose distinct 3-grams are ≥50% in the src0 benchmark of `docs`,
+    * then the near-dup cluster dedup's non-representatives.
+    */
+  private def decontaminatedDedup(gated0: DataFrame, docs: DataFrame): DataFrame = {
+    // the gated frame feeds three subtrees (gram counts, contamination
+    // join, anti-join chain): see [[PipelineV2GatedReuse]]
+    val gated = Pins.persist(gated0, "capstone.gated")
     val bench = docs.filter(col("source") === "src0")
     // fused n_hits+g (r20): the per-doc distinct-gram count rides the
     // contamination explode instead of a second gram subtree joined back
@@ -1463,49 +1460,13 @@ object OpsQueries {
     // r20: `clean` feeds BOTH the jaccard-pair build (pinned eagerly
     // inside it) and the final anti-join — unpersisted, the second
     // consumer replayed the whole contamination join; one
-    // MEMORY_AND_DISK pin removes the replay (released by the caller)
-    val clean = gated.join(contaminated, Seq("doc_id"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // MEMORY_AND_DISK pin removes the replay
+    val clean = Pins.persist(gated.join(contaminated, Seq("doc_id"), "left_anti"),
+      "capstone.clean")
     val dropList = Dedup.clusterDropList(Dedup.nearDupClusters(
       Dedup.ngramJaccardPairs(clean, "doc_id", col("text"), 3, 0.8,
         eager = true)))
-    val result = clean.join(dropList, Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), TA.tokenCount(col("text")).as("n_tokens"))
-    (result, clean +: (if (persistGated) Seq(gated) else Nil))
-  }
-
-  /** Shared v2/v3 prefix: PII scrub → Gopher gate → fractional
-    * decontamination → textual near-dup cluster dedup. Returns the
-    * textually deduped (doc_id, text) frame plus the cached handles the
-    * caller must release after its terminal action.
-    */
-  private def pipelineDedupedParts(
-      s: SparkSession, dir: String, gatedReuse: String): (DataFrame, Seq[DataFrame]) = {
-    val docs = Tables.documents(s, dir)
-    val scrubbed = docs.filter(col("source") =!= "src0")
-      .select(col("doc_id"), TA.scrubPii(col("text")).as("text"))
-    val gated0 = scrubbed.filter(TA.gopherPass(col("text")))
-    val gated = gatedReuse match {
-      case "localCheckpoint" => gated0.localCheckpoint()
-      case "persist" => gated0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      case _ => gated0
-    }
-    val bench = docs.filter(col("source") === "src0")
-    // fused n_hits+g (r20): see pipelineV1Parts — one join + one gram
-    // subtree removed from the live v2 chain and the v2/v3 artifact build
-    val contaminated = Dedup.contaminationHitsWithSize(
-        gated, "doc_id", col("text"), bench, col("text"), 3)
-      .filter(col("n_hits").cast("double") / col("g").cast("double") >= 0.5)
-      .select(col("doc").as("doc_id"))
-    // r20: pin `clean` — see pipelineV1Parts (kills the contamination-
-    // join replay in the final anti-join consumer)
-    val clean = gated.join(contaminated, Seq("doc_id"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dropList = Dedup.clusterDropList(Dedup.nearDupClusters(
-      Dedup.ngramJaccardPairs(clean, "doc_id", col("text"), 3, 0.8,
-        eager = true)))
-    val deduped = clean.join(dropList, Seq("doc_id"), "left_anti")
-    (deduped, clean +: (if (gatedReuse == "persist") Seq(gated) else Nil))
+    clean.join(dropList, Seq("doc_id"), "left_anti")
   }
 
   /** The shared pipeline tail: stratified corpus mixing (en → 20%) then
@@ -1520,12 +1481,6 @@ object OpsQueries {
       .withColumnRenamed("pack_id", "doc_id")
   }
 
-  private def pipelineV2Parts(
-      s: SparkSession, dir: String, gatedReuse: String): (DataFrame, Seq[DataFrame]) = {
-    val (deduped, cached) = pipelineDedupedParts(s, dir, gatedReuse)
-    (mixAndPack(deduped), cached)
-  }
-
   /** Capstone v3: the v2 prefix, then the embedding-space SemDeDup
     * stage on the textual survivors, then the v2 tail.
     *
@@ -1537,8 +1492,7 @@ object OpsQueries {
     *     actions (corpus count for auto-k, the bounded training-sample
     *     collect, the cell-size probe, both sides of the block join) —
     *     without a materialization point each would recompute the
-    *     decontamination join and cluster rounds; released by the
-    *     caller after the terminal action (CacheLifecycleSpec);
+    *     decontamination join and cluster rounds;
     *   - docs without embeddings never enter the pair join and survive
     *     the stage — the semantic verdict only ever REMOVES a doc on
     *     positive evidence;
@@ -1565,18 +1519,14 @@ object OpsQueries {
     // invalidates the cache instead of serving a stale survivor set
     val p = indexCachePath(s, dir, "documents.parquet",
       s"dedupedv2,reuse=$PipelineV2GatedReuse,n=3,j=0.8,v1")
-    if (!graft.store.ArtifactCache.isComplete(s, p)) {
-      val (deduped, cached) = pipelineDedupedParts(s, dir, PipelineV2GatedReuse)
-      try deduped.write.mode("overwrite").parquet(p)
-      finally cached.foreach(_.unpersist())
-    }
+    if (!graft.store.ArtifactCache.isComplete(s, p))
+      Pins.scoped(pipelineDeduped(s, dir).write.mode("overwrite").parquet(p))
     s.read.parquet(p)
   }
 
-  private[graft] def pipelineV3Parts(
-      s: SparkSession, dir: String, semanticExactUnion: Boolean): (DataFrame, Seq[DataFrame]) = {
-    val (deduped0, cached) = (dedupedArtifact(s, dir), Seq.empty[DataFrame])
-    val deduped = deduped0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  private[graft] def pipelineCorpusV3(
+      s: SparkSession, dir: String, semanticExactUnion: Boolean): DataFrame = {
+    val deduped = Pins.persist(dedupedArtifact(s, dir), "capstone.deduped")
     val docVecs = Tables.embeddings(s, dir)
       .select(col("vec_id").as("doc_id"), col("embedding"))
       .join(deduped.select(col("doc_id")), Seq("doc_id"))
@@ -1589,7 +1539,7 @@ object OpsQueries {
           .dropDuplicates("id_a", "id_b")
       else sem
     val semDrop = Dedup.clusterDropList(Dedup.nearDupClusters(semPairs))
-    (mixAndPack(deduped.join(semDrop, Seq("doc_id"), "left_anti")), deduped +: cached)
+    mixAndPack(deduped.join(semDrop, Seq("doc_id"), "left_anti"))
   }
 
   /** Capstone v4 — the r11 pipeline: PII scrub → Gopher gate →
@@ -1602,10 +1552,9 @@ object OpsQueries {
     * hash-matches its DuckDB CTE chain with no precision twin.
     *
     * The scrub→gate→decontaminate prefix reads the [[despArtifact]]
-    * (pass 1 pays the build, shared with v5). Persist points (released
-    * by the caller after the terminal action): `desp` feeds the jaccard
-    * pairs, the cluster anti-join, and the tail; `mixed` feeds the
-    * budget stats agg and the curated join. Each is MEMORY_AND_DISK
+    * (pass 1 pays the build, shared with v5). Persist points: `desp`
+    * feeds the jaccard pairs, the cluster anti-join, and the tail;
+    * `mixed` feeds the budget stats agg and the curated join. Each is MEMORY_AND_DISK
     * with lineage intact — same fault-tolerance trade as v2 (see
     * [[PipelineV2GatedReuse]]).
     */
@@ -1620,52 +1569,45 @@ object OpsQueries {
     */
   private def despArtifact(s: SparkSession, dir: String): DataFrame = {
     val p = indexCachePath(s, dir, "documents.parquet", "despv4,n=3,v1")
-    if (!graft.store.ArtifactCache.isComplete(s, p)) {
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    if (!graft.store.ArtifactCache.isComplete(s, p)) Pins.scoped {
       val docs = Tables.documents(s, dir)
       val scrubbed = docs.filter(col("source") =!= "src0")
         .select(col("doc_id"), TA.scrubPii(col("text")).as("text"))
-      val gated = scrubbed.filter(TA.gopherPass(col("text"))).persist(lvl)
+      val gated = Pins.persist(scrubbed.filter(TA.gopherPass(col("text"))), "capstone.gated")
       val bench = docs.filter(col("source") === "src0")
-      try Dedup.decontaminationScrub(
+      Dedup.decontaminationScrub(
           gated, "doc_id", col("text"), bench, col("text"), 3)
         .select(col("doc").as("doc_id"), col("scrubbed").as("text"))
         .write.mode("overwrite").parquet(p)
-      finally gated.unpersist()
     }
     s.read.parquet(p)
   }
 
-  private[graft] def pipelineV4Parts(
-      s: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val desp = despArtifact(s, dir).persist(lvl)
+  private[graft] def pipelineCorpusV4(s: SparkSession, dir: String): DataFrame = {
+    val desp = Pins.persist(despArtifact(s, dir), "capstone.desp")
     val dropList = Dedup.clusterDropList(Dedup.nearDupClusters(
       Dedup.ngramJaccardPairs(desp, "doc_id", col("text"), 3, 0.8,
         eager = true)))
     // r20: pin the tagged frame — temperatureMixture scans its input
     // twice (stratum counts, then the verdict join), and unpinned each
     // scan replayed the anti-join AND the langId regex pass
-    val tagged = desp.join(dropList, Seq("doc_id"), "left_anti")
-      .withColumn("lang_guess", TA.langId(col("text")))
-      .persist(lvl)
-    val mixed = Sampling.temperatureMixture(
+    val tagged = Pins.persist(desp.join(dropList, Seq("doc_id"), "left_anti")
+      .withColumn("lang_guess", TA.langId(col("text"))), "capstone.tagged")
+    val mixed = Pins.persist(Sampling.temperatureMixture(
         tagged, col("doc_id"), col("lang_guess"), 0.5)
-      .select(col("doc_id"), col("text"))
-      .persist(lvl)
+      .select(col("doc_id"), col("text")), "capstone.mixed")
     // r20: budgetSelect also scans ITS input twice — hand it the pinned
     // skinny (id, score, tokens) projection so the quality/token
     // expressions evaluate once (the x_budget_select move)
-    val baseSel = mixed.select(col("doc_id"),
-        TA.qualityScore(col("text")).as("__q"), TA.tokenCount(col("text")).as("__n"))
-      .localCheckpoint(true)
+    val baseSel = Pins.checkpoint(mixed.select(col("doc_id"),
+        TA.qualityScore(col("text")).as("__q"), TA.tokenCount(col("text")).as("__n")),
+      "capstone.v4.selection")
     val selected = Sampling.budgetSelect(baseSel, col("doc_id"),
       col("__q"), col("__n"), PipelineV4Budget)
     val curated = mixed.join(selected.select(col("doc_id")), Seq("doc_id"))
-    val chunks = Sampling.chunkTokens(curated, col("doc_id"), col("text"),
+    Sampling.chunkTokens(curated, col("doc_id"), col("text"),
         ChunkWindow, ChunkStride)
       .select(col("doc_id"), col("chunk_idx"), col("n_chunk_tokens"))
-    (chunks, Seq(desp, tagged, mixed))
   }
 
   /** Token budget of capstone v4's curation stage: below the sf0.01
@@ -1692,13 +1634,11 @@ object OpsQueries {
     * doc's rank carried per chunk (what a curriculum loader consumes).
     *
     * The prefix reads the [[despArtifact]] (shared with v4). Persist
-    * points released by the caller: `desp` as in v4; `ranked` feeds
-    * both the chunk explode and the rank join-back.
+    * points: `desp` as in v4; `ranked` feeds both the chunk explode and
+    * the rank join-back.
     */
-  private[graft] def pipelineV5Parts(
-      s: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val desp = despArtifact(s, dir).persist(lvl)
+  private[graft] def pipelineCorpusV5(s: SparkSession, dir: String): DataFrame = {
+    val desp = Pins.persist(despArtifact(s, dir), "capstone.desp")
     val labeled = Dedup.clusterRepresentatives(
       Dedup.ngramJaccardPairs(desp, "doc_id", col("text"), 3, 0.8,
         eager = true),
@@ -1709,18 +1649,16 @@ object OpsQueries {
     // SAMPLING pass over its input before the shuffle executes it
     // again; unpinned, the anti-join + quality-regex chain (and the
     // representative groupBy behind it) computed twice per run
-    val survivors = desp.join(dropped, Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("text"), TA.qualityScore(col("text")).as("quality"))
-      .persist(lvl)
-    val ranked = Sampling.globalRank(survivors,
+    val survivors = Pins.persist(desp.join(dropped, Seq("doc_id"), "left_anti")
+      .select(col("doc_id"), col("text"), TA.qualityScore(col("text")).as("quality")),
+      "capstone.survivors")
+    val ranked = Pins.persist(Sampling.globalRank(survivors,
         Seq(col("quality").desc, col("doc_id").asc))
-      .filter(col("rank") <= PipelineV5Keep)
-      .persist(lvl)
-    val out = Sampling.chunkTokens(ranked, col("doc_id"), col("text"),
+      .filter(col("rank") <= PipelineV5Keep), "capstone.ranked")
+    Sampling.chunkTokens(ranked, col("doc_id"), col("text"),
         ChunkWindow, ChunkStride)
       .join(ranked.select(col("doc_id"), col("rank")), Seq("doc_id"))
       .select(col("doc_id"), col("rank"), col("chunk_idx"), col("n_chunk_tokens"))
-    (out, Seq(desp, survivors, ranked))
   }
 
   /** The synthetic crawl as a PERSISTED `.warc.gz` artifact (real
@@ -1781,10 +1719,8 @@ object OpsQueries {
     * pruned gram join (never all-pairs); chunking is a narrow
     * per-doc explode.
     */
-  private[graft] def pipelineV6Parts(
-      s: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val ext = crawlExtractArtifact(s, dir).persist(lvl)
+  private[graft] def pipelineCorpusV6(s: SparkSession, dir: String): DataFrame = {
+    val ext = Pins.persist(crawlExtractArtifact(s, dir), "capstone.ext")
     // weights cache on the SOURCE identity (the crawl text derives
     // from it deterministically) + a v6 tag — the crawl fit and the
     // raw-documents fit are different models
@@ -1792,17 +1728,17 @@ object OpsQueries {
         cacheKey = Some(graft.store.ArtifactCache
           .sourceIdentity(s, s"$dir/documents.parquet") + "|qlt-v6crawl"))
       .select(col("__id").as("doc_id"), col("p_q"), col("keep"))
-    val kept = ext.join(scored.filter(col("keep")).select("doc_id", "p_q"), Seq("doc_id"))
-      .persist(lvl)
+    val kept = Pins.persist(
+      ext.join(scored.filter(col("keep")).select("doc_id", "p_q"), Seq("doc_id")),
+      "capstone.kept")
     val dropList = Dedup.clusterDropList(Dedup.nearDupClusters(
       Dedup.ngramJaccardPairs(kept, "doc_id", col("text"), 3, 0.8,
         eager = true)))
     val deduped = kept.join(dropList, Seq("doc_id"), "left_anti")
-    val out = Sampling.chunkTokens(deduped, col("doc_id"), col("text"),
+    Sampling.chunkTokens(deduped, col("doc_id"), col("text"),
         ChunkWindow, ChunkStride)
       .join(deduped.select(col("doc_id"), col("p_q")), Seq("doc_id"))
       .select(col("doc_id"), col("chunk_idx"), col("n_chunk_tokens"), col("p_q"))
-    (out, Seq(ext, kept))
   }
 
   /** Semantic-stage cosine threshold. The synthetic embeddings plant no
@@ -1816,12 +1752,16 @@ object OpsQueries {
     */
   val SemanticDedupThreshold = 0.4
 
-  /** Measured choice for capstone v2's `gated` reuse (sf0.1, r10):
-    * lazy 11.7 s / localCheckpoint 8.0 s / persist
-    * (MEMORY_AND_DISK) — see PLANS.md "capstone v2 lineage cut — r10".
-    * `persist` is shipped: same one-materialization win as the lineage
-    * cut, but recoverable on executor loss (a severed lineage is a job
-    * killer on a 1000-executor run).
+  /** Measured choice for the capstones' `gated` reuse (sf0.1, r10):
+    * the PII-scrubbed, Gopher-gated frame (the most expensive narrow ops
+    * in the engine) feeds three subtrees (gram counts, the
+    * contamination join, the anti-join chain). Lazy evaluation
+    * recomputed it in each: 11.7 s; a lineage cut (localCheckpoint)
+    * 8.0 s; persist (MEMORY_AND_DISK) — see PLANS.md "capstone v2
+    * lineage cut — r10". `persist` is shipped ([[Pins.persist]]): the
+    * same one-materialization win as the lineage cut, but recoverable
+    * on executor loss (a severed lineage is a job killer on a
+    * 1000-executor run). The value tags the deduped artifact.
     */
   val PipelineV2GatedReuse = "persist"
 
@@ -2196,7 +2136,7 @@ object OpsQueries {
        |FROM toks t LEFT JOIN agg a USING (doc_id)""".stripMargin
   }
 
-  /** The v2/v3 shared CTE prefix, mirroring [[pipelineDedupedParts]]:
+  /** The v2/v3 shared CTE prefix, mirroring [[pipelineDeduped]]:
     * scrub → gate → fractional decontamination → textual cluster dedup,
     * ending at relation `deduped (doc_id, text)`.
     *

@@ -3,6 +3,7 @@ package graft.subset
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Pins
 import graft.model.FkEdge
 
 /** Relational subsetting (SURVEY §2.3/§2.4): deterministic seed sampling
@@ -128,8 +129,8 @@ object Subset {
               // computation, blocks persisted at first use) without
               // paying a serialized job barrier per level at
               // construction time.
-              val keys = src.select(col(e.fromCol).as(e.toCol)).distinct()
-                .localCheckpoint(false)
+              val keys = Pins.checkpoint(src.select(col(e.fromCol).as(e.toCol)).distinct(),
+                s"subset.keys.${e.fromTable}.${e.toTable}", eager = false)
               load(t).join(keys, Seq(e.toCol), "left_semi")
             }
           }
@@ -169,15 +170,17 @@ object Subset {
         val merged = next.get(e.toTable).map(_.unionByName(hit)).getOrElse(hit)
         next(e.toTable) = merged
       }
-      // Materialize each level's frontier with localCheckpoint: it
+      // Materialize each level's frontier with a checkpoint: it
       // truncates lineage (otherwise every level nests the whole prior
       // join tree into the plan — at BFS depth d the un-truncated plan
       // is O(edges^d)) and computes the frontier exactly once for the
       // emptiness probe, the next level's joins, and the final
-      // consumers. Empty frontiers drop out.
-      val pruned = next.toMap
-        .map { case (t, df) => t -> df.dropDuplicates().localCheckpoint(true) }
-        .filter { case (_, df) => !df.isEmpty }
+      // consumers. Empty frontiers drop out, and their pins with them;
+      // the rest stay pinned, since `selected` unions every level's.
+      val (pruned, empty) = next.toMap
+        .map { case (t, df) => t -> Pins.checkpoint(df.dropDuplicates(), s"subset.frontier.$t") }
+        .partition { case (_, df) => !df.isEmpty }
+      empty.values.foreach(Pins.release)
       selected = pruned.foldLeft(selected) { case (acc, (t, df)) =>
         acc + (t -> acc.get(t).map(_.unionByName(df).dropDuplicates()).getOrElse(df))
       }

@@ -3,15 +3,18 @@ package graft
 /** r10 verdict "What's wrong #2": capstone v2 persisted its gated frame
   * and never unpersisted — a CacheManager-pinned, corpus-sized cache
   * stranded per execution (at 100 TB, a storage leak; in the 96-query
-  * bench session, plausible cause of the degraded second pass). The
-  * capstones now materialize eagerly and release in a `finally`; this
-  * spec proves no persisted RDD outlives a capstone run.
+  * bench session, plausible cause of the degraded second pass). Each
+  * capstone entry now runs in a [[Pins]] scope of its own, which
+  * releases every intermediate pin once the result is materialized;
+  * this spec proves no persisted RDD outlives a capstone run.
   *
-  * A CacheManager-pinned cache can NEVER be GC-reclaimed (the session
-  * holds a strong reference), while this run's localCheckpoint blocks
-  * drain via the ContextCleaner once unreferenced — so polling
-  * getPersistentRDDs back down to the pre-run set catches exactly the
-  * leak class and tolerates checkpoint blocks still in flight.
+  * The entry hands its checkpointed result to the caller, outside any
+  * scope, so that one checkpoint is left to the ContextCleaner once the
+  * frame is unreferenced. A CacheManager-pinned cache can NEVER be
+  * GC-reclaimed (the session holds a strong reference), so polling
+  * getPersistentRDDs back down to the pre-run set, with a GC per poll,
+  * catches exactly the leak class and tolerates the result's blocks
+  * still in flight.
   */
 class CacheLifecycleSpec extends SparkSpec {
 

@@ -30,19 +30,22 @@ class CliSpec extends SparkSpec {
          |destination:
          |  output_dir: $restoreDir
          |""".stripMargin
-    val conf = Files.createTempFile("graft-conf-", ".yaml")
+    val conf = tempFile("graft-conf-", ".yaml")
     Files.writeString(conf, yaml)
     conf.toString
   }
 
   /** `Cli.run`, asserting the command released every pin it made:
-    * the session's persistent RDDs are back to the set it started with.
+    * the session's persistent RDDs are back to the set it started with,
+    * right when it returns (no GC is asked to reclaim anything).
     */
   private def runReleasing(args: Seq[String], printed: String => Unit): Int = {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val rc = Cli.run(args, spark, printed)
-    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
-      s"${args.mkString(" ")} left pins behind")
+    val left = spark.sparkContext.getPersistentRDDs.toSeq
+      .filter { case (id, _) => !before(id) }.sortBy(_._1)
+    assert(left.isEmpty, s"${args.mkString(" ")} left pins behind: " +
+      left.map { case (id, rdd) => s"$id ${rdd.name}" }.mkString("; "))
     rc
   }
 
@@ -72,8 +75,8 @@ class CliSpec extends SparkSpec {
   }
 
   test("cli: dump create -> list -> restore roundtrip with skip + transformer") {
-    val store = Files.createTempDirectory("graft-cli-store-").toString
-    val restore = Files.createTempDirectory("graft-cli-restore-").toString
+    val store = tempDir("graft-cli-store-").toString
+    val restore = tempDir("graft-cli-restore-").toString
     val conf = writeConf(store, restore)
     val printed = collection.mutable.Buffer[String]()
 
@@ -110,27 +113,35 @@ class CliSpec extends SparkSpec {
   }
 
   test("cli: ephemeral restore loads the dump into a scratch Derby database (D4 analog)") {
-    val store = Files.createTempDirectory("graft-cli-store-").toString
-    val restore = Files.createTempDirectory("graft-cli-restore-").toString
+    val store = tempDir("graft-cli-store-").toString
+    val restore = tempDir("graft-cli-restore-").toString
     val conf = writeConf(store, restore)
     val printed = collection.mutable.Buffer[String]()
     assert(Cli.run(Seq("-c", conf, "dump", "create", "eph-test"), spark, printed += _) == 0)
 
     printed.clear()
-    assert(Cli.run(Seq("-c", conf, "dump", "restore", "ephemeral", "latest"), spark, printed += _) == 0)
+    assert(runReleasing(Seq("-c", conf, "dump", "restore", "ephemeral", "latest"),
+      printed += _) == 0)
     val url = printed.find(_.startsWith("ephemeral database ready: "))
       .map(_.stripPrefix("ephemeral database ready: "))
       .getOrElse(fail("no ephemeral database URL printed"))
     val back = graft.ingest.Jdbc.readTable(spark, url, "customer")
     assert(back.count() == Tables.customer(spark, sfDir).count())
     assert(back.filter($"c_name".endsWith("@example.com")).count() == back.count())
+    // the teardown the command prints: delete the (shut down) database
+    try java.sql.DriverManager.getConnection(url.replace(";create=true", ";shutdown=true"))
+    catch { case _: java.sql.SQLException => () } // Derby signals a clean shutdown so
+    val dbDir = printed.find(_.startsWith("teardown: delete "))
+      .map(l => java.nio.file.Paths.get(l.stripPrefix("teardown: delete ")))
+      .getOrElse(fail("no teardown line printed"))
+    SparkSpec.deleteTree(dbDir.getParent)
   }
 
   test("cli: dump create --file ingests a SQL dump through transform into the store") {
-    val store = Files.createTempDirectory("graft-cli-store-").toString
-    val restore = Files.createTempDirectory("graft-cli-restore-").toString
+    val store = tempDir("graft-cli-store-").toString
+    val restore = tempDir("graft-cli-restore-").toString
     val conf = writeConf(store, restore)
-    val dumpFile = Files.createTempFile("graft-dump-", ".sql")
+    val dumpFile = tempFile("graft-dump-", ".sql")
     Files.writeString(dumpFile,
       """CREATE TABLE public.customer (c_custkey bigint, c_name text);
         |CREATE TABLE public.nation (n_nationkey bigint, n_name text);
@@ -153,11 +164,54 @@ class CliSpec extends SparkSpec {
     assert(back.filter($"c_custkey".isin(1L, 2L)).count() == 2)
   }
 
+  test("cli: dump create --file with a subset releases the closure's pins") {
+    val store = tempDir("graft-cli-store-").toString
+    val restore = tempDir("graft-cli-restore-").toString
+    val conf = tempFile("graft-conf-", ".yaml")
+    Files.writeString(conf,
+      s"""source:
+         |  tables_dir: $sfDir
+         |subset:
+         |  table: orders
+         |  seed_key: o_orderkey
+         |  percent: 50
+         |datastore:
+         |  local_disk:
+         |    dir: $store
+         |destination:
+         |  output_dir: $restore
+         |""".stripMargin)
+    val dumpFile = tempFile("graft-dump-", ".sql")
+    Files.writeString(dumpFile,
+      """CREATE TABLE public.customer (c_custkey bigint, c_name text);
+        |CREATE TABLE public.orders (o_orderkey bigint, o_custkey bigint);
+        |INSERT INTO public.customer (c_custkey, c_name) VALUES (1, 'Alice');
+        |INSERT INTO public.customer (c_custkey, c_name) VALUES (2, 'Bob');
+        |INSERT INTO public.orders (o_orderkey, o_custkey) VALUES (10, 1);
+        |INSERT INTO public.orders (o_orderkey, o_custkey) VALUES (11, 2);
+        |ALTER TABLE ONLY public.orders
+        |    ADD CONSTRAINT orders_cust_fk FOREIGN KEY (o_custkey) REFERENCES public.customer(c_custkey);
+        |""".stripMargin)
+    val printed = collection.mutable.Buffer[String]()
+    assert(runReleasing(Seq("-c", conf.toString, "dump", "create", "sub", "--file",
+      dumpFile.toString), printed += _) == 0, printed.mkString("\n"))
+    assert(printed.exists(_.contains("dump created from file: sub")))
+    printed.clear()
+    assert(runReleasing(Seq("-c", conf.toString, "dump", "restore", "latest"),
+      printed += _) == 0, printed.mkString("\n"))
+    // the closure keeps exactly the customers the sampled orders reference
+    val orders = spark.read.parquet(s"$restore/orders")
+    val customers = spark.read.parquet(s"$restore/customer")
+    assert(orders.count() >= 1)
+    assert(customers.select("c_custkey").as[Long].collect().toSet ==
+      orders.select("o_custkey").as[Long].collect().toSet)
+  }
+
   test("cli: dump create --file handles COPY-format dumps and auto-names without a name") {
-    val store = Files.createTempDirectory("graft-cli-store-").toString
-    val restore = Files.createTempDirectory("graft-cli-restore-").toString
+    val store = tempDir("graft-cli-store-").toString
+    val restore = tempDir("graft-cli-restore-").toString
     val conf = writeConf(store, restore)
-    val dumpFile = Files.createTempFile("graft-copydump-", ".sql")
+    val dumpFile = tempFile("graft-copydump-", ".sql")
     Files.writeString(dumpFile,
       """CREATE TABLE public.customer (c_custkey bigint, c_name text);
         |COPY public.customer (c_custkey, c_name) FROM stdin;
@@ -179,11 +233,11 @@ class CliSpec extends SparkSpec {
   }
 
   test("cli: dump create --file refuses a dump in another schema and a dump with no data") {
-    val store = Files.createTempDirectory("graft-cli-store-").toString
-    val restore = Files.createTempDirectory("graft-cli-restore-").toString
+    val store = tempDir("graft-cli-store-").toString
+    val restore = tempDir("graft-cli-restore-").toString
     val conf = writeConf(store, restore)
     def create(sql: String): (Int, Seq[String]) = {
-      val dumpFile = Files.createTempFile("graft-refuse-", ".sql")
+      val dumpFile = tempFile("graft-refuse-", ".sql")
       Files.writeString(dumpFile, sql)
       val printed = collection.mutable.Buffer[String]()
       val rc = Cli.run(Seq("-c", conf, "dump", "create", "refused", "--file", dumpFile.toString),
@@ -208,8 +262,8 @@ class CliSpec extends SparkSpec {
   }
 
   test("cli: dump create -i ingests a dump piped on stdin (pg_dump | graft)") {
-    val store = Files.createTempDirectory("graft-cli-store-").toString
-    val restore = Files.createTempDirectory("graft-cli-restore-").toString
+    val store = tempDir("graft-cli-store-").toString
+    val restore = tempDir("graft-cli-restore-").toString
     val conf = writeConf(store, restore)
     val dumpText =
       """CREATE TABLE public.customer (c_custkey bigint, c_name text);
@@ -257,8 +311,8 @@ class CliSpec extends SparkSpec {
   }
 
   test("cli: corpus run executes the YAML stage chain end to end") {
-    val outDir = Files.createTempDirectory("graft-corpus-").toString + "/out"
-    val conf = Files.createTempDirectory("graft-corpus-conf-").toString + "/c.yaml"
+    val outDir = tempDir("graft-corpus-").toString + "/out"
+    val conf = tempDir("graft-corpus-conf-").toString + "/c.yaml"
     Files.write(java.nio.file.Paths.get(conf),
       s"""input_dir: /root/testdata/sf0.001/documents.parquet
          |output_dir: $outDir
@@ -305,13 +359,13 @@ class CliSpec extends SparkSpec {
   }
 
   test("cli: corpus stream scrubs, admits against the corpus, appends exactly-once") {
-    val inDir = Files.createTempDirectory("graft-cs-in").toString
-    val outDir = Files.createTempDirectory("graft-cs-out").toString + "/out"
-    val ckpt = Files.createTempDirectory("graft-cs-ck").toString + "/ck"
-    val corpusDir = Files.createTempDirectory("graft-cs-corpus").toString + "/corpus"
+    val inDir = tempDir("graft-cs-in").toString
+    val outDir = tempDir("graft-cs-out").toString + "/out"
+    val ckpt = tempDir("graft-cs-ck").toString + "/ck"
+    val corpusDir = tempDir("graft-cs-corpus").toString + "/corpus"
     Seq((1L, "already ingested text")).toDF("doc_id", "text")
       .write.parquet(corpusDir)
-    val conf = Files.createTempDirectory("graft-cs-conf").toString + "/s.yaml"
+    val conf = tempDir("graft-cs-conf").toString + "/s.yaml"
     Files.writeString(java.nio.file.Paths.get(conf),
       s"""input_dir: $inDir
          |output_dir: $outDir
@@ -396,8 +450,8 @@ class CliSpec extends SparkSpec {
   test("cli: corpus run chains holdout_split, leakage_quarantine and source_cap from config") {
     import org.apache.spark.sql.functions.col
     import graft.ops.{Dedup, Sampling, Splits}
-    val outDir = Files.createTempDirectory("graft-corpus-split-").toString + "/out"
-    val conf = Files.createTempDirectory("graft-corpus-split-conf-").toString + "/c.yaml"
+    val outDir = tempDir("graft-corpus-split-").toString + "/out"
+    val conf = tempDir("graft-corpus-split-conf-").toString + "/c.yaml"
     Files.writeString(java.nio.file.Paths.get(conf),
       s"""input_dir: /root/testdata/sf0.001/documents.parquet
          |output_dir: $outDir
@@ -444,8 +498,8 @@ class CliSpec extends SparkSpec {
   }
 
   test("cli: corpus run chains semantic dedup and exact-substr scrub from config") {
-    val outDir = Files.createTempDirectory("graft-corpus-sem-").toString + "/out"
-    val conf = Files.createTempDirectory("graft-corpus-sem-conf-").toString + "/c.yaml"
+    val outDir = tempDir("graft-corpus-sem-").toString + "/out"
+    val conf = tempDir("graft-corpus-sem-conf-").toString + "/c.yaml"
     Files.write(java.nio.file.Paths.get(conf),
       s"""input_dir: /root/testdata/sf0.001/documents.parquet
          |output_dir: $outDir
@@ -483,7 +537,7 @@ class CliSpec extends SparkSpec {
   }
 
   test("cli: html_strip stage extracts markup to prose from config") {
-    val root = Files.createTempDirectory("graft-html-").toString
+    val root = tempDir("graft-html-").toString
     Seq((1L, "<p>alpha &amp; beta</p>"), (2L, "<b>gamma</b>\ndelta<!-- x -->"))
       .toDF("doc_id", "text").write.parquet(s"$root/in")
     val conf = s"$root/c.yaml"
@@ -501,8 +555,8 @@ class CliSpec extends SparkSpec {
 
   test("cli: diversify stage prunes cluster prototypes from config, equal to the ops API") {
     import org.apache.spark.sql.functions.col
-    val outDir = Files.createTempDirectory("graft-corpus-div-").toString + "/out"
-    val conf = Files.createTempDirectory("graft-corpus-div-conf-").toString + "/c.yaml"
+    val outDir = tempDir("graft-corpus-div-").toString + "/out"
+    val conf = tempDir("graft-corpus-div-conf-").toString + "/c.yaml"
     Files.write(java.nio.file.Paths.get(conf),
       s"""input_dir: /root/testdata/sf0.001/documents.parquet
          |output_dir: $outDir
@@ -529,8 +583,8 @@ class CliSpec extends SparkSpec {
 
   test("cli: cluster_balance stage downsamples topic cells from config, equal to the ops API") {
     import org.apache.spark.sql.functions.col
-    val outDir = Files.createTempDirectory("graft-corpus-bal-").toString + "/out"
-    val conf = Files.createTempDirectory("graft-corpus-bal-conf-").toString + "/c.yaml"
+    val outDir = tempDir("graft-corpus-bal-").toString + "/out"
+    val conf = tempDir("graft-corpus-bal-conf-").toString + "/c.yaml"
     Files.write(java.nio.file.Paths.get(conf),
       s"""input_dir: /root/testdata/sf0.001/documents.parquet
          |output_dir: $outDir
@@ -556,7 +610,7 @@ class CliSpec extends SparkSpec {
 
   test("cli: dedup_phash stage drops image near-dups from config, equal to the ops API") {
     import org.apache.spark.sql.functions.col
-    val base = Files.createTempDirectory("graft-corpus-ph-").toString
+    val base = tempDir("graft-corpus-ph-").toString
     val outDir = base + "/out"
     val mediaDir = base + "/media"
     val conf = base + "/c.yaml"
@@ -584,7 +638,7 @@ class CliSpec extends SparkSpec {
 
   test("cli: url_filter + url_dedup stages gate and dedupe a WARC crawl by URL") {
     import org.apache.spark.sql.functions.{col, concat, lit, when}
-    val base = Files.createTempDirectory("graft-corpus-url-").toString
+    val base = tempDir("graft-corpus-url-").toString
     val crawlDir = base + "/crawl"
     val outDir = base + "/out"
     val conf = base + "/c.yaml"
@@ -624,8 +678,8 @@ class CliSpec extends SparkSpec {
 
   test("cli: keyword_filter stage drops blocklist-hit docs from config") {
     import org.apache.spark.sql.functions.col
-    val outDir = Files.createTempDirectory("graft-kw-").toString + "/out"
-    val conf = Files.createTempDirectory("graft-kw-conf-").toString + "/c.yaml"
+    val outDir = tempDir("graft-kw-").toString + "/out"
+    val conf = tempDir("graft-kw-conf-").toString + "/c.yaml"
     Files.write(java.nio.file.Paths.get(conf),
       s"""input_dir: /root/testdata/sf0.001/documents.parquet
          |output_dir: $outDir
@@ -649,11 +703,11 @@ class CliSpec extends SparkSpec {
   test("cli: keyword_filter passes null-text docs (only positive evidence blocks)") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
-    val inDir = Files.createTempDirectory("graft-kwnull-in-").toString + "/docs"
-    val outDir = Files.createTempDirectory("graft-kwnull-").toString + "/out"
+    val inDir = tempDir("graft-kwnull-in-").toString + "/docs"
+    val outDir = tempDir("graft-kwnull-").toString + "/out"
     Seq((1L, "a clean page"), (2L, "a spamword page"), (3L, null))
       .toDF("doc_id", "text").write.parquet(inDir)
-    val conf = Files.createTempDirectory("graft-kwnull-conf-").toString + "/c.yaml"
+    val conf = tempDir("graft-kwnull-conf-").toString + "/c.yaml"
     Files.write(java.nio.file.Paths.get(conf),
       s"""input_dir: $inDir
          |output_dir: $outDir
@@ -670,7 +724,7 @@ class CliSpec extends SparkSpec {
   }
 
   test("cli: corpus stats prints the language/token/dup profile") {
-    val conf = Files.createTempDirectory("graft-stats-").toString + "/c.yaml"
+    val conf = tempDir("graft-stats-").toString + "/c.yaml"
     Files.write(java.nio.file.Paths.get(conf),
       s"""input_dir: /root/testdata/sf0.001/documents.parquet
          |output_dir: /tmp/unused-stats-out
@@ -693,8 +747,8 @@ class CliSpec extends SparkSpec {
 
   test("cli: tokenize_unigram terminal emits trained-tokenizer counts from config") {
     import org.apache.spark.sql.functions.col
-    val outDir = Files.createTempDirectory("graft-tok-").toString + "/out"
-    val conf = Files.createTempDirectory("graft-tok-conf-").toString + "/c.yaml"
+    val outDir = tempDir("graft-tok-").toString + "/out"
+    val conf = tempDir("graft-tok-conf-").toString + "/c.yaml"
     Files.write(java.nio.file.Paths.get(conf),
       s"""input_dir: /root/testdata/sf0.001/documents.parquet
          |output_dir: $outDir
@@ -715,7 +769,7 @@ class CliSpec extends SparkSpec {
 
   test("cli: dedup_audio_fp stage drops planted audio copies from config") {
     import org.apache.spark.sql.functions.{col, pmod, lit}
-    val base = Files.createTempDirectory("graft-corpus-afp-").toString
+    val base = tempDir("graft-corpus-afp-").toString
     val outDir = base + "/out"
     val mediaDir = base + "/media"
     val conf = base + "/c.yaml"
@@ -755,7 +809,7 @@ class CliSpec extends SparkSpec {
 
   test("cli: doremi_mix stage resamples domains from config, equal to the ops API") {
     import org.apache.spark.sql.functions.col
-    val base = Files.createTempDirectory("graft-corpus-dm-").toString
+    val base = tempDir("graft-corpus-dm-").toString
     val outDir = base + "/out"
     val conf = base + "/c.yaml"
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -777,7 +831,7 @@ class CliSpec extends SparkSpec {
 
   test("cli: pagerank_select stage keeps the top-ranked half by the link sidecar") {
     import org.apache.spark.sql.functions.{col, explode, array, lit}
-    val base = Files.createTempDirectory("graft-corpus-pr-").toString
+    val base = tempDir("graft-corpus-pr-").toString
     val outDir = base + "/out"
     val edgesDir = base + "/edges"
     val conf = base + "/c.yaml"
@@ -810,8 +864,8 @@ class CliSpec extends SparkSpec {
   }
 
   test("cli: epoch_mix terminal emits the repeat manifest from config") {
-    val outDir = Files.createTempDirectory("graft-epoch-").toString + "/out"
-    val conf = Files.createTempDirectory("graft-epoch-conf-").toString + "/c.yaml"
+    val outDir = tempDir("graft-epoch-").toString + "/out"
+    val conf = tempDir("graft-epoch-conf-").toString + "/c.yaml"
     Files.write(java.nio.file.Paths.get(conf),
       s"""input_dir: /root/testdata/sf0.001/documents.parquet
          |output_dir: $outDir
@@ -832,7 +886,7 @@ class CliSpec extends SparkSpec {
   test("cli: dsir_select runs from config (both target forms), equal to the ops API") {
     import org.apache.spark.sql.functions._
     import graft.ops.{Selection, TextAnalysis => TA}
-    val root = Files.createTempDirectory("graft-dsirconf-").toString
+    val root = tempDir("graft-dsirconf-").toString
     val rows = ((0 until 6).map(k => (k.toLong, s"the cat and the dog number $k sit in the house")) ++
       (6 until 12).map(k => (k.toLong, s"zqx wvu ponm lkj number $k hgf dsa qqq www"))).toSeq
     rows.toDF("doc_id", "text").write.parquet(s"$root/in")
@@ -883,7 +937,7 @@ class CliSpec extends SparkSpec {
 
   test("cli: corpus explain reports per-stage plan shape without executing the chain") {
     import org.apache.spark.sql.functions._
-    val root = Files.createTempDirectory("graft-explain-").toString
+    val root = tempDir("graft-explain-").toString
     (0 until 8).map(k => (k.toLong, s"the cat and dog number $k sit here quietly"))
       .toDF("doc_id", "text").write.parquet(s"$root/in")
     val conf = s"$root/c.yaml"
@@ -909,10 +963,41 @@ class CliSpec extends SparkSpec {
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$root/out")))
   }
 
+  test("cli: corpus explain leaves the session's AQE setting alone for concurrent jobs") {
+    val root = tempDir("graft-explain-conf-").toString
+    (0 until 8).map(k => (k.toLong, s"the cat and dog number $k sit here quietly"))
+      .toDF("doc_id", "text").write.parquet(s"$root/in")
+    val conf = s"$root/c.yaml"
+    Files.write(java.nio.file.Paths.get(conf),
+      s"""input_dir: $root/in
+         |output_dir: $root/out
+         |stages:
+         |  - kind: pii_scrub
+         |  - kind: dedup_exact
+         |  - kind: dedup_near
+         |""".stripMargin.getBytes("UTF-8"))
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val (rc, sawOff) = graft.ops.Par.both(
+      try Cli.run(Seq("corpus", "explain", conf), spark, _ => ())
+      finally done.set(true),
+      {
+        // another job's view of the session conf while explain plans
+        var off = false
+        while (!done.get()) {
+          off ||= spark.conf.get("spark.sql.adaptive.enabled") == "false"
+          Thread.onSpinWait()
+        }
+        off
+      })
+    assert(rc == 0)
+    assert(!sawOff, "corpus explain turned AQE off for the whole session while it planned")
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+  }
+
   test("cli: perplexity_filter model kn_bigram scores with the KN LM, equal to the ops API") {
     import org.apache.spark.sql.functions._
     import graft.ops.{TextAnalysis => TA, Vocab}
-    val root = Files.createTempDirectory("graft-knconf-").toString
+    val root = tempDir("graft-knconf-").toString
     // repeated fluent phrasing vs one-off shuffles: KN separates them
     val rows = ((0 until 6).map(k => (k.toLong, "the cat sat on the mat and the dog sat too")) ++
       Seq((6L, "mat the on dog sat cat and too the the"),
@@ -950,7 +1035,7 @@ class CliSpec extends SparkSpec {
   test("cli: c4_clean, perplexity_filter and unimax_mix run from config, equal to the ops API") {
     import org.apache.spark.sql.functions._
     import graft.ops.{Sampling, TextAnalysis => TA}
-    val root = Files.createTempDirectory("graft-c4conf-").toString
+    val root = tempDir("graft-c4conf-").toString
     val out = s"$root/out"
     val conf = s"$root/c.yaml"
     // line-structured prose in two stopword languages; doc 0 carries a
@@ -996,7 +1081,7 @@ class CliSpec extends SparkSpec {
 
   test("cli: corpus run --into admits shards incrementally, equal to from-scratch on the union") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-corpus-inc-").toString
+    val root = tempDir("graft-corpus-inc-").toString
     // 40-word base texts so a one-word edit stays deep inside the LSH
     // banding's recall envelope (jaccard ~0.85 → miss odds ~1e-5)
     def sent(words: Seq[String]): String = words.mkString(" ")
@@ -1067,7 +1152,7 @@ class CliSpec extends SparkSpec {
 
   test("cli: corpus run --into rejects a shard whose ids do not sort after the corpus") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-inc-idguard-").toString
+    val root = tempDir("graft-inc-idguard-").toString
     val t = Seq.tabulate(40)(i => s"g$i").mkString(" ")
     Seq((10L, t)).toDF("doc_id", "text").write.parquet(s"$root/seed")
     // id 5 under-cuts the admitted corpus's max (10): the from-scratch
@@ -1094,7 +1179,7 @@ class CliSpec extends SparkSpec {
 
   test("cli: incremental admission rejects transitive duplicates bridged by dropped rows") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-inc-trans-").toString
+    val root = tempDir("graft-inc-trans-").toString
     val vocab = ('a' to 'z').map(c => s"t$c")
     val base = Seq.tabulate(40)(i => vocab(i % 26))
     val tK = base.mkString(" ")
@@ -1148,7 +1233,7 @@ class CliSpec extends SparkSpec {
 
   test("cli: from-scratch runs write admission artifacts eagerly, covering their own drops") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-eager-art-").toString
+    val root = tempDir("graft-eager-art-").toString
     val vocab = ('a' to 'z').map(c => s"e$c")
     val base = Seq.tabulate(40)(i => vocab(i % 26))
     val tK = base.mkString(" ")
@@ -1175,7 +1260,9 @@ class CliSpec extends SparkSpec {
     }
     val outDir = s"$root/corpus"
     val printed = collection.mutable.Buffer[String]()
-    assert(Cli.run(Seq("corpus", "run", conf(s"$root/seed", outDir)), spark, printed += _) == 0)
+    // the run and the increment release every pin (dedup_near's
+    // cluster rounds included) when they return
+    assert(runReleasing(Seq("corpus", "run", conf(s"$root/seed", outDir)), printed += _) == 0)
     assert(printed.exists(_.contains("admission artifacts written")), printed.mkString("\n"))
     val fs = new org.apache.hadoop.fs.Path(outDir).getFileSystem(
       spark.sessionState.newHadoopConf())
@@ -1187,8 +1274,8 @@ class CliSpec extends SparkSpec {
       .select($"doc_id").as[Long].collect().toSet == Set(2L))
     // the increment must NOT re-read corpus text (no lazy bootstrap)…
     printed.clear()
-    assert(Cli.run(Seq("corpus", "run", conf(s"$root/shard", outDir), "--into", outDir),
-      spark, printed += _) == 0)
+    assert(runReleasing(Seq("corpus", "run", conf(s"$root/shard", outDir), "--into", outDir),
+      printed += _) == 0)
     assert(!printed.exists(_.contains("building")),
       s"increment re-built artifacts despite the eager write:\n${printed.mkString("\n")}")
     // …and must reject 201 (∼ the from-scratch-dropped D only) and 202
@@ -1232,7 +1319,7 @@ class CliSpec extends SparkSpec {
 
   test("cli: corpus compact collapses file groups, admission results unchanged") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-inc-compact-").toString
+    val root = tempDir("graft-inc-compact-").toString
     val vocab = ('a' to 'z').map(c => s"c$c")
     def sent(f: Int => String): String = Seq.tabulate(40)(f).mkString(" ")
     def fresh(k: Int): String = sent(i => vocab((i * (2 * k + 3) + k) % 26))
@@ -1290,8 +1377,8 @@ class CliSpec extends SparkSpec {
 
   test("cli: epoch_mix weight tokens targets the mix in token mass") {
     import org.apache.spark.sql.functions._
-    val outDir = Files.createTempDirectory("graft-epoch-tok-").toString + "/out"
-    val conf = Files.createTempDirectory("graft-epoch-tok-conf-").toString + "/c.yaml"
+    val outDir = tempDir("graft-epoch-tok-").toString + "/out"
+    val conf = tempDir("graft-epoch-tok-conf-").toString + "/c.yaml"
     Files.write(java.nio.file.Paths.get(conf),
       s"""input_dir: /root/testdata/sf0.001/documents.parquet
          |output_dir: $outDir
@@ -1336,7 +1423,7 @@ class CliSpec extends SparkSpec {
 
   test("cli: incremental dedup_semantic admits against the cosine-LSH artifact") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-inc-sem-").toString
+    val root = tempDir("graft-inc-sem-").toString
     val vocab = ('a' to 'z').map(c => s"u$c")
     def sent(f: Int => String): String = Seq.tabulate(40)(f).mkString(" ")
     // textually-unrelated docs; similarity lives in the vectors. The
@@ -1408,7 +1495,7 @@ class CliSpec extends SparkSpec {
 
   test("cli: corpus stream --into admits JSONL micro-batches against the artifacts") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-csi-").toString
+    val root = tempDir("graft-csi-").toString
     val vocab = ('a' to 'z').map(c => s"v$c")
     def sent(f: Int => String): String = Seq.tabulate(40)(f).mkString(" ")
     val t1 = sent(i => vocab(i % 26))
@@ -1471,7 +1558,7 @@ class CliSpec extends SparkSpec {
 
   test("cli: corpus stream --into replays a crashed micro-batch without duplicates") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-csi-replay-").toString
+    val root = tempDir("graft-csi-replay-").toString
     val vocab = ('a' to 'z').map(c => s"r$c")
     def sent(f: Int => String): String = Seq.tabulate(40)(f).mkString(" ")
     val t1 = sent(i => vocab(i % 26))
@@ -1561,7 +1648,7 @@ class CliSpec extends SparkSpec {
 
   test("cli: replay recovers a crash between the index appends and the fingerprint append") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-csi-fpwin-").toString
+    val root = tempDir("graft-csi-fpwin-").toString
     val vocab = ('a' to 'z').map(c => s"f$c")
     def sent(f: Int => String): String = Seq.tabulate(40)(f).mkString(" ")
     val t1 = sent(i => vocab(i % 26))
@@ -1644,7 +1731,7 @@ class CliSpec extends SparkSpec {
   test("telemetry: off by default, local JSONL capture when enabled, never throws") {
     assert(!Telemetry.isEnabled)
     Telemetry.capture("ignored") // no sink — must be a no-op
-    val f = Files.createTempFile("graft-telemetry-", ".jsonl")
+    val f = tempFile("graft-telemetry-", ".jsonl")
     try {
       Telemetry.enable(f.toString)
       Telemetry.capture("cli_command", Map("command" -> "dump create", "quote" -> "a\"b"))
@@ -1662,7 +1749,7 @@ class CliSpec extends SparkSpec {
 
   test("live mongo legs: mongodump source -> pipeline -> mongorestore destination (stubbed tools)") {
     import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft-mongolive-")
+    val dir = tempDir("graft-mongolive-")
     // a real archive for the stub mongodump to emit, built by the
     // writer the specs already pin byte-exactly
     // names > 3 chars: `redacted` passes shorter strings through
@@ -1684,8 +1771,8 @@ class CliSpec extends SparkSpec {
     val restStub = dir.resolve("mongorestore.sh")
     Files.writeString(restStub, s"#!/bin/sh\necho \"$$@\" > $restArgsF\ncat > $restoredF\n")
     Seq(dumpStub, restStub).foreach(_.toFile.setExecutable(true))
-    val store = Files.createTempDirectory("graft-mongolive-store-").toString
-    val conf = Files.createTempFile("graft-mongolive-conf-", ".yaml")
+    val store = tempDir("graft-mongolive-store-").toString
+    val conf = tempFile("graft-mongolive-conf-", ".yaml")
     // BARE skip_tables / transformer entries (the example-yaml shape):
     // with a mongodb source they must default to the URI's database,
     // not the SQL-side "public" — otherwise the exclusion and the
@@ -1769,8 +1856,8 @@ class CliSpec extends SparkSpec {
     }
   }
   test("tool-mode conf validation: a typo'd spark.graft.pgMode fails loudly instead of silently forcing JDBC") {
-    val store = Files.createTempDirectory("graft-pgmode-store-").toString
-    val conf = Files.createTempFile("graft-pgmode-conf-", ".yaml")
+    val store = tempDir("graft-pgmode-store-").toString
+    val conf = tempFile("graft-pgmode-conf-", ".yaml")
     Files.writeString(conf,
       s"""source:
          |  connection_uri: postgres://u@localhost/db
@@ -1789,8 +1876,8 @@ class CliSpec extends SparkSpec {
   }
 
   test("pg tool restore: COPY-block stream; foreign-dialect stored DDL falls back to synthesized pg DDL (stubbed psql)") {
-    val dir = Files.createTempDirectory("graft-pgcopyleg-")
-    val store = Files.createTempDirectory("graft-pgcopyleg-store-").toString
+    val dir = tempDir("graft-pgcopyleg-")
+    val store = tempDir("graft-pgcopyleg-store-").toString
     val argsF = dir.resolve("psql.args"); val restoredF = dir.resolve("restored.sql")
     val psqlStub = dir.resolve("psql.sh")
     Files.writeString(psqlStub, s"#!/bin/sh\necho \"$$@\" >> $argsF\ncat >> $restoredF\n")
@@ -1806,7 +1893,7 @@ class CliSpec extends SparkSpec {
         |INSERT INTO `users` (`id`, `note`) VALUES (1,'tab\there');
         |INSERT INTO `users` (`id`, `note`) VALUES (2,NULL);
         |""".stripMargin)
-    val conf = Files.createTempFile("graft-pgcopyleg-conf-", ".yaml")
+    val conf = tempFile("graft-pgcopyleg-conf-", ".yaml")
     Files.writeString(conf,
       s"""source:
          |  tables_dir: /unused
@@ -1843,8 +1930,8 @@ class CliSpec extends SparkSpec {
   }
 
   test("pg tool restore: stored DDL's own schema is recreated and targeted after the public-only wipe (stubbed psql)") {
-    val dir = Files.createTempDirectory("graft-pgschema-")
-    val store = Files.createTempDirectory("graft-pgschema-store-").toString
+    val dir = tempDir("graft-pgschema-")
+    val store = tempDir("graft-pgschema-store-").toString
     val restoredF = dir.resolve("restored.sql")
     val psqlStub = dir.resolve("psql.sh")
     Files.writeString(psqlStub, s"#!/bin/sh\ncat >> $restoredF\n")
@@ -1859,7 +1946,7 @@ class CliSpec extends SparkSpec {
         |CREATE TABLE app.users (id integer, note text);
         |INSERT INTO app.users (id, note) VALUES (1, 'x');
         |""".stripMargin)
-    val conf = Files.createTempFile("graft-pgschema-conf-", ".yaml")
+    val conf = tempFile("graft-pgschema-conf-", ".yaml")
     Files.writeString(conf,
       s"""source:
          |  tables_dir: /unused
@@ -1890,8 +1977,8 @@ class CliSpec extends SparkSpec {
   }
 
   test("mysql tool restore: pg-qualified stored DDL falls back; special floats restore as NULL (stubbed mysql)") {
-    val dir = Files.createTempDirectory("graft-mysqlfallback-")
-    val store = Files.createTempDirectory("graft-mysqlfallback-store-").toString
+    val dir = tempDir("graft-mysqlfallback-")
+    val store = tempDir("graft-mysqlfallback-store-").toString
     val restoredF = dir.resolve("restored.sql")
     val mysqlStub = dir.resolve("mysql.sh")
     Files.writeString(mysqlStub, s"#!/bin/sh\ncat >> $restoredF\n")
@@ -1909,7 +1996,7 @@ class CliSpec extends SparkSpec {
         |INSERT INTO public.m (id, v, b) VALUES (2, 'NaN', NULL);
         |INSERT INTO public.m (id, v, b) VALUES (3, 'Infinity', NULL);
         |""".stripMargin)
-    val conf = Files.createTempFile("graft-mysqlfallback-conf-", ".yaml")
+    val conf = tempFile("graft-mysqlfallback-conf-", ".yaml")
     Files.writeString(conf,
       s"""source:
          |  tables_dir: /unused
@@ -1946,7 +2033,7 @@ class CliSpec extends SparkSpec {
   test("mongo source dumps store the TRANSFORMED ARCHIVE: BSON types survive the datastore exactly (stubbed tools)") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft-mongotyped-")
+    val dir = tempDir("graft-mongotyped-")
     // a TYPED collection — date, binary, decimal, array, nested doc —
     // the shapes the old SQL-statement intermediate degraded to text
     val schema = StructType(Seq(
@@ -1974,10 +2061,10 @@ class CliSpec extends SparkSpec {
     val restStub = dir.resolve("mongorestore.sh")
     Files.writeString(restStub, s"#!/bin/sh\ncat > $restoredF\n")
     Seq(dumpStub, restStub).foreach(_.toFile.setExecutable(true))
-    val store = Files.createTempDirectory("graft-mongotyped-store-").toString
-    val parquetOut = Files.createTempDirectory("graft-mongotyped-out-").toString
+    val store = tempDir("graft-mongotyped-store-").toString
+    val parquetOut = tempDir("graft-mongotyped-out-").toString
     def conf(dest: String): String = {
-      val f = Files.createTempFile("graft-mongotyped-conf-", ".yaml")
+      val f = tempFile("graft-mongotyped-conf-", ".yaml")
       Files.writeString(f,
         s"""source:
            |  connection_uri: mongodb://localhost:27017/livedb
@@ -2048,7 +2135,7 @@ class CliSpec extends SparkSpec {
   }
   test("mongo source: subset + passthrough apply before the archive is stored (stubbed tools)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-mongosubset-")
+    val dir = tempDir("graft-mongosubset-")
     val users = (1L to 40L).map(i => (i, s"user-$i")).toDF("id", "name")
     val events = (1L to 7L).map(i => (i, "evt")).toDF("event_id", "kind")
     val bos = new java.io.ByteArrayOutputStream()
@@ -2059,9 +2146,9 @@ class CliSpec extends SparkSpec {
     val dumpStub = dir.resolve("mongodump.sh")
     Files.writeString(dumpStub, s"#!/bin/sh\ncat $archivePath\n")
     dumpStub.toFile.setExecutable(true)
-    val store = Files.createTempDirectory("graft-mongosubset-store-").toString
-    val outDir = Files.createTempDirectory("graft-mongosubset-out-").toString
-    val conf = Files.createTempFile("graft-mongosubset-conf-", ".yaml")
+    val store = tempDir("graft-mongosubset-store-").toString
+    val outDir = tempDir("graft-mongosubset-out-").toString
+    val conf = tempFile("graft-mongosubset-conf-", ".yaml")
     // reference subset semantics through the ARCHIVE store path: the
     // seed collection samples at percent, passthrough copies whole,
     // everything else contributes zero rows (r17 dumpPlan fix)

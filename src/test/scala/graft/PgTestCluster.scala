@@ -26,7 +26,7 @@ private[graft] case class PgTestCluster(dir: String, sock: String) {
         Seq("/usr/sbin/runuser", "-u", "nobody", "--") ++ stop
       else stop
     Process(full).!(ProcessLogger(_ => (), _ => ()))
-    PgTestCluster.deleteTree(Paths.get(dir))
+    SparkSpec.deleteTree(Paths.get(dir))
   }
 }
 
@@ -72,13 +72,4 @@ private[graft] object PgTestCluster {
     sys.addShutdownHook { cluster.stop(bin) }
     cluster
   }
-
-  /** Delete `root` and everything under it; a missing `root` is a no-op. */
-  private def deleteTree(root: java.nio.file.Path): Unit =
-    if (Files.exists(root)) {
-      val paths = Files.walk(root)
-      try paths.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => Files.deleteIfExists(p))
-      finally paths.close()
-    }
 }

@@ -67,7 +67,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("dump → restore end-to-end roundtrip with transformer and skip") {
-    val dir = Files.createTempDirectory("graft-e2e").toString
+    val dir = tempDir("graft-e2e").toString
     val store = new Datastore(s"file://$dir", spark)
     val config = Pipeline.DumpJobConfig(
       tables = Seq("customer", "nation"),
@@ -93,7 +93,7 @@ class PipelineSpec extends SparkSpec {
   test("restore parses a headerless chunk as pg: a trailing backslash keeps its row, a quoted ; stays in its value") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft-dialect-e2e").toString
+    val dir = tempDir("graft-dialect-e2e").toString
     val store = new Datastore(s"file://$dir", spark)
     val schema = StructType(Seq(
       StructField("id", LongType, nullable = false),
@@ -117,9 +117,9 @@ class PipelineSpec extends SparkSpec {
 
   test("streaming: availableNow transform matches the batch transformer") {
     import graft.streaming.StreamingPipeline
-    val inDir = Files.createTempDirectory("graft-stream-in").toString
-    val outDir = Files.createTempDirectory("graft-stream-out").toString + "/out"
-    val ckpt = Files.createTempDirectory("graft-stream-ckpt").toString + "/ckpt"
+    val inDir = tempDir("graft-stream-in").toString
+    val outDir = tempDir("graft-stream-out").toString + "/out"
+    val ckpt = tempDir("graft-stream-ckpt").toString + "/ckpt"
     val cust = load("customer")
     cust.write.mode("overwrite").parquet(inDir)
     val bindings = Seq(TransformerBinding("public", "customer", "c_name", "email"))
@@ -134,9 +134,9 @@ class PipelineSpec extends SparkSpec {
 
   test("streaming: watermarked dedup drops in-horizon duplicates, matches batch J3 counts") {
     import graft.streaming.StreamingPipeline
-    val inDir = Files.createTempDirectory("graft-dedup-in").toString
-    val outDir = Files.createTempDirectory("graft-dedup-out").toString + "/out"
-    val ckpt = Files.createTempDirectory("graft-dedup-ckpt").toString + "/ckpt"
+    val inDir = tempDir("graft-dedup-in").toString
+    val outDir = tempDir("graft-dedup-out").toString + "/out"
+    val ckpt = tempDir("graft-dedup-ckpt").toString + "/ckpt"
     // duplicated doc payloads with event-time: each text appears 1-3
     // times within minutes of the first copy (inside the horizon)
     val base = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
@@ -158,9 +158,9 @@ class PipelineSpec extends SparkSpec {
     import graft.streaming.StreamingPipeline
     import graft.ingest.Jsonl
     import org.apache.spark.sql.types._
-    val inDir = Files.createTempDirectory("graft-jsonl-in").toString
-    val outDir = Files.createTempDirectory("graft-jsonl-out").toString + "/out"
-    val ckpt = Files.createTempDirectory("graft-jsonl-ckpt").toString + "/ckpt"
+    val inDir = tempDir("graft-jsonl-in").toString
+    val outDir = tempDir("graft-jsonl-out").toString + "/out"
+    val ckpt = tempDir("graft-jsonl-ckpt").toString + "/ckpt"
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("ts", TimestampType)))
@@ -191,7 +191,7 @@ class PipelineSpec extends SparkSpec {
 
   test("streaming: continuous-trigger incremental admission lands two JSONL drops in one running query") {
     import graft.pipeline.CorpusPipeline
-    val root = Files.createTempDirectory("graft-cont-").toString
+    val root = tempDir("graft-cont-").toString
     val outDir = s"$root/corpus"
     val watch = s"$root/in"
     Files.createDirectories(java.nio.file.Paths.get(watch))
@@ -238,9 +238,9 @@ class PipelineSpec extends SparkSpec {
 
   test("streaming: corpus admission drops known fingerprints and in-stream dups") {
     import graft.streaming.StreamingPipeline
-    val inDir = Files.createTempDirectory("graft-admit-in").toString
-    val outDir = Files.createTempDirectory("graft-admit-out").toString + "/out"
-    val ckpt = Files.createTempDirectory("graft-admit-ckpt").toString + "/ckpt"
+    val inDir = tempDir("graft-admit-in").toString
+    val outDir = tempDir("graft-admit-out").toString + "/out"
+    val ckpt = tempDir("graft-admit-ckpt").toString + "/ckpt"
     val base = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
     // corpus knows texts 0..49 (whitespace-normalized forms)
     val corpus = (0 until 50).map(i => (i.toLong, s"known  TEXT-$i")).toDF("doc_id", "text")
@@ -279,7 +279,7 @@ class PipelineSpec extends SparkSpec {
       .toDF("doc_id", "text")
     assert(StreamingPipeline.nearDupSuppressStream(dup, "doc_id", $"text", 0).count() == 2)
     // the streaming form runs end-to-end and upholds the same invariant
-    val inDir = Files.createTempDirectory("graft-neardup-in").toString
+    val inDir = tempDir("graft-neardup-in").toString
     docs.write.mode("overwrite").parquet(inDir)
     val stream = spark.readStream.schema(docs.schema).parquet(inDir)
     val out = StreamingPipeline.nearDupSuppressStream(stream, "doc_id", $"text", 8)
@@ -332,9 +332,9 @@ class PipelineSpec extends SparkSpec {
       spark.read.parquet(outDir).select("doc_id").as[Long].collect().toSet
     }
     val payload = "the quick brown fox jumps over the lazy dog"
-    val (in1, ck1, out1) = (Files.createTempDirectory("graft-ttl-in").toString,
-      Files.createTempDirectory("graft-ttl-ck").toString + "/ck",
-      Files.createTempDirectory("graft-ttl-out").toString + "/out")
+    val (in1, ck1, out1) = (tempDir("graft-ttl-in").toString,
+      tempDir("graft-ttl-ck").toString + "/ck",
+      tempDir("graft-ttl-out").toString + "/out")
     // Short TTL + poll-until-readmitted instead of fixed sleeps: each
     // attempt waits out the TTL, fires timeouts with a batch on an
     // unrelated bucket, then offers a FRESH dup id in doc 1's bucket.
@@ -357,9 +357,9 @@ class PipelineSpec extends SparkSpec {
     assert(readmitted,
       s"a duplicate of doc 1 should be re-admitted after its bucket's TTL expired ($attempt attempts)")
     // control: WITHOUT a TTL the same replay suppresses the dup forever
-    val (in2, ck2, out2) = (Files.createTempDirectory("graft-nottl-in").toString,
-      Files.createTempDirectory("graft-nottl-ck").toString + "/ck",
-      Files.createTempDirectory("graft-nottl-out").toString + "/out")
+    val (in2, ck2, out2) = (tempDir("graft-nottl-in").toString,
+      tempDir("graft-nottl-ck").toString + "/ck",
+      tempDir("graft-nottl-out").toString + "/out")
     runPass(in2, ck2, out2, 0L, Seq((1L, payload)))
     Thread.sleep(1000)
     runPass(in2, ck2, out2, 0L, Seq((2L, "a completely different unrelated payload")))
@@ -369,7 +369,7 @@ class PipelineSpec extends SparkSpec {
 
   test("streaming: session windows over a stream match the batch sessionization") {
     import graft.streaming.StreamingPipeline
-    val inDir = Files.createTempDirectory("graft-sess-in").toString
+    val inDir = tempDir("graft-sess-in").toString
     val events = Tables.events(spark, sfDir).select($"user_id", $"ts")
     events.write.mode("overwrite").parquet(inDir)
     val stream = spark.readStream.schema(events.schema).parquet(inDir)
@@ -395,8 +395,8 @@ class PipelineSpec extends SparkSpec {
       .select($"user_id", $"ts", $"event_id".as("purchase_id"))
     val views = ev.filter($"event_type" === "view")
       .select($"user_id", $"ts", $"event_id".as("view_id"))
-    val (pDir, vDir) = (Files.createTempDirectory("graft-ij-p").toString,
-      Files.createTempDirectory("graft-ij-v").toString)
+    val (pDir, vDir) = (tempDir("graft-ij-p").toString,
+      tempDir("graft-ij-v").toString)
     purchases.write.mode("overwrite").parquet(pDir)
     views.write.mode("overwrite").parquet(vDir)
     val pStream = spark.readStream.schema(purchases.schema).parquet(pDir)
@@ -432,7 +432,7 @@ class PipelineSpec extends SparkSpec {
     assert(joined.filter(abs($"s.total_value" - $"b.total_value") > 1e-6).count() == 0)
 
     // and as a real stream: update-mode memory sink over the same rows
-    val inDir = java.nio.file.Files.createTempDirectory("graft-state-in").toString
+    val inDir = tempDir("graft-state-in").toString
     events.select("user_id", "value").write.mode("overwrite").parquet(inDir)
     val src = spark.readStream
       .schema(events.select("user_id", "value").schema).parquet(inDir)
@@ -458,7 +458,7 @@ class PipelineSpec extends SparkSpec {
   test("dump -> restore preserves binary and nested columns as canonical text (pg hex / JSON), never JVM toString") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft-bin-e2e").toString
+    val dir = tempDir("graft-bin-e2e").toString
     val store = new Datastore(s"file://$dir", spark)
     // the JDBC/Mongo source shape: a binary column (bytea/BLOB/BinData)
     // and a Mongo-inferred nested array — the raw row stringifier
@@ -491,7 +491,7 @@ class PipelineSpec extends SparkSpec {
   test("universal ride-along DDL (r19): restored types are SOURCE-exact, not re-inferred") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft-typed-e2e").toString
+    val dir = tempDir("graft-typed-e2e").toString
     val store = new Datastore(s"file://$dir", spark)
     // the two cases inference gets WRONG: a decimal column (inference
     // re-reads the rendered literal as double) and a text column whose
@@ -523,7 +523,7 @@ class PipelineSpec extends SparkSpec {
   test("synthesized ride-along DDL is UNQUALIFIED: the source database name is not a destination namespace (ADVICE r18)") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft-ddl-ns").toString
+    val dir = tempDir("graft-ddl-ns").toString
     val store = new Datastore(s"file://$dir", spark)
     val schema = StructType(Seq(
       StructField("id", LongType, nullable = false),

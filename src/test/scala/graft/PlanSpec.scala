@@ -233,12 +233,12 @@ class PlanSpec extends SparkSpec {
     // over the ≤1001-row bucket table (bounded by construction), not a
     // corpus funnel; the corpus itself must stay cartesian-free and
     // never range-partition (no global sort).
-    val (df, cached) = graft.queries.OpsQueries.pipelineV4Parts(spark, sfDir)
-    try {
+    Pins.scoped {
+      val df = graft.queries.OpsQueries.pipelineCorpusV4(spark, sfDir)
       val p = df.queryExecution.explainString(FormattedMode)
       assert(!p.contains("CartesianProduct"), "capstone v4 plans a cartesian")
       assert(!p.contains("rangepartitioning"), "capstone v4 sorts globally")
-    } finally cached.foreach(_.unpersist())
+    }
   }
 
   test("pipeline capstone v5 composes only scale-safe shapes") {
@@ -248,12 +248,12 @@ class PlanSpec extends SparkSpec {
     // final plan must stay cartesian-free with NO corpus-wide window
     // funnel: the only Window nodes permitted are the per-cluster
     // argmax (partitioned by cluster_id) — never an empty partitionBy.
-    val (df, cached) = graft.queries.OpsQueries.pipelineV5Parts(spark, sfDir)
-    try {
+    Pins.scoped {
+      val df = graft.queries.OpsQueries.pipelineCorpusV5(spark, sfDir)
       val p = df.queryExecution.explainString(FormattedMode)
       assert(!p.contains("CartesianProduct"), "capstone v5 plans a cartesian")
       assert(!p.contains("SinglePartition"), "capstone v5 funnels the corpus through one partition")
-    } finally cached.foreach(_.unpersist())
+    }
   }
 
   test("sequence packing is one shard shuffle + parallel windows, no global sort") {
@@ -273,12 +273,13 @@ class PlanSpec extends SparkSpec {
     // Inspect the LAZY builder — the queries entry materializes the
     // result eagerly to bound the gated cache's lifecycle, so its plan
     // is just the checkpointed scan.
-    val p = graft.queries.OpsQueries
-      .pipelineCorpusV2(spark, sfDir, gatedReuse = "lazy")
-      .queryExecution.explainString(FormattedMode)
-    assert(!p.contains("CartesianProduct"), "capstone v2 plans a cartesian")
-    assert(!p.contains("rangepartitioning"), "capstone v2 sorts globally")
-    assert(!p.contains("SinglePartition"), "capstone v2 funnels through one partition")
+    Pins.scoped {
+      val p = graft.queries.OpsQueries.pipelineCorpusV2(spark, sfDir)
+        .queryExecution.explainString(FormattedMode)
+      assert(!p.contains("CartesianProduct"), "capstone v2 plans a cartesian")
+      assert(!p.contains("rangepartitioning"), "capstone v2 sorts globally")
+      assert(!p.contains("SinglePartition"), "capstone v2 funnels through one partition")
+    }
   }
 
   test("pipeline capstone v3 composes only scale-safe shapes") {
@@ -286,16 +287,16 @@ class PlanSpec extends SparkSpec {
     // equi-join on (cell, bi, bj) and the drop anti-join an equi-join on
     // doc_id, so the composed plan must stay cartesian-free and never
     // funnel through a global sort or single partition. Inspect the
-    // parts builder (the queries entry returns a checkpointed scan) and
-    // release its cached frames afterwards.
-    val (df, cached) = graft.queries.OpsQueries
-      .pipelineV3Parts(spark, sfDir, semanticExactUnion = false)
-    try {
+    // lazy builder (the queries entry returns a checkpointed scan) in a
+    // scope that releases its pins afterwards.
+    Pins.scoped {
+      val df = graft.queries.OpsQueries
+        .pipelineCorpusV3(spark, sfDir, semanticExactUnion = false)
       val p = df.queryExecution.explainString(FormattedMode)
       assert(!p.contains("CartesianProduct"), "capstone v3 plans a cartesian")
       assert(!p.contains("rangepartitioning"), "capstone v3 sorts globally")
       assert(!p.contains("SinglePartition"), "capstone v3 funnels through one partition")
-    } finally cached.foreach(_.unpersist())
+    }
   }
 
   test("incremental near-dup joins stay equi-joins touching the batch only") {
