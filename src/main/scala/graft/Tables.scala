@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Loaders for the driver-provided parquet tables (TESTDATA.md).
@@ -60,18 +63,63 @@ object Tables {
   * same code relies on AQE coalescing instead of a hand-tuned constant.
   */
 object GraftSession {
+
+  /** Entries in Spark's JVM-wide cache of compiled whole-stage classes
+    * (`spark.sql.codegen.cache.maxEntries`, a static conf that
+    * `CodeGenerator` reads once, when it first initializes, so it is set
+    * here, before any session exists).
+    *
+    * Spark's default of 100 is below graft's working set, so a JVM that
+    * ran the same plans again recompiled almost all of them: the LRU
+    * cache had evicted each class before its next use. Distinct classes
+    * one cold JVM compiles with an unbounded cache (Spark 4.1.2, 4 vCPUs):
+    *  - one `corpus run` of an 11-stage curation chain (html_strip …
+    *    dedup_near … chunk) over 4,000 docs: 189;
+    *  - one `dump create --file` with a 10% FK subset, then `dump restore`: 67;
+    *  - one graft.Bench run at sf0.001 (warm-up, then two passes over its
+    *    172 queries): 2,074.
+    * 4096 holds the largest twice over. graft.Bench walks its queries in
+    * the same order every pass, so a cache smaller than its working set
+    * misses on every class: it compiled 7,441 classes at 100 and 2,070
+    * at 4096, and its metaspace at exit went from 205 to 218 MB. A
+    * repeated run of the corpus chain compiled 180 classes at 100 and
+    * 0-8 at 4096.
+    *
+    * Who gains: every JVM that runs the same plans more than once —
+    * `corpus stream` and `--continuous` micro-batches, graft.Bench, the
+    * test JVM and a repeating benchmark loop. A one-shot `corpus run`
+    * compiles each class once either way.
+    */
+  private val CodegenCacheEntries = 4096
+
+  /** This JVM's scratch root, `<java.io.tmpdir>/graft-<pid>`, deleted
+    * with everything under it when the JVM exits. It holds the
+    * managed-table warehouse for bucketed layouts (ops.Bucketing) and the
+    * files the query entries write and read back lazily. Per process,
+    * so concurrent test/bench/verify JVMs never race on the same
+    * directory. The in-memory catalog that names the managed tables dies
+    * with the JVM too, and `Bucketing.writeBucketedOnce` rebuilds them in
+    * a new one; production replaces the warehouse with a real one and a
+    * persistent metastore.
+    */
+  lazy val processDir: Path = {
+    val dir = Paths.get(System.getProperty("java.io.tmpdir"), s"graft-${ProcessHandle.current().pid()}")
+    sys.addShutdownHook(FileUtils.deleteQuietly(dir.toFile))
+    dir
+  }
+
+  /** A new directory under [[processDir]]. */
+  def scratchDir(prefix: String): Path =
+    Files.createTempDirectory(Files.createDirectories(processDir), prefix)
+
   def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]") = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     SparkSession.builder()
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cpus)
-      // managed-table home for bucketed layouts (ops.Bucketing) —
-      // per-process so concurrent test/bench/verify JVMs never race on
-      // the same table directory; production replaces this with a real
-      // warehouse + persistent metastore
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft-warehouse-${ProcessHandle.current().pid()}")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+      .config("spark.sql.warehouse.dir", processDir.resolve("warehouse").toString)
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 
 /** Scan / filter / aggregation queries (SURVEY §2.1, §2.2, §2.5).
   *
@@ -60,8 +60,7 @@ object CoreQueries {
     // (PartitionFilters in the scan, asserted in PlanSpec), so cost
     // tracks the filter's selectivity, not the corpus size.
     "f6_partition_pruned" -> ((s, dir) => {
-      val path = s"${System.getProperty("java.io.tmpdir")}" +
-        s"/graft-part-${ProcessHandle.current().pid()}/events_by_day"
+      val path = GraftSession.processDir.resolve("events_by_day").toString
       Tables.events(s, dir)
         .withColumn("day", to_date(col("ts")))
         .write.mode("overwrite").partitionBy("day").parquet(path)

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.ingest.{Ddl, DumpReader, DumpSink}
 import graft.model.{Statement, StatementKind}
 
@@ -155,7 +155,7 @@ object IngestQueries {
       val stmts = DumpSink.toInsertStatements(
         Tables.nation(s, dir).select(col("n_nationkey"), col("n_name"), col("n_regionkey")),
         "public", "nation")
-      val tmp = java.nio.file.Files.createTempDirectory("graft-dsv2-").toString
+      val tmp = GraftSession.scratchDir("dsv2-").toString
       stmts.coalesce(2).write.mode("overwrite").text(tmp)
       val v2 = s.read.format(classOf[graft.ingest.SqlDumpSource].getName).load(tmp)
         .as[Statement]
@@ -199,11 +199,9 @@ object IngestQueries {
       // fixed shared-tmp name races two concurrent bench processes —
       // one overwrites while the other's lazily-read slices scan — and
       // a pre-existing file owned by another user fails the write);
-      // deleteOnExit because the returned frame reads the file lazily,
-      // so it must outlive this builder.
-      val path = java.nio.file.Files
-        .createTempFile("graft-s3-roundtrip-", ".bin").toFile
-      path.deleteOnExit()
+      // under the JVM's scratch root because the returned frame reads
+      // the file lazily, so it must outlive this builder.
+      val path = GraftSession.scratchDir("s3-roundtrip-").resolve("archive.bin").toFile
       val fos = new java.io.FileOutputStream(path)
       try MongoArchive.writeTables(fos, "graft", Seq("customer" -> src))
       finally fos.close()

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.GraftSession
 import graft.model.DumpMeta
 import graft.store.Catalog
 
@@ -21,7 +22,7 @@ object StoreQueries {
     // than a threshold, list the survivors most-recent-first.
     "a4_catalog_recency" -> ((s, dir) => {
       import s.implicits._
-      val root = java.nio.file.Files.createTempDirectory("graft-catalog-").toString
+      val root = GraftSession.scratchDir("catalog-").toString
       val cat = new Catalog("file://" + root, s.sparkContext.hadoopConfiguration)
       Seq(
         DumpMeta("dump-1", 100L, 1000L, compressed = true, encrypted = false),

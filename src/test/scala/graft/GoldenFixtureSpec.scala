@@ -173,7 +173,7 @@ class GoldenFixtureSpec extends SparkSpec {
       // statement boundaries, the parts re-split to exactly the
       // unchunked statements (COPY blocks never cut mid-block) and the
       // per-table stats are unchanged
-      val dir = java.nio.file.Files.createTempDirectory("graft-golden-chunks-")
+      val dir = tempDir("graft-golden-chunks-")
       val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(nwCopy))
       val parts = graft.ingest.ChunkedSpool.write(i => new java.io.FileOutputStream(
         dir.resolve(f"part-$i%05d.sql").toFile), pg = None, chunkBytes = 16 * 1024)(

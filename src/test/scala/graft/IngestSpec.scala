@@ -29,7 +29,7 @@ class IngestSpec extends SparkSpec {
       |""".stripMargin
 
   test("file ranking: url-encodable names and glob paths keep dump order") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-files-")
+    val dir = tempDir("graft-files-")
     java.nio.file.Files.writeString(
       dir.resolve("a part 1.sql"), "INSERT INTO public.t (a) VALUES (1);")
     java.nio.file.Files.writeString(
@@ -45,7 +45,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("file reading: a gzipped dump inflates, hidden directory members are skipped") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-files-gz-")
+    val dir = tempDir("graft-files-gz-")
     val gz = new java.util.zip.GZIPOutputStream(
       java.nio.file.Files.newOutputStream(dir.resolve("a.sql.gz")))
     try gz.write("INSERT INTO public.t (a) VALUES (1);\n".getBytes("UTF-8")) finally gz.close()
@@ -58,7 +58,7 @@ class IngestSpec extends SparkSpec {
 
   test("datastore read: part order is name order even when sizes differ") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-order-").toString
+    val dir = tempDir("graft-order-").toString
     val store = new graft.store.Datastore("file://" + dir, spark)
     // partition 0 tiny, partition 1 large — binaryFile's size-sorted
     // splits would visit the large part first without the path sort
@@ -476,7 +476,7 @@ class IngestSpec extends SparkSpec {
     val df = Seq((1L, "hello world"), (2L, "quote \" and \\ backslash \t tab"), (3L, ""))
       .toDF("doc_id", "text")
     for (compression <- Seq("none", "gzip")) {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-jsonl-$compression").toString
+      val dir = tempDir(s"graft-jsonl-$compression").toString
       Jsonl.write(df, dir, compression)
       val back = Jsonl.read(spark, dir, schema)
         .select($"doc_id", $"text").as[(Long, String)].collect().toSet
@@ -485,7 +485,7 @@ class IngestSpec extends SparkSpec {
     }
     // a malformed line lands in _corrupt with the good fields of OTHER
     // rows intact — the count-don't-crash ingest posture
-    val dirtyDir = java.nio.file.Files.createTempDirectory("graft-jsonl-dirty").toString
+    val dirtyDir = tempDir("graft-jsonl-dirty").toString
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dirtyDir, "part-0.json"),
       """{"doc_id": 1, "text": "good"}
@@ -557,7 +557,7 @@ class IngestSpec extends SparkSpec {
     // trailing-backslash literal in the HEADERLESS part 1 must scan
     // under pg rules — per-blob detection gave it MySQL rules, which
     // swallow the closing quote and mis-split the statement
-    val dir = java.nio.file.Files.createTempDirectory("graft-dialect-multi-")
+    val dir = tempDir("graft-dialect-multi-")
     java.nio.file.Files.writeString(dir.resolve("part-000.sql"),
       "SET standard_conforming_strings = on;\n" +
         "CREATE TABLE public.t (a text);\n" +
@@ -638,7 +638,7 @@ class IngestSpec extends SparkSpec {
       "INSERT INTO public.t (a) VALUES ('ümlaut 中文 value;\nstill inside');",
       "-- trailing comment")
     val whole = stmts.mkString("\n") + "\n"
-    val dir = java.nio.file.Files.createTempDirectory("graft-chunkspool-")
+    val dir = tempDir("graft-chunkspool-")
     val written = scala.collection.mutable.ArrayBuffer[java.nio.file.Path]()
     val parts = ChunkedSpool.write(i => {
       val p = dir.resolve(f"part-$i%05d.sql"); written += p
@@ -675,7 +675,7 @@ class IngestSpec extends SparkSpec {
     assert(vals == Set("line one;\nline two;\nand 'three'", "x", "trail\\",
       "ümlaut 中文 value;\nstill inside"), vals)
     // an empty stream still spools one (empty) part — listing finds it
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-chunkspool-empty-")
+    val dir2 = tempDir("graft-chunkspool-empty-")
     val p2 = ChunkedSpool.write(i => new java.io.FileOutputStream(
       dir2.resolve(f"part-$i%05d.sql").toFile), pg = Some(true), chunkBytes = 48)(_ => ())
     assert(p2 == 1)
@@ -691,7 +691,7 @@ class IngestSpec extends SparkSpec {
       "INSERT INTO t (a) VALUES ('ends escaped\\'');",
       "INSERT INTO t (a) VALUES ('plain');")
     val myWhole = myStmts.mkString("\n") + "\n"
-    val dir3 = java.nio.file.Files.createTempDirectory("graft-chunkspool-my-")
+    val dir3 = tempDir("graft-chunkspool-my-")
     val myWritten = scala.collection.mutable.ArrayBuffer[java.nio.file.Path]()
     val myParts = ChunkedSpool.write(i => {
       val p = dir3.resolve(f"part-$i%05d.sql"); myWritten += p
@@ -717,7 +717,7 @@ class IngestSpec extends SparkSpec {
     val latin1Bytes = (latin1Stmts.mkString("\n") + "\n")
       .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
     assert(latin1Bytes.exists(b => (b & 0xff) == 0xe9)) // genuinely invalid UTF-8
-    val dir = java.nio.file.Files.createTempDirectory("graft-latin1-spool-")
+    val dir = tempDir("graft-latin1-spool-")
     val written = scala.collection.mutable.ArrayBuffer[java.nio.file.Path]()
     val parts = ChunkedSpool.write(i => {
       val p = dir.resolve(f"part-$i%05d.sql"); written += p
@@ -764,7 +764,7 @@ class IngestSpec extends SparkSpec {
     // with a standalone mysqldump: the pg floor must NOT force pg
     // string rules onto the file that declares itself MySQL, while a
     // genuinely headerless chunk still inherits the floor
-    val dir = java.nio.file.Files.createTempDirectory("graft-dialect-mixed-")
+    val dir = tempDir("graft-dialect-mixed-")
     java.nio.file.Files.writeString(dir.resolve("a-pg.sql"),
       "SET standard_conforming_strings = on;\n" +
         "CREATE TABLE public.t (a text);\n" +
@@ -817,7 +817,7 @@ class IngestSpec extends SparkSpec {
   test("r19 ADVICE: a stream ending exactly on a roll boundary writes no zero-byte trailing part") {
     import graft.ingest.ChunkedSpool
     val stmt = "SELECT 1;\n" // 10 bytes — exactly one chunk below
-    val dir = java.nio.file.Files.createTempDirectory("graft-spool-exact-")
+    val dir = tempDir("graft-spool-exact-")
     val written = scala.collection.mutable.ArrayBuffer[java.nio.file.Path]()
     val parts = ChunkedSpool.write(i => {
       val p = dir.resolve(f"part-$i%05d.sql"); written += p
@@ -830,7 +830,7 @@ class IngestSpec extends SparkSpec {
     assert(written.flatMap(p => java.nio.file.Files.readAllBytes(p).toSeq)
       == (stmt + stmt).getBytes("UTF-8").toSeq)
     // the truly empty stream still spools exactly one (empty) part
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-spool-empty-")
+    val dir2 = tempDir("graft-spool-empty-")
     val p2 = ChunkedSpool.write(i => new java.io.FileOutputStream(
       dir2.resolve(f"part-$i%05d.sql").toFile), pg = Some(true))(_ => ())
     assert(p2 == 1)

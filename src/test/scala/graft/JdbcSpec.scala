@@ -18,7 +18,7 @@ class JdbcSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val url = {
-    val dir = Files.createTempDirectory("graft-derby-").resolve("db")
+    val dir = tempDir("graft-derby-").resolve("db")
     val u = s"jdbc:derby:$dir;create=true"
     Jdbc.execute(u,
       "CREATE TABLE country (id INT PRIMARY KEY, name VARCHAR(40))")
@@ -73,8 +73,8 @@ class JdbcSpec extends SparkSpec {
   }
 
   test("cli: dump create + restore over connection_uri (live JDBC source/destination)") {
-    val store = Files.createTempDirectory("graft-jdbc-store-").toString
-    val destDir = Files.createTempDirectory("graft-jdbc-dest-").resolve("db")
+    val store = tempDir("graft-jdbc-store-").toString
+    val destDir = tempDir("graft-jdbc-dest-").resolve("db")
     val destUrl = s"jdbc:derby:$destDir;create=true"
     Jdbc.execute(destUrl, "CREATE TABLE country (id INT, name VARCHAR(40))")
     val yaml =
@@ -87,7 +87,7 @@ class JdbcSpec extends SparkSpec {
          |destination:
          |  connection_uri: $destUrl
          |""".stripMargin
-    val conf = Files.createTempFile("graft-jdbc-conf-", ".yaml")
+    val conf = tempFile("graft-jdbc-conf-", ".yaml")
     Files.writeString(conf, yaml)
     val printed = collection.mutable.Buffer[String]()
     assert(Cli.run(Seq("-c", conf.toString, "dump", "create", "live-test"),

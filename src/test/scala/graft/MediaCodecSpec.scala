@@ -231,7 +231,7 @@ class MediaCodecSpec extends SparkSpec {
     val mk: () => MediaCodec = () => new NetpbmWavCodec()
     val corpus = docs.filter(pmod($"doc_id", lit(10)) =!= 0)
     val batch = docs.filter(pmod($"doc_id", lit(10)) === 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft-phidx-").toString
+    val dir = tempDir("graft-phidx-").toString
     Multimodal.buildPhashIndex(Multimodal.perceptualHash(
         Multimodal.packPnm(corpus, col("doc_id"), col("text")), codec = mk))
       .write.mode("overwrite").parquet(dir)

@@ -276,7 +276,7 @@ class MongoArchiveSpec extends SparkSpec {
       .select($"id", concat(lit("doc-"), $"id").as("name"), ($"id" % 7).as("grp"))
       .repartition(7)
     val small = Seq((1L, "x"), (2L, "y")).toDF("k", "v")
-    val path = java.nio.file.Files.createTempFile("graft-dist-read", ".bin")
+    val path = tempFile("graft-dist-read", ".bin")
     val fos = new java.io.FileOutputStream(path.toFile)
     try MongoArchive.writeTables(fos, "testdb", Seq("bulk" -> big, "tiny" -> small))
     finally fos.close()
@@ -304,7 +304,7 @@ class MongoArchiveSpec extends SparkSpec {
 
   test("distributed read: corrupted body fails the combined CRC loudly") {
     val df = spark.range(0, 200).select($"id", ($"id" * 3).as("x"))
-    val path = java.nio.file.Files.createTempFile("graft-dist-crc", ".bin")
+    val path = tempFile("graft-dist-crc", ".bin")
     val fos = new java.io.FileOutputStream(path.toFile)
     try MongoArchive.writeTables(fos, "db", Seq("c" -> df))
     finally fos.close()
@@ -335,7 +335,7 @@ class MongoArchiveSpec extends SparkSpec {
         when($"id" >= 200, $"id" * 1.5).as("lateDouble"),
         when($"id" < 100, concatWs($"id")).as("earlyString"))
       .repartition(5)
-    val path = java.nio.file.Files.createTempFile("graft-dist-infer", ".bin")
+    val path = tempFile("graft-dist-infer", ".bin")
     val fos = new java.io.FileOutputStream(path.toFile)
     try MongoArchive.writeTables(fos, "db", Seq("c" -> df))
     finally fos.close()
@@ -373,7 +373,7 @@ class MongoArchiveSpec extends SparkSpec {
     out.write(ns(eof = false, 0)); out.write(Bson.encode(d1)); out.write(sep)
     out.write(ns(eof = false, 0)); out.write(Bson.encode(d2)); out.write(sep)
     out.write(ns(eof = true, crc)); out.write(sep)
-    val path = java.nio.file.Files.createTempFile("graft-dist-interleave", ".bin")
+    val path = tempFile("graft-dist-interleave", ".bin")
     java.nio.file.Files.write(path, out.toByteArray)
     val idx = MongoArchive.scanFile(path.toString, maxSliceBytes = 1)
     // one slice per (tiny) block, ordered across blocks

@@ -48,7 +48,7 @@ class MySqlLiveSpec extends SparkSpec {
       |""".stripMargin
 
   test("mysql live: stubbed mysqldump source -> pipeline -> stubbed mysql restore") {
-    val dir = Files.createTempDirectory("graft-mysqllive-")
+    val dir = tempDir("graft-mysqllive-")
     val dumpFile = dir.resolve("canned.sql")
     Files.writeString(dumpFile, mysqldumpStyleDump)
     val dumpArgsF = dir.resolve("dump.args"); val restArgsF = dir.resolve("rest.args")
@@ -59,8 +59,8 @@ class MySqlLiveSpec extends SparkSpec {
     Files.writeString(restStub, s"#!/bin/sh\necho \"$$@\" > $restArgsF\ncat > $restoredF\n")
     Seq(dumpStub, restStub).foreach(_.toFile.setExecutable(true))
 
-    val store = Files.createTempDirectory("graft-mysqllive-store-").toString
-    val conf = Files.createTempFile("graft-mysqllive-conf-", ".yaml")
+    val store = tempDir("graft-mysqllive-store-").toString
+    val conf = tempFile("graft-mysqllive-conf-", ".yaml")
     Files.writeString(conf,
       s"""source:
          |  connection_uri: mysql://graft:pw@localhost:3307/livedb
@@ -142,13 +142,13 @@ class MySqlLiveSpec extends SparkSpec {
   }
 
   test("mysql live: a failing tool surfaces its stderr loudly and leaves no partial spool") {
-    val dir = Files.createTempDirectory("graft-mysqlfail-")
+    val dir = tempDir("graft-mysqlfail-")
     val badStub = dir.resolve("mysqldump-bad.sh")
     Files.writeString(badStub,
       "#!/bin/sh\necho partial-unmasked-bytes\necho 'Access denied for user' >&2\nexit 1\n")
     badStub.toFile.setExecutable(true)
-    val store = Files.createTempDirectory("graft-mysqlfail-store-").toString
-    val conf = Files.createTempFile("graft-mysqlfail-conf-", ".yaml")
+    val store = tempDir("graft-mysqlfail-store-").toString
+    val conf = tempFile("graft-mysqlfail-conf-", ".yaml")
     Files.writeString(conf,
       s"""source:
          |  connection_uri: mysql://graft@localhost/livedb

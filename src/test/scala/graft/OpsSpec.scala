@@ -366,7 +366,7 @@ class OpsSpec extends SparkSpec {
     val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val q = e.filter(pmod($"vec_id", lit(20)) === 0)
     val idx = Similarity.trainIvfPqIndex(e, "vec_id", "embedding")
-    val dirPath = java.nio.file.Files.createTempDirectory("graft-pqcodes-spec").toString
+    val dirPath = tempDir("graft-pqcodes-spec").toString
     Similarity.encodePqCorpus(e, "vec_id", "embedding", idx)
       .write.mode("overwrite").parquet(dirPath)
     val inline = Similarity.ivfPqTopK(e, q, "vec_id", "embedding", 5, index = Some(idx))
@@ -1296,7 +1296,7 @@ class OpsSpec extends SparkSpec {
   test("persisted LSH index: parquet roundtrip keeps the stamp and the pairs; stripped stamp refused") {
     val corpus = docs.filter(pmod($"doc_id", lit(10)) =!= 0)
     val batch = docs.filter(pmod($"doc_id", lit(10)) === 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft-lsh-index-").toString
+    val dir = tempDir("graft-lsh-index-").toString
     Dedup.buildLshIndex(corpus, "doc_id", $"text").write.mode("overwrite").parquet(dir)
     val reread = spark.read.parquet(dir)
     // the parameter stamp must survive the write/read — this IS the
@@ -1434,7 +1434,7 @@ class OpsSpec extends SparkSpec {
     // explicit hint must hold on its own.
     val corpus = docs.filter(pmod($"doc_id", lit(10)) =!= 0)
     val batch = docs.filter(pmod($"doc_id", lit(10)) === 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft-probe-idx-").toString
+    val dir = tempDir("graft-probe-idx-").toString
     val saved = (spark.conf.get("spark.sql.adaptive.enabled"),
       spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
     try {
@@ -1508,7 +1508,7 @@ class OpsSpec extends SparkSpec {
     val e = Tables.embeddings(spark, "/root/testdata/sf0.01")
     val corpus = e.filter(pmod($"vec_id", lit(10)) =!= 0)
     val batch = e.filter(pmod($"vec_id", lit(10)) === 0)
-    val idxDir = java.nio.file.Files.createTempDirectory("graft-embidx-spec").toString
+    val idxDir = tempDir("graft-embidx-spec").toString
     try {
       graft.ops.Similarity.buildCosineLshIndex(corpus, "vec_id", "embedding")
         .write.mode("overwrite").parquet(idxDir)

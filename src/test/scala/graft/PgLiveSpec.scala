@@ -81,8 +81,8 @@ class PgLiveSpec extends SparkSpec {
           |INSERT INTO orders VALUES (10, 1, 12.50), (11, 2, 99.99);
           |""".stripMargin)
 
-      val store = Files.createTempDirectory("graft-pglive-store-").toString
-      val conf = Files.createTempFile("graft-pglive-conf-", ".yaml")
+      val store = tempDir("graft-pglive-store-").toString
+      val conf = tempFile("graft-pglive-conf-", ".yaml")
       Files.writeString(conf,
         s"""source:
            |  connection_uri: ${uri(c, "livedb")}
@@ -147,8 +147,8 @@ class PgLiveSpec extends SparkSpec {
           |CREATE TABLE orders(id int PRIMARY KEY, user_id int REFERENCES users(id), amount numeric(8,2));
           |INSERT INTO orders SELECT g, ((g - 1) % 20) + 1, g * 1.25 FROM generate_series(1, 60) g;
           |""".stripMargin)
-      val store = Files.createTempDirectory("graft-pgsubset-store-").toString
-      val conf = Files.createTempFile("graft-pgsubset-conf-", ".yaml")
+      val store = tempDir("graft-pgsubset-store-").toString
+      val conf = tempFile("graft-pgsubset-conf-", ".yaml")
       // the reference's canonical subset shape: seed the CHILD (fact)
       // table at a percent; the closure walks child -> parent and pulls
       // exactly the referenced users (subset/src/postgres.rs:104-170)
@@ -206,8 +206,8 @@ class PgLiveSpec extends SparkSpec {
         """CREATE TABLE emp(id int PRIMARY KEY, manager_id int REFERENCES emp(id));
           |INSERT INTO emp SELECT g, NULLIF(g / 2, 0) FROM generate_series(1, 30) g;
           |""".stripMargin)
-      val store = Files.createTempDirectory("graft-pgemp-store-").toString
-      val conf = Files.createTempFile("graft-pgemp-conf-", ".yaml")
+      val store = tempDir("graft-pgemp-store-").toString
+      val conf = tempFile("graft-pgemp-conf-", ".yaml")
       Files.writeString(conf,
         s"""source:
            |  connection_uri: ${uri(c, "empdb")}
@@ -241,9 +241,9 @@ class PgLiveSpec extends SparkSpec {
     val c = cluster.get
     spark.conf.set("spark.graft.pgMode", "tools")
     try {
-      val store = Files.createTempDirectory("graft-pgonly-store-").toString
-      val outDir = Files.createTempDirectory("graft-pgonly-out-").toString
-      val conf = Files.createTempFile("graft-pgonly-conf-", ".yaml")
+      val store = tempDir("graft-pgonly-store-").toString
+      val outDir = tempDir("graft-pgonly-out-").toString
+      val conf = tempFile("graft-pgonly-conf-", ".yaml")
       Files.writeString(conf,
         s"""source:
            |  connection_uri: ${uri(c, "livedb")}
@@ -273,7 +273,7 @@ class PgLiveSpec extends SparkSpec {
     val c = cluster.get
     spark.conf.set("spark.graft.pgMode", "tools")
     try {
-      val conf = Files.createTempFile("graft-pglive-schema-", ".yaml")
+      val conf = tempFile("graft-pglive-schema-", ".yaml")
       Files.writeString(conf,
         s"""source:
            |  connection_uri: ${uri(c, "livedb")}
@@ -298,8 +298,8 @@ class PgLiveSpec extends SparkSpec {
     // reference's front-page usage (`pg_dump … | replibyte dump create`,
     // source/postgres_stdin.rs): stdin spools once to the datastore FS,
     // then the identical distributed dump-file pipeline runs
-    val store = Files.createTempDirectory("graft-pgpipe-store-").toString
-    val conf = Files.createTempFile("graft-pgpipe-conf-", ".yaml")
+    val store = tempDir("graft-pgpipe-store-").toString
+    val conf = tempFile("graft-pgpipe-conf-", ".yaml")
     Files.writeString(conf,
       s"""source:
          |  tables_dir: /nonexistent-unused
@@ -307,7 +307,7 @@ class PgLiveSpec extends SparkSpec {
          |  local_disk:
          |    dir: $store
          |destination:
-         |  output_dir: ${Files.createTempDirectory("graft-pgpipe-out-")}
+         |  output_dir: ${tempDir("graft-pgpipe-out-")}
          |""".stripMargin)
     val pb = new java.lang.ProcessBuilder(("pg_dump" +: ("--column-inserts" +: "--no-owner" +:
       Seq("-h", c.sock, "-U", "graft", "livedb"))): _*)
@@ -330,14 +330,14 @@ class PgLiveSpec extends SparkSpec {
     // no --column-inserts: real pg_dump emits COPY … FROM stdin blocks
     // (tab-separated, \N nulls, backslash escapes) — the S5 COPY parser
     // against the actual tool's output, not our own re-synthesis
-    val dump = Files.createTempFile("graft-pgcopy-", ".sql")
+    val dump = tempFile("graft-pgcopy-", ".sql")
     val pb = new java.lang.ProcessBuilder("pg_dump", "--no-owner",
       "-h", c.sock, "-U", "graft", "-f", dump.toString, "livedb")
     assert(pb.start().waitFor() == 0)
     assert(Files.readString(dump).contains("FROM stdin"), "expected COPY-format dump")
-    val store = Files.createTempDirectory("graft-pgcopy-store-").toString
-    val outDir = Files.createTempDirectory("graft-pgcopy-out-").toString
-    val conf = Files.createTempFile("graft-pgcopy-conf-", ".yaml")
+    val store = tempDir("graft-pgcopy-store-").toString
+    val outDir = tempDir("graft-pgcopy-out-").toString
+    val conf = tempFile("graft-pgcopy-conf-", ".yaml")
     Files.writeString(conf,
       s"""source:
          |  tables_dir: /nonexistent-unused
@@ -383,8 +383,8 @@ class PgLiveSpec extends SparkSpec {
           | (3, '\x00ff', '1970-01-01 00:00:00', NULL, 'NaN', 0.0001, 0, NULL, E'back\\slash', '-Infinity 0x1p3',
           |  NULL, '{"quote": "it''s"}', NULL)
           |""".stripMargin)
-      val store = Files.createTempDirectory("graft-pgexotic-store-").toString
-      val conf = Files.createTempFile("graft-pgexotic-conf-", ".yaml")
+      val store = tempDir("graft-pgexotic-store-").toString
+      val conf = tempFile("graft-pgexotic-conf-", ".yaml")
       Files.writeString(conf,
         s"""source:
            |  connection_uri: ${uri(c, "exoticdb")}
@@ -431,13 +431,13 @@ class PgLiveSpec extends SparkSpec {
       c.psql("postgres", "CREATE DATABASE exoticcopyrest")
       // COPY text format: bare Infinity/NaN, backslash-escaped \\x bytea,
       // \t escapes inside text — the tool's DEFAULT layout
-      val dump = Files.createTempFile("graft-pgcopyx-", ".sql")
+      val dump = tempFile("graft-pgcopyx-", ".sql")
       val pb = new java.lang.ProcessBuilder("pg_dump", "--no-owner",
         "-h", c.sock, "-U", "graft", "-f", dump.toString, "exoticdb")
       assert(pb.start().waitFor() == 0)
       assert(Files.readString(dump).contains("FROM stdin"))
-      val store = Files.createTempDirectory("graft-pgcopyx-store-").toString
-      val conf = Files.createTempFile("graft-pgcopyx-conf-", ".yaml")
+      val store = tempDir("graft-pgcopyx-store-").toString
+      val conf = tempFile("graft-pgcopyx-conf-", ".yaml")
       Files.writeString(conf,
         s"""source:
            |  tables_dir: /nonexistent-unused
@@ -499,8 +499,8 @@ class PgLiveSpec extends SparkSpec {
           |  (8, NULL),
           |  (9, E'x\\t\t\\n\n\\');
           |""".stripMargin)
-      val store = Files.createTempDirectory("graft-pgcopyland-store-").toString
-      val conf = Files.createTempFile("graft-pgcopyland-conf-", ".yaml")
+      val store = tempDir("graft-pgcopyland-store-").toString
+      val conf = tempFile("graft-pgcopyland-conf-", ".yaml")
       Files.writeString(conf,
         s"""source:
            |  connection_uri: ${uri(c, "copylanddb")}
@@ -596,7 +596,7 @@ class PgLiveSpec extends SparkSpec {
     // the source bound: pg_dump itself, streamed to the chunked spool
     // (this is the single stream the reference ALSO pays — its one CPU
     // then parses it serially; ours fans the parts out to executors)
-    val spoolDir = Files.createTempDirectory("graft-dumpbench-spool-")
+    val spoolDir = tempDir("graft-dumpbench-spool-")
     val conn = graft.ingest.PgLive.Conn(c.sock, 5432, "dumpbench", Some("graft"), None)
     val t0 = System.nanoTime()
     val parts = graft.ingest.ChunkedSpool.write(i => {
@@ -613,8 +613,8 @@ class PgLiveSpec extends SparkSpec {
     spark.conf.set("spark.graft.pgMode", "tools")
     spark.conf.set("spark.graft.spoolChunkMb", "8")
     try {
-      val store = Files.createTempDirectory("graft-dumpbench-store-").toString
-      val conf = Files.createTempFile("graft-dumpbench-conf-", ".yaml")
+      val store = tempDir("graft-dumpbench-store-").toString
+      val conf = tempFile("graft-dumpbench-conf-", ".yaml")
       Files.writeString(conf,
         s"""source:
            |  connection_uri: ${uri(c, "dumpbench")}
@@ -736,8 +736,8 @@ class PgLiveSpec extends SparkSpec {
         """CREATE TABLE "Users"("Id" int PRIMARY KEY, "order" text, "select" int);
           |INSERT INTO "Users" VALUES (1, 'first order', 10), (2, 'it''s', 20);
           |""".stripMargin)
-      val store = Files.createTempDirectory("graft-pgcamel-store-").toString
-      val conf = Files.createTempFile("graft-pgcamel-conf-", ".yaml")
+      val store = tempDir("graft-pgcamel-store-").toString
+      val conf = tempFile("graft-pgcamel-conf-", ".yaml")
       Files.writeString(conf,
         s"""source:
            |  connection_uri: ${uri(c, "camedb")}
@@ -772,9 +772,9 @@ class PgLiveSpec extends SparkSpec {
         """CREATE TABLE items(id int, name text);
           |INSERT INTO items VALUES (1, 'one'), (2, 'two'), (3, 'three');
           |""".stripMargin)
-      val store = Files.createTempDirectory("graft-pgappend-store-").toString
+      val store = tempDir("graft-pgappend-store-").toString
       def conf(wipe: Boolean): String = {
-        val f = Files.createTempFile("graft-pgappend-conf-", ".yaml")
+        val f = tempFile("graft-pgappend-conf-", ".yaml")
         Files.writeString(f,
           s"""source:
              |  connection_uri: ${uri(c, "appenddb")}
@@ -813,8 +813,8 @@ class PgLiveSpec extends SparkSpec {
         """CREATE TABLE vault(id int, secret text);
           |INSERT INTO vault VALUES (1, 'plaintext-canary-alpha'), (2, 'plaintext-canary-beta');
           |""".stripMargin)
-      val store = Files.createTempDirectory("graft-pgenc-store-")
-      val conf = Files.createTempFile("graft-pgenc-conf-", ".yaml")
+      val store = tempDir("graft-pgenc-store-")
+      val conf = tempFile("graft-pgenc-conf-", ".yaml")
       Files.writeString(conf,
         s"""source:
            |  connection_uri: ${uri(c, "encdb")}
@@ -868,8 +868,8 @@ class PgLiveSpec extends SparkSpec {
       c.psql("postgres", "CREATE DATABASE pgfaildb")
       c.psql("pgfaildb",
         """CREATE TABLE t(id int); INSERT INTO t VALUES (1);""")
-      val store = Files.createTempDirectory("graft-pgfail-store-").toString
-      val conf = Files.createTempFile("graft-pgfail-conf-", ".yaml")
+      val store = tempDir("graft-pgfail-store-").toString
+      val conf = tempFile("graft-pgfail-conf-", ".yaml")
       Files.writeString(conf,
         s"""source:
            |  connection_uri: ${uri(c, "pgfaildb")}
@@ -908,11 +908,11 @@ class PgLiveSpec extends SparkSpec {
         spark.sparkContext.parallelize(Seq(
           Row(1L, Array[Byte](0x41, 0x00, 0xff.toByte)),
           Row(2L, null)), 2), schema)
-      val storeDir = Files.createTempDirectory("graft-pgbin-store-").toString
+      val storeDir = tempDir("graft-pgbin-store-").toString
       val store = new graft.store.Datastore(s"file://$storeDir", spark)
       graft.pipeline.Pipeline.dump(spark, (_: String) => df, store, "bin-live",
         graft.pipeline.Pipeline.DumpJobConfig(tables = Seq("blobby")))
-      val conf = Files.createTempFile("graft-pgbin-conf-", ".yaml")
+      val conf = tempFile("graft-pgbin-conf-", ".yaml")
       Files.writeString(conf,
         s"""source:
            |  tables_dir: /unused
@@ -949,8 +949,8 @@ class PgLiveSpec extends SparkSpec {
            |INSERT INTO $t SELECT g, '$t-row-'||g, (g % 83) * 1.75
            |  FROM generate_series(1, $nPer) g;""".stripMargin)
     }
-    val store = Files.createTempDirectory("graft-parrest-store-").toString
-    val conf = Files.createTempFile("graft-parrest-conf-", ".yaml")
+    val store = tempDir("graft-parrest-store-").toString
+    val conf = tempFile("graft-parrest-conf-", ".yaml")
     def confText(dest: String) =
       s"""source:
          |  connection_uri: ${uri(c, "parsrc")}

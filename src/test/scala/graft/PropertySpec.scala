@@ -247,7 +247,7 @@ class PropertySpec extends SparkSpec {
     samples(Gen.zip(Gen.oneOf(true, false), Gen.listOfN(8, boundaryString),
         Gen.chooseNum(1, 7)), 12)
       .zipWithIndex.foreach { case ((pg, vals, cut), i) =>
-        val dir = java.nio.file.Files.createTempDirectory(s"graft-prop-chunks-$i-")
+        val dir = tempDir(s"graft-prop-chunks-$i-")
         val header =
           if (pg) "SET standard_conforming_strings = on;\n"
           else "-- MySQL dump 10.13  Distrib 8.0.28\n"

@@ -57,8 +57,8 @@ class QualityModelSpec extends SparkSpec {
   }
 
   test("cli: corpus run applies quality_filter_trained from config") {
-    val outDir = Files.createTempDirectory("graft-qft-").toString + "/out"
-    val conf = Files.createTempDirectory("graft-qft-conf-").toString + "/c.yaml"
+    val outDir = tempDir("graft-qft-").toString + "/out"
+    val conf = tempDir("graft-qft-conf-").toString + "/c.yaml"
     Files.write(java.nio.file.Paths.get(conf),
       s"""input_dir: $sfDir/documents.parquet
          |output_dir: $outDir

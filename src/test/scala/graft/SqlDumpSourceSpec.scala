@@ -8,7 +8,7 @@ class SqlDumpSourceSpec extends SparkSpec {
   import spark.implicits._
 
   private def writeDumpDir(): String = {
-    val dir = Files.createTempDirectory("graft-sqldump-")
+    val dir = tempDir("graft-sqldump-")
     Files.writeString(dir.resolve("part-000.sql"),
       """CREATE TABLE public.t (a bigint, b text);
         |INSERT INTO public.t (a, b) VALUES (1, 'one; still one');

@@ -63,7 +63,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("catalog: register/list/latest/keepLast/olderThan") {
-    val dir = Files.createTempDirectory("graft-catalog").toString
+    val dir = tempDir("graft-catalog").toString
     val cat = new Catalog(s"file://$dir", spark.sparkContext.hadoopConfiguration)
     cat.register(DumpMeta("dump-1", 100, 1000L, compressed = true, encrypted = false))
     cat.register(DumpMeta("dump-2", 200, 2000L, compressed = true, encrypted = false))
@@ -81,7 +81,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("datastore: chunked compressed+encrypted write/read roundtrip") {
-    val dir = Files.createTempDirectory("graft-store").toString
+    val dir = tempDir("graft-store").toString
     val store = new Datastore(s"file://$dir", spark)
     val statements = (1 to 500).map(i =>
       s"INSERT INTO public.t (id, s) VALUES ($i, 'multi\nline ; text $i');").toDS()
@@ -99,7 +99,7 @@ class StoreSpec extends SparkSpec {
     intercept[Exception](store.read("dump-a", Some("wrong")).collect())
   }
   test("blob dumps: chunked write/read round-trips bytes exactly (compressed + encrypted), catalog carries the format") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-blob-").toString
+    val dir = tempDir("graft-blob-").toString
     val ds = new Datastore(dir, spark)
     // 2.5 chunks of deterministic pseudo-random bytes
     val rnd = new java.util.Random(42)
@@ -133,7 +133,7 @@ class StoreSpec extends SparkSpec {
       "00000-1000.dump", "00001-00000.dump", "junk.dump"))
 
     // e2e: a blob spanning >1000 chunks round-trips byte-exactly
-    val dir = java.nio.file.Files.createTempDirectory("graft-blob-many-").toString
+    val dir = tempDir("graft-blob-many-").toString
     val ds = new Datastore(dir, spark)
     val rnd = new java.util.Random(7)
     val payload = new Array[Byte](1100 * 8)
@@ -149,7 +149,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("catalog migration: a pre-r18 metadata.json without the format field reads as a statement dump") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-oldcat-").toString
+    val dir = tempDir("graft-oldcat-").toString
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/metadata.json"),
       """{"v":"0.1.0","dumps":[{"directoryName":"old-dump","size":10,
         |"createdAt":1700000000000,"compressed":true,"encrypted":false}]}""".stripMargin)
@@ -164,7 +164,7 @@ class StoreSpec extends SparkSpec {
 
   test("statement-dump read order: numeric under legacy narrow pads, immune to escapedStringLiterals (ADVICE r19)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-store-ord").toString
+    val dir = tempDir("graft-store-ord").toString
     val store = new Datastore(s"file://$dir", spark)
     // one partition, one statement per chunk → parts 0..29 in dump order
     val statements = (0 until 30).map(i =>

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
@@ -34,7 +33,7 @@ class TablesSpec extends SparkSpec {
   }
 
   test("events.ts normalizes long-nanos and timestamp[us] fixtures identically") {
-    val base = Files.createTempDirectory("graft-events-dtype").toString
+    val base = tempDir("graft-events-dtype").toString
     val nanosDir = s"$base/nanos"
     val microsDir = s"$base/micros"
     // long column stands in for TIMESTAMP(NANOS): under nanosAsLong the

@@ -16,7 +16,7 @@ class WarcSpec extends SparkSpec {
   import spark.implicits._
 
   private def writeCrawl(nDocs: Int, parts: Int): String = {
-    val dir = Files.createTempDirectory("graft-warc-").toString
+    val dir = tempDir("graft-warc-").toString
     val df = spark.range(nDocs).select(
       concat(lit("http://crawl.example/doc/"), col("id").cast("string")).as("url"),
       lit("2026-01-01T00:00:00Z").as("date"),
@@ -74,7 +74,7 @@ class WarcSpec extends SparkSpec {
       "X-Long-Header: first\r\n\tfolded tail\r\n" +
       "WARC-Record-ID: <urn:test:1>\r\n" +
       s"Content-Length: ${block.length}\r\n\r\n"
-    val dir = Files.createTempDirectory("graft-warc-plain-").toString
+    val dir = tempDir("graft-warc-plain-").toString
     val out = new java.io.FileOutputStream(s"$dir/a.warc")
     out.write(rec.getBytes("ISO-8859-1")); out.write(block)
     out.write("\r\n\r\n".getBytes("ISO-8859-1")); out.close()
@@ -88,7 +88,7 @@ class WarcSpec extends SparkSpec {
   }
 
   test("warc: truncated block and bad version line fail with a parse message") {
-    val dir = Files.createTempDirectory("graft-warc-bad-").toString
+    val dir = tempDir("graft-warc-bad-").toString
     Files.write(java.nio.file.Paths.get(s"$dir/t.warc"),
       ("WARC/1.0\r\nWARC-Type: response\r\nContent-Length: 9999\r\n\r\nshort"
         ).getBytes("ISO-8859-1"))
@@ -96,7 +96,7 @@ class WarcSpec extends SparkSpec {
       Warc.read(spark, dir).count()
     }
     assert(e.getMessage.contains("truncated") || e.getCause != null)
-    val dir2 = Files.createTempDirectory("graft-warc-bad2-").toString
+    val dir2 = tempDir("graft-warc-bad2-").toString
     Files.write(java.nio.file.Paths.get(s"$dir2/t.warc"),
       "NOPE/1.0\r\n\r\n".getBytes("ISO-8859-1"))
     val e2 = intercept[org.apache.spark.SparkException] {
@@ -128,8 +128,8 @@ class WarcSpec extends SparkSpec {
 
   test("cli: corpus run ingests a .warc.gz crawl via input_format: warc") {
     val crawl = writeCrawl(30, 2)
-    val outDir = Files.createTempDirectory("graft-warc-corpus-").toString + "/out"
-    val conf = Files.createTempDirectory("graft-warc-conf-").toString + "/c.yaml"
+    val outDir = tempDir("graft-warc-corpus-").toString + "/out"
+    val conf = tempDir("graft-warc-conf-").toString + "/c.yaml"
     Files.write(java.nio.file.Paths.get(conf),
       s"""input_dir: $crawl
          |input_format: warc
