@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import graft.config.GraftConfig
+import graft.ingest.{DumpReader, Spool}
 import graft.pipeline.Pipeline
 import graft.store.Datastore
 
@@ -10,9 +11,12 @@ import graft.store.Datastore
   * 20-134`, dispatch `main.rs:167-199`):
   *
   *   graft -c conf.yaml dump create [name]
+  *   graft -c conf.yaml dump create [name] --file <path>
+  *   graft -c conf.yaml dump create [name] -i
   *   graft -c conf.yaml dump list
   *   graft -c conf.yaml dump delete <name> | --older-than <days> | --keep-last <n>
   *   graft -c conf.yaml dump restore <name|latest>
+  *   graft -c conf.yaml dump restore ephemeral <name|latest>
   *   graft -c conf.yaml source schema
   *   graft -c conf.yaml transformer list
   *
@@ -33,11 +37,12 @@ object Cli {
 
   /** Testable entry: returns an exit code, prints through `out`.
     * `stdin` backs `dump create -i` and is injectable for tests. The
-    * command runs in one [[Pins]] scope: every pin it takes is released
-    * when it returns.
+    * command runs in one [[Pins]] scope and one [[Spool]] scope: every
+    * pin it takes is released, and every spool it writes deleted, when
+    * it returns.
     */
   def run(args: Seq[String], spark: SparkSession, out: String => Unit,
-          stdin: java.io.InputStream = System.in): Int = Pins.scoped {
+          stdin: java.io.InputStream = System.in): Int = Pins.scoped { Spool.scoped {
     val (confPath, rest) = args match {
       case Seq("-c", p, tail @ _*) => (Some(p), tail)
       case other => (None, other)
@@ -142,191 +147,85 @@ object Cli {
         0
 
       case Seq("source", "schema") =>
-        // reference `source schema` (`commands/source.rs:10-56`) — live
-        // JDBC source when connection_uri is set, parquet dir otherwise
-        val c = config
-        c.sourceMongo match {
-          // live Mongo leg: mongodump the archive and print the
-          // INFERRED schemas — the reference's read_and_parse_schema
-          // over the same stream (source/mongodb.rs:28-63). The tool's
-          // stdout spools to a file (O(copy buffer) on the driver) and
-          // executors decode/infer distributedly (r16).
-          case Some((uri, db)) =>
-            val spool = mongoSpool(uri, db, spark, c.datastore.map(_.rootUri))
-            // schemas are inferred EAGERLY inside readDistributed, so
-            // once printed the spool has been fully consumed — delete
-            // it now (it holds unmasked data)
-            try graft.ingest.MongoArchive.readDistributed(spark, spool).toSeq.sortBy(_._1)
-              .foreach { case (prefix, df) =>
-                out(s"table: $prefix")
-                out(df.schema.treeString)
-              }
-            finally deleteSpool(spool, spark)
-            return 0
-          case None => ()
-        }
-        c.sourceJdbc match {
-          // live-SQL TOOL leg: pg_dump/mysqldump spools once, the
-          // DDL-typed frames come from the same parser the dump-file
-          // path uses (the reference's read_and_parse_schema over the
-          // identical stream, source/postgres.rs:85-110 /
-          // source/mysql.rs:60-98)
-          case Some(conn) if sqlToolsMode(spark, conn.url) =>
-            val spool = chunkedSqlSpool(spark, c.datastore.map(_.rootUri),
-              pgToolsMode(spark, conn.url))(o =>
-              if (pgToolsMode(spark, conn.url))
-                graft.ingest.PgLive.dumpToStream(pgConn(conn), o,
-                  cmd = toolCmd(spark, "pg_dump"))
-              else
-                graft.ingest.MySqlLive.dumpToStream(mysqlConn(conn), o,
-                  cmd = toolCmd(spark, "mysqldump")))
-            try graft.ingest.DumpReader.withParsed(
-              graft.ingest.DumpReader.statements(spark, spool)) { dump =>
-              dump.listing.ddl.keys.toSeq.sorted.foreach { t =>
-                out(s"table: ${c.sourceConf.db}.$t")
-                out(dump.table(c.sourceConf.db, t).schema.treeString)
-              }
-            } finally deleteSpool(spool, spark)
-          case Some(conn) =>
-            val schema = c.sourceConf.jdbcSchema
-            val ts = c.sourceConf.tables.getOrElse(
-              graft.ingest.Jdbc.tableNames(conn.url, schema, creds = conn.sparkOptions))
-            ts.foreach { t =>
-              out(s"table: ${c.sourceConf.db}.$t")
-              out(graft.ingest.Jdbc.readTable(spark, conn.url,
-                schema.fold(t)(sc => s"$sc.$t"), options = conn.sparkOptions)
-                .schema.treeString)
-            }
-          case None =>
-            tableNames(c, spark).foreach { t =>
-              out(s"table: ${c.sourceConf.db}.$t")
-              out(Tables.load(spark, c.tablesDir, t).schema.treeString)
-            }
+        // reference `source schema` (`commands/source.rs:10-56`): each
+        // table of the config's source and its schema — the CREATE
+        // TABLEs of a pg_dump/mysqldump stream, the schemas inferred
+        // from a mongodump archive (the reference's read_and_parse_schema
+        // over the same stream, source/postgres.rs:85-110,
+        // source/mysql.rs:60-98, source/mongodb.rs:28-63)
+        withSource(config, spark, forDump = false) { src =>
+          src.described.foreach { t =>
+            out(s"table: ${src.database}.$t")
+            out(src.load(t).schema.treeString)
+          }
         }
         0
 
-      // reference `dump create -i` (`cli.rs:100-114` dispatch
-      // `commands/dump.rs:171-206`): the headline `pg_dump … | graft`
-      // flow. stdin is an inherently sequential byte stream (one
-      // process, one pipe — same bound the reference has), so it is
-      // spooled to a local temp file once, then everything downstream is
-      // the identical distributed --file path.
-      case Seq("dump", "create", rest1 @ _*) if rest1.contains("-i") =>
-        val name = rest1.toList match {
-          case List(n, "-i") => n
-          case List("-i", n) => n
-          case List("-i") => s"dump-${System.currentTimeMillis()}"
-          case other =>
+      // reference `dump create` (`cli.rs:100-114`, `commands/dump.rs:
+      // 171-232`): read the source, transform, subset, store. `--file
+      // <path>` reads a SQL dump file and `-i` a dump piped on stdin
+      // (the headline `pg_dump … | graft` flow) instead of the config's
+      // source. A pipe is one sequential byte stream, the reference's
+      // bound too, so stdin spools once and then parses like a file.
+      case Seq("dump", "create", args @ _*) =>
+        def stamp = s"dump-${System.currentTimeMillis()}"
+        // any other form with -i or --file is malformed and must not
+        // fall through to the config's source, which would silently
+        // ignore the pipe or the file
+        val (name, file, piped) = args.toList match {
+          case List(n, "-i") => (n, None, true)
+          case List("-i", n) => (n, None, true)
+          case List("-i") => (stamp, None, true)
+          case other if other.contains("-i") =>
             out(s"malformed dump create -i arguments: ${other.mkString(" ")}")
             return 1
-        }
-        val c = config
-        val spooled = spoolStdin(stdin, spark, datastoreUri(c))
-        val fs = spooled.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        try dumpCreateFromFile(name, spooled.toString, c, spark, out)
-        finally fs.delete(spooled, true)
-
-      // reference `dump create -f <dump file>` (`cli.rs:100-114`): the
-      // primary flow — ingest a SQL dump file, transform, store. The
-      // loader is the dump parser itself (DDL-typed frames), everything
-      // downstream is the same pipeline the parquet path uses.
-      case Seq("dump", "create", rest1 @ _*) if rest1.contains("--file") =>
-        // accepted forms: `dump create <name> --file <path>` and
-        // `dump create --file <path>` (auto-named) — anything else with
-        // --file is malformed and must not fall through to the parquet
-        // branch (which would silently ignore the file)
-        val (name, dumpPath) = rest1.toList match {
-          case List(n, "--file", p) => (n, p)
-          case List("--file", p) => (s"dump-${System.currentTimeMillis()}", p)
-          case other =>
+          case List(n, "--file", p) => (n, Some(p), false)
+          case List("--file", p) => (stamp, Some(p), false)
+          case other if other.contains("--file") =>
             out(s"malformed dump create --file arguments: ${other.mkString(" ")}")
             return 1
+          case other => (other.headOption.getOrElse(stamp), None, false)
         }
-        dumpCreateFromFile(name, dumpPath, config, spark, out)
-
-      case Seq("dump", "create", nameArgs @ _*) =>
         val c = config
-        val name = nameArgs.headOption.getOrElse(s"dump-${System.currentTimeMillis()}")
         val store = new Datastore(datastoreUri(c), spark)
-        // live-database source (S1/S2) when source.connection_uri is
-        // set — partitioned JDBC range scans; mongodb:// URIs spawn
-        // mongodump (S3 live leg, reference source/mongodb.rs:66-101);
-        // parquet tables_dir otherwise
-        // the Mongo spool (if any) is read LAZILY by the frames all the
-        // way through Pipeline.dump, so its eager delete sits in the
-        // finally AFTER the dump write completes
-        var spoolPath: Option[String] = None
-        val (tables, fkEdges, load) = c.sourceMongo match {
-          case Some((uri, db)) =>
-            // spooled to a file and decoded on the executors (r16) —
-            // the driver never holds a collection; inferred schemas,
-            // "db.coll" prefixes → bare table names
-            val spool = mongoSpool(uri, db, spark, Some(datastoreUri(c)))
-            spoolPath = Some(spool)
-            val frames = graft.ingest.MongoArchive
-              .readDistributed(spark, spool)
-              .map { case (prefix, df) => prefix.split("\\.", 2).last -> df }
-            (frames.keys.toSeq.sorted, Nil,
-              (t: String) => frames.getOrElse(t,
-                throw new IllegalArgumentException(s"collection not in archive: $t")))
-          case None => c.sourceJdbc match {
-          // live-SQL TOOL leg (reference source/postgres.rs:121-151 /
-          // source/mysql.rs:100-163): pg_dump --column-inserts or
-          // mysqldump --skip-extended-insert --complete-insert spools
-          // once (O(copy buffer) driver memory), then the run IS the
-          // distributed --file pipeline — parse → filters/transforms/
-          // subset → store. skip/only push down to the tool like the
-          // reference's --table=/--ignore-table= args (the downstream
-          // filters still enforce them exactly).
-          case Some(conn) if sqlToolsMode(spark, conn.url) =>
-            val spool = chunkedSqlSpool(spark, Some(datastoreUri(c)),
-              pgToolsMode(spark, conn.url))(o =>
-              if (pgToolsMode(spark, conn.url))
-                graft.ingest.PgLive.dumpToStream(pgConn(conn), o,
-                  // schema-qualified patterns, exactly the reference's
-                  // --table={db}.{table} (source/postgres.rs:133-137);
-                  // the db part of a TableRef IS the pg schema
-                  onlyTables = c.filters.onlyTables.map(r => s"${r.database}.${r.table}"),
-                  cmd = toolCmd(spark, "pg_dump"))
-              else
-                graft.ingest.MySqlLive.dumpToStream(mysqlConn(conn), o,
-                  skipTables = c.filters.skipTables.map(_.table),
-                  onlyTables = c.filters.onlyTables.map(_.table),
-                  cmd = toolCmd(spark, "mysqldump")))
-            try return dumpCreateFromFile(name, spool, c, spark, out)
-            finally deleteSpool(spool, spark)
-          case Some(conn) =>
-            // scope listing + reads to source.schema — a multi-schema
-            // database would otherwise enumerate foreign-schema tables
-            // and read whichever one search_path resolves
-            val schema = c.sourceConf.jdbcSchema
-            val ts = c.sourceConf.tables.getOrElse(
-              graft.ingest.Jdbc.tableNames(conn.url, schema, creds = conn.sparkOptions))
-            (ts,
-              graft.ingest.Jdbc.foreignKeys(conn.url, schema, creds = conn.sparkOptions),
-              (t: String) => graft.ingest.Jdbc.readTable(
-                spark, conn.url, schema.fold(t)(s => s"$s.$t"), options = conn.sparkOptions))
-          case None =>
-            (tableNames(c, spark), Nil,
-              (t: String) => Tables.load(spark, c.tablesDir, t))
-        }}
-        // filters/bindings/subset key on (database, table): for a Mongo
-        // source the namespace is the URI's database, NOT the SQL-side
-        // default ("public") — GraftConfig.defaultDb applies the same
-        // namespace to BARE skip/only/transformer/subset entries, so an
-        // unqualified `skip_tables: [users]` excludes livedb.users
-        // instead of silently matching nothing (ADVICE r15)
-        val job = Pipeline.DumpJobConfig(
-          tables = tables,
-          database = c.defaultDb,
-          filters = c.filters,
-          bindings = c.bindings,
-          subset = c.subsetConfig,
-          fkEdges = fkEdges,
-          compressed = c.datastore.flatMap(_.compression).getOrElse(true),
-          encryptionKey = c.encryptionKey)
-        try {
-          if (c.sourceMongo.isDefined) {
+        val dumpFile = if (!piped) file else Some(Spool.chunked(spark, c.datastore.map(_.rootUri),
+          "stdin", pg = None, spoolChunkBytes(spark))(o => stdin.transferTo(o)))
+        withSource(c, spark, forDump = true, dumpFile) { src =>
+          src.parsed.foreach { case (path, listing) =>
+            // the loaders filter on the config database — a dump whose
+            // statements live in another schema would otherwise produce
+            // empty tables that LOOK like a successful dump
+            val foreignDbs = (listing.insertRefs ++ listing.copyRefs).map(_._1)
+              .filter(_ != src.database)
+            if (foreignDbs.nonEmpty) {
+              out(s"dump file uses database(s) ${foreignDbs.mkString(", ")} but config " +
+                s"source.database is '${src.database}' — set source.database to match")
+              return 1
+            }
+            if (src.tables.isEmpty) {
+              out(s"no INSERT or COPY data found in $path — nothing to dump")
+              return 1
+            }
+          }
+          // filters/bindings/subset key on (database, table): for a Mongo
+          // source the namespace is the URI's database, NOT the SQL-side
+          // default ("public") — GraftConfig.defaultDb applies the same
+          // namespace to BARE skip/only/transformer/subset entries, so an
+          // unqualified `skip_tables: [users]` excludes livedb.users
+          // instead of silently matching nothing (ADVICE r15)
+          val job = Pipeline.DumpJobConfig(
+            tables = src.tables,
+            database = src.database,
+            filters = c.filters,
+            bindings = c.bindings,
+            subset = c.subsetConfig,
+            fkEdges = src.fkEdges,
+            compressed = c.datastore.flatMap(_.compression).getOrElse(true),
+            encryptionKey = c.encryptionKey,
+            // a dump's own CREATE TABLE statements travel with the data
+            // so a live restore recreates the source's true column types
+            ddl = src.ddl)
+          if (src.archive) {
             // Mongo sources store the TRANSFORMED ARCHIVE itself (the
             // reference's flow, tasks/full_dump.rs + source/mongodb.rs)
             // rather than re-synthesized SQL text: BSON types — dates,
@@ -334,17 +233,21 @@ object Cli {
             // byte-exactly through the datastore. The frames below are
             // already filtered/masked/subsetted (dumpPlan); writeTables
             // encodes them back to BSON on the executors.
-            val plan = Pipeline.dumpPlan(load, job)
+            val plan = Pipeline.dumpPlan(src.load, job)
             store.writeBlob(name,
               o => { graft.ingest.MongoArchive.writeTables(
-                o, c.defaultDb, plan.toSeq.sortBy(_._1)); () },
+                o, src.database, plan.toSeq.sortBy(_._1)); () },
               format = "mongo-archive",
               compressed = job.compressed,
               encryptionKey = job.encryptionKey)
-          } else Pipeline.dump(spark, load, store, name, job)
-          out(s"dump created: $name")
-        } finally spoolPath.foreach(deleteSpool(_, spark))
-        0
+            out(s"dump created: $name")
+          } else {
+            Pipeline.dump(spark, src.load, store, name, job)
+            out(if (src.parsed.isEmpty) s"dump created: $name"
+              else s"dump created from file: $name (${src.tables.size} tables)")
+          }
+          0
+        }
 
       case Seq("dump", "list") =>
         // reference `dump list` sorts most-recent-first (`commands/dump.rs:37-65`)
@@ -356,15 +259,20 @@ object Cli {
         }
         0
 
-      case Seq("dump", "delete", "--older-than", days) =>
-        val store = new Datastore(datastoreUri(config), spark)
-        val threshold = System.currentTimeMillis() - days.toLong * 24L * 3600 * 1000
-        store.catalogOps.deleteOlderThan(threshold).foreach(n => out(s"deleted: $n"))
-        0
-
-      case Seq("dump", "delete", "--keep-last", n) =>
-        val store = new Datastore(datastoreUri(config), spark)
-        store.catalogOps.keepLast(n.toInt).foreach(x => out(s"deleted: $x"))
+      // a negative count would delete every dump (the threshold lands
+      // in the future, and `drop` of a negative count keeps the whole
+      // list), so only counts from 0 to Int.MaxValue are accepted: that
+      // many days in milliseconds still fits a Long
+      case Seq("dump", "delete", flag @ ("--older-than" | "--keep-last"), n) =>
+        val count = n.toLongOption.filter(k => k >= 0 && k <= Int.MaxValue).getOrElse {
+          out(s"malformed dump delete arguments: $flag $n")
+          return 1
+        }
+        val catalog = new Datastore(datastoreUri(config), spark).catalogOps
+        val deleted =
+          if (flag == "--keep-last") catalog.keepLast(count.toInt)
+          else catalog.deleteOlderThan(System.currentTimeMillis() - count * 24L * 3600 * 1000)
+        deleted.foreach(d => out(s"deleted: $d"))
         0
 
       case Seq("dump", "delete", name) =>
@@ -384,12 +292,7 @@ object Cli {
       case Seq("dump", "restore", "ephemeral", nameArg) =>
         val c = config
         val store = new Datastore(datastoreUri(c), spark)
-        val name =
-          if (nameArg == "latest")
-            store.catalogOps.latest().map(_.directoryName).getOrElse {
-              out("no dumps in catalog"); return 1
-            }
-          else nameArg
+        val name = dumpName(store, nameArg, out).getOrElse(return 1)
         val dbDir = java.nio.file.Files.createTempDirectory("graft-ephemeral-").resolve("db")
         val url = s"jdbc:derby:$dbDir;create=true"
         withRestoreFrames(c, store, name, spark) { (tables, _) =>
@@ -409,12 +312,7 @@ object Cli {
       case Seq("dump", "restore", nameArg) =>
         val c = config
         val store = new Datastore(datastoreUri(c), spark)
-        val name =
-          if (nameArg == "latest")
-            store.catalogOps.latest().map(_.directoryName).getOrElse {
-              out("no dumps in catalog"); return 1
-            }
-          else nameArg
+        val name = dumpName(store, nameArg, out).getOrElse(return 1)
         val dest = c.destination.getOrElse(
           throw new IllegalArgumentException("config requires a destination section"))
         val isArchive = store.catalogOps.byName(name)
@@ -651,116 +549,140 @@ object Cli {
       case other =>
         out(s"unknown command: ${other.mkString(" ")}")
         out("usage: graft -c conf.yaml " +
-          "(dump create [name] | dump list | dump delete <name|--older-than d|--keep-last n> | " +
-          "dump restore <name|latest> | source schema | transformer list) | " +
+          "(dump create [name] [--file <path> | -i] | dump list | " +
+          "dump delete <name|--older-than d|--keep-last n> | " +
+          "dump restore [ephemeral] <name|latest> | source schema | transformer list) | " +
           "graft corpus run|stream|compact|explain|stats <conf.yaml> [--into prior] [--continuous [interval]]")
         1
     }
+  }}
+
+  /** A command's source, resolved by [[withSource]]: the tables `dump
+    * create` stores and the namespace they live in, the FK edges its
+    * subset follows (read on first use) and a loader. `parsed` is a
+    * parsed dump's path and listing (the SQL tools, `--file`, `-i`);
+    * `archive` marks a mongodump source, whose dump stores the archive
+    * itself.
+    */
+  private final class Source(
+      val tables: Seq[String], val database: String, fks: => Seq[graft.model.FkEdge],
+      val load: String => org.apache.spark.sql.DataFrame,
+      val parsed: Option[(String, DumpReader.Listing)] = None,
+      val archive: Boolean = false) {
+    lazy val fkEdges: Seq[graft.model.FkEdge] = fks
+
+    /** A dump's own CREATE TABLE statements by table. */
+    def ddl: Map[String, String] = parsed.fold(Map.empty[String, String])(_._2.ddl)
+
+    /** The tables `source schema` lists: a dump's CREATE TABLEs, else [[tables]]. */
+    def described: Seq[String] = parsed.fold(tables)(_._2.ddl.keys.toSeq.sorted)
   }
 
-  /** The `dump create --file` / `dump create -i` body: ingest a SQL
-    * dump (DDL-typed frames), transform, store — everything downstream
-    * of the parse is the same pipeline the parquet path uses
-    * (reference `commands/dump.rs:171-232`).
+  /** Resolve a command's source and run `body` over it: the dump file
+    * `dumpFile` when given, else the config's — a mongodump archive, a
+    * pg_dump/mysqldump dump, a JDBC database or a parquet tables dir.
+    * Tool output spools in the command's [[Spool]] scope, and a dump is
+    * parsed once and pinned for `body` ([[DumpReader.withParsed]]), so
+    * the loader must not outlive `body`. `forDump` pushes the config's
+    * skip/only tables into the dump tool's argv, like the reference's
+    * --table=/--ignore-table= args (the downstream filters still
+    * enforce them exactly).
     */
-  private def dumpCreateFromFile(name: String, dumpPath: String, c: GraftConfig,
-                                 spark: SparkSession, out: String => Unit): Int = {
-    val store = new Datastore(datastoreUri(c), spark)
-    val db = c.sourceConf.db
-    graft.ingest.DumpReader.withParsed(graft.ingest.DumpReader.statements(spark, dumpPath)) { dump =>
-      val listing = dump.listing
-      // the loaders filter on the config database — a dump whose
-      // statements live in another schema would otherwise produce
-      // empty tables that LOOK like a successful dump
-      val foreignDbs = (listing.insertRefs ++ listing.copyRefs).map(_._1).filter(_ != db)
-      val dumpTables = (listing.insertRefs ++ listing.copyRefs).map(_._2).toSeq.sorted
-      if (foreignDbs.nonEmpty) {
-        out(s"dump file uses database(s) ${foreignDbs.mkString(", ")} but config " +
-          s"source.database is '$db' — set source.database to match")
-        1
-      } else if (dumpTables.isEmpty) {
-        out(s"no INSERT or COPY data found in $dumpPath — nothing to dump")
-        1
-      } else {
-        val job = Pipeline.DumpJobConfig(
-          tables = dumpTables,
-          database = db,
-          filters = c.filters,
-          bindings = c.bindings,
-          subset = c.subsetConfig,
-          fkEdges = listing.fkEdges,
-          compressed = c.datastore.flatMap(_.compression).getOrElse(true),
-          encryptionKey = c.encryptionKey,
-          // the dump's own CREATE TABLE statements travel with the data
-          // so a live restore recreates the source's true column types
-          ddl = listing.ddl)
-        Pipeline.dump(spark, dump.table(db, _), store, name, job)
-        out(s"dump created from file: $name (${dumpTables.size} tables)")
-        0
+  private def withSource[A](c: GraftConfig, spark: SparkSession, forDump: Boolean,
+                            dumpFile: Option[String] = None)(body: Source => A): A = {
+    val root = c.datastore.map(_.rootUri)
+    def fromDump(path: String): A =
+      DumpReader.withParsed(DumpReader.statements(spark, path)) { dump =>
+        val l = dump.listing
+        val db = c.sourceConf.db
+        body(new Source((l.insertRefs ++ l.copyRefs).map(_._2).toSeq.sorted, db, l.fkEdges,
+          dump.table(db, _), parsed = Some(path -> l)))
+      }
+    dumpFile match {
+      case Some(path) => fromDump(path)
+      case None => (c.sourceMongo, c.sourceJdbc) match {
+        // live Mongo leg (reference source/mongodb.rs:66-101): the
+        // archive is decoded on the executors (r16) — the driver never
+        // holds a collection; inferred schemas, "db.coll" prefixes →
+        // bare table names
+        case (Some((uri, db)), _) =>
+          val frames = graft.ingest.MongoArchive.readDistributed(spark,
+            Spool.file(spark, root, "mongodump")(o =>
+              graft.ingest.MongoLive.dumpToStream(uri, db, o, toolCmd(spark, "mongodump"))))
+            .map { case (prefix, df) => prefix.split("\\.", 2).last -> df }
+          body(new Source(frames.keys.toSeq.sorted, c.defaultDb, Nil,
+            t => frames.getOrElse(t,
+              throw new IllegalArgumentException(s"collection not in archive: $t")),
+            archive = true))
+        // live-SQL TOOL leg (reference source/postgres.rs:121-151 /
+        // source/mysql.rs:100-163): pg_dump --column-inserts or
+        // mysqldump --skip-extended-insert --complete-insert, then the
+        // dump-file parse
+        case (_, Some(conn)) if sqlToolsMode(spark, conn.url) =>
+          val pg = pgToolsMode(spark, conn.url)
+          val (skip, only) =
+            if (forDump) (c.filters.skipTables, c.filters.onlyTables) else (Nil, Nil)
+          fromDump(Spool.chunked(spark, root, "sqldump", Some(pg), spoolChunkBytes(spark))(o =>
+            if (pg)
+              graft.ingest.PgLive.dumpToStream(pgConn(conn), o,
+                // schema-qualified patterns, exactly the reference's
+                // --table={db}.{table} (source/postgres.rs:133-137);
+                // the db part of a TableRef IS the pg schema
+                onlyTables = only.map(r => s"${r.database}.${r.table}"),
+                cmd = toolCmd(spark, "pg_dump"))
+            else
+              graft.ingest.MySqlLive.dumpToStream(mysqlConn(conn), o,
+                skipTables = skip.map(_.table), onlyTables = only.map(_.table),
+                cmd = toolCmd(spark, "mysqldump"))))
+        // partitioned JDBC range scans, listing and reads scoped to
+        // source.schema — a multi-schema database would otherwise
+        // enumerate foreign-schema tables and read whichever one
+        // search_path resolves
+        case (_, Some(conn)) =>
+          val schema = c.sourceConf.jdbcSchema
+          body(new Source(
+            c.sourceConf.tables.getOrElse(
+              graft.ingest.Jdbc.tableNames(conn.url, schema, creds = conn.sparkOptions)),
+            c.defaultDb,
+            graft.ingest.Jdbc.foreignKeys(conn.url, schema, creds = conn.sparkOptions),
+            t => graft.ingest.Jdbc.readTable(
+              spark, conn.url, schema.fold(t)(s => s"$s.$t"), options = conn.sparkOptions)))
+        case (_, None) =>
+          body(new Source(tableNames(c, spark), c.defaultDb, Nil, Tables.load(spark, c.tablesDir, _)))
       }
     }
-  }
-
-  /** Spool a dump piped on stdin into the datastore's filesystem
-    * (reference `source/postgres_stdin.rs:24-43` reads the pipe into its
-    * parser the same way — a pipe has no random access, so one
-    * sequential copy is the floor). The spool target is the datastore
-    * FS, NOT java.io.tmpdir: executors must be able to open the path,
-    * and on a multi-node cluster a driver-local temp file exists on the
-    * driver only. 1 MiB chunked copy; never holds the stream in memory;
-    * a failed copy deletes its partial file instead of orphaning it.
-    */
-  private[graft] def spoolStdin(in: java.io.InputStream, spark: SparkSession,
-                                rootUri: String): org.apache.hadoop.fs.Path = {
-    val dir = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(rootUri, ".spool"),
-      s"graft-stdin-${java.util.UUID.randomUUID()}")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var ok = false
-    try {
-      // chunk parts at statement boundaries so the downstream parse is
-      // one task per part (same seam as the live tool legs); the
-      // dialect is detected from the piped dump's own header, since a
-      // pipe doesn't say which tool wrote it. Part streams close inside
-      // ChunkedSpool.write — on object stores the close completes the
-      // upload, so a close failure is a failed copy and lands here.
-      graft.ingest.ChunkedSpool.write(hadoopPartWriter(fs, dir),
-        pg = None, chunkBytes = spoolChunkBytes(spark)) { o =>
-        val buf = new Array[Byte](1 << 20)
-        var n = in.read(buf)
-        while (n >= 0) {
-          o.write(buf, 0, n)
-          n = in.read(buf)
-        }
-      }
-      ok = true
-    } finally {
-      if (!ok) fs.delete(dir, true) // partial UNMASKED spool
-    }
-    dir
   }
 
   /** Run `body` over a restore's frames and stored DDL, by stored
     * format: statement dumps parse once into a pin
     * ([[Pipeline.restore]]); `mongo-archive` dumps spool the decoded
-    * archive once (owner-only, same convention as the live sources)
-    * and decode into TYPED frames on the executors. The frames read
-    * the pin or the spool lazily, so both are released only when
-    * `body` ends.
+    * archive once and decode into TYPED frames on the executors. The
+    * frames read the pin or the spool lazily: the pin is released when
+    * `body` ends, the spool deleted when the command does.
     */
   private def withRestoreFrames[A](c: GraftConfig, store: Datastore, name: String,
                                    spark: SparkSession)(
       body: (Map[String, org.apache.spark.sql.DataFrame], Map[String, String]) => A): A =
     if (store.catalogOps.byName(name).exists(_.format.contains("mongo-archive"))) {
-      val spool = liveSpool(spark, c.datastore.map(_.rootUri),
-        "archive-restore", ".archive")(o =>
+      val spool = Spool.file(spark, c.datastore.map(_.rootUri), "archive-restore")(o =>
         store.readBlobTo(name, o, c.encryptionKey))
-      try body(graft.ingest.MongoArchive.readDistributed(spark, spool)
+      body(graft.ingest.MongoArchive.readDistributed(spark, spool)
         .map { case (prefix, df) => prefix.split("\\.", 2).last -> df }, Map.empty)
-      finally deleteSpool(spool, spark)
     } else Pipeline.restore(store, name, c.encryptionKey)(body)
 
-  /** Tool invocation for the live Mongo legs: `spark.graft.<tool>Cmd`
+  /** `nameArg`, or the newest dump's name for `latest`; None, having
+    * said so, when the catalog is empty.
+    */
+  private def dumpName(store: Datastore, nameArg: String, out: String => Unit): Option[String] =
+    if (nameArg != "latest") Some(nameArg)
+    else {
+      val latest = store.catalogOps.latest().map(_.directoryName)
+      if (latest.isEmpty) out("no dumps in catalog")
+      latest
+    }
+
+  /** Tool invocation for the live tool legs (pg_dump, mysqldump,
+    * mongodump, psql, mysql, mongorestore): `spark.graft.<tool>Cmd`
     * overrides the binary (space-split — tests point it at stub
     * scripts, deployments at non-PATH installs); default is the bare
     * tool name resolved from PATH, like the reference.
@@ -768,117 +690,6 @@ object Cli {
   private def toolCmd(spark: SparkSession, tool: String): Seq[String] =
     spark.conf.getOption(s"spark.graft.${tool}Cmd")
       .map(_.split("\\s+").toSeq).getOrElse(Seq(tool))
-
-  /** mongodump the live database to a spool file and return its path —
-    * the frames built over it read LAZILY, so callers must
-    * [[deleteSpool]] only AFTER the last action that reads them
-    * (eager delete, not deleteOnExit: the spool is the UNMASKED
-    * pre-transform dump and must not linger for the JVM's lifetime,
-    * ADVICE r16). O(copy buffer) driver memory; decode happens on the
-    * executors (MongoArchive.readDistributed), so the spool must land
-    * where THEY can open it: on a local master that's a 0600 temp file
-    * (created by nio with owner-only perms, written through a
-    * truncate-in-place FileOutputStream that preserves them); on a
-    * real cluster a driver-local path would be a silent per-task
-    * FileNotFoundException, so the spool goes under the datastore root
-    * (a Hadoop-FS URI executors already reach, same convention as
-    * [[spoolStdin]]) or, with no datastore configured, fails fast.
-    */
-  private def mongoSpool(uri: String, db: String, spark: SparkSession,
-                         storeRoot: Option[String]): String =
-    liveSpool(spark, storeRoot, "mongodump", ".archive")(o =>
-      graft.ingest.MongoLive.dumpToStream(uri, db, o, toolCmd(spark, "mongodump")))
-
-  /** Spool a live SQL-tool dump (pg_dump / mysqldump stdout) as a
-    * DIRECTORY of statement-boundary chunk parts
-    * ([[graft.ingest.ChunkedSpool]]) instead of one file: a single-file
-    * spool parses as ONE whole-file task, so a large dump would funnel
-    * the entire parse through one executor thread — chunk parts parse
-    * one task per part (the r18 verdict's dump-create throughput seam).
-    * Placement + permissions follow [[liveSpool]]: owner-only temp dir
-    * on a local master, the datastore's `.spool` dir on a cluster.
-    * `spark.graft.spoolChunkMb` overrides the 100 MB default (tests).
-    */
-  private def chunkedSqlSpool(spark: SparkSession, storeRoot: Option[String],
-                              pg: Boolean)(
-                              writeTo: java.io.OutputStream => Unit): String = {
-    val chunkBytes = spoolChunkBytes(spark)
-    if (spark.sparkContext.isLocal) {
-      val dir = java.nio.file.Files.createTempDirectory("graft-sqldump-")
-      var ok = false
-      try {
-        graft.ingest.ChunkedSpool.write(i => {
-          val p = dir.resolve(f"part-$i%05d.sql")
-          java.nio.file.Files.createFile(p,
-            java.nio.file.attribute.PosixFilePermissions.asFileAttribute(
-              java.nio.file.attribute.PosixFilePermissions.fromString("rw-------")))
-          new java.io.FileOutputStream(p.toFile)
-        }, Some(pg), chunkBytes)(writeTo)
-        ok = true
-        dir.toString
-      } finally if (!ok) deleteSpool(dir.toString, spark) // partial UNMASKED spool
-    } else storeRoot match {
-      case Some(root) =>
-        val dir = new org.apache.hadoop.fs.Path(
-          new org.apache.hadoop.fs.Path(root, ".spool"),
-          s"graft-sqldump-${java.util.UUID.randomUUID()}")
-        val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        var ok = false
-        try {
-          graft.ingest.ChunkedSpool.write(hadoopPartWriter(fs, dir),
-            Some(pg), chunkBytes)(writeTo)
-          ok = true
-          dir.toString
-        } finally if (!ok) fs.delete(dir, true)
-      case None =>
-        throw new IllegalStateException(
-          "live sqldump source on a non-local master needs a datastore to spool " +
-          "under: executors cannot open a driver-local temp file")
-    }
-  }
-
-  /** Spool a live-tool dump stream to a file executors can read, with
-    * owner-only permissions on both paths (the spool is UNMASKED
-    * pre-transform data): a 0600 nio temp file on a local master
-    * (truncate-in-place write preserves the perms), the datastore's
-    * `.spool` dir (mode 600 via Hadoop-FS create) on a real cluster —
-    * where a driver-local temp path would be a silent per-task
-    * FileNotFoundException — or fail fast with no datastore to reach.
-    */
-  private def liveSpool(spark: SparkSession, storeRoot: Option[String],
-                        tag: String, suffix: String)(
-                        writeTo: java.io.OutputStream => Unit): String =
-    if (spark.sparkContext.isLocal) {
-      val spool = java.nio.file.Files.createTempFile(s"graft-$tag-", suffix)
-      val fos = new java.io.FileOutputStream(spool.toFile)
-      var ok = false
-      try { writeTo(fos); ok = true }
-      finally {
-        fos.close()
-        // a failed tool run must not orphan a partial (unmasked) spool
-        if (!ok) java.nio.file.Files.deleteIfExists(spool)
-      }
-      spool.toString
-    } else storeRoot match {
-      case Some(root) =>
-        val p = new org.apache.hadoop.fs.Path(
-          new org.apache.hadoop.fs.Path(root, ".spool"),
-          s"graft-$tag-${java.util.UUID.randomUUID()}$suffix")
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val os = org.apache.hadoop.fs.FileSystem.create(fs, p,
-          new org.apache.hadoop.fs.permission.FsPermission("600"))
-        var ok = false
-        try { writeTo(os); ok = true }
-        finally {
-          try os.close() catch { case _: Throwable if !ok => () } // keep the root cause
-          if (!ok) fs.delete(p, false)
-        }
-        p.toString
-      case None =>
-        throw new IllegalStateException(
-          s"live $tag source on a non-local master needs a datastore to spool " +
-          "under: executors cannot open a driver-local temp file")
-    }
 
   /** True when a postgres connection should go through the NATIVE
     * client tools (pg_dump source / psql destination — the reference's
@@ -923,8 +734,8 @@ object Cli {
     graft.ingest.MySqlLive.Conn.fromJdbcUrl(conn.url, conn.user, conn.password)
 
   /** `spark.graft.spoolChunkMb` override of the 100 MB chunked-spool
-    * part size (tests set it small) — one parse for the three spool
-    * writers. Clamped to Int.MaxValue and required positive (ADVICE
+    * part size (tests set it small) — one parse for the chunked spools.
+    * Clamped to Int.MaxValue and required positive (ADVICE
     * r19): 2048+ MB used to overflow to a negative Int, which made
     * `ChunkedSpool.rollIfDue` fire on every byte — full-buffer rescans
     * and one part per statement instead of 100 MB parts.
@@ -950,33 +761,6 @@ object Cli {
     require(n > 0, s"spark.graft.restoreParallelism must be > 0, got: $n")
     n
   }
-
-  /** Part-file opener for Hadoop-FS chunked spools: owner-only
-    * `part-%05d.sql` under `dir`.
-    */
-  private def hadoopPartWriter(fs: org.apache.hadoop.fs.FileSystem,
-                               dir: org.apache.hadoop.fs.Path): Int => java.io.OutputStream =
-    i => org.apache.hadoop.fs.FileSystem.create(fs,
-      new org.apache.hadoop.fs.Path(dir, f"part-$i%05d.sql"),
-      new org.apache.hadoop.fs.permission.FsPermission("600"))
-
-  /** Best-effort eager removal of a live-leg spool file. A failed
-    * delete must not fail the (already complete) command, but it must
-    * be LOUD: the spool holds unmasked pre-transform data, and the
-    * eager-delete rationale on [[liveSpool]] is void if the file
-    * silently lingers (ADVICE r17).
-    */
-  private def deleteSpool(path: String, spark: SparkSession): Unit =
-    try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      // recursive: a chunked SQL spool is a directory of parts
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      ()
-    } catch {
-      case e: Throwable => Console.err.println(
-        s"WARNING: failed to delete spool $path — it holds UNMASKED " +
-          s"pre-transform data; remove it manually (${e.getClass.getSimpleName}: ${e.getMessage})")
-    }
 
   private def datastoreUri(c: GraftConfig): String =
     c.datastore.map(_.rootUri).getOrElse(

@@ -18,7 +18,7 @@ import java.io.InputStream
   * `binary_exists` check.
   *
   * Scale note: a mongodump archive is one sequential pipe from one
-  * process — the same inherent bound the reference has. [[dumpToFile]]
+  * process — the same inherent bound the reference has. [[dumpToStream]]
   * spools that pipe straight to storage (O(copy buffer) driver memory)
   * for [[MongoArchive.readDistributed]] to decode on the executors —
   * the live-source leg then never holds a collection in driver memory.
@@ -49,33 +49,11 @@ object MongoLive {
            cmd: Seq[String] = Seq("mongodump")): MongoArchive.Archive =
     MongoArchive.read(run(cmd ++ dumpArgs(uri, db), _ => ()))
 
-  /** Dump a live database, spooling the tool's stdout straight to
-    * `path` (Hadoop FS — local file, hdfs, s3a alike) — O(copy buffer)
-    * driver memory regardless of archive size. Pair with
-    * [[MongoArchive.readDistributed]] so executors do the decode; the
-    * spool must land where they can read it (trivial on local[n], a
-    * shared filesystem on a real cluster).
-    */
-  def dumpToFile(uri: String, db: String, path: String,
-                 cmd: Seq[String] = Seq("mongodump")): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    // owner-only permissions: the spool holds the UNMASKED pre-transform
-    // dump, and the default-umask create would leave it world-readable
-    // for the file's lifetime (ADVICE r16) — on FSes without POSIX
-    // perms (object stores) the call is a no-op, which is fine: those
-    // are access-controlled at the bucket
-    val out = org.apache.hadoop.fs.FileSystem.create(fs, p,
-      new org.apache.hadoop.fs.permission.FsPermission("600"))
-    try dumpToStream(uri, db, out, cmd)
-    finally out.close()
-  }
-
-  /** [[dumpToFile]] minus the file handling: stream the tool's stdout
-    * into a caller-opened sink. Lets the caller control the target's
-    * creation (e.g. `Files.createTempFile`'s 0600 local temp file,
-    * which a truncate-in-place `FileOutputStream` preserves — a
-    * replace-style create would reset it to the umask default).
+  /** Dump a live database, streaming the tool's stdout into `out`:
+    * O(copy buffer) driver memory regardless of archive size. The
+    * caller owns the sink; `dump create` and `source schema` hand it a
+    * [[Spool]] for [[MongoArchive.readDistributed]] to decode on the
+    * executors.
     */
   def dumpToStream(uri: String, db: String, out: java.io.OutputStream,
                    cmd: Seq[String] = Seq("mongodump")): Unit = {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{GraftSession, Tables}
-import graft.ingest.{Ddl, DumpReader, DumpSink}
+import graft.ingest.{ChunkedSpool, Ddl, DumpReader, DumpSink, Spool}
 import graft.model.{Statement, StatementKind}
 
 /** Dump-pipeline queries (SURVEY §2.1 sources, §2.4 slices, §2.5 G4,
@@ -165,21 +165,21 @@ object IngestQueries {
     // S4 stdin leg: the reference's headline `pg_dump | replibyte` flow
     // (`source/postgres_stdin.rs:24-43`, CLI `-i` branch
     // `commands/dump.rs:171-206`). A pipe is a driver-local sequential
-    // byte stream by nature; `Cli.spoolStdin` copies it chunked to a
-    // temp file, after which parsing/typing run on the standard
-    // distributed path. The in-memory stream here stands in for the
-    // pipe; building it collects the 27-statement nation fixture only.
+    // byte stream by nature; it spools chunked once ([[Spool]], as
+    // `dump create -i` does), after which parsing/typing run on the
+    // standard distributed path. The in-memory stream here stands in
+    // for the pipe; building it collects the 27-statement nation
+    // fixture only. The frame reads the spool lazily, after this entry
+    // returns, so the spool is taken outside a scope and lives until
+    // the JVM's scratch root is deleted.
     "s4_stdin_ingest" -> ((s, dir) => {
       import s.implicits._
       val dumpText = nationDump(s, dir).orderBy(col("idx"))
         .map(_.sql).collect().mkString("\n")
-      val spooled = graft.Cli.spoolStdin(
-        new java.io.ByteArrayInputStream(dumpText.getBytes("UTF-8")),
-        s, System.getProperty("java.io.tmpdir"))
-      // consumed lazily when the frame materializes — defer deletion
-      spooled.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(spooled)
+      val spooled = Spool.chunked(s, None, "stdin", pg = None, ChunkedSpool.DefaultChunkBytes)(
+        o => new java.io.ByteArrayInputStream(dumpText.getBytes("UTF-8")).transferTo(o))
       DumpReader.tableFromDump(
-        DumpReader.statements(s, spooled.toString), "public", "nation", Some(NationDdl))
+        DumpReader.statements(s, spooled), "public", "nation", Some(NationDdl))
     }),
 
     // S3+N3+D3: full mongodump-archive cycle — table → BSON documents →

@@ -78,9 +78,11 @@ class Catalog(rootUri: String, hadoopConf: Configuration) {
   }
 
   /** Keep the N most recent dumps, delete the rest
-    * (`datastore/mod.rs:102-117`).
+    * (`datastore/mod.rs:102-117`). A negative N is refused: `drop`
+    * would keep the whole list, deleting every dump.
     */
   def keepLast(n: Int): Seq[String] = {
+    require(n >= 0, s"keepLast needs n >= 0, got $n")
     val doomed = list().drop(n).map(_.directoryName)
     doomed.foreach(delete)
     doomed

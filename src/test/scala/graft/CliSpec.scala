@@ -105,6 +105,33 @@ class CliSpec extends SparkSpec {
     assert(!printed.exists(_.startsWith("cli-test")))
   }
 
+  test("cli: dump delete refuses negative and non-numeric counts instead of deleting every dump") {
+    val store = tempDir("graft-cli-store-").toString
+    val restore = tempDir("graft-cli-restore-").toString
+    val conf = writeConf(store, restore)
+    Seq("keep-a", "keep-b").foreach(n =>
+      assert(Cli.run(Seq("-c", conf, "dump", "create", n), spark, _ => ()) == 0))
+    def listed(): Set[String] = {
+      val printed = collection.mutable.Buffer[String]()
+      assert(Cli.run(Seq("-c", conf, "dump", "list"), spark, printed += _) == 0)
+      printed.map(_.split("\t").head).toSet
+    }
+    // a negative count used to delete every dump; a non-numeric one
+    // escaped as a NumberFormatException
+    for (args <- Seq(Seq("--keep-last", "-1"), Seq("--older-than", "-5"),
+                     Seq("--keep-last", "x"), Seq("--older-than", "1.5"))) {
+      val printed = collection.mutable.Buffer[String]()
+      assert(Cli.run(Seq("-c", conf, "dump", "delete") ++ args, spark, printed += _) == 1, args)
+      assert(printed == Seq(s"malformed dump delete arguments: ${args.mkString(" ")}"), printed)
+      assert(listed() == Set("keep-a", "keep-b"), args)
+    }
+    // a count >= 0 still deletes: keep the newest dump only
+    val printed = collection.mutable.Buffer[String]()
+    assert(Cli.run(Seq("-c", conf, "dump", "delete", "--keep-last", "1"), spark, printed += _) == 0)
+    assert(printed == Seq("deleted: keep-a"), printed)
+    assert(listed() == Set("keep-b"))
+  }
+
   test("cli: transformer list and unknown command exit codes") {
     val printed = collection.mutable.Buffer[String]()
     assert(Cli.run(Seq("transformer", "list"), spark, printed += _) == 0)
@@ -275,6 +302,7 @@ class CliSpec extends SparkSpec {
         |""".stripMargin
     val in = new java.io.ByteArrayInputStream(dumpText.getBytes("UTF-8"))
     val printed = collection.mutable.Buffer[String]()
+    val spoolsBefore = spools()
     assert(Cli.run(Seq("-c", conf, "dump", "create", "stdin-test", "-i"),
       spark, printed += _, stdin = in) == 0)
     assert(printed.exists(_.contains("dump created from file: stdin-test")))
@@ -292,12 +320,10 @@ class CliSpec extends SparkSpec {
       spark, printed += _, stdin = new java.io.ByteArrayInputStream(Array[Byte]())) == 1)
     assert(printed.exists(_.contains("malformed")))
 
-    // spool cleanup: the datastore's .spool dir holds no leftovers after
-    // successful ingests, and a stream that fails mid-copy deletes its
-    // partial file instead of orphaning it
-    val spoolDir = new java.io.File(store, ".spool")
-    assert(!spoolDir.exists() || spoolDir.listFiles().isEmpty,
-      s"spool files leaked: ${Option(spoolDir.listFiles()).map(_.toSeq).getOrElse(Nil)}")
+    // spool cleanup: the local spools (under the JVM's scratch root)
+    // hold no leftovers after successful ingests, and a stream that
+    // fails mid-copy deletes its partial spool instead of orphaning it
+    assert(spools() == spoolsBefore, s"spool files leaked: ${spools() -- spoolsBefore}")
     val failing = new java.io.InputStream {
       private var n = 0
       override def read(): Int = {
@@ -305,9 +331,9 @@ class CliSpec extends SparkSpec {
         if (n > 100) throw new java.io.IOException("pipe broke") else 'x'
       }
     }
-    intercept[java.io.IOException](Cli.spoolStdin(failing, spark, store))
-    assert(!spoolDir.exists() || spoolDir.listFiles().isEmpty,
-      "failed copy orphaned its partial spool file")
+    intercept[java.io.IOException](Cli.run(Seq("-c", conf, "dump", "create", "broken", "-i"),
+      spark, _ => (), stdin = failing))
+    assert(spools() == spoolsBefore, "failed copy orphaned its partial spool file")
   }
 
   test("cli: corpus run executes the YAML stage chain end to end") {
@@ -1802,9 +1828,13 @@ class CliSpec extends SparkSpec {
     spark.conf.set("spark.graft.mongodumpCmd", dumpStub.toString)
     spark.conf.set("spark.graft.mongorestoreCmd", restStub.toString)
     val printed = collection.mutable.Buffer[String]()
+    // the mongodump spool holds UNMASKED documents: every command must
+    // delete it, whether the tool succeeds or fails
+    val spoolsBefore = spools()
     try {
       // source schema prints inferred schemas via the mongodump stream
       assert(Cli.run(Seq("-c", conf.toString, "source", "schema"), spark, printed += _) == 0)
+      assert(spools() == spoolsBefore, "source schema left its mongodump spool behind")
       assert(printed.exists(_.contains("table: livedb.users")))
       assert(printed.exists(_.contains("table: livedb.events")))
       assert(Files.readString(dumpArgsF).trim ==
@@ -1814,6 +1844,7 @@ class CliSpec extends SparkSpec {
       assert(Cli.run(Seq("-c", conf.toString, "dump", "create", "mongo-live"), spark,
         printed += _) == 0)
       assert(printed.exists(_.contains("dump created: mongo-live")))
+      assert(spools() == spoolsBefore, "dump create left its mongodump spool behind")
       // restore: tables -> archive bytes -> mongorestore stdin; the
       // spooled bytes must BE a valid archive holding the same data
       printed.clear()
@@ -1842,6 +1873,19 @@ class CliSpec extends SparkSpec {
         graft.ingest.MongoLive.dump("mongodb://x/livedb", "livedb", Seq(failStub.toString))
       }
       assert(e.getMessage.contains("exited 3") && e.getMessage.contains("connection refused"))
+      // a tool that fails midway through its archive leaves no partial spool
+      val partialStub = dir.resolve("partial.sh")
+      Files.writeString(partialStub,
+        s"#!/bin/sh\nhead -c 100 $archivePath\necho 'connection reset' >&2\nexit 3\n")
+      partialStub.toFile.setExecutable(true)
+      spark.conf.set("spark.graft.mongodumpCmd", partialStub.toString)
+      for (cmd <- Seq(Seq("source", "schema"), Seq("dump", "create", "mongo-fail"))) {
+        val failed = intercept[IllegalStateException] {
+          Cli.run(Seq("-c", conf.toString) ++ cmd, spark, _ => ())
+        }
+        assert(failed.getMessage.contains("connection reset"), failed.getMessage)
+        assert(spools() == spoolsBefore, s"${cmd.mkString(" ")} left a partial mongodump spool")
+      }
       // a database-less URI is refused loudly on both legs (the SQL-side
       // "public" default names nothing on a Mongo server)
       val noDbSrc = GraftConfig.fromYaml(
@@ -2117,6 +2161,7 @@ class CliSpec extends SparkSpec {
       // restore the SAME stored dump to a parquet destination: the
       // archive decodes into typed frames (spool -> distributed decode)
       printed.clear()
+      val spoolsBefore = spools()
       val pqConf = conf(s"destination:\n  output_dir: $parquetOut")
       assert(Cli.run(Seq("-c", pqConf, "dump", "restore", "mongo-typed"), spark,
         printed += _) == 0, printed.mkString("\n"))
@@ -2125,9 +2170,7 @@ class CliSpec extends SparkSpec {
       assert(pq.schema.fields(pq.schema.fieldIndex("addr")).dataType.isInstanceOf[StructType])
       assert(pq.count() == 2)
       // the lazy-read restore spool was eagerly deleted after the write
-      val spoolDir = new java.io.File(s"$store/.spool")
-      assert(!spoolDir.exists() || spoolDir.listFiles().isEmpty,
-        "archive-restore spool left behind")
+      assert(spools() == spoolsBefore, "archive-restore spool left behind")
     } finally {
       spark.conf.unset("spark.graft.mongodumpCmd")
       spark.conf.unset("spark.graft.mongorestoreCmd")
@@ -2181,6 +2224,29 @@ class CliSpec extends SparkSpec {
       assert(n > 0 && n < 40, s"expected a strict user subset, got $n/40")
       assert(spark.read.parquet(s"$outDir/events").count() == 7)
     } finally spark.conf.unset("spark.graft.mongodumpCmd")
+  }
+
+  test("spool: a local spool is an owner-only directory of owner-only parts, deleted when its scope ends") {
+    import java.nio.file.attribute.PosixFilePermissions.{toString => perms}
+    import graft.ingest.Spool
+    val before = spools()
+    Spool.scoped {
+      val chunked = Spool.chunked(spark, None, "perm", pg = Some(true), chunkBytes = 64)(o =>
+        o.write((1 to 20).map(i => s"INSERT INTO t VALUES ($i);\n").mkString.getBytes("UTF-8")))
+      val file = Spool.file(spark, None, "perm")(_.write(Array[Byte](1, 2, 3)))
+      for (dir <- Seq(java.nio.file.Paths.get(chunked), java.nio.file.Paths.get(file).getParent)) {
+        assert(dir.getParent == GraftSession.processDir, dir)
+        assert(perms(Files.getPosixFilePermissions(dir)) == "rwx------", dir)
+        val parts = dir.toFile.listFiles().toSeq
+        assert(parts.nonEmpty, dir)
+        parts.foreach(p =>
+          assert(perms(Files.getPosixFilePermissions(p.toPath)) == "rw-------", p))
+      }
+      assert(java.nio.file.Paths.get(chunked).toFile.list().length > 1,
+        "64-byte parts should have rolled")
+      assert(spools().size == before.size + 2)
+    }
+    assert(spools() == before, "a spool outlived its scope")
   }
 
   test("spoolChunkMb: 2 GB+ clamps instead of overflowing Int; non-positive values are rejected (ADVICE r19)") {

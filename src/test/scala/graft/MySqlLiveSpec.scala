@@ -82,8 +82,6 @@ class MySqlLiveSpec extends SparkSpec {
     spark.conf.set("spark.graft.mysqlCmd", restStub.toString)
     val printed = collection.mutable.Buffer[String]()
     // the spool holds UNMASKED source rows: every command must delete it
-    def spools(): Set[String] = new java.io.File(System.getProperty("java.io.tmpdir"))
-      .listFiles().map(_.getName).filter(_.startsWith("graft-sqldump-")).toSet
     val spoolsBefore = spools()
     try {
       // dump create: mysqldump spools, the distributed dump-file
@@ -159,15 +157,12 @@ class MySqlLiveSpec extends SparkSpec {
     spark.conf.set("spark.graft.mysqlMode", "tools")
     spark.conf.set("spark.graft.mysqldumpCmd", badStub.toString)
     try {
-      val tmpBefore = new java.io.File(System.getProperty("java.io.tmpdir"))
-        .listFiles().count(_.getName.startsWith("graft-sqldump-"))
+      val spoolsBefore = spools()
       val e = intercept[IllegalStateException] {
         Cli.run(Seq("-c", conf.toString, "dump", "create", "fail"), spark, _ => ())
       }
       assert(e.getMessage.contains("Access denied"), e.getMessage)
-      val tmpAfter = new java.io.File(System.getProperty("java.io.tmpdir"))
-        .listFiles().count(_.getName.startsWith("graft-sqldump-"))
-      assert(tmpAfter == tmpBefore, "partial spool left behind")
+      assert(spools() == spoolsBefore, "partial spool left behind")
     } finally {
       spark.conf.unset("spark.graft.mysqlMode")
       spark.conf.unset("spark.graft.mysqldumpCmd")

@@ -101,9 +101,12 @@ class PgLiveSpec extends SparkSpec {
            |""".stripMargin)
 
       val printed = collection.mutable.Buffer[String]()
+      // the pg_dump spool holds UNMASKED rows: the command must delete it
+      val spoolsBefore = spools()
       assert(Cli.run(Seq("-c", conf.toString, "dump", "create", "pglive-e2e"),
         spark, printed += _) == 0, printed.mkString("\n"))
       assert(printed.exists(_.contains("dump created from file: pglive-e2e")))
+      assert(spools() == spoolsBefore, "dump create left its pg_dump spool behind")
 
       printed.clear()
       assert(Cli.run(Seq("-c", conf.toString, "dump", "restore", "pglive-e2e"),
@@ -279,6 +282,7 @@ class PgLiveSpec extends SparkSpec {
            |  connection_uri: ${uri(c, "livedb")}
            |""".stripMargin)
       val printed = collection.mutable.Buffer[String]()
+      val spoolsBefore = spools()
       assert(Cli.run(Seq("-c", conf.toString, "source", "schema"),
         spark, printed += _) == 0, printed.mkString("\n"))
       val text = printed.mkString("\n")
@@ -288,6 +292,24 @@ class PgLiveSpec extends SparkSpec {
       // columns surface as long, numeric(10,2) keeps its precision
       assert(text.matches("(?s).*id: long.*"), text)
       assert(text.matches("(?s).*amount: decimal\\(10,2\\).*"), text)
+      assert(spools() == spoolsBefore, "source schema left its pg_dump spool behind")
+      // a failing pg_dump (no such database) leaves no partial spool
+      // behind, on either command
+      val bad = tempFile("graft-pglive-bad-", ".yaml")
+      Files.writeString(bad,
+        s"""source:
+           |  connection_uri: ${uri(c, "graft_no_such_db")}
+           |datastore:
+           |  local_disk:
+           |    dir: ${tempDir("graft-pglive-bad-store-")}
+           |""".stripMargin)
+      for (cmd <- Seq(Seq("source", "schema"), Seq("dump", "create", "pg-bad"))) {
+        val e = intercept[IllegalStateException] {
+          Cli.run(Seq("-c", bad.toString) ++ cmd, spark, _ => ())
+        }
+        assert(e.getMessage.contains("graft_no_such_db"), e.getMessage)
+        assert(spools() == spoolsBefore, s"${cmd.mkString(" ")} left a partial pg_dump spool")
+      }
     } finally spark.conf.unset("spark.graft.pgMode")
   }
 
@@ -296,8 +318,8 @@ class PgLiveSpec extends SparkSpec {
     val c = cluster.get
     // REAL pg_dump stdout wired straight into the CLI's stdin — the
     // reference's front-page usage (`pg_dump … | replibyte dump create`,
-    // source/postgres_stdin.rs): stdin spools once to the datastore FS,
-    // then the identical distributed dump-file pipeline runs
+    // source/postgres_stdin.rs): stdin spools once, then the identical
+    // distributed dump-file pipeline runs
     val store = tempDir("graft-pgpipe-store-").toString
     val conf = tempFile("graft-pgpipe-conf-", ".yaml")
     Files.writeString(conf,
@@ -634,7 +656,7 @@ class PgLiveSpec extends SparkSpec {
         spark, printed += _) == 0, printed.mkString("\n"))
       val createSec = (System.nanoTime() - t3) / 1e9
 
-      // distributed parse in isolation, the exact dumpCreateFromFile
+      // distributed parse in isolation, the exact `dump create --file`
       // shape: persisted statements + the dump's own DDL (single typed
       // pass, no inference)
       // one measured distributed pass; the paired retry below applies

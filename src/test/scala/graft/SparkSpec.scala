@@ -28,6 +28,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   protected def tempFile(prefix: String, suffix: String): Path =
     Files.createTempFile(scratch, prefix, suffix)
 
+  /** The local spools on disk now: [[graft.ingest.Spool]] places each
+    * one under the JVM's scratch root, [[GraftSession.processDir]].
+    */
+  protected def spools(): Set[String] =
+    Option(GraftSession.processDir.toFile.list())
+      .fold(Set.empty[String])(_.toSet.filter(_.startsWith("spool-")))
+
   override protected def afterAll(): Unit =
     try tmpRoot.foreach(SparkSpec.deleteTree)
     finally super.afterAll()
