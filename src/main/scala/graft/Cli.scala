@@ -188,10 +188,11 @@ object Cli {
         }
         val c = config
         val store = new Datastore(datastoreUri(c), spark)
-        val dumpFile = if (!piped) file else Some(Spool.chunked(spark, c.datastore.map(_.rootUri),
-          "stdin", pg = None, spoolChunkBytes(spark))(o => stdin.transferTo(o)))
+        val dumpFile = if (!piped) file.map(p => p -> p) else Some(Spool.chunked(spark,
+          c.datastore.map(_.rootUri), "stdin", pg = None, spoolChunkBytes(spark))(o =>
+          stdin.transferTo(o)) -> "stdin")
         withSource(c, spark, forDump = true, dumpFile) { src =>
-          src.parsed.foreach { case (path, listing) =>
+          src.parsed.foreach { case (input, listing) =>
             // the loaders filter on the config database — a dump whose
             // statements live in another schema would otherwise produce
             // empty tables that LOOK like a successful dump
@@ -203,7 +204,7 @@ object Cli {
               return 1
             }
             if (src.tables.isEmpty) {
-              out(s"no INSERT or COPY data found in $path — nothing to dump")
+              out(s"no INSERT or COPY data found in $input — nothing to dump")
               return 1
             }
           }
@@ -560,7 +561,8 @@ object Cli {
   /** A command's source, resolved by [[withSource]]: the tables `dump
     * create` stores and the namespace they live in, the FK edges its
     * subset follows (read on first use) and a loader. `parsed` is a
-    * parsed dump's path and listing (the SQL tools, `--file`, `-i`);
+    * parsed dump's input, as messages name it (the `--file` path,
+    * `stdin` for `-i`, the SQL tool), and its listing;
     * `archive` marks a mongodump source, whose dump stores the archive
     * itself.
     */
@@ -579,8 +581,9 @@ object Cli {
   }
 
   /** Resolve a command's source and run `body` over it: the dump file
-    * `dumpFile` when given, else the config's — a mongodump archive, a
-    * pg_dump/mysqldump dump, a JDBC database or a parquet tables dir.
+    * `dumpFile` (its path, and the input it holds) when given, else the
+    * config's — a mongodump archive, a pg_dump/mysqldump dump, a JDBC
+    * database or a parquet tables dir.
     * Tool output spools in the command's [[Spool]] scope, and a dump is
     * parsed once and pinned for `body` ([[DumpReader.withParsed]]), so
     * the loader must not outlive `body`. `forDump` pushes the config's
@@ -589,17 +592,17 @@ object Cli {
     * enforce them exactly).
     */
   private def withSource[A](c: GraftConfig, spark: SparkSession, forDump: Boolean,
-                            dumpFile: Option[String] = None)(body: Source => A): A = {
+                            dumpFile: Option[(String, String)] = None)(body: Source => A): A = {
     val root = c.datastore.map(_.rootUri)
-    def fromDump(path: String): A =
+    def fromDump(path: String, input: String): A =
       DumpReader.withParsed(DumpReader.statements(spark, path)) { dump =>
         val l = dump.listing
         val db = c.sourceConf.db
         body(new Source((l.insertRefs ++ l.copyRefs).map(_._2).toSeq.sorted, db, l.fkEdges,
-          dump.table(db, _), parsed = Some(path -> l)))
+          dump.table(db, _), parsed = Some(input -> l)))
       }
     dumpFile match {
-      case Some(path) => fromDump(path)
+      case Some((path, input)) => fromDump(path, input)
       case None => (c.sourceMongo, c.sourceJdbc) match {
         // live Mongo leg (reference source/mongodb.rs:66-101): the
         // archive is decoded on the executors (r16) — the driver never
@@ -622,6 +625,7 @@ object Cli {
           val pg = pgToolsMode(spark, conn.url)
           val (skip, only) =
             if (forDump) (c.filters.skipTables, c.filters.onlyTables) else (Nil, Nil)
+          val tool = if (pg) "pg_dump" else "mysqldump"
           fromDump(Spool.chunked(spark, root, "sqldump", Some(pg), spoolChunkBytes(spark))(o =>
             if (pg)
               graft.ingest.PgLive.dumpToStream(pgConn(conn), o,
@@ -629,11 +633,11 @@ object Cli {
                 // --table={db}.{table} (source/postgres.rs:133-137);
                 // the db part of a TableRef IS the pg schema
                 onlyTables = only.map(r => s"${r.database}.${r.table}"),
-                cmd = toolCmd(spark, "pg_dump"))
+                cmd = toolCmd(spark, tool))
             else
               graft.ingest.MySqlLive.dumpToStream(mysqlConn(conn), o,
                 skipTables = skip.map(_.table), onlyTables = only.map(_.table),
-                cmd = toolCmd(spark, "mysqldump"))))
+                cmd = toolCmd(spark, tool))), tool)
         // partitioned JDBC range scans, listing and reads scoped to
         // source.schema — a multi-schema database would otherwise
         // enumerate foreign-schema tables and read whichever one

@@ -22,7 +22,9 @@ import org.apache.spark.storage.StorageLevel
   *     from the plan. For corpus-sized frames several consumers read
   *     within one stage, where surviving executor loss matters and the
   *     plan behind the pin stays shallow. It throws outside a scope: a
-  *     cache nobody releases stays for the whole session.
+  *     cache nobody releases stays for the whole session. Once an
+  *     action has built the whole cache, [[rowCount]] reads the pin's
+  *     row count without a job.
   *   - [[checkpoint]] cuts lineage: the frame materializes (eagerly by
   *     default) at MEMORY_AND_DISK and its plan stops at the pin. For
   *     loops whose plan would otherwise grow each round, and for skinny
@@ -97,6 +99,22 @@ object Pins {
     val outer = current.get
     scoped(checkpointInto(outer, body, name, eager = true))
   }
+
+  /** The row count of `ds`, without a job when an earlier action built
+    * its whole [[persist]] cache: the count Spark recorded while
+    * building it, which its planner reads as the cache's statistics.
+    * A pin nothing built, or built only in part (a `limit` reads the
+    * partitions it needs), and a frame that is no cache pin fall back
+    * to `count()`. Spark marks a cache built once every partition's
+    * task has completed exactly once, so a partition built twice also
+    * falls back; a block lost and rebuilt after that mark is counted
+    * twice, as in the planner's statistics.
+    */
+  def rowCount(ds: Dataset[_]): Long =
+    ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
+      .map(_.cachedRepresentation.cacheBuilder)
+      .filter(_.isCachedColumnBuffersLoaded)
+      .fold(ds.count())(_.rowCountStats.value.longValue)
 
   /** Release `ds` before its scope exits, once nothing reads it any
     * more (a loop's superseded round, say).

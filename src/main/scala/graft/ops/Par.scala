@@ -17,15 +17,17 @@ package graft.ops
   * scarce worker thread for the action's full duration (ADVICE r16).
   */
 private[graft] object Par {
-  import scala.concurrent.{Await, ExecutionContext, Future}
+  import org.apache.spark.sql.classic.SparkSession
+  import org.apache.spark.sql.execution.SQLExecution
+  import scala.concurrent.{Await, Future, Promise}
   import scala.concurrent.duration.Duration
+  import scala.util.{Failure, Success}
 
-  private val ec: ExecutionContext = ExecutionContext.fromExecutor(
-    java.util.concurrent.Executors.newCachedThreadPool(r => {
-      val t = new Thread(r, "graft-par")
-      t.setDaemon(true)
-      t
-    }))
+  private val pool = java.util.concurrent.Executors.newCachedThreadPool(r => {
+    val t = new Thread(r, "graft-par")
+    t.setDaemon(true)
+    t
+  })
 
   /** If the caller-thread action `a` throws, the already-running `b`
     * is still AWAITED before rethrowing (its failure suppressed onto
@@ -51,11 +53,18 @@ private[graft] object Par {
     * that may throw before awaiting should await in a finally — an
     * un-awaited future is the orphaned-job leak [[both]] closes.
     * `b` runs under the caller's [[graft.Pins]] scope, so its pins are
-    * released with the caller's.
+    * released with the caller's, and under the caller's active session
+    * and Spark local properties (job group, description, scheduler
+    * pool), which a pooled thread would otherwise keep from whichever
+    * thread created it; the thread's own are restored afterwards.
     */
   def future[B](b: => B): Future[B] = {
     val run = graft.Pins.inCurrentScope(b)
-    Future(run())(ec)
+    val done = Promise[B]()
+    SQLExecution.withThreadLocalCaptured(SparkSession.active, pool) {
+      done.complete(try Success(run()) catch { case t: Throwable => Failure(t) })
+    }
+    done.future
   }
 
   def await[B](f: Future[B]): B = Await.result(f, Duration.Inf)

@@ -456,9 +456,9 @@ object Sampling {
     * (stride < window ⇒ overlapping chunks, the usual training shape so
     * no span is ever seen only at a window edge; stride == window ⇒ a
     * partition of the stream). Emits (doc_id, chunk_idx, chunk_text,
-    * n_chunk_tokens); the final chunks of a doc are shorter than
-    * `window` rather than padded — padding policy belongs to the
-    * trainer, not the corpus.
+    * n_chunk_tokens) and then the doc's `carry` columns; the final
+    * chunks of a doc are shorter than `window` rather than padded —
+    * padding policy belongs to the trainer, not the corpus.
     *
     * Scale shape: pure narrow per-row work — tokenize, one
     * `sequence`+`explode` over the start offsets, `slice` per chunk.
@@ -467,18 +467,19 @@ object Sampling {
     * asked for.
     */
   def chunkTokens(df: DataFrame, id: Column, text: Column,
-                  window: Int, stride: Int): DataFrame = {
+                  window: Int, stride: Int, carry: Seq[String] = Nil): DataFrame = {
     require(window > 0 && stride > 0, "window and stride must be positive")
     require(stride <= window, s"stride=$stride > window=$window would drop tokens")
     val toks = TextAnalysis.tokens(text)
-    df.select(id.as("doc_id"), toks.as("t"))
-      .select(col("doc_id"), col("t"),
-        explode(sequence(lit(0), size(col("t")) - 1, lit(stride))).as("start"))
-      .select(col("doc_id"), (col("start") / stride).cast("int").as("chunk_idx"),
-        slice(col("t"), col("start") + 1, lit(window)).as("c"))
-      .select(col("doc_id"), col("chunk_idx"),
+    val carried = carry.map(col)
+    df.select(Seq(id.as("doc_id"), toks.as("t")) ++ carried: _*)
+      .select(Seq(col("doc_id"), col("t"),
+        explode(sequence(lit(0), size(col("t")) - 1, lit(stride))).as("start")) ++ carried: _*)
+      .select(Seq(col("doc_id"), (col("start") / stride).cast("int").as("chunk_idx"),
+        slice(col("t"), col("start") + 1, lit(window)).as("c")) ++ carried: _*)
+      .select(Seq(col("doc_id"), col("chunk_idx"),
         concat_ws(" ", col("c")).as("chunk_text"),
-        size(col("c")).cast("long").as("n_chunk_tokens"))
+        size(col("c")).cast("long").as("n_chunk_tokens")) ++ carried: _*)
   }
 
   /** [[chunkTokens]] as DuckDB SQL over relation `documents` — the same

@@ -287,24 +287,33 @@ object CorpusPipeline {
   /** Run the configured stage chain over the input documents table and
     * write the result to `output_dir` as parquet. Shaping stages
     * transform the (id, text, …) frame and may append columns (e.g.
-    * `rank`); a terminal stage (chunk/pack) must be last. Per-stage
-    * row counts stream through `out` — the operator's progress report,
-    * derived from one count per stage boundary (tiny driver scalars,
-    * never row data). Returns the terminal stage's count, which is the
-    * output's row count. The run is one [[Pins]] scope: a stage's pin
-    * is released once the next stage has materialized (unless it feeds
-    * an admission artifact), and every pin the stages took is released
-    * when the run returns.
+    * `rank`); a terminal stage (chunk/pack) must be last. The chain
+    * runs as the one output write; once it is written, each stage's
+    * row count goes through `out` in stage order — the operator's
+    * progress report, read from the stage's pin, which the write built
+    * ([[Pins.rowCount]]). Returns the terminal stage's count, which is
+    * the output's row count. The run is one [[Pins]] scope: every
+    * stage's pin is held until the run returns.
     */
   def run(spark: SparkSession, conf: CorpusPipelineConf,
           out: String => Unit): Long = Pins.scoped {
     validateStages(conf)
     val docs0 = loadInput(spark, conf)
     out(s"input: ${conf.inputDir}")
-    // each stage boundary persists before its count, so the count AND
-    // the next stage read materialized blocks — without this, counting
-    // stage k recomputes stages 1..k and the chain is O(stages²) passes
-    // over the corpus. MEMORY_AND_DISK keeps lineage for executor loss.
+    // each stage output is pinned (lazily, lineage kept), so a stage
+    // that reads its input twice still computes each upstream stage
+    // once, and the write leaves every stage's row count in its pin
+    val frames = conf.stages.scanLeft(baseFrame(docs0, conf)) { (df, st) =>
+      Pins.persist(applyStage(df, st, conf.idCol, docs0, conf.textCol),
+        s"corpus.stage.${st.kind}")
+    }
+    val result = frames.last
+    result.write.mode("overwrite").parquet(conf.outputDir)
+    val rows = conf.stages.zip(frames.tail).map { case (st, df) =>
+      val n = Pins.rowCount(df)
+      out(f"stage ${st.kind}%-20s rows=$n")
+      n
+    }.last
     // Eager admission artifacts: when the chain is one an incremental
     // run admits ([[incrementalChainProblem]]), this run already HAS
     // everything the `<output>.artifacts/` indexes need — the frames
@@ -316,29 +325,10 @@ object CorpusPipeline {
     // like [dedup_exact, pii_scrub] fails the rule: it rewrites text
     // AFTER the dedup keys were hashed, so eager artifacts from it would
     // hold fingerprints no increment could match; it keeps the lazy
-    // bootstrap, which fingerprints the final output. The entering
-    // frames stay persisted (disk-backed) until the artifact write;
-    // recomputing each from lineage would cost O(dedup stages) extra
-    // corpus passes on the ingest job.
+    // bootstrap, which fingerprints the final output.
     val eager = incrementalChainProblem(conf).isEmpty
-    val entering = collection.mutable.Map[String, DataFrame]()
-    // at most TWO stages stay pinned (once next's count() has
-    // materialized it, the predecessor's blocks are never read again) —
-    // plus the retained dedup-entering frames when writing eagerly
-    var prev: Option[DataFrame] = None
-    var rows = 0L
-    val result = conf.stages.foldLeft(baseFrame(docs0, conf)) { (df, st) =>
-      if (eager && DedupKinds.contains(st.kind) && !entering.contains(st.kind))
-        entering(st.kind) = df
-      val next = Pins.persist(applyStage(df, st, conf.idCol, docs0, conf.textCol),
-        s"corpus.stage.${st.kind}")
-      rows = next.count()
-      out(f"stage ${st.kind}%-20s rows=$rows")
-      prev.filterNot(p => entering.values.exists(_ eq p)).foreach(Pins.release)
-      prev = Some(next)
-      next
-    }
-    result.write.mode("overwrite").parquet(conf.outputDir)
+    val entering = conf.stages.map(_.kind).zip(frames)
+      .filter(kf => DedupKinds(kf._1)).distinctBy(_._1).toMap
     // stale-artifact hygiene: overwriting the output invalidates any
     // admission artifacts a previous incremental sequence left beside
     // it — a later `--into` must never admit against an index of data
@@ -346,7 +336,7 @@ object CorpusPipeline {
     val artRoot = new org.apache.hadoop.fs.Path(conf.outputDir + ".artifacts")
     artRoot.getFileSystem(spark.sessionState.newHadoopConf()).delete(artRoot, true)
     if (eager && entering.nonEmpty) {
-      writeArtifacts(conf, artRoot.toString, entering.toMap, result, "overwrite")
+      writeArtifacts(conf, artRoot.toString, entering, result, "overwrite")
       out(s"admission artifacts written beside the output at $artRoot")
     }
     out(s"output: ${conf.outputDir} rows=$rows")
@@ -1201,13 +1191,13 @@ object CorpusPipeline {
       case "chunk" =>
         // honor a custom id_column in the artifact, and carry a
         // curriculum `rank` through to the chunks (the whole point of
-        // ranking before chunking — same join-back as capstone v5)
-        val chunks = Sampling.chunkTokens(df, col(id), text,
-            st.windowVal(64), st.strideVal(st.windowVal(64)))
+        // ranking before chunking) on each doc's own row, not by a join
+        // back whose build side, and so the chunks' order, would follow
+        // the planner's size estimate of the ranked frame
+        Sampling.chunkTokens(df, col(id), text,
+            st.windowVal(64), st.strideVal(st.windowVal(64)),
+            carry = Seq("rank").filter(df.columns.contains))
           .withColumnRenamed("doc_id", id)
-        if (df.columns.contains("rank"))
-          chunks.join(df.select(col(id), col("rank")), Seq(id))
-        else chunks
       case "epoch_mix" =>
         // terminal: the epoch-expanded (id, stratum, copy_idx) manifest
         // a training loader consumes — strata are language guesses,

@@ -288,6 +288,24 @@ class CliSpec extends SparkSpec {
     assert(!listed.exists(_.contains("refused")), s"got: $listed")
   }
 
+  test("cli: dump create -i with no data names stdin, not the spool it deleted") {
+    val conf = writeConf(tempDir("graft-cli-store-").toString,
+      tempDir("graft-cli-restore-").toString)
+    val printed = collection.mutable.Buffer[String]()
+    assert(Cli.run(Seq("-c", conf, "dump", "create", "x", "-i"), spark, printed += _,
+      stdin = new java.io.ByteArrayInputStream(Array[Byte]())) == 1)
+    assert(printed.exists(_.contains("no INSERT or COPY data found in stdin")), s"got: $printed")
+    assert(!printed.exists(_.contains("spool-")), s"got: $printed")
+    // --file names its path
+    val ddlOnly = tempFile("graft-ddl-only-", ".sql")
+    Files.writeString(ddlOnly, "CREATE TABLE public.customer (c_custkey bigint);\n")
+    printed.clear()
+    assert(Cli.run(Seq("-c", conf, "dump", "create", "y", "--file", ddlOnly.toString),
+      spark, printed += _) == 1)
+    assert(printed.exists(_.contains(s"no INSERT or COPY data found in $ddlOnly")),
+      s"got: $printed")
+  }
+
   test("cli: dump create -i ingests a dump piped on stdin (pg_dump | graft)") {
     val store = tempDir("graft-cli-store-").toString
     val restore = tempDir("graft-cli-restore-").toString
@@ -382,6 +400,97 @@ class CliSpec extends SparkSpec {
       graft.pipeline.CorpusPipeline.run(spark,
         graft.pipeline.CorpusPipeline.load(bad2), _ => ())
     }
+  }
+
+  /** The stage chain of a `corpus run` config's `stages:` block. */
+  private def stageKinds(stages: String): Seq[String] =
+    stages.linesIterator.collect { case l if l.trim.startsWith("- kind:") =>
+      l.trim.stripPrefix("- kind:").trim }.toSeq
+
+  /** The first `k` stages of a `stages:` block, options included. */
+  private def stagePrefix(stages: String, k: Int): String = {
+    val lines = stages.linesIterator.toSeq
+    val starts = lines.indices.filter(i => lines(i).trim.startsWith("- kind:"))
+    lines.take(if (k < starts.size) starts(k) else lines.size).mkString("", "\n", "\n")
+  }
+
+  /** `corpus run` over `input` with `stages`, releasing every pin:
+    * the printed `rows=` per stage, and the output's own row count.
+    */
+  private def corpusRows(input: String, stages: String): (Seq[(String, Long)], Long) = {
+    val root = tempDir("graft-corpus-rows-")
+    val conf = root.resolve("c.yaml")
+    Files.writeString(conf,
+      s"input_dir: $input\noutput_dir: ${root.resolve("out")}\n$stages")
+    val printed = collection.mutable.Buffer[String]()
+    assert(runReleasing(Seq("corpus", "run", conf.toString), printed += _) == 0)
+    val StageRows = """stage (\S+)\s+rows=(\d+)""".r
+    (printed.toSeq.collect { case StageRows(kind, n) => kind -> n.toLong },
+      spark.read.parquet(root.resolve("out").toString).count())
+  }
+
+  test("cli: corpus run prints each stage's exact rows, the rows a run up to that stage writes") {
+    import org.apache.spark.sql.functions.col
+    // the benchmark chain over CodegenCacheSpec's seeded docs, with long
+    // ids so its compiled classes stay apart from that spec's
+    val seeded = tempDir("graft-corpus-rows-in-").resolve("docs.parquet").toString
+    CodegenCacheSpec.corpus(400, seed = 11).toDF("doc_id", "text", "source")
+      .withColumn("doc_id", col("doc_id").cast("long")).write.parquet(seeded)
+    // semantic dedup and D4 pruning, which read their input in part,
+    // after per-row stages
+    val semantic =
+      s"""stages:
+        |  - kind: pii_scrub
+        |  - kind: gopher_filter
+        |  - kind: dedup_semantic
+        |    embeddings_dir: $sfDir/embeddings.parquet
+        |    threshold: 0.4
+        |  - kind: diversify
+        |    embeddings_dir: $sfDir/embeddings.parquet
+        |    drop_frac: 0.2
+        |    n: 8
+        |  - kind: chunk
+        |    window: 64
+        |    stride: 48
+        |""".stripMargin
+    for ((input, stages) <- Seq(seeded -> CodegenCacheSpec.chain,
+        s"$sfDir/documents.parquet" -> semantic)) {
+      val kinds = stageKinds(stages)
+      val (printed, written) = corpusRows(input, stages)
+      assert(printed.map(_._1) == kinds, s"stage lines out of order: $printed")
+      assert(printed.last._2 == written)
+      assert(printed.map(_._2).distinct.size > 2, s"too few stages drop rows: $printed")
+      for (k <- 1 until kinds.size) {
+        val (_, upTo) = corpusRows(input, stagePrefix(stages, k))
+        assert(printed(k - 1)._2 == upTo,
+          s"stage ${kinds(k - 1)} printed rows=${printed(k - 1)._2}, a run up to it wrote $upTo")
+      }
+    }
+  }
+
+  test("cli: corpus run whose first filter drops every doc prints rows=0 for it and every later stage") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val seeded = tempDir("graft-corpus-none-in-").resolve("docs.parquet").toString
+    CodegenCacheSpec.corpus(100, seed = 5).toDF("doc_id", "text", "source")
+      .withColumn("doc_id", $"doc_id".cast("long")).write.parquet(seeded)
+    val stages =
+      s"""stages:
+         |  - kind: html_strip
+         |  - kind: keyword_filter
+         |    block_tokens: [${CodegenCacheSpec.vocab.mkString(", ")}]
+         |  - kind: dedup_exact
+         |  - kind: dedup_near
+         |  - kind: perplexity_filter
+         |  - kind: curriculum_rank
+         |  - kind: chunk
+         |""".stripMargin
+    val (printed, written) = Await.result(Future(corpusRows(seeded, stages)), 5.minutes)
+    assert(printed.head == ("html_strip" -> 100L))
+    assert(printed.tail.map(_._1) == stageKinds(stages).tail && printed.tail.forall(_._2 == 0),
+      s"got: $printed")
+    assert(written == 0)
   }
 
   test("cli: corpus stream scrubs, admits against the corpus, appends exactly-once") {

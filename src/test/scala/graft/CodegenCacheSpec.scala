@@ -13,58 +13,7 @@ import graft.pipeline.CorpusPipeline
   */
 class CodegenCacheSpec extends SparkSpec {
   import spark.implicits._
-
-  // the 11-stage curation chain of the corpus benchmark
-  private val chain = """stages:
-    |  - kind: html_strip
-    |  - kind: pii_scrub
-    |  - kind: gopher_filter
-    |  - kind: compression_filter
-    |    threshold: 0.1
-    |  - kind: line_dedup_within
-    |  - kind: dedup_exact
-    |  - kind: dedup_near
-    |  - kind: perplexity_filter
-    |    keep: 2
-    |  - kind: mixture_temperature
-    |    alpha: 0.5
-    |  - kind: curriculum_rank
-    |  - kind: chunk
-    |    window: 64
-    |    stride: 48
-    |""".stripMargin
-
-  private val vocab = Seq("spark", "window", "merge", "table", "column", "vector", "stream",
-    "value", "data", "small", "join", "filter", "big", "group", "hash", "customer", "sort",
-    "order", "slow", "line", "part", "fast", "row", "the", "agg", "key", "query", "a",
-    "scan", "batch")
-
-  /** `n` seeded docs: markup, PII, repeated lines, and 5% exact plus 5%
-    * near copies (last word changed) of earlier docs. The ids are ints,
-    * unlike the other specs' long ids, so most of the chain's generated
-    * classes differ from theirs and the first run still compiles them in
-    * a JVM that has run other chains (129 of 191 after the corpus specs).
-    */
-  private def corpus(n: Int, seed: Long): Seq[(Int, String, String)] = {
-    val rng = new scala.util.Random(seed)
-    val texts = Array.tabulate(n) { d =>
-      val lines = Seq.fill(2 + rng.nextInt(5))(
-        Seq.fill(6 + rng.nextInt(9))(vocab(rng.nextInt(vocab.size))).mkString(" "))
-      val body = lines.mkString("\n")
-      rng.nextDouble() match {
-        case k if k < 0.10 => lines.mkString("<html><body><p>", "</p><p>", "</p></body></html>")
-        case k if k < 0.13 => s"$body\ncontact ${lines.head.take(5)}$d@mail.example.org"
-        case k if k < 0.18 => s"$body\n${lines.head}\n${lines.head}"
-        case _ => body
-      }
-    }
-    for (d <- 1 until n) rng.nextDouble() match {
-      case u if u < 0.05 => texts(d) = texts(rng.nextInt(d))
-      case u if u < 0.10 => texts(d) = texts(rng.nextInt(d)).replaceAll("[a-z]+$", "zeta")
-      case _ =>
-    }
-    texts.toSeq.zipWithIndex.map { case (t, d) => (d, t, s"src${d % 20}") }
-  }
+  import CodegenCacheSpec.{chain, corpus}
 
   private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
@@ -92,5 +41,59 @@ class CodegenCacheSpec extends SparkSpec {
     assert(counts.head._2 > 0 && counts.forall(_._2 == counts.head._2))
     assert(repeats.min <= first * 0.05,
       s"the repeats compiled ${repeats.mkString(", ")} classes, the first run $first")
+  }
+}
+
+object CodegenCacheSpec {
+  // the 11-stage curation chain of the corpus benchmark
+  val chain = """stages:
+    |  - kind: html_strip
+    |  - kind: pii_scrub
+    |  - kind: gopher_filter
+    |  - kind: compression_filter
+    |    threshold: 0.1
+    |  - kind: line_dedup_within
+    |  - kind: dedup_exact
+    |  - kind: dedup_near
+    |  - kind: perplexity_filter
+    |    keep: 2
+    |  - kind: mixture_temperature
+    |    alpha: 0.5
+    |  - kind: curriculum_rank
+    |  - kind: chunk
+    |    window: 64
+    |    stride: 48
+    |""".stripMargin
+
+  val vocab = Seq("spark", "window", "merge", "table", "column", "vector", "stream",
+    "value", "data", "small", "join", "filter", "big", "group", "hash", "customer", "sort",
+    "order", "slow", "line", "part", "fast", "row", "the", "agg", "key", "query", "a",
+    "scan", "batch")
+
+  /** `n` seeded docs: markup, PII, repeated lines, and 5% exact plus 5%
+    * near copies (last word changed) of earlier docs. The ids are ints,
+    * unlike the other specs' long ids, so most of the chain's generated
+    * classes differ from theirs and the first run still compiles them in
+    * a JVM that has run other chains (129 of 191 after the corpus specs).
+    */
+  def corpus(n: Int, seed: Long): Seq[(Int, String, String)] = {
+    val rng = new scala.util.Random(seed)
+    val texts = Array.tabulate(n) { d =>
+      val lines = Seq.fill(2 + rng.nextInt(5))(
+        Seq.fill(6 + rng.nextInt(9))(vocab(rng.nextInt(vocab.size))).mkString(" "))
+      val body = lines.mkString("\n")
+      rng.nextDouble() match {
+        case k if k < 0.10 => lines.mkString("<html><body><p>", "</p><p>", "</p></body></html>")
+        case k if k < 0.13 => s"$body\ncontact ${lines.head.take(5)}$d@mail.example.org"
+        case k if k < 0.18 => s"$body\n${lines.head}\n${lines.head}"
+        case _ => body
+      }
+    }
+    for (d <- 1 until n) rng.nextDouble() match {
+      case u if u < 0.05 => texts(d) = texts(rng.nextInt(d))
+      case u if u < 0.10 => texts(d) = texts(rng.nextInt(d)).replaceAll("[a-z]+$", "zeta")
+      case _ =>
+    }
+    texts.toSeq.zipWithIndex.map { case (t, d) => (d, t, s"src${d % 20}") }
   }
 }
