@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 import graft.config.GraftConfig
 import graft.ingest.{DumpReader, Spool}
+import graft.ops.Par
 import graft.pipeline.Pipeline
 import graft.store.Datastore
 
@@ -298,11 +299,11 @@ object Cli {
         val url = s"jdbc:derby:$dbDir;create=true"
         withRestoreFrames(c, store, name, spark) { (tables, _) =>
           tables.foreach { case (t, df) =>
-            // persist: the table's typing would otherwise run twice —
-            // once for the JDBC write, once for the count
+            // the JDBC write builds the whole pin, so its row count
+            // comes from the cache with no second job
             val pinned = Pins.persist(df, s"restore.$t")
             graft.ingest.Jdbc.writeTable(pinned, url, t)
-            out(s"restored: $t (${pinned.count()} rows)")
+            out(s"restored: $t (${Pins.rowCount(pinned)} rows)")
             Pins.release(pinned)
           }
         }
@@ -535,13 +536,20 @@ object Cli {
           case None =>
             val outDir = dest.output_dir.map(GraftConfig.substituteEnvVar).getOrElse(
               throw new IllegalArgumentException("destination.output_dir is required"))
-            tables.foreach { case (t, df) =>
-              dest.format.getOrElse("parquet") match {
-                case "parquet" => df.write.mode("overwrite").parquet(s"$outDir/$t")
-                case "console" => df.show(20, truncate = false) // D5 stdout sink
-                case f => throw new IllegalArgumentException(s"unsupported destination format: $f")
+            dest.format.getOrElse("parquet") match {
+              // the tables write concurrently, at most
+              // restoreParallelism at a time, each job on every core
+              case "parquet" =>
+                Par.all(restoreParallelism(spark))(tables.toSeq.map { case (t, df) => () =>
+                  try df.write.mode("overwrite").parquet(s"$outDir/$t")
+                  catch { case e: Throwable => throw new RuntimeException(s"restore of table $t failed", e) }
+                })
+                tables.keys.foreach(t => out(s"restored: $t"))
+              case "console" => tables.foreach { case (t, df) =>
+                df.show(20, truncate = false) // D5 stdout sink
+                out(s"restored: $t")
               }
-              out(s"restored: $t")
+              case f => throw new IllegalArgumentException(s"unsupported destination format: $f")
             }
         }
         }
@@ -753,11 +761,14 @@ object Cli {
       }
       .getOrElse(graft.ingest.ChunkedSpool.DefaultChunkBytes)
 
-  /** `spark.graft.restoreParallelism` — concurrent per-table psql data
-    * pipes in the tool restore leg (r19 verdict #5). Default 4: the
-    * pipes contend on the destination server's write path, not on
+  /** `spark.graft.restoreParallelism` — how many tables `dump restore`
+    * writes at once: the per-table psql data pipes of the tool restore
+    * leg (r19 verdict #5) and the per-table parquet writes. Default 4:
+    * the pipes contend on the destination server's write path, not on
     * Spark, so a small constant captures most of the multiple before
-    * the server saturates; 1 restores the single-pipe shape.
+    * the server saturates, and a few concurrent parquet writes keep the
+    * cores busy through each write's job barrier; 1 restores one table
+    * at a time.
     */
   private[graft] def restoreParallelism(spark: SparkSession): Int = {
     val n = spark.conf.getOption("spark.graft.restoreParallelism")

@@ -19,10 +19,14 @@ import graft.model.{FkEdge, Statement, StatementKind}
   * `tasks/full_dump.rs:72-77`), so *whole-file-per-task* is the natural
   * parallel unit — each part is split into statements independently,
   * which is correct because chunk boundaries in the reference's own
-  * format always fall between statements. Statement parsing, typing,
-  * and transformation then run distributed; nothing touches the driver
-  * except the (tiny) DDL header/footer and the sample-free type
-  * bounds of a table without DDL (one O(#columns) aggregation).
+  * format always fall between statements. An input of fewer parts than
+  * the cluster has cores (one large file) is spread by byte range over
+  * `defaultParallelism` partitions in the same pass ([[readFiles]]), so
+  * a single-file dump still parses, types and writes on every core.
+  * Statement parsing, typing, and transformation then run distributed;
+  * nothing touches the driver except the (tiny) DDL header/footer, the
+  * per-partition table listing and the sample-free type bounds of a
+  * table without DDL (one O(#columns) aggregation).
   */
 object DumpReader {
 
@@ -119,6 +123,15 @@ object DumpReader {
     * partition order is dump order, a large file gets a partition of its
     * own and small chunks share one. `pgStrings` forces the dialect;
     * None applies the header rule of [[Dialect]].
+    *
+    * Fewer packs than `defaultParallelism` (one large file, say) would
+    * leave every downstream frame on that many tasks, so the same pass
+    * spreads the statements over `defaultParallelism` equal byte ranges
+    * of the input: each statement's range is its file's starting byte
+    * plus its proportional offset within the file, and one RDD shuffle
+    * (no Dataset exchange, which AQE would run as a job of its own)
+    * sorts each range by `idx`. Ranges follow dump order, so partition
+    * order is still dump order and `idx` is unchanged.
     */
   private[graft] def readFiles(spark: SparkSession, files: Seq[FileStatus],
                                decode: Array[Byte] => Array[Byte],
@@ -128,20 +141,47 @@ object DumpReader {
       Dialect(Some(pg), firstPg = false))
     val sql = spark.sessionState.conf
     val open = sql.filesOpenCostInBytes
+    val cores = spark.sparkContext.defaultParallelism
     val split = math.min(sql.filesMaxPartitionBytes, math.max(open,
-      files.map(_.getLen + open).sum / spark.sparkContext.defaultParallelism))
-    val packs = Vector.newBuilder[Vector[(String, Int)]]
-    var pack = Vector.empty[(String, Int)]
+      files.map(_.getLen + open).sum / cores))
+    val starts = files.scanLeft(0L)(_ + _.getLen)
+    val total = starts.last
+    val packs = Vector.newBuilder[Vector[InputFile]]
+    var pack = Vector.empty[InputFile]
     var packBytes = 0L
     files.zipWithIndex.foreach { case (f, rank) =>
       if (pack.nonEmpty && packBytes + f.getLen > split) { packs += pack; pack = Vector.empty; packBytes = 0L }
-      pack :+= ((f.getPath.toString, rank))
+      pack :+= InputFile(f.getPath.toString, rank, starts(rank), f.getLen)
       packBytes += f.getLen + open
     }
     val parts = (packs += pack).result()
     val conf = new SerializableConfiguration(spark.sessionState.newHadoopConf())
-    spark.createDataset(spark.sparkContext.parallelize(parts, parts.size)
-      .flatMap(_.iterator.flatMap { case (f, rank) => readFile(conf.value, f, rank, decode, dialect) }))
+    val read = spark.sparkContext.parallelize(parts, parts.size)
+    if (parts.size >= cores)
+      spark.createDataset(read.flatMap(_.iterator.flatMap(f =>
+        readFile(conf.value, f.path, f.rank, decode, dialect))))
+    else
+      spark.createDataset(read.flatMap(_.iterator.flatMap { f =>
+        val stmts = readFile(conf.value, f.path, f.rank, decode, dialect).toVector
+        val chars = math.max(1L, stmts.iterator.map(_.sql.length.toLong).sum)
+        var seen = 0L
+        stmts.iterator.map { s =>
+          val at = f.start + f.len * (seen.toDouble / chars)
+          seen += s.sql.length
+          ((math.min(cores - 1, (at / total * cores).toInt), s.idx), s)
+        }
+      }).repartitionAndSortWithinPartitions(new ByteRanges(cores)).values)
+  }
+
+  /** One input file of [[readFiles]]: its rank, and where its bytes
+    * start in the concatenated input.
+    */
+  private final case class InputFile(path: String, rank: Int, start: Long, len: Long)
+
+  /** Partitions `(range, idx)` keys by their range. */
+  private final class ByteRanges(ranges: Int) extends org.apache.spark.Partitioner {
+    def numPartitions: Int = ranges
+    def getPartition(key: Any): Int = key.asInstanceOf[(Int, Long)]._1
   }
 
   /** Read dump file(s) into a Dataset of classified statements.
@@ -228,25 +268,28 @@ object DumpReader {
       ddl: Map[String, String],
       fkEdges: Seq[FkEdge])
 
-  /** [[Listing]] of a parsed dump in ONE distributed pass, like the
-    * reference's single streaming pass in
-    * `table_stats_by_database_and_table_name`. Data statements reach
-    * the driver only as distinct (kind, database, table) refs
-    * (map-side combined, O(#tables)); CREATE/ALTER TABLE statements
-    * come back whole and are replayed in dump order, so a later CREATE
-    * TABLE of a name wins.
+  /** [[Listing]] of a parsed dump in ONE job, like the reference's
+    * single streaming pass in `table_stats_by_database_and_table_name`.
+    * Each partition keeps its distinct (kind, database, table) data refs
+    * and its CREATE/ALTER TABLE statements whole; the driver merges
+    * them (O(#tables + #DDL) rows, no shuffle) and replays the DDL in
+    * dump order, so a later CREATE TABLE of a name wins.
     */
   def listing(stmts: Dataset[Statement]): Listing = {
     import stmts.sparkSession.implicits._
-    val rows = stmts.flatMap { s =>
-      s.kind match {
-        case StatementKind.InsertInto | StatementKind.CopyBlock =>
-          Some((s.kind, s.database, s.table, -1L, ""))
-        case StatementKind.CreateTable | StatementKind.AlterTable =>
-          Some((s.kind, s.database, s.table, s.idx, s.sql))
-        case _ => None
+    val rows = stmts.mapPartitions { it =>
+      val seen = collection.mutable.HashSet[(String, String, String, Long, String)]()
+      it.foreach { s =>
+        s.kind match {
+          case StatementKind.InsertInto | StatementKind.CopyBlock =>
+            seen += ((s.kind, s.database, s.table, -1L, ""))
+          case StatementKind.CreateTable | StatementKind.AlterTable =>
+            seen += ((s.kind, s.database, s.table, s.idx, s.sql))
+          case _ => ()
+        }
       }
-    }.distinct().collect().sortBy(_._4)
+      seen.iterator
+    }.collect().distinct.sortBy(_._4)
     def refs(kind: String): Set[(String, String)] =
       rows.collect { case (k, db, t, _, _) if k == kind => (db, t) }.toSet
     Listing(
@@ -278,9 +321,11 @@ object DumpReader {
     }
   }
 
-  /** Pin `stmts`, list them in one pass and run `body` over the
+  /** Pin `stmts`, list them in one job and run `body` over the
     * result, in a [[graft.Pins]] scope of its own: the pin, and every
-    * pin `body` takes, is released however `body` ends. Frames taken
+    * pin `body` takes, is released however `body` ends. The listing's
+    * job builds the pin, so a spread read ([[readFiles]]) shuffles once
+    * and every table frame reads the spread partitions. Frames taken
     * from the [[Parsed]] must not outlive `body`.
     */
   def withParsed[A](stmts: Dataset[Statement])(body: Parsed => A): A = Pins.scoped {

@@ -123,37 +123,19 @@ object PgLive {
     * them (pg_dump itself adds constraints AFTER data for exactly this
     * reason), so no data pipe can observe a half-loaded parent. A
     * failed table fails the restore loudly: every pipe is awaited,
-    * the first failure is primary and later ones attach as suppressed.
+    * the first failure is primary and later ones attach as suppressed
+    * ([[graft.ops.Par.all]]).
     */
   def restoreParallel(c: Conn, ddl: java.io.OutputStream => Unit,
                       tables: Seq[(String, java.io.OutputStream => Unit)],
                       wipe: Boolean, cmd: Seq[String] = Seq("psql"),
                       parallelism: Int = 4): Unit = {
     restore(c, ddl, wipe, cmd)
-    val n = math.max(1, math.min(parallelism, tables.size))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(n, r => {
-      val t = new Thread(r, "graft-pg-restore")
-      t.setDaemon(true)
-      t
+    graft.ops.Par.all(parallelism)(tables.map { case (t, write) => () =>
+      try restore(c, write, wipe = false, cmd)
+      catch { case e: Throwable => throw new RuntimeException(s"restore of table $t failed", e) }
     })
-    try {
-      val futs = tables.map { case (t, write) =>
-        t -> pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = restore(c, write, wipe = false, cmd)
-        })
-      }
-      var primary: Throwable = null
-      futs.foreach { case (t, f) =>
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            val cause = Option(e.getCause).getOrElse(e)
-            val wrapped = new RuntimeException(s"restore of table $t failed", cause)
-            if (primary == null) primary = wrapped else primary.addSuppressed(wrapped)
-        }
-      }
-      if (primary != null) throw primary
-    } finally pool.shutdown()
+    ()
   }
 
   /** Double-quoted identifier (`""` doubling) — the restore stream

@@ -48,6 +48,37 @@ private[graft] object Par {
     (ra, Await.result(fb, Duration.Inf))
   }
 
+  /** Run every action, at most `limit` at a time, and return their
+    * results in order. The caller's thread runs actions too, so at
+    * most `limit - 1` pool threads join it however many actions there
+    * are; each takes the next unstarted action until none is left.
+    * Every action runs under the caller's pin scope, session and local
+    * properties, as in [[future]], and every one is awaited: the first
+    * failure in action order is rethrown once all have ended, later
+    * ones suppressed onto it, as in [[both]].
+    */
+  def all[A](limit: Int)(actions: Seq[() => A]): Seq[A] = {
+    require(limit > 0, s"limit must be > 0, got: $limit")
+    val todo = actions.toVector
+    val results = new Array[scala.util.Try[A]](todo.size)
+    val next = new java.util.concurrent.atomic.AtomicInteger
+    def drain(): Unit = {
+      var i = next.getAndIncrement()
+      while (i < todo.size) {
+        results(i) = try Success(todo(i)()) catch { case t: Throwable => Failure(t) }
+        i = next.getAndIncrement()
+      }
+    }
+    val helpers = Vector.fill(math.min(limit, todo.size) - 1)(future(drain()))
+    drain()
+    helpers.foreach(await)
+    results.collect { case Failure(t) => t }.reduceOption { (first, later) =>
+      first.addSuppressed(later)
+      first
+    }.foreach(throw _)
+    results.toSeq.map(_.get)
+  }
+
   /** Kick `b` off now; [[await]] it after interleaving other (lazy,
     * non-blocking) plan construction on the calling thread. Callers
     * that may throw before awaiting should await in a finally — an

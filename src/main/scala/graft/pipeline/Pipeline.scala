@@ -17,7 +17,7 @@ import graft.model.FkEdge
   *          per-column transformers → statement re-synthesis → chunked
   *          compressed/encrypted datastore write + catalog entry.
   * restore: each stored chunk decoded and split once into a pinned
-  *          statement frame → one listing pass → per-table DataFrames
+  *          statement frame → one listing job → per-table DataFrames
   *          read from the pin → caller-chosen writer (parquet/JDBC/
   *          console) → pin released.
   *
@@ -148,17 +148,24 @@ object Pipeline {
     // front, exactly like pg_dump does: DumpSink synthesis is
     // pg-semantics ('' doubling, backslashes literal), and the marker
     // lets ANY consumer — ours or a plain psql restore of the stored
-    // text — scan the strings correctly
+    // text — scan the strings correctly. Header and DDL take one
+    // partition, so they store as one part: a local relation would
+    // spread them over defaultParallelism tiny parts, each compressed
+    // and encrypted on its own.
     val header = Seq("SET standard_conforming_strings = on;")
-    val statements = spark.createDataset(header ++ ddl).unionByName(inserts)
+    val statements = spark.createDataset(header ++ ddl).coalesce(1).unionByName(inserts)
     store.write(dumpName, statements, config.compressed, config.encryptionKey)
   }
 
   /** Restore: parse a stored dump once and pin it for `body`, which
     * gets the per-table frames and the stored CREATE TABLE statements
     * by table (empty when the dump predates DDL storage or the source
-    * had none). The frames read the pin, so they must not outlive
-    * `body`.
+    * had none). One job lists the dump and builds the pin; a dump
+    * stored as fewer parts than the cluster has cores is spread over
+    * `defaultParallelism` partitions in that job
+    * ([[DumpReader.readFiles]]), so each frame reads on every core and
+    * the frames are independent writes a caller may run concurrently.
+    * The frames read the pin, so they must not outlive `body`.
     */
   def restore[A](
       store: Datastore,

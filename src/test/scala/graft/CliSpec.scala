@@ -139,6 +139,137 @@ class CliSpec extends SparkSpec {
     assert(Cli.run(Seq("bogus"), spark, printed += _) == 1)
   }
 
+  /** Every job `body` ran (by job group) with its start and end times
+    * (ms, as the scheduler stamped them), and when `body` returned or
+    * threw. A marker job's end reaching the listener makes the log
+    * whole: the bus delivers events in order.
+    */
+  private def jobLog(body: => Unit): (Seq[(Long, Long)], Long) = {
+    val sc = spark.sparkContext
+    val tag = s"cli.jobs-${System.nanoTime}"
+    val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]
+    val ends = new java.util.concurrent.ConcurrentHashMap[Int, Long]
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      private val mine = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach { g =>
+          if (g == tag) starts.put(e.jobId, e.time)
+          if (g == s"$tag-marker") mine.add(e.jobId)
+        }
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
+        if (starts.containsKey(e.jobId)) ends.put(e.jobId, e.time)
+        if (mine.contains(e.jobId)) marker.countDown()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(tag, "cli")
+      val returned = try { body; System.currentTimeMillis() }
+        finally { sc.clearJobGroup() }
+      sc.setJobGroup(s"$tag-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(marker.await(30, java.util.concurrent.TimeUnit.SECONDS), "marker job never ended")
+      import scala.jdk.CollectionConverters._
+      (starts.asScala.toSeq.sortBy(_._1).map { case (id, t) => t -> ends.getOrDefault(id, Long.MaxValue) },
+        returned)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The most jobs of `jobs` running at one time. */
+  private def mostAtOnce(jobs: Seq[(Long, Long)]): Int =
+    jobs.flatMap { case (s, e) => Seq(s -> 1, e -> -1) }
+      .sortBy { case (t, d) => (t, d) } // an end before a start at the same ms
+      .scanLeft(0)(_ + _._2).max
+
+  /** A `dump restore` config over `store` into a parquet `restore` dir. */
+  private def restoreConf(store: String, restore: String): String = {
+    val conf = tempFile("graft-restore-conf-", ".yaml")
+    Files.writeString(conf,
+      s"""source:
+         |  tables_dir: /unused
+         |datastore:
+         |  local_disk:
+         |    dir: $store
+         |destination:
+         |  output_dir: $restore
+         |""".stripMargin)
+    conf.toString
+  }
+
+  /** Statements of a five-table dump, `bad` rows of t3 uncastable to its DDL. */
+  private def fiveTables(bad: Boolean): Seq[String] =
+    "SET standard_conforming_strings = on;" +: (1 to 5).flatMap { t =>
+      s"CREATE TABLE t$t (id integer, v text);" +: (1 to 200).map { i =>
+        val id = if (bad && t == 3 && i == 100) "'x'" else i.toString
+        s"INSERT INTO t$t (id, v) VALUES ($id, 'row $i of t$t');"
+      }
+    }
+
+  test("cli: dump restore writes at most restoreParallelism parquet tables at once") {
+    val store = tempDir("graft-par-restore-store-").toString
+    val restore = tempDir("graft-par-restore-").toString
+    new graft.store.Datastore(store, spark).write("five", fiveTables(bad = false).toDS())
+    val printed = collection.mutable.Buffer[String]()
+    spark.conf.set("spark.graft.restoreParallelism", "2")
+    val (jobs, _) = try jobLog {
+      assert(runReleasing(Seq("-c", restoreConf(store, restore), "dump", "restore", "five"),
+        printed += _) == 0)
+    } finally spark.conf.unset("spark.graft.restoreParallelism")
+    // the listing job, then one write job per table
+    assert(jobs.size == 6, jobs)
+    assert(mostAtOnce(jobs) == 2, jobs)
+    assert(printed.toSet == (1 to 5).map(t => s"restored: t$t").toSet, printed)
+    (1 to 5).foreach(t => assert(spark.read.parquet(s"$restore/t$t").count() == 200, t))
+  }
+
+  test("cli: a failed table write fails dump restore naming it, after every other write has ended") {
+    val store = tempDir("graft-fail-restore-store-").toString
+    val restore = tempDir("graft-fail-restore-").toString
+    new graft.store.Datastore(store, spark).write("five-bad", fiveTables(bad = true).toDS())
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    var failure: Throwable = null
+    val (jobs, returned) = jobLog {
+      failure = intercept[RuntimeException](Cli.run(
+        Seq("-c", restoreConf(store, restore), "dump", "restore", "five-bad"), spark, _ => ()))
+    }
+    assert(failure.getMessage == "restore of table t3 failed", failure)
+    assert(jobs.forall(_._2 <= returned), s"a job outlived the command: $jobs, returned $returned")
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == before)
+    // every other table was written whole
+    Seq(1, 2, 4, 5).foreach(t => assert(spark.read.parquet(s"$restore/t$t").count() == 200, t))
+  }
+
+  test("cli: ephemeral restore reads each table's row count from its pin, no count job") {
+    val store = tempDir("graft-cli-store-").toString
+    val conf = tempFile("graft-eph-conf-", ".yaml")
+    val tables = Seq("customer", "nation", "region")
+    Files.writeString(conf,
+      s"""source:
+         |  tables_dir: $sfDir
+         |  tables: [${tables.mkString(", ")}]
+         |datastore:
+         |  local_disk:
+         |    dir: $store
+         |""".stripMargin)
+    assert(Cli.run(Seq("-c", conf.toString, "dump", "create", "eph-rows"), spark, _ => ()) == 0)
+    val printed = collection.mutable.Buffer[String]()
+    val (rc, jobs) = jobsOf(
+      runReleasing(Seq("-c", conf.toString, "dump", "restore", "ephemeral", "eph-rows"), printed += _))
+    assert(rc == 0)
+    // the listing job, then one JDBC write per table
+    assert(jobs == 1 + tables.size)
+    val restored = printed.filter(_.startsWith("restored: "))
+    assert(restored.toSet == tables.map(t =>
+      s"restored: $t (${Tables.load(spark, sfDir, t).count()} rows)").toSet, printed)
+    val url = printed.find(_.startsWith("ephemeral database ready: "))
+      .map(_.stripPrefix("ephemeral database ready: ")).get
+    try java.sql.DriverManager.getConnection(url.replace(";create=true", ";shutdown=true"))
+    catch { case _: java.sql.SQLException => () }
+    printed.find(_.startsWith("teardown: delete "))
+      .foreach(l => SparkSpec.deleteTree(java.nio.file.Paths.get(l.stripPrefix("teardown: delete ")).getParent))
+  }
+
   test("cli: ephemeral restore loads the dump into a scratch Derby database (D4 analog)") {
     val store = tempDir("graft-cli-store-").toString
     val restore = tempDir("graft-cli-restore-").toString

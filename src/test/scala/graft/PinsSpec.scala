@@ -72,22 +72,37 @@ class PinsSpec extends SparkSpec {
     assert(group() == null)
   }
 
-  /** The jobs `body` ran, by job group; the group ends with a marker
-    * job the listener bus must deliver first, so the count is complete.
-    */
-  private def jobsOf(body: => Long): (Long, Int) = {
-    val sc = spark.sparkContext
-    val tag = s"pins.count-${System.nanoTime}"
-    sc.setJobGroup(tag, "rowCount")
-    val n = try body finally sc.clearJobGroup()
-    sc.setJobGroup(s"$tag-marker", "marker")
-    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
-    while (sc.statusTracker.getJobIdsForGroup(s"$tag-marker").isEmpty) {
-      assert(System.nanoTime < deadline, "the marker job never reached the status store")
-      Thread.sleep(10)
+  test("Par.all runs at most limit actions at once on limit threads, awaits all, rethrows the first failure") {
+    val running = new java.util.concurrent.atomic.AtomicInteger
+    val most = new java.util.concurrent.atomic.AtomicInteger
+    val threads = java.util.concurrent.ConcurrentHashMap.newKeySet[Thread]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    def action(i: Int): () => Int = () => {
+      val now = running.incrementAndGet()
+      most.accumulateAndGet(now, math.max)
+      threads.add(Thread.currentThread())
+      try {
+        Thread.sleep(20)
+        if (i == 3 || i == 7) throw new IllegalStateException(s"action $i")
+        i * 10
+      } finally { running.decrementAndGet(); ended.add(i) }
     }
-    (n, sc.statusTracker.getJobIdsForGroup(tag).length)
+    val before = pinned().keySet
+    val e = intercept[IllegalStateException] {
+      Pins.scoped {
+        graft.ops.Par.all(3)((0 until 12).map(i => () => {
+          // every action pins into the caller's scope
+          Pins.checkpoint((1 to 3).toDF("x"), s"pins.all-$i")
+          action(i)()
+        }))
+      }
+    }
+    assert(e.getMessage == "action 3" && e.getSuppressed.map(_.getMessage).toSeq == Seq("action 7"))
+    assert(ended.size == 12, "an action was abandoned")
+    assert(most.get <= 3 && threads.size <= 3, (most.get, threads.size))
+    assert(leftSince(before).isEmpty)
+    assert(graft.ops.Par.all(2)((1 to 5).map(i => () => i)) == (1 to 5))
+    assert(graft.ops.Par.all(4)(Seq.empty[() => Int]).isEmpty)
   }
 
   private def cacheBuilder(df: DataFrame) =

@@ -488,6 +488,29 @@ class PipelineSpec extends SparkSpec {
     assert(byId(2L) == ((null, null)), byId)
   }
 
+  test("a dump's header and DDL store as one part, and restore reads them back") {
+    val dir = tempDir("graft-header-part").toString
+    val store = new Datastore(s"file://$dir", spark)
+    val tables = Seq("customer", "nation", "region")
+    Pipeline.dump(spark, load, store, "header-part",
+      Pipeline.DumpJobConfig(tables = tables, encryptionKey = Some("k")))
+    val parts = new java.io.File(s"$dir/header-part").listFiles()
+      .filter(_.getName.endsWith(".dump")).map { f =>
+        val text = new String(graft.store.Codecs.decode(
+          Files.readAllBytes(f.toPath), compressed = true, Some("k")), "UTF-8")
+        f.getName -> text.linesIterator.toSeq
+      }
+    val withDdl = parts.filter(_._2.exists(l => l.startsWith("SET ") || l.startsWith("CREATE TABLE")))
+    assert(withDdl.length == 1, parts.map(p => p._1 -> p._2.size).toSeq)
+    val ddl = withDdl.head._2
+    assert(ddl.head == "SET standard_conforming_strings = on;")
+    assert(ddl.count(_.startsWith("CREATE TABLE")) == tables.size, ddl)
+    Pipeline.restore(store, "header-part", Some("k")) { (restored, storedDdl) =>
+      assert(storedDdl.keySet == tables.toSet)
+      tables.foreach(t => assert(restored(t).count() == load(t).count(), t))
+    }
+  }
+
   test("universal ride-along DDL (r19): restored types are SOURCE-exact, not re-inferred") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._

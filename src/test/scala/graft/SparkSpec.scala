@@ -35,6 +35,25 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     Option(GraftSession.processDir.toFile.list())
       .fold(Set.empty[String])(_.toSet.filter(_.startsWith("spool-")))
 
+  /** `body`'s result and the number of jobs it ran, by job group; the
+    * group ends with a marker job the status store must see first, so
+    * the count is complete.
+    */
+  protected def jobsOf[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val tag = s"spec.jobs-${System.nanoTime}"
+    sc.setJobGroup(tag, "counted")
+    val a = try body finally sc.clearJobGroup()
+    sc.setJobGroup(s"$tag-marker", "marker")
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup(s"$tag-marker").isEmpty) {
+      assert(System.nanoTime < deadline, "the marker job never reached the status store")
+      Thread.sleep(10)
+    }
+    (a, sc.statusTracker.getJobIdsForGroup(tag).length)
+  }
+
   override protected def afterAll(): Unit =
     try tmpRoot.foreach(SparkSpec.deleteTree)
     finally super.afterAll()
