@@ -110,30 +110,20 @@ object Bench {
       gc = gcTime() - g0)
   }
 
-  /** [[timeQuery]] plus cache-leak detection: a query that leaves MORE
-    * persisted RDDs registered than it found poisons every later
+  /** Cache-leak detection: count the persisted RDDs that appeared
+    * since `before` and SURVIVE a GC-and-poll drain. A query that leaves
+    * MORE persisted RDDs registered than it found poisons every later
     * measurement in the session (r10's capstone leak made its own
     * pass-2 artificially warm, so min-of-2 reported the flattered
     * number). Transient `localCheckpoint` blocks also register but
     * drain via the ContextCleaner once the query's frame is dropped —
     * so when the raw diff is non-zero, GC-and-poll briefly and count
-    * only what SURVIVES: a CacheManager pin can never be reclaimed, so
-    * the survivors are true leaks, not lifecycle noise. The drain runs
-    * outside the timed window; per-query wall/cpu are unaffected.
-    */
-  def timeQueryChecked(spark: org.apache.spark.sql.SparkSession,
-                       name: String, run: () => Unit): QRun = {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val r = timeQuery(name, run)
-    r.copy(leaked = pollLeaks(spark, before))
-  }
-
-  /** Count the persisted RDDs that appeared since `before` and SURVIVE
-    * a GC-and-poll drain — see [[timeQueryChecked]]. Callers must drop
-    * every reference to the query's frames first: a live DataFrame
-    * keeps its localCheckpoint blocks reachable, and the ContextCleaner
-    * (correctly) refuses to reclaim them — they'd count as leaks here
-    * while being ordinary lifecycle.
+    * only what survives: a CacheManager pin can never be reclaimed, so
+    * the survivors are true leaks, not lifecycle noise. Run it outside
+    * the timed window. Callers must drop every reference to the query's
+    * frames first: a live DataFrame keeps its localCheckpoint blocks
+    * reachable, and the ContextCleaner (correctly) refuses to reclaim
+    * them — they'd count as leaks here while being ordinary lifecycle.
     */
   def pollLeaks(spark: org.apache.spark.sql.SparkSession,
                 before: scala.collection.Set[Int]): Int = {

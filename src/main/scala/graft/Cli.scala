@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.config.GraftConfig
 import graft.ingest.{DumpReader, Spool}
@@ -129,21 +130,22 @@ object Cli {
         val cp = graft.pipeline.CorpusPipeline.load(path)
         def ckpt = cp.checkpoint_dir.map(GraftConfig.substituteEnvVar).getOrElse(
           throw new IllegalArgumentException("corpus stream needs checkpoint_dir"))
-        (into, continuous) match {
-          case (Some(prior), None) =>
-            graft.pipeline.CorpusPipeline.runStreamIncremental(spark, cp, prior, ckpt, out)
-          case (Some(prior), Some(interval)) =>
+        val trigger = continuous.fold(Trigger.AvailableNow())(Trigger.ProcessingTime(_))
+        val query = into match {
+          case Some(prior) =>
             graft.pipeline.CorpusPipeline.startStreamIncremental(spark, cp, prior, ckpt,
-              out, org.apache.spark.sql.streaming.Trigger.ProcessingTime(interval))
-              .awaitTermination()
-          case (None, None) =>
-            graft.pipeline.CorpusPipeline.runStream(spark, cp, ckpt,
-              cp.corpus_dir, cp.watermark.getOrElse("6 hours"), out)
-          case (None, Some(interval)) =>
+              out, trigger)
+          case None =>
             graft.pipeline.CorpusPipeline.startStream(spark, cp, ckpt,
-              cp.corpus_dir, cp.watermark.getOrElse("6 hours"), out,
-              org.apache.spark.sql.streaming.Trigger.ProcessingTime(interval))
-              .awaitTermination()
+              cp.corpus_dir, cp.watermark.getOrElse("6 hours"), out, trigger)
+        }
+        query.awaitTermination()
+        if (into.isEmpty && continuous.isEmpty) {
+          // an empty backlog commits no batch and never creates output_dir
+          val outPath = new org.apache.hadoop.fs.Path(cp.outputDir)
+          val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          val total = if (fs.exists(outPath)) spark.read.parquet(cp.outputDir).count() else 0L
+          out(s"backlog processed: $total rows total")
         }
         0
 

@@ -16,11 +16,6 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Tables small enough to broadcast at any realistic scale factor
-    * (TPC-H dims: region is 5 rows, nation 25 — fixed regardless of SF).
-    */
-  val broadcastable: Set[String] = Set("region", "nation")
-
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
 

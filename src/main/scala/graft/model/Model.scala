@@ -55,17 +55,6 @@ final case class FkEdge(
     toTable: String,
     toCol: String)
 
-/** Per-table statistics from one pass over a dump.
-  * Reference `TableStats`, `subset/src/postgres.rs:31-38`.
-  */
-final case class TableStats(
-    database: String,
-    table: String,
-    columns: Seq[String],
-    totalRows: Long,
-    firstInsertIdx: Long,
-    lastInsertIdx: Long)
-
 /** One stored dump in the datastore catalog.
   * Reference `Dump`, `replibyte/src/datastore/mod.rs:162-170`.
   */

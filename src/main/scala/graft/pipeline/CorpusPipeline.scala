@@ -489,7 +489,7 @@ object CorpusPipeline {
   }
 
   /** The incremental admission core — shared by the batch
-    * (`runIncremental`) and streaming (`runStreamIncremental`) paths:
+    * (`runIncremental`) and streaming (`startStreamIncremental`) paths:
     * per-row stages over the shard, exact/near admission against the
     * persisted artifacts, survivor append, artifact extension.
     */
@@ -781,20 +781,13 @@ object CorpusPipeline {
     * re-admits the remainder against the now-complete artifacts. The
     * mandatory `dedup_exact` stage (enforced below) keeps the
     * degenerate no-marker, no-crash replay a no-op as before.
-    */
-  def runStreamIncremental(spark: SparkSession, conf: CorpusPipelineConf,
-                           priorDir: String, checkpointDir: String,
-                           out: String => Unit): Unit =
-    startStreamIncremental(spark, conf, priorDir, checkpointDir, out,
-      org.apache.spark.sql.streaming.Trigger.AvailableNow()).awaitTermination()
-
-  /** Start (and return) the incremental-admission stream under an
-    * arbitrary trigger — `Trigger.AvailableNow()` gives the
-    * process-the-backlog-and-stop batch shape ([[runStreamIncremental]]);
-    * a `Trigger.ProcessingTime(…)` gives the CONTINUOUS watcher the CLI
-    * exposes as `corpus stream … --continuous`: the query keeps running,
-    * each new JSONL drop admits as its own micro-batch behind the same
-    * checkpoint, and the caller owns stop/awaitTermination.
+    *
+    * Starts (and returns) the query under the caller's trigger:
+    * `Trigger.AvailableNow()` processes the backlog and stops; a
+    * `Trigger.ProcessingTime(…)` is the continuous watcher of
+    * `corpus stream … --continuous`, each new JSONL drop admitting as
+    * its own micro-batch behind the same checkpoint. The caller owns
+    * stop/awaitTermination.
     */
   def startStreamIncremental(spark: SparkSession, conf: CorpusPipelineConf,
                              priorDir: String, checkpointDir: String,
@@ -837,26 +830,10 @@ object CorpusPipeline {
     * fingerprint anti-join + in-stream dedup within the watermark,
     * [[graft.streaming.StreamingPipeline.admitStream]]) or plain
     * in-stream dedup otherwise, and append parquet under `output_dir`
-    * exactly-once (checkpointed file tracking). Processes the backlog
-    * with an availableNow trigger and stops — re-invoke per backlog;
-    * a production watcher drops the trigger for a continuous run.
-    */
-  def runStream(spark: SparkSession, conf: CorpusPipelineConf,
-                checkpointDir: String, corpusDir: Option[String],
-                watermark: String, out: String => Unit): Unit = {
-    startStream(spark, conf, checkpointDir, corpusDir, watermark, out,
-      org.apache.spark.sql.streaming.Trigger.AvailableNow()).awaitTermination()
-    // an empty backlog commits no batch and never creates output_dir
-    val outPath = new org.apache.hadoop.fs.Path(conf.outputDir)
-    val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val total = if (fs.exists(outPath)) spark.read.parquet(conf.outputDir).count() else 0L
-    out(s"backlog processed: $total rows total")
-  }
-
-  /** Start (and return) the stateless-admission stream under an
-    * arbitrary trigger — the continuous-watcher form of [[runStream]]
-    * (same chain, same checkpoint; `Trigger.ProcessingTime` keeps the
-    * query alive across JSONL drops, caller owns stop/await).
+    * exactly-once (checkpointed file tracking). Starts (and returns)
+    * the query under the caller's trigger: `Trigger.AvailableNow()`
+    * processes the backlog and stops, `Trigger.ProcessingTime` keeps
+    * the query alive across JSONL drops; the caller owns stop/await.
     */
   def startStream(spark: SparkSession, conf: CorpusPipelineConf,
                   checkpointDir: String, corpusDir: Option[String],

@@ -28,7 +28,9 @@ class Datastore(rootUri: String, spark: SparkSession) {
 
   private val catalog = new Catalog(rootUri, spark.sparkContext.hadoopConfiguration)
 
-  /** Write a statement dump; returns the registered catalog entry. */
+  /** Write a statement dump, replacing any dump of the same name;
+    * returns the registered catalog entry.
+    */
   def write(
       dumpName: String,
       statements: Dataset[String],
@@ -36,6 +38,7 @@ class Datastore(rootUri: String, spark: SparkSession) {
       encryptionKey: Option[String] = None,
       chunkBytes: Int = 100 * 1024 * 1024): DumpMeta = {
     import spark.implicits._
+    catalog.delete(dumpName)
     val confSer = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
     val root = rootUri
     val partsMeta: Seq[(String, Long, Long)] = statements
@@ -121,7 +124,8 @@ class Datastore(rootUri: String, spark: SparkSession) {
     * them to text. Document ENCODING is distributed
     * (`MongoArchive.writeTables` feeds this from executor-encoded
     * chunks); the byte stream itself is one archive, hence
-    * driver-framed — the reference's own bound on this path.
+    * driver-framed — the reference's own bound on this path. Replaces
+    * any dump of the same name, as [[write]] does.
     */
   def writeBlob(
       dumpName: String,
@@ -130,6 +134,7 @@ class Datastore(rootUri: String, spark: SparkSession) {
       compressed: Boolean = true,
       encryptionKey: Option[String] = None,
       chunkBytes: Int = 100 * 1024 * 1024): DumpMeta = {
+    catalog.delete(dumpName)
     val fs = new Path(rootUri).getFileSystem(spark.sparkContext.hadoopConfiguration)
     var chunkIdx = 0
     var total = 0L

@@ -1,130 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, Trigger}
-
-import graft.model.TransformerBinding
-import graft.transform.Transformers
-
-/** Running per-user progress state — the reference's G2 progress
-  * aggregation (`subset/src/lib.rs:15-30`) as continuous keyed state.
-  */
-final case class UserProgress(user_id: Long, n_events: Long, total_value: Double)
-
-/** Per-bucket emitted simhash signatures — the keyed state of
-  * [[StreamingPipeline.nearDupSuppressStream]].
-  */
-final case class BucketSigs(sigs: Seq[Long])
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** Structured-Streaming analog of the reference's bounded pipeline
   * (SURVEY §2.10): the reference's producer/consumer chunking
   * (`tasks/full_dump.rs:47-110`) maps to micro-batches; backpressure
   * (its depth-1 channel) maps to one in-flight batch per trigger.
-  *
-  * The reference has no watermarks/windows/state — `transformStream` is
-  * a stateless per-row pipeline, exactly like its transformer pass.
-  * `eventCounts` goes beyond the reference (watermarked tumbling-window
-  * aggregation over the `events` table's schema) because a continuous
-  * ingestion pipeline at scale needs at least that much state handling.
+  * `corpus stream` builds its query from these operators.
   */
 object StreamingPipeline {
-
-  /** Continuously transform statements/rows arriving as files in a
-    * directory — same bindings, same expressions as the batch path.
-    */
-  def transformStream(
-      spark: SparkSession,
-      inputDir: String,
-      schema: org.apache.spark.sql.types.StructType,
-      bindings: Seq[TransformerBinding]): DataFrame = {
-    val in = spark.readStream.schema(schema).parquet(inputDir)
-    Transformers.applyBindings(in, bindings)
-  }
-
-  /** Watermarked tumbling-window event counts (the canonical stateful
-    * op a training-data ingestion stream needs: late data tolerated up
-    * to the watermark, state bounded).
-    */
-  def eventCounts(events: DataFrame, window: String = "1 hour", watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(org.apache.spark.sql.functions.window(col("ts"), window), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("total_value"))
-
-  /** Custom keyed state via `mapGroupsWithState`: a running
-    * (n_events, total_value) per user, updated each micro-batch — the
-    * reference emits the same running totals through its progress
-    * callbacks (`subset/src/postgres.rs:241-267`). State size is
-    * O(distinct users), not O(events); add a `GroupStateTimeout` to
-    * bound it when users churn.
-    *
-    * Works on a batch OR streaming Dataset (Spark runs the same
-    * operator either way — the batch form is what the DuckDB oracle
-    * can check).
-    */
-  def progressByUser(events: DataFrame): Dataset[UserProgress] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      // progress is per known user; a null key would fail primitive
-      // tuple decoding, and "unknown user" has no running total
-      .filter(col("user_id").isNotNull)
-      .select(col("user_id").cast("long"), coalesce(col("value"), lit(0.0)))
-      .as[(Long, Double)]
-      .groupByKey(_._1)
-      .mapGroupsWithState[UserProgress, UserProgress](GroupStateTimeout.NoTimeout) {
-        (uid: Long, batch: Iterator[(Long, Double)], state: GroupState[UserProgress]) =>
-          var n = state.getOption.map(_.n_events).getOrElse(0L)
-          var total = state.getOption.map(_.total_value).getOrElse(0.0)
-          batch.foreach { case (_, v) => n += 1; total += v }
-          val updated = UserProgress(uid, n, total)
-          state.update(updated)
-          updated
-      }
-  }
-
-  /** Session-window counts per user — the stateful sessionization op
-    * (gap-based windows, state evicted at the watermark). Works on a
-    * batch OR streaming frame; the batch form is what the DuckDB
-    * gaps-and-islands oracle checks (`g6_session_windows`).
-    */
-  def sessionCounts(
-      events: DataFrame,
-      gap: String = "6 hours",
-      watermark: String = "12 hours"): DataFrame = {
-    val in = if (events.isStreaming) events.withWatermark("ts", watermark) else events
-    in.groupBy(col("user_id"), session_window(col("ts"), gap))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"), col("session_window.start").as("session_start"), col("n_events"))
-  }
-
-  /** Stream-stream event-time interval join — the continuous form of
-    * the point-in-time lookup (batch J7/J8): each left event matches
-    * the right events of the same `key` whose `ts` falls in
-    * `[l.ts - lookback, l.ts]` (inclusive both ends). Both sides carry
-    * watermarks and the join condition bounds the event-time distance,
-    * so Spark derives state eviction for BOTH sides — state is
-    * (watermark + lookback)-bounded and the join runs forever on
-    * unbounded input. Inner-join matches emit as they arrive (the
-    * watermark only gates state cleanup), so a bounded replay yields
-    * exactly the batch theta-join over the same rows — the parity
-    * PipelineSpec asserts. Both frames must expose an event-time
-    * column named `ts`; disambiguate payload columns before the join.
-    */
-  def intervalJoinStream(
-      left: DataFrame,
-      right: DataFrame,
-      key: String,
-      lookback: String = "1 hour",
-      watermark: String = "2 hours"): DataFrame = {
-    val l = (if (left.isStreaming) left.withWatermark("ts", watermark) else left).as("l")
-    val r = (if (right.isStreaming) right.withWatermark("ts", watermark) else right).as("r")
-    l.join(r,
-      col(s"l.$key") === col(s"r.$key") &&
-        col("r.ts") <= col("l.ts") &&
-        col("r.ts") >= col("l.ts") - expr(s"INTERVAL $lookback"))
-  }
 
   /** Streaming exact dedup — J3 as a continuous operator: duplicates
     * arriving within the watermark horizon of the first copy are
@@ -167,88 +52,10 @@ object StreamingPipeline {
       .drop("fp")
   }
 
-  /** Streaming NEAR-dup suppression — the continuous form of
-    * `Dedup.simhashPairs`: each doc's 64-bit simhash lands in a
-    * high-16-bit bucket, and `flatMapGroupsWithState` keeps the
-    * signatures already emitted per bucket; a doc within `maxDistance`
-    * Hamming of any of them is dropped. First-arrival wins (same
-    * tie-break a streaming exact dedup makes). State is bounded:
-    * ≤ `maxPerBucket` 8-byte signatures per bucket (oldest evicted
-    * beyond the cap, trading recall for a hard memory bound), buckets
-    * partition the corpus, so state never scales with stream length.
-    * Works on a batch OR streaming Dataset like [[progressByUser]] —
-    * the batch `Dedup.simhashPairs` is the semantics oracle over any
-    * bounded slice.
-    *
-    * The `id` column must be numeric (the state tuple is primitive
-    * longs): a non-null id that does not cast to long FAILS LOUDLY
-    * instead of silently emptying the stream; a doc with a null id or
-    * null text has nothing to key/dedup on and is dropped.
-    *
-    * `idleBucketTtlMs > 0` arms a processing-time TTL per bucket: a
-    * bucket receiving no doc for that long drops its signature memory
-    * (cold buckets reclaim state in long-running jobs; docs arriving
-    * after the horizon are re-admitted). 0 keeps state forever — still
-    * bounded by construction at ≤ maxPerBucket × 65536 signatures.
-    */
-  def nearDupSuppressStream(
-      docs: DataFrame,
-      id: String,
-      text: org.apache.spark.sql.Column,
-      maxDistance: Int = 8,
-      maxPerBucket: Int = 1024,
-      idleBucketTtlMs: Long = 0L): Dataset[(Long, Long)] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.OutputMode
-    val castId = col(id).cast("long")
-    val timeout =
-      if (idleBucketTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    docs
-      .select(
-        when(col(id).isNotNull && castId.isNull,
-          raise_error(concat(
-            lit(s"nearDupSuppressStream: id column '$id' must be numeric, got: "),
-            col(id).cast("string"))))
-          .otherwise(castId).as("doc"),
-        graft.ops.Dedup.simhash64(text).as("sh"))
-      // null text → null signature (and a null would NPE the primitive
-      // tuple decode below); a doc with no text has nothing to dedup on
-      .filter(col("doc").isNotNull && col("sh").isNotNull)
-      .withColumn("bucket", shiftrightunsigned(col("sh"), 48))
-      .select(col("bucket"), col("doc"), col("sh"))
-      .as[(Long, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[BucketSigs, (Long, Long)](
-        OutputMode.Append, timeout) {
-        (_: Long, rows: Iterator[(Long, Long, Long)], state: GroupState[BucketSigs]) =>
-          if (state.hasTimedOut) {
-            // cold bucket past the TTL: reclaim its signature memory;
-            // future docs in this bucket start a fresh first-arrival race
-            state.remove()
-            Iterator.empty
-          } else {
-            var seen = state.getOption.map(_.sigs.toVector).getOrElse(Vector.empty)
-            val out = Vector.newBuilder[(Long, Long)]
-            rows.foreach { case (_, doc, sh) =>
-              val dup = seen.exists(s => java.lang.Long.bitCount(s ^ sh) <= maxDistance)
-              if (!dup) {
-                out += ((doc, sh))
-                seen = (seen :+ sh).takeRight(maxPerBucket)
-              }
-            }
-            state.update(BucketSigs(seen))
-            if (idleBucketTtlMs > 0) state.setTimeoutDuration(idleBucketTtlMs)
-            out.result().iterator
-          }
-      }
-  }
-
   /** Write a transformed stream to parquet under the given trigger —
-    * `Trigger.AvailableNow()` ([[sinkAvailableNow]]) processes
-    * everything present then stops; a `ProcessingTime` trigger keeps
-    * the same checkpointed query alive as a continuous watcher.
+    * `Trigger.AvailableNow()` processes everything present then stops;
+    * a `ProcessingTime` trigger keeps the same checkpointed query alive
+    * as a continuous watcher.
     */
   def sink(df: DataFrame, outDir: String, checkpointDir: String,
            trigger: Trigger): DataStreamWriter[org.apache.spark.sql.Row] =
@@ -257,12 +64,4 @@ object StreamingPipeline {
       .option("path", outDir)
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-
-  /** Write a transformed stream to parquet in availableNow mode —
-    * processes everything present, then stops: the exact semantic of
-    * the reference's bounded one-pass dump (bounded input, streaming
-    * execution, backpressured chunks).
-    */
-  def sinkAvailableNow(df: DataFrame, outDir: String, checkpointDir: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    sink(df, outDir, checkpointDir, Trigger.AvailableNow())
 }

@@ -174,22 +174,6 @@ object Transformers {
 
   def registerCustom(id: String, fn: Column => Column): Unit = custom.put(id, fn)
 
-  /** T9, reference-compatible form: register a user's WASI command
-    * module as a transformer — the exact artifact the reference's
-    * `custom_wasm` transformer runs (`transformer/custom_wasm.rs:28-99`):
-    * per value, the module's `_start` reads `value\n` from stdin and the
-    * trimmed stdout is the transformed value. Runs on the pure-JVM
-    * interpreter in `graft.wasm` (no native runtime), wrapped in a UDF —
-    * a process-boundary-style transformer is inherently outside codegen,
-    * which is why [[registerCustom]] (a `Column` expression factory)
-    * stays the preferred plugin surface for new code.
-    */
-  def registerWasm(id: String, wasmBytes: Array[Byte]): Unit = {
-    val cmd = new graft.wasm.WasiRunner.Command(wasmBytes)
-    val fn = udf((s: String) => if (s == null) null else cmd.transform(s))
-    custom.put(id, (c: Column) => fn(c.cast("string")))
-  }
-
   /** Built-in transformer ids plus registered customs — the
     * `transformer list` surface (`transformers()`,
     * `replibyte/src/transformer/mod.rs:25-37`).

@@ -21,20 +21,26 @@ class BenchSpec extends SparkSpec {
   }
 
   test("a query that strands a cache is flagged leaked; a clean one is not") {
-    val leaky = Bench.timeQueryChecked(spark, "leaky", () => {
+    // Bench.main's per-query sequence: time the query, then poll leaks
+    def timeAndPoll(name: String, run: () => Unit): Bench.QRun = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val r = Bench.timeQuery(name, run)
+      r.copy(leaked = Bench.pollLeaks(spark, before))
+    }
+    val leaky = timeAndPoll("leaky", () => {
       val df = Tables.region(spark, sfDir).persist()
       df.count(); () // persisted, never released
     })
     assert(leaky.leaked > 0, "stranded cache not detected")
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    val clean = Bench.timeQueryChecked(spark, "clean", () => {
+    val clean = timeAndPoll("clean", () => {
       val df = Tables.region(spark, sfDir).persist()
       try { df.count(); () } finally df.unpersist()
     })
     assert(clean.leaked == 0, s"clean query flagged as leaking ${clean.leaked}")
     // a transient localCheckpoint registers too, but drains via the
     // ContextCleaner once the frame is dropped — must NOT be flagged
-    val transient = Bench.timeQueryChecked(spark, "transient", () => {
+    val transient = timeAndPoll("transient", () => {
       Tables.region(spark, sfDir).localCheckpoint(true).count(); ()
     })
     assert(transient.leaked == 0,

@@ -660,6 +660,8 @@ class CliSpec extends SparkSpec {
       "pii_scrub stage did not run on the stream")
     assert(got.filter($"text".contains("casino")).count() == 0,
       "keyword_filter stage did not run on the stream")
+    assert(printed.filter(_.startsWith("backlog processed")) ==
+      Seq(s"backlog processed: ${got.count()} rows total"))
     // second invocation, same checkpoint: b1.json is NOT reprocessed
     assert(Cli.run(Seq("corpus", "stream", conf), spark, printed += _) == 0)
     assert(spark.read.parquet(outDir).count() == 1, "replay duplicated rows")

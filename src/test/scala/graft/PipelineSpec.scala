@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.model.{SourceFilters, TableRef, TransformerBinding}
 import graft.pipeline.Pipeline
@@ -13,18 +13,10 @@ class PipelineSpec extends SparkSpec {
 
   private def load(t: String) = Tables.load(spark, sfDir, t)
 
-  /** Run an AvailableNow query to completion and STOP it. A bare
-    * `awaitTermination(timeout)` is wrong for queries with
-    * processing-time timers (the TTL suppression stream): AvailableNow
-    * consumes the available offsets but the pending timers keep the
-    * query alive, so the await burns its full timeout and the query
-    * outlives the test — to be killed mid-batch at session teardown,
-    * which is exactly the ERROR-log race this helper exists to avoid.
-    * (`processAllAvailable` is no better: on that timer-idle query its
-    * no-new-data signal never fires and it blocks forever.) So: poll
-    * until the query has committed at least one batch and gone idle —
-    * no unprocessed source data, no trigger mid-flight — then stop the
-    * IDLE query, which tears down without touching a live micro-batch.
+  /** Run an AvailableNow query to completion and STOP it: poll until
+    * the query has committed at least one batch and gone idle — no
+    * unprocessed source data, no trigger mid-flight — then stop the
+    * IDLE query, so no live micro-batch is killed at session teardown.
     */
   private def runToTermination(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
     val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
@@ -115,23 +107,6 @@ class PipelineSpec extends SparkSpec {
     assert(back.sortBy(_._1).toSeq == values.indices.map(_.toLong).zip(values))
   }
 
-  test("streaming: availableNow transform matches the batch transformer") {
-    import graft.streaming.StreamingPipeline
-    val inDir = tempDir("graft-stream-in").toString
-    val outDir = tempDir("graft-stream-out").toString + "/out"
-    val ckpt = tempDir("graft-stream-ckpt").toString + "/ckpt"
-    val cust = load("customer")
-    cust.write.mode("overwrite").parquet(inDir)
-    val bindings = Seq(TransformerBinding("public", "customer", "c_name", "email"))
-    val stream = StreamingPipeline.transformStream(spark, inDir, cust.schema, bindings)
-    assert(stream.isStreaming)
-    runToTermination(StreamingPipeline.sinkAvailableNow(stream, outDir, ckpt).start())
-    val streamed = spark.read.parquet(outDir)
-    val batch = graft.transform.Transformers.applyBindings(cust, bindings)
-    assert(streamed.count() == batch.count())
-    assert(streamed.join(batch, Seq("c_custkey"), "left_anti").count() == 0)
-  }
-
   test("streaming: watermarked dedup drops in-horizon duplicates, matches batch J3 counts") {
     import graft.streaming.StreamingPipeline
     val inDir = tempDir("graft-dedup-in").toString
@@ -148,7 +123,7 @@ class PipelineSpec extends SparkSpec {
       .schema(spark.read.parquet(inDir).schema).parquet(inDir)
     val deduped = StreamingPipeline.dedupStream(in, Seq("text"), "ts", "6 hours")
     assert(deduped.isStreaming)
-    runToTermination(StreamingPipeline.sinkAvailableNow(deduped, outDir, ckpt).start())
+    runToTermination(StreamingPipeline.sink(deduped, outDir, ckpt, Trigger.AvailableNow()).start())
     val streamed = spark.read.parquet(outDir)
     assert(streamed.count() == 100)
     assert(streamed.select("text").distinct().count() == 100)
@@ -172,7 +147,7 @@ class PipelineSpec extends SparkSpec {
         lines.mkString("", "\n", "\n"))
       val admitted = StreamingPipeline.admitStream(
         Jsonl.readStream(spark, inDir, schema), corpus, $"text", "ts", "6 hours")
-      runToTermination(StreamingPipeline.sinkAvailableNow(admitted, outDir, ckpt).start())
+      runToTermination(StreamingPipeline.sink(admitted, outDir, ckpt, Trigger.AvailableNow()).start())
       spark.read.parquet(outDir).select($"doc_id").as[Long].collect().toSet
     }
     // pass 1: doc 2's text is a corpus dup, 3 and 4 are fresh
@@ -214,7 +189,7 @@ class PipelineSpec extends SparkSpec {
     // query, multiple drops — no restart between them
     val q = CorpusPipeline.startStreamIncremental(spark,
       CorpusPipeline.load(confPath), outDir, s"$root/ckpt", _ => (),
-      org.apache.spark.sql.streaming.Trigger.ProcessingTime("250 milliseconds"))
+      Trigger.ProcessingTime("250 milliseconds"))
     try {
       // drop 1: 101 fresh, 102 exact-dups the seed corpus
       Files.writeString(java.nio.file.Paths.get(watch, "d1.json"),
@@ -253,208 +228,13 @@ class PipelineSpec extends SparkSpec {
       .schema(spark.read.parquet(inDir).schema).parquet(inDir)
     val admitted = StreamingPipeline.admitStream(in, corpus, $"text", "ts", "6 hours")
     assert(admitted.isStreaming)
-    runToTermination(StreamingPipeline.sinkAvailableNow(admitted, outDir, ckpt).start())
+    runToTermination(StreamingPipeline.sink(admitted, outDir, ckpt, Trigger.AvailableNow()).start())
     val got = spark.read.parquet(outDir)
     assert(got.count() == 30, s"expected 30 fresh docs, got ${got.count()}")
     val freshTexts = got.select("text").as[String].collect().toSet
     assert(freshTexts.forall(t => (50 until 80).exists(i => t.endsWith(s"-$i"))))
   }
 
-  test("streaming: simhash suppression leaves no near-dup pair among survivors") {
-    import graft.streaming.StreamingPipeline
-    val docs = Tables.documents(spark, sfDir).select($"doc_id", $"text")
-    val survivors = StreamingPipeline.nearDupSuppressStream(docs, "doc_id", $"text", 8)
-      .toDF("doc_id", "sh")
-    val kept = survivors.count()
-    assert(kept > 0 && kept < docs.count(), "testdata should contain near-dups to suppress")
-    // THE invariant (order-independent even though greedy survivor
-    // choice isn't): survivors contain no bucket-colliding pair within
-    // the Hamming threshold — the batch operator is the oracle
-    val keptDocs = docs.join(survivors.select("doc_id"), "doc_id")
-    assert(graft.ops.Dedup.simhashPairs(keptDocs, "doc_id", $"text", 8).isEmpty,
-      "suppression let a near-dup pair through")
-    // exact duplicates (distance 0) always collapse to one survivor
-    val dup = Seq((1L, "same text here"), (2L, "same text here"),
-      (3L, "same text here"), (4L, "another completely different payload"))
-      .toDF("doc_id", "text")
-    assert(StreamingPipeline.nearDupSuppressStream(dup, "doc_id", $"text", 0).count() == 2)
-    // the streaming form runs end-to-end and upholds the same invariant
-    val inDir = tempDir("graft-neardup-in").toString
-    docs.write.mode("overwrite").parquet(inDir)
-    val stream = spark.readStream.schema(docs.schema).parquet(inDir)
-    val out = StreamingPipeline.nearDupSuppressStream(stream, "doc_id", $"text", 8)
-    assert(out.isStreaming)
-    runToTermination(out.toDF("doc_id", "sh").writeStream.format("memory")
-      .queryName("neardup_test")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start())
-    val streamedKept = docs.join(spark.table("neardup_test").select("doc_id"), "doc_id")
-    assert(spark.table("neardup_test").count() > 0)
-    assert(graft.ops.Dedup.simhashPairs(streamedKept, "doc_id", $"text", 8).isEmpty)
-  }
-
-  test("streaming: suppression TTL expires cold buckets and re-admits docs; bad ids fail loudly") {
-    import graft.streaming.StreamingPipeline
-    // non-numeric id: loud failure, not a silently emptied stream
-    val badIds = Seq(("doc42", "some text here")).toDF("doc_id", "text")
-    val err = intercept[Exception] {
-      StreamingPipeline.nearDupSuppressStream(badIds, "doc_id", $"text", 8).count()
-    }
-    assert(err.getMessage != null || err.getCause != null) // raised, not empty result
-
-    // TTL: one checkpoint, three availableNow passes. Doc 1 survives;
-    // after the TTL a batch on an UNRELATED bucket fires the timeout
-    // (groups with fresh data are exempt that batch), then doc 3 — an
-    // exact dup of doc 1 — is re-admitted because the bucket expired.
-    // the parquet sink supports checkpoint recovery (memory sink does
-    // not), so survivors accumulate in outDir across the three passes
-    val schema = Seq((1L, "x")).toDF("doc_id", "text").schema
-    def runPass(inDir: String, ckpt: String, outDir: String, ttlMs: Long,
-                rows: Seq[(Long, String)]): Set[Long] = {
-      rows.toDF("doc_id", "text").write.mode("append").parquet(inDir)
-      val src = spark.readStream.schema(schema).parquet(inDir)
-      // NOT AvailableNow: with processing-time timers armed, AvailableNow
-      // fires continuous no-data timer batches (~2/s), so any stop() can
-      // interrupt one mid-commit and log an abort stack. A long
-      // processing-time trigger processes everything in batch 1, then
-      // idles for 30 s — runToTermination's idle-detected stop() lands in
-      // that gap deterministically. Timer cleanup still happens: the NEXT
-      // pass's data batch fires expired timers, which is what this test
-      // asserts.
-      runToTermination(StreamingPipeline.nearDupSuppressStream(src, "doc_id", $"text",
-          maxDistance = 0, idleBucketTtlMs = ttlMs)
-        .toDF("doc_id", "sh").writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("30 seconds"))
-        .start())
-      spark.read.parquet(outDir).select("doc_id").as[Long].collect().toSet
-    }
-    val payload = "the quick brown fox jumps over the lazy dog"
-    val (in1, ck1, out1) = (tempDir("graft-ttl-in").toString,
-      tempDir("graft-ttl-ck").toString + "/ck",
-      tempDir("graft-ttl-out").toString + "/out")
-    // Short TTL + poll-until-readmitted instead of fixed sleeps: each
-    // attempt waits out the TTL, fires timeouts with a batch on an
-    // unrelated bucket, then offers a FRESH dup id in doc 1's bucket.
-    // A loaded host just takes more attempts; a quiet one passes on the
-    // first (r6 verdict flagged the old 2 s-TTL/4 s-sleep version as
-    // wall-clock-flaky).
-    val ttlMs = 500L
-    assert(runPass(in1, ck1, out1, ttlMs, Seq((1L, payload))) == Set(1L))
-    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-    var attempt = 0
-    var readmitted = false
-    while (!readmitted && System.nanoTime() < deadline) {
-      attempt += 1
-      Thread.sleep(ttlMs + 500L)
-      // a batch on an unrelated bucket fires expired-group timeouts
-      runPass(in1, ck1, out1, ttlMs, Seq((100L + attempt, s"unrelated payload number $attempt")))
-      val dupId = 1000L + attempt // same text as doc 1 → same bucket
-      readmitted = runPass(in1, ck1, out1, ttlMs, Seq((dupId, payload))).contains(dupId)
-    }
-    assert(readmitted,
-      s"a duplicate of doc 1 should be re-admitted after its bucket's TTL expired ($attempt attempts)")
-    // control: WITHOUT a TTL the same replay suppresses the dup forever
-    val (in2, ck2, out2) = (tempDir("graft-nottl-in").toString,
-      tempDir("graft-nottl-ck").toString + "/ck",
-      tempDir("graft-nottl-out").toString + "/out")
-    runPass(in2, ck2, out2, 0L, Seq((1L, payload)))
-    Thread.sleep(1000)
-    runPass(in2, ck2, out2, 0L, Seq((2L, "a completely different unrelated payload")))
-    val ids2 = runPass(in2, ck2, out2, 0L, Seq((3L, payload)))
-    assert(!ids2.contains(3L), "without a TTL the duplicate must stay suppressed")
-  }
-
-  test("streaming: session windows over a stream match the batch sessionization") {
-    import graft.streaming.StreamingPipeline
-    val inDir = tempDir("graft-sess-in").toString
-    val events = Tables.events(spark, sfDir).select($"user_id", $"ts")
-    events.write.mode("overwrite").parquet(inDir)
-    val stream = spark.readStream.schema(events.schema).parquet(inDir)
-    val sessions = StreamingPipeline.sessionCounts(stream, "6 hours", "0 seconds")
-    assert(sessions.isStreaming)
-    // session-window streaming aggs support append (watermark-gated
-    // emission) and complete; complete emits every session per batch,
-    // which is what a bounded parity test needs
-    runToTermination(sessions.writeStream.format("memory").queryName("sess_test")
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start())
-    val streamed = spark.table("sess_test")
-    val batch = StreamingPipeline.sessionCounts(events, "6 hours")
-    assert(streamed.count() == batch.count())
-    assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
-  }
-
-  test("streaming: interval join matches the batch theta-join over a bounded replay") {
-    import graft.streaming.StreamingPipeline
-    val ev = Tables.events(spark, sfDir)
-    val purchases = ev.filter($"event_type" === "purchase")
-      .select($"user_id", $"ts", $"event_id".as("purchase_id"))
-    val views = ev.filter($"event_type" === "view")
-      .select($"user_id", $"ts", $"event_id".as("view_id"))
-    val (pDir, vDir) = (tempDir("graft-ij-p").toString,
-      tempDir("graft-ij-v").toString)
-    purchases.write.mode("overwrite").parquet(pDir)
-    views.write.mode("overwrite").parquet(vDir)
-    val pStream = spark.readStream.schema(purchases.schema).parquet(pDir)
-    val vStream = spark.readStream.schema(views.schema).parquet(vDir)
-    val joined = StreamingPipeline.intervalJoinStream(pStream, vStream, "user_id",
-        lookback = "30 minutes", watermark = "1 hour")
-      .select($"purchase_id", $"view_id")
-    assert(joined.isStreaming)
-    runToTermination(joined.writeStream.format("memory").queryName("ij_test")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start())
-    val streamed = spark.table("ij_test")
-    val batch = StreamingPipeline.intervalJoinStream(purchases, views, "user_id",
-        lookback = "30 minutes")
-      .select($"purchase_id", $"view_id")
-    assert(streamed.count() > 0, "interval join emitted nothing")
-    assert(streamed.count() == batch.count())
-    assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
-  }
-
-  test("streaming: mapGroupsWithState running progress matches batch groupBy") {
-    import graft.streaming.StreamingPipeline
-    val events = Tables.events(spark, sfDir)
-    val stateful = StreamingPipeline.progressByUser(events).toDF()
-    val batch = events.groupBy($"user_id")
-      .agg(count(lit(1)).as("n_events"), sum(coalesce($"value", lit(0.0))).as("total_value"))
-    val joined = stateful.as("s").join(batch.as("b"), Seq("user_id"))
-    assert(stateful.count() == batch.count())
-    assert(joined.filter($"s.n_events" =!= $"b.n_events").count() == 0)
-    // double-sum fold order differs between keyed-state iteration and
-    // hash-aggregate partials — equal up to fp reassociation
-    assert(joined.filter(abs($"s.total_value" - $"b.total_value") > 1e-6).count() == 0)
-
-    // and as a real stream: update-mode memory sink over the same rows
-    val inDir = tempDir("graft-state-in").toString
-    events.select("user_id", "value").write.mode("overwrite").parquet(inDir)
-    val src = spark.readStream
-      .schema(events.select("user_id", "value").schema).parquet(inDir)
-    val q = StreamingPipeline.progressByUser(src).writeStream
-      .format("memory").queryName("progress_state").outputMode("update")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    runToTermination(q)
-    val last = spark.table("progress_state")
-      .groupBy($"user_id").agg(max($"n_events").as("n_events"))
-    assert(last.join(batch, Seq("user_id"))
-      .filter(last("n_events") =!= batch("n_events")).count() == 0)
-  }
-
-  test("streaming: watermarked windowed event counts plan is valid") {
-    import graft.streaming.StreamingPipeline
-    // batch DataFrame through the same aggregation validates the logic
-    val events = Tables.events(spark, sfDir)
-    val counts = StreamingPipeline.eventCounts(events)
-    val total = counts.agg(sum("n_events")).as[Long].head()
-    assert(total == events.count())
-  }
   test("dump -> restore preserves binary and nested columns as canonical text (pg hex / JSON), never JVM toString") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._

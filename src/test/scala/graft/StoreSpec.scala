@@ -98,6 +98,27 @@ class StoreSpec extends SparkSpec {
     // wrong key fails
     intercept[Exception](store.read("dump-a", Some("wrong")).collect())
   }
+
+  test("datastore: re-creating a dump under an existing name restores only the new rows") {
+    val dir = tempDir("graft-store-recreate").toString
+    val store = new Datastore(s"file://$dir", spark)
+    val old = (1 to 40).map(i => s"INSERT INTO public.t (id) VALUES ($i);").toDS().repartition(4)
+    store.write("d", old, compressed = false)
+    assert(store.read("d").count() == 40)
+    // one partition writes one part: the old dump's other three parts
+    // must not survive next to it
+    store.write("d", Seq("INSERT INTO public.t (id) VALUES (99);").toDS(), compressed = false)
+    assert(store.read("d").collect().toSeq == Seq("INSERT INTO public.t (id) VALUES (99);"))
+    assert(store.catalogOps.list().count(_.directoryName == "d") == 1)
+    // the blob path re-creates the same way: 3 chunks, then 1
+    store.writeBlob("b", o => o.write(Array.fill[Byte](30)(1)), format = "mongo-archive",
+      compressed = false, chunkBytes = 10)
+    store.writeBlob("b", o => o.write(Array.fill[Byte](5)(2)), format = "mongo-archive",
+      compressed = false, chunkBytes = 10)
+    val bos = new java.io.ByteArrayOutputStream()
+    store.readBlobTo("b", bos)
+    assert(bos.toByteArray.toSeq == Seq.fill[Byte](5)(2))
+  }
   test("blob dumps: chunked write/read round-trips bytes exactly (compressed + encrypted), catalog carries the format") {
     val dir = tempDir("graft-blob-").toString
     val ds = new Datastore(dir, spark)
